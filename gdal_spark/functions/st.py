@@ -311,10 +311,6 @@ st_isempty = _unary_udf(
 )
 
 
-def _geom_type(g) -> str:
-    return g[0].upper() if g[0] != "GeometryCollection" else "GEOMETRYCOLLECTION"
-
-
 st_geometrytype = _unary_udf(lambda g: g[0], StringType())
 st_srid = _unary_udf(lambda g: 0, IntegerType())  # SRS carried at column level
 

@@ -3,9 +3,11 @@
 The reference has no vector kNN operator; its nearest-neighbor machinery
 lives in gridding (quadtree radius search + per-node NN,
 alg/gdalgrid.cpp:241-427, port/cpl_quad_tree.cpp). The distributed
-re-expression: both sides get a zoom-z cell id (pure column math), query
-cells are exploded over Chebyshev-ring offsets, an equi-join on cell finds
-candidates, and ``row_number() OVER (PARTITION BY query ORDER BY dist,
+re-expression: both sides get a zoom-z tile cell (pure column math), query
+cells are exploded over Chebyshev-ring offsets, offsets that leave the
+world's ``[0, 2^z)`` tile range are dropped, the rest are packed into the
+one BIGINT cell key of :mod:`gdal_spark.tiling`, an equi-join on that key
+finds candidates, and ``row_number() OVER (PARTITION BY query ORDER BY dist,
 neighbor_id)`` keeps the top k — ties broken by (dist, id) to stay
 deterministic.
 
@@ -22,12 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from gdal_spark import tiling
-
-
-def _with_cell(df: DataFrame, x: str, y: str, zoom: int, px: str) -> DataFrame:
-    return df.withColumn(px + "cx", F.expr(tiling.tile_x_sql(x, zoom))).withColumn(
-        px + "cy", F.expr(tiling.tile_y_sql(y, zoom))
-    )
 
 
 def knn_join(
@@ -52,29 +48,21 @@ def knn_join(
     meters for geographic data). Exact: matches brute-force with ties
     broken by (dist, neighbor_id).
     """
-    span0 = tiling.WORLD_SPAN / (1 << zoom)
-    q = _with_cell(
-        query.select(
-            F.col(query_id).alias("__qid"),
-            F.col(query_x).alias("__qx"),
-            F.col(query_y).alias("__qy"),
-        ),
-        "__qx",
-        "__qy",
-        zoom,
-        "__q",
+    n_tiles = 1 << zoom
+    span0 = tiling.WORLD_SPAN / n_tiles
+    q = query.select(
+        F.col(query_id).alias("__qid"),
+        F.col(query_x).alias("__qx"),
+        F.col(query_y).alias("__qy"),
     )
-    nb = _with_cell(
-        neighbors.select(
-            F.col(neighbor_id).alias("__nid"),
-            F.col(neighbor_x).alias("__nx"),
-            F.col(neighbor_y).alias("__ny"),
-        ),
-        "__nx",
-        "__ny",
-        zoom,
-        "__n",
+    q = q.withColumn("__qcx", F.expr(tiling.tile_x_sql("__qx", zoom))).withColumn(
+        "__qcy", F.expr(tiling.tile_y_sql("__qy", zoom))
     )
+    nb = neighbors.select(
+        F.col(neighbor_id).alias("__nid"),
+        F.col(neighbor_x).alias("__nx"),
+        F.col(neighbor_y).alias("__ny"),
+    ).withColumn("__ncell", F.expr(tiling.mercator_cell_sql("__nx", "__ny", zoom)))
     if broadcast_neighbors:
         nb = F.broadcast(nb)
 
@@ -85,16 +73,20 @@ def knn_join(
     for round_i in range(max_rounds):
         offs = tiling.k_ring_offsets(r)
         offs_df = pending.sparkSession.createDataFrame(offs, "dx INT, dy INT")
-        expanded = pending.crossJoin(F.broadcast(offs_df)).select(
-            "__qid",
-            "__qx",
-            "__qy",
-            (F.col("__qcx") + F.col("dx")).alias("__ncx"),
-            (F.col("__qcy") + F.col("dy")).alias("__ncy"),
-            "__qcx",
-            "__qcy",
+        rx, ry = "(__qcx + dx)", "(__qcy + dy)"
+        # off-world ring cells hold no points, and packed they would alias
+        # a cell across the row edge: drop them before packing
+        expanded = (
+            pending.crossJoin(F.broadcast(offs_df))
+            .filter(f"{rx} BETWEEN 0 AND {n_tiles - 1} AND {ry} BETWEEN 0 AND {n_tiles - 1}")
+            .select(
+                "__qid",
+                "__qx",
+                "__qy",
+                F.expr(tiling.cell_id_sql(rx, ry, zoom)).alias("__ncell"),
+            )
         )
-        cand = expanded.join(nb, on=["__ncx", "__ncy"], how="inner")
+        cand = expanded.join(nb, on=["__ncell"], how="inner")
         # explicit multiply (not pow): bit-identical to the SQL oracle's
         # (qx-nx)*(qx-nx) form in every engine
         dx_ = F.col("__qx") - F.col("__nx")

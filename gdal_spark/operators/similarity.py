@@ -63,37 +63,6 @@ def cosine_topk(
     return out.orderBy(F.col("cos_e6").desc(), F.col("id").asc()).limit(k)
 
 
-def cosine_topk_sql(
-    query_vec, k: int, table: str = "embeddings", id_col: str = "vec_id",
-    vec_col: str = "embedding", scale: int = 1_000_000,
-) -> str:
-    """DuckDB oracle with the identical sequential double arithmetic."""
-    from gdal_spark.tiling import dlit
-
-    import math
-
-    qlist = ", ".join(dlit(float(v)) for v in query_vec)
-    dot = (
-        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform("
-        f"generate_series(1, len({vec_col})), i -> "
-        f"CAST({vec_col}[i] AS DOUBLE) * ([{qlist}])[i])), (a, b) -> a + b)"
-    )
-    nrm = (
-        f"sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform({vec_col}, "
-        f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a, b) -> a + b))"
-    )
-    # sequential (left-to-right) sum to bit-match Spark's aggregate fold
-    s = 0.0
-    for v in query_vec:
-        s += float(v) * float(v)
-    qn = math.sqrt(s)
-    return (
-        f"SELECT {id_col} AS id, "
-        f"CAST(FLOOR({dot} / ({nrm} * {dlit(qn)}) * {scale} + 0.5) AS BIGINT) AS cos_e6 "
-        f"FROM {table} ORDER BY cos_e6 DESC, id ASC LIMIT {k}"
-    )
-
-
 def knn_cosine_join(
     queries: DataFrame,
     corpus: DataFrame,

@@ -10,7 +10,9 @@ Re-expresses the reference's spatial filter-refine contract
    tiles classified *full* (wholly inside → accept, no refine) or *partial*
    (boundary tile → refine). The cover is tiny and broadcast, so the join
    is a broadcast hash join: no shuffle of the trillion-row side, and hot
-   cells cannot skew a shuffle that doesn't exist;
+   cells cannot skew a shuffle that doesn't exist. Both sides key on the
+   one packed BIGINT ``__cell`` of :mod:`gdal_spark.tiling`, so the
+   broadcast side is a compact ``LongHashedRelation``;
 3. **exact refine** — Arrow-vectorized pandas UDF running the reference's
    ray-cast (ogr/ogrlinearring.cpp:462-531) against the packed
    :class:`PolygonSet` only for boundary-tile candidates.
@@ -59,8 +61,7 @@ def _cover_df(spark: SparkSession, polyset: PolygonSet, zoom: int) -> DataFrame:
     pdf = pd.DataFrame(
         {
             "__pidx": pidx,
-            "__ctx": tx,
-            "__cty": ty,
+            "__cell": tiling.cell_id_np(tx, ty, zoom),
             "__full": full.astype(bool),
             "poly_id": polyset.ids[pidx],
         }
@@ -88,14 +89,10 @@ def point_in_polygon_join(
         pts = with_mercator(points, lon_col, lat_col)
     else:
         pts = points.withColumn("mx", F.col(lon_col)).withColumn("my", F.col(lat_col))
-    n = 1 << zoom
-    span = tiling.WORLD_SPAN / n
-    pts = pts.withColumn(
-        "__ctx", F.expr(tiling.tile_x_sql("mx", zoom))
-    ).withColumn("__cty", F.expr(tiling.tile_y_sql("my", zoom)))
+    pts = pts.withColumn("__cell", F.expr(tiling.mercator_cell_sql("mx", "my", zoom)))
 
     cover = _cover_df(spark, polyset, zoom)
-    cand = pts.join(F.broadcast(cover), on=["__ctx", "__cty"], how="inner")
+    cand = pts.join(F.broadcast(cover), on=["__cell"], how="inner")
 
     # exact refine only for boundary tiles; interior-cell rows short-circuit
     # INSIDE the UDF (Spark evaluates ArrowEvalPython before the filter, so
@@ -115,7 +112,7 @@ def point_in_polygon_join(
     hit = cand.withColumn(
         "__hit", _contains(F.col("mx"), F.col("my"), F.col("__pidx"), F.col("__full"))
     ).filter(F.col("__hit"))
-    return hit.drop("__ctx", "__cty", "__pidx", "__full", "__hit", "mx", "my")
+    return hit.drop("__cell", "__pidx", "__full", "__hit", "mx", "my")
 
 
 def pip_counts(

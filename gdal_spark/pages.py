@@ -39,14 +39,23 @@ def splitmix64_col(i: Column) -> Column:
     return z.bitwiseXOR(F.shiftrightunsigned(z, 31))
 
 
-def pages_columns(i: Column, ts: Column | None = None) -> list[Column]:
+def pages_columns(
+    i: Column,
+    ts: Column | None = None,
+    lon_u: Column | None = None,
+    lat_u: Column | None = None,
+) -> list[Column]:
     """The 5 pages columns derived from an integer id column — shared by
-    batch synthesis (spark.range) and the streaming rate source, so both
-    run modes synthesize byte-identical rows for the same id."""
+    batch synthesis (spark.range), its skew variant and the streaming rate
+    source, so every run mode synthesizes byte-identical rows for the same
+    id. ``lon_u``/``lat_u`` override the geotag, in micro-degrees offset by
+    (180, 84) (integers → exact 6-decimal round-trip through the html)."""
     h = splitmix64_col(i)
     h2 = splitmix64_col(i + F.lit(1_000_000_007))
-    lon_u = F.pmod(h, F.lit(360_000_000))
-    lat_u = F.pmod(h2, F.lit(168_000_000))
+    if lon_u is None:
+        lon_u = F.pmod(h, F.lit(360_000_000))
+    if lat_u is None:
+        lat_u = F.pmod(h2, F.lit(168_000_000))
     lon = (lon_u.cast("double") / 1e6) - 180.0
     lat = (lat_u.cast("double") / 1e6) - 84.0
     lang_bucket = F.pmod(h2, F.lit(100))
@@ -99,56 +108,18 @@ def synth_pages(
     """
     df = spark.range(0, n, 1, partitions or spark.sparkContext.defaultParallelism)
     i = F.col("id")
-    if skew_hot_fraction == 0.0:
+    if skew_hot_fraction <= 0.0:
         return df.select(pages_columns(i))
     h = splitmix64_col(i)
     h2 = splitmix64_col(i + F.lit(1_000_000_007))
-    # micro-degree integers → exact 6-decimal round-trip through the html
-    lon_u = F.pmod(h, F.lit(360_000_000))
-    lat_u = F.pmod(h2, F.lit(168_000_000))
-    if skew_hot_fraction > 0:
-        hot = F.pmod(h, F.lit(1000)) < F.lit(int(skew_hot_fraction * 1000))
-        lon_u = F.when(
-            hot, F.lit(int((hot_lon + 180.0) * 1e6)) + F.pmod(h2, F.lit(100_000))
-        ).otherwise(lon_u)
-        lat_u = F.when(
-            hot, F.lit(int((hot_lat + 84.0) * 1e6)) + F.pmod(h, F.lit(100_000))
-        ).otherwise(lat_u)
-    lon = (lon_u.cast("double") / 1e6) - 180.0
-    lat = (lat_u.cast("double") / 1e6) - 84.0
-
-    lang_bucket = F.pmod(h2, F.lit(100))
-    lang = F.lit(LANGS[-1])
-    for code, cum in reversed(list(zip(LANGS, _LANG_CUM))):
-        lang = F.when(lang_bucket < F.lit(cum), F.lit(code)).otherwise(lang)
-
-    text = F.format_string(
-        "Page %d from site %d. %s",
-        i,
-        F.pmod(i, F.lit(10007)),
-        F.repeat(
-            F.format_string("token%d data web crawl text ", F.pmod(h, F.lit(997))),
-            (F.pmod(h2, F.lit(8)) + F.lit(1)).cast("int"),
-        ),
-    )
-    html = F.format_string(
-        '<html><head><meta name="geo.position" content="%.6f;%.6f"/>'
-        "<title>p%d</title></head><body>%s</body></html>",
-        lat,
-        lon,
-        i,
-        text,
-    )
-    return df.select(
-        F.format_string("https://site%d.example/p/%d", F.pmod(i, F.lit(10007)), i).alias("url"),
-        (
-            F.to_timestamp(F.lit("2025-01-01 00:00:00"))
-            + F.make_interval(secs=F.pmod(i * 37, F.lit(31_536_000)).cast("double"))
-        ).alias("warc_ts"),
-        F.encode(html, "UTF-8").alias("html"),
-        text.alias("text"),
-        lang.alias("lang"),
-    )
+    hot = F.pmod(h, F.lit(1000)) < F.lit(int(skew_hot_fraction * 1000))
+    lon_u = F.when(
+        hot, F.lit(int((hot_lon + 180.0) * 1e6)) + F.pmod(h2, F.lit(100_000))
+    ).otherwise(F.pmod(h, F.lit(360_000_000)))
+    lat_u = F.when(
+        hot, F.lit(int((hot_lat + 84.0) * 1e6)) + F.pmod(h, F.lit(100_000))
+    ).otherwise(F.pmod(h2, F.lit(168_000_000)))
+    return df.select(pages_columns(i, lon_u=lon_u, lat_u=lat_u))
 
 
 def extract_geotags(pages: DataFrame) -> DataFrame:

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gdal_spark import tiling
+from gdal_spark.operators.spatial_join import assign_tiles
 from gdal_spark.pages import extract_geotags, pages_columns
 
 
@@ -47,11 +47,7 @@ def streaming_tile_counts(
     watermark: str = "2 minutes",
 ) -> DataFrame:
     """pages stream → (window, tile_x, tile_y, n) with late-data bound."""
-    tagged = extract_geotags(pages)
-    tx_sql, ty_sql = tiling.lonlat_tile_sql("lon", "lat", zoom)
-    tiled = tagged.withColumn("tile_x", F.expr(tx_sql)).withColumn(
-        "tile_y", F.expr(ty_sql)
-    )
+    tiled = assign_tiles(extract_geotags(pages), zoom)
     return (
         tiled.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), "tile_x", "tile_y")

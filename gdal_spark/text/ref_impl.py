@@ -123,35 +123,6 @@ def simhash_ref(text: str, bits: int = 64) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def simhash_pairs_ref(
-    docs: list[tuple[int, str]], max_hamming: int = 3
-) -> list[tuple[int, int, int]]:
-    """(id1, id2, hamming) per dedup.simhash_near_pairs semantics."""
-    from gdal_spark.text.dedup import simhash_blocks
-
-    sh = {doc_id: simhash_ref(text) for doc_id, text in docs}
-    blocks = simhash_blocks(max_hamming)
-    buckets: dict[tuple[int, int], list[int]] = {}
-    for doc_id, v in sh.items():
-        u = v & ((1 << 64) - 1)
-        for q, (off, width) in enumerate(blocks):
-            key = (u >> off) & ((1 << width) - 1)
-            buckets.setdefault((q, key), []).append(doc_id)
-    cand: set[tuple[int, int]] = set()
-    for ids in buckets.values():
-        ids = sorted(ids)
-        for i in range(len(ids)):
-            for j in range(i + 1, len(ids)):
-                cand.add((ids[i], ids[j]))
-    out = []
-    for id1, id2 in sorted(cand):
-        x = (sh[id1] ^ sh[id2]) & ((1 << 64) - 1)
-        ham = bin(x).count("1")
-        if ham <= max_hamming:
-            out.append((id1, id2, ham))
-    return out
-
-
 def simhash_allpairs_ref(
     docs: list[tuple[int, str]], max_hamming: int = 3
 ) -> list[tuple[int, int, int]]:

@@ -16,9 +16,16 @@ and zero shuffle. The same formula is emitted once as an ANSI-SQL string
 (:func:`tile_sql`) used verbatim by BOTH the Spark plan (``F.expr``) and the
 DuckDB correctness oracle, so engine and oracle cannot diverge.
 
-Cells double as the spatial-join partition key: a single BIGINT
-``cell = z*2^58 + x*2^29 + y`` (z ≤ 29). k-ring expansion for kNN is a
-neighborhood in (x, y) tile space.
+Cells double as the join key of every cell join (the PIP cover join and
+the kNN ring join): one BIGINT ``cell = z*2^58 + x*2^29 + y`` (z ≤ 29),
+emitted by :func:`cell_id_sql` on the Spark side and :func:`cell_id_np` on
+the driver side. This module is the only place that spells the packing.
+One long key lets Spark build its compact ``LongHashedRelation`` for a
+broadcast join instead of the generic two-column ``UnsafeHashedRelation``.
+k-ring expansion for kNN offsets (x, y) in tile space and packs the ring
+cell afterwards; offsets that leave ``[0, 2^z)`` must be dropped before
+packing, because packed keys alias across the row edge (``(x, -1)`` packs
+to the key of ``(x-1, 2^29-1)``).
 """
 
 from __future__ import annotations
@@ -146,4 +153,10 @@ def lonlat_tile_sql(lon_expr: str, lat_expr: str, z: int) -> tuple[str, str]:
 
 
 def cell_id_sql(tx_expr: str, ty_expr: str, z: int) -> str:
+    """Pack (z, x, y) into one BIGINT join key; the SQL twin of :func:`cell_id_np`."""
     return f"(CAST({z} AS BIGINT) * {1 << 58} + ({tx_expr}) * {1 << 29} + ({ty_expr}))"
+
+
+def mercator_cell_sql(mx_expr: str, my_expr: str, z: int) -> str:
+    """The zoom-z cell key of a point given in mercator meters."""
+    return cell_id_sql(tile_x_sql(mx_expr, z), tile_y_sql(my_expr, z), z)

@@ -1,6 +1,7 @@
 """kNN join (k-ring expansion) vs the brute-force oracle."""
 import numpy as np
 import pandas as pd
+import pytest
 
 from gdal_spark.operators.knn import knn_join, knn_join_bruteforce
 from gdal_spark import tiling
@@ -24,6 +25,34 @@ def test_knn_matches_bruteforce(spark):
     q, _ = _xy_df(spark, 120, 7, "qid")
     nb, _ = _xy_df(spark, 900, 13, "nid")
     got = _collect_pairs(knn_join(q, nb, k=3, zoom=6, radius=1, max_rounds=5))
+    want = _collect_pairs(knn_join_bruteforce(q, nb, k=3))
+    assert got == want
+
+
+def _edge_df(spark, n, seed, idc, z):
+    """Points in the first and last tile column/row of zoom z, plus the
+    four world corners: their k-rings reach past the world edge."""
+    rng = np.random.default_rng(seed)
+    span = tiling.WORLD_SPAN / (1 << z)
+    lo, hi = -tiling.ORIGIN, tiling.ORIGIN - span
+    x = np.where(rng.random(n) < 0.5, lo, hi) + rng.uniform(0, span, n)
+    y = np.where(rng.random(n) < 0.5, lo, hi) + rng.uniform(0, span, n)
+    x[:4] = [lo, lo, tiling.ORIGIN, tiling.ORIGIN]
+    y[:4] = [lo, tiling.ORIGIN, lo, tiling.ORIGIN]
+    pdf = pd.DataFrame({idc: np.arange(n, dtype=np.int64), "x": x, "y": y})
+    return spark.createDataFrame(pdf)
+
+
+@pytest.mark.parametrize("broadcast", [True, None])
+def test_knn_world_edge_cells(spark, broadcast):
+    """Ring cells off the world edge are dropped before the cell key is
+    packed; queries in edge tiles still match brute force."""
+    z = 3
+    q = _edge_df(spark, 60, 31, "qid", z)
+    nb = _edge_df(spark, 200, 37, "nid", z)
+    got = _collect_pairs(
+        knn_join(q, nb, k=3, zoom=z, radius=1, max_rounds=4, broadcast_neighbors=broadcast)
+    )
     want = _collect_pairs(knn_join_bruteforce(q, nb, k=3))
     assert got == want
 

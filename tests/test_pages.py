@@ -76,3 +76,24 @@ def test_skew_variant_hotspot(spark):
         t.groupBy("tile_x", "tile_y").count().orderBy(F.col("count").desc()).limit(1).collect()[0]
     )
     assert top["count"] > 2000 * 0.2  # hot cell holds ≥20% of rows
+
+
+def test_skew_variant_non_hot_rows_match_plain(spark):
+    """The skew variant moves only its hot rows: every other row hashes
+    byte-identical to the plain row with the same id (url carries the id)."""
+    h = F.xxhash64("url", "html", "text", "lang")
+    plain = synth_pages(spark, 2000).select("url", h.alias("h_plain"))
+    skew = extract_geotags(synth_pages(spark, 2000, skew_hot_fraction=0.3))
+    hot = F.col("lon").between(8.5, 8.7) & F.col("lat").between(47.3, 47.5)
+    rows = (
+        skew.filter(~hot)
+        .select("url", h.alias("h_skew"))
+        .join(plain, "url")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("h_skew") != F.col("h_plain")).cast("int")).alias("diff"),
+        )
+        .collect()[0]
+    )
+    assert 2000 * 0.6 < rows["n"] < 2000 * 0.8  # ~70% of rows are not hot
+    assert rows["diff"] == 0

@@ -103,6 +103,36 @@ def test_pip_join_plan_is_broadcast(spark):
     """The polygon cover must broadcast — no shuffle of the big side."""
     ps, _, _ = _lonlat_polyset()
     df, _ = _points_df(spark, n=100)
-    plan = point_in_polygon_join(df, ps, zoom=6)._jdf.queryExecution().executedPlan().toString()
+    joined = point_in_polygon_join(df, ps, zoom=6)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+    # one packed BIGINT cell key → a compact LongHashedRelation; a two-long
+    # key would broadcast an UnsafeHashedRelation of ~64 MB for this cover
+    joined.collect()
+    nodes = _executed_nodes(joined)
+    (bhj,) = [n for n in nodes if n.nodeName() == "BroadcastHashJoin"]
+    assert bhj.leftKeys().size() == 1 and bhj.rightKeys().size() == 1
+    sizes = [
+        int(n.metrics().get("dataSize").get().value())
+        for n in nodes
+        if n.nodeName() == "BroadcastExchange"
+    ]
+    assert len(sizes) == 1 and 0 < sizes[0] < 4 << 20, sizes
+
+
+def _executed_nodes(df):
+    """Every operator of ``df``'s executed plan, AQE query stages descended."""
+    stack, out = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        else:
+            out.append(node)
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out

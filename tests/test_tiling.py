@@ -84,11 +84,16 @@ def test_spark_sql_matches_numpy(spark):
     df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
     z = 9
     tx_sql, ty_sql = tiling.lonlat_tile_sql("lon", "lat", z)
+    cell_sql = tiling.mercator_cell_sql(tiling.mercator_x_sql("lon"), tiling.mercator_y_sql("lat"), z)
     got = (
-        df.select(F.expr(tx_sql).alias("tx"), F.expr(ty_sql).alias("ty"))
+        df.select(
+            F.expr(tx_sql).alias("tx"), F.expr(ty_sql).alias("ty"), F.expr(cell_sql).alias("cell")
+        )
         .toPandas()
     )
     mx, my = tiling.lonlat_to_mercator_np(lon, lat)
     tx, ty = tiling.tile_indices_np(mx, my, z)
     assert (got["tx"].to_numpy() == tx).all()
     assert (got["ty"].to_numpy() == ty).all()
+    # the packed join key: Spark-side SQL and driver-side NumPy agree
+    assert (got["cell"].to_numpy() == tiling.cell_id_np(tx, ty, z)).all()
