@@ -14,6 +14,7 @@ Determinism rules used throughout so value-hashes match bit-for-bit:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import numpy as np
@@ -28,6 +29,16 @@ from gdal_spark.operators.spatial_join import assign_tiles, pip_counts, point_in
 from gdal_spark.text import analysis, dedup
 
 SF001 = "/root/testdata/sf0.001"
+GDAL_AUTOTEST = "/root/reference/autotest"  # the reference checkout's autotest data
+
+
+def _gdal_ref(rel: str) -> str:
+    """Path of a GDAL autotest reference file; raises FileNotFoundError
+    naming the path when the reference checkout does not have it."""
+    path = f"{GDAL_AUTOTEST}/{rel}"
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"GDAL reference file missing: {path}")
+    return path
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2616,7 +2627,7 @@ def q_shapefile_poly_read(spark, sf_dir):
     from gdal_spark.functions.st import st_area
     from gdal_spark.sources.shapefile import read_shapefile
 
-    df = read_shapefile(spark, "/root/reference/autotest/ogr/data/poly.shp")
+    df = read_shapefile(spark, _gdal_ref("ogr/data/poly.shp"))
     return df.select(
         F.col("EAS_ID").cast("long").alias("eas_id"),
         "PRFEDEA",
@@ -2633,7 +2644,7 @@ def q_gpkg_poly_read(spark, sf_dir):
     from gdal_spark.functions.st import st_area
     from gdal_spark.sources.gpkg import read_gpkg
 
-    df = read_gpkg(spark, "/root/reference/autotest/ogr/data/gpkg/poly_golden.gpkg")
+    df = read_gpkg(spark, _gdal_ref("ogr/data/gpkg/poly_golden.gpkg"))
     return df.select(
         F.col("EAS_ID").cast("long").alias("eas_id"),
         "PRFEDEA",
@@ -2676,7 +2687,7 @@ def q_gpkg_roundtrip(spark, sf_dir):
     from gdal_spark.functions.st import st_area
     from gdal_spark.sources.gpkg import read_gpkg, write_gpkg
 
-    src = read_gpkg(spark, "/root/reference/autotest/ogr/data/gpkg/poly_golden.gpkg")
+    src = read_gpkg(spark, _gdal_ref("ogr/data/gpkg/poly_golden.gpkg"))
     path = _os.path.join(_tempfile.mkdtemp(prefix="gpkg_rt_"), "roundtrip.gpkg")
     write_gpkg(src.drop("fid"), path, "poly", srs_id=27700, geometry_type="POLYGON")
     df = read_gpkg(spark, path)
@@ -2705,7 +2716,7 @@ def q_fgb_poly_read(spark, sf_dir):
     from gdal_spark.sources.flatgeobuf import read_fgb, write_fgb
     from gdal_spark.sources.gpkg import read_gpkg
 
-    src = read_gpkg(spark, "/root/reference/autotest/ogr/data/gpkg/poly_golden.gpkg")
+    src = read_gpkg(spark, _gdal_ref("ogr/data/gpkg/poly_golden.gpkg"))
     path = _os.path.join(_tempfile.mkdtemp(prefix="fgb_"), "poly.fgb")
     write_fgb(src.drop("fid"), path, name="poly", geometry_type="Polygon")
     df = read_fgb(spark, path)
@@ -2732,7 +2743,7 @@ def q_gml_poly_read(spark, sf_dir):
     from gdal_spark.sources.gml import read_gml, write_gml
     from gdal_spark.sources.gpkg import read_gpkg
 
-    src = read_gpkg(spark, "/root/reference/autotest/ogr/data/gpkg/poly_golden.gpkg")
+    src = read_gpkg(spark, _gdal_ref("ogr/data/gpkg/poly_golden.gpkg"))
     path = _os.path.join(_tempfile.mkdtemp(prefix="gml_"), "poly.gml")
     write_gml(src.drop("fid"), path, layer="poly")
     df = read_gml(spark, path)
@@ -2754,7 +2765,7 @@ def q_gml_archsites_read(spark, sf_dir):
     to the file's literal content."""
     from gdal_spark.sources.gml import read_gml
 
-    df = read_gml(spark, "/root/reference/autotest/ogr/data/gml/archsites.gml")
+    df = read_gml(spark, _gdal_ref("ogr/data/gml/archsites.gml"))
     g = F.col("geometry")
     from gdal_spark.functions.st import st_astext
 
@@ -2787,7 +2798,7 @@ def q_kml_samples_read(spark, sf_dir):
     from gdal_spark.functions.st import st_astext, st_npoints
     from gdal_spark.sources.kml import read_kml
 
-    df = read_kml(spark, "/root/reference/autotest/ogr/data/kml/samples.kml")
+    df = read_kml(spark, _gdal_ref("ogr/data/kml/samples.kml"))
     keep = (
         F.col("layer").isin("Placemarks", "Highlighted Icon", "Google Campus")
         | ((F.col("layer") == "Paths")
@@ -2861,7 +2872,7 @@ def q_kml_poly_read(spark, sf_dir):
     from gdal_spark.sources.gpkg import read_gpkg
     from gdal_spark.sources.kml import read_kml, write_kml
 
-    src = read_gpkg(spark, "/root/reference/autotest/ogr/data/gpkg/poly_golden.gpkg")
+    src = read_gpkg(spark, _gdal_ref("ogr/data/gpkg/poly_golden.gpkg"))
     path = _os.path.join(_tempfile.mkdtemp(prefix="kml_"), "poly.kml")
     write_kml(src.drop("fid"), path, layer="poly")
     df = read_kml(spark, path, keep_z=False)
@@ -2889,7 +2900,7 @@ def q_csv_geom_read(spark, sf_dir):
     from gdal_spark.sources.csv_geom import read_csv_geometry
     from gdal_spark.sources.gpkg import read_gpkg
 
-    src = read_gpkg(spark, "/root/reference/autotest/ogr/data/gpkg/poly_golden.gpkg")
+    src = read_gpkg(spark, _gdal_ref("ogr/data/gpkg/poly_golden.gpkg"))
     rows = sorted(
         (int(r["EAS_ID"]), r["PRFEDEA"], _wkt.wkb_to_wkt(bytes(r["geometry"])))
         for r in src.collect()
@@ -3450,10 +3461,9 @@ def q_geotiff_read_checksums(spark, sf_dir):
     from gdal_spark.raster.checksum import checksum_df
     from gdal_spark.sources.geotiff import read_geotiff
 
-    base = "/root/reference/autotest/gcore/data/"
     rows = []
     for name, band, _want in _GTIFF_GOLDENS:
-        t, meta = read_geotiff(spark, base + name)
+        t, meta = read_geotiff(spark, _gdal_ref("gcore/data/" + name))
         cs = int(
             checksum_df(
                 t.filter(F.col("band") == band).withColumn("band", F.lit(1)),
@@ -3556,10 +3566,10 @@ def q_png_reference_checksums(spark, sf_dir):
     from gdal_spark.sources.png import decode_png
 
     fixtures = [
-        ("/root/reference/autotest/gdrivers/data/png/test.png", 1),
-        ("/root/reference/autotest/gdrivers/data/png/rgba16.png", 3),
-        ("/root/reference/autotest/gdrivers/data/png/rgba16.png", 4),
-        ("/root/reference/autotest/gcore/data/stefan_full_rgba.png", 1),
+        (_gdal_ref("gdrivers/data/png/test.png"), 1),
+        (_gdal_ref("gdrivers/data/png/rgba16.png"), 3),
+        (_gdal_ref("gdrivers/data/png/rgba16.png"), 4),
+        (_gdal_ref("gcore/data/stefan_full_rgba.png"), 1),
     ]
     rows = []
     for i, (path, band) in enumerate(fixtures):
@@ -3594,12 +3604,11 @@ def q_jpeg_reference_checksums(spark, sf_dir):
     from gdal_spark.raster.checksum import checksum_np
     from gdal_spark.sources.jpeg import decode_jpeg
 
-    base = "/root/reference/autotest/gdrivers/data/jpeg"
     fixtures = [
-        (f"{base}/albania.jpg", 2),
-        (f"{base}/rgb_ntf_cmyk.jpg", 1),
-        (f"{base}/rgb_ntf_cmyk.jpg", 2),
-        (f"{base}/rgb_ntf_cmyk.jpg", 3),
+        (_gdal_ref("gdrivers/data/jpeg/albania.jpg"), 2),
+        (_gdal_ref("gdrivers/data/jpeg/rgb_ntf_cmyk.jpg"), 1),
+        (_gdal_ref("gdrivers/data/jpeg/rgb_ntf_cmyk.jpg"), 2),
+        (_gdal_ref("gdrivers/data/jpeg/rgb_ntf_cmyk.jpg"), 3),
     ]
     rows = []
     cache = {}

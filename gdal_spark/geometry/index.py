@@ -112,56 +112,55 @@ class PolygonSet:
     def tile_cover(self, z: int):
         """Cover every polygon with zoom-z WebMercator tiles.
 
-        Returns int64 arrays (poly_idx, tx, ty, full) where ``full=1``
-        marks tiles wholly inside the polygon (points there are accepted
-        without refinement — the scale lever: interior cells skip the UDF).
+        Returns int64 arrays (poly_idx, tx, ty, full): per polygon, in
+        row-major (ty, tx) order, each tile of its bbox tile range that a
+        ring segment touches or whose centre is inside. ``full=1`` marks
+        tiles no segment touches: wholly inside, their points are accepted
+        without refinement (the scale lever: interior cells skip the UDF).
 
-        Coordinates are assumed to already be in mercator meters; for
-        lon/lat data convert envelopes/rings first.
+        Each segment is paired only with the tiles of its own bbox range,
+        padded by one tile (``tile_indices_np`` adds EPSILON; the rect test
+        is closed), and ``segments_intersect_rect_np`` runs once over all
+        pairs, so cost ∝ segment-tile crossings (for a long diagonal
+        segment, its bbox tiles). Only pairs the test rejects are left out,
+        and the rect floats and predicate are those of testing every
+        segment against every bbox tile, so the rows equal that loop's.
+
+        Coordinates are mercator meters; convert lon/lat rings first.
         """
-        n = 1 << z
-        span = tiling.WORLD_SPAN / n
+        span = tiling.WORLD_SPAN / (1 << z)
         P, X, Y, F = [], [], [], []
-        for i in range(len(self.ids)):
-            minx, miny, maxx, maxy = self.env[i]
-            tx0, ty1 = tiling.tile_indices_np(np.array([minx]), np.array([miny]), z)
-            tx1, ty0 = tiling.tile_indices_np(np.array([maxx]), np.array([maxy]), z)
-            txs = np.arange(tx0[0], tx1[0] + 1, dtype=np.int64)
-            tys = np.arange(ty0[0], ty1[0] + 1, dtype=np.int64)
-            gx, gy = np.meshgrid(txs, tys)
-            gx, gy = gx.ravel(), gy.ravel()
+        for i, (minx, miny, maxx, maxy) in enumerate(self.env):
+            rings = self._rings(i)
+            (tx0, tx1), (ty1, ty0) = tiling.tile_indices_np([minx, maxx], [miny, maxy], z)
+            nx, ny = tx1 - tx0 + 1, ty1 - ty0 + 1
+            gx, gy = (g.ravel() for g in np.meshgrid(np.arange(tx0, tx1 + 1), np.arange(ty0, ty1 + 1)))
             # tile rectangles in mercator meters
-            rx0 = -tiling.ORIGIN + gx * span
-            rx1 = rx0 + span
-            ry1 = tiling.ORIGIN - gy * span
-            ry0 = ry1 - span
-            # does any boundary segment of any ring intersect the tile rect?
-            crossed = np.zeros(len(gx), dtype=bool)
-            for ring in self._rings(i):
-                ax, ay = ring[:-1, 0], ring[:-1, 1]
-                bx, by = ring[1:, 0], ring[1:, 1]
-                for t in range(len(gx)):
-                    if not crossed[t]:
-                        crossed[t] = kernels.segments_intersect_rect_np(
-                            ax, ay, bx, by, rx0[t], ry0[t], rx1[t], ry1[t]
-                        ).any()
-            cx = (rx0 + rx1) * 0.5
-            cy = (ry0 + ry1) * 0.5
-            center_in = kernels.points_in_polygon_np(cx, cy, self._rings(i))
+            rx0, ry1 = -tiling.ORIGIN + gx * span, tiling.ORIGIN - gy * span
+            rx1, ry0 = rx0 + span, ry1 - span
+            # each segment's padded tile range (bbox-local), then one pair per tile in it
+            ax, ay, bx, by = np.vstack([np.hstack([r[:-1], r[1:]]) for r in rings]).T
+            sx, sy = tiling.tile_indices_np(np.minimum(ax, bx), np.maximum(ay, by), z)
+            ex, ey = tiling.tile_indices_np(np.maximum(ax, bx), np.minimum(ay, by), z)
+            sx, sy = np.maximum(sx - 1 - tx0, 0), np.maximum(sy - 1 - ty0, 0)
+            cx = np.minimum(ex + 1 - tx0, nx - 1) - sx + 1
+            cnt = cx * (np.minimum(ey + 1 - ty0, ny - 1) - sy + 1)
+            k = np.repeat(np.arange(len(cnt)), cnt)
+            j = np.arange(len(k)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+            t = (sy[k] + j // cx[k]) * nx + sx[k] + j % cx[k]
+            hit = kernels.segments_intersect_rect_np(ax[k], ay[k], bx[k], by[k], rx0[t], ry0[t], rx1[t], ry1[t])
+            crossed = np.bincount(t[hit], minlength=len(gx)) > 0
+            center_in = kernels.points_in_polygon_np((rx0 + rx1) * 0.5, (ry0 + ry1) * 0.5, rings)
             keep = crossed | center_in
             full = center_in & ~crossed
             P.append(np.full(int(keep.sum()), i, dtype=np.int64))
             X.append(gx[keep])
             Y.append(gy[keep])
             F.append(full[keep].astype(np.int64))
-        return (
-            np.concatenate(P) if P else np.zeros(0, np.int64),
-            np.concatenate(X) if X else np.zeros(0, np.int64),
-            np.concatenate(Y) if Y else np.zeros(0, np.int64),
-            np.concatenate(F) if F else np.zeros(0, np.int64),
-        )
+        return tuple(np.concatenate(a) if a else np.zeros(0, np.int64) for a in (P, X, Y, F))
 
     # -- misc ------------------------------------------------------------
 
     def areas(self) -> np.ndarray:
         return np.array([kernels.polygon_area(self._rings(i)) for i in range(len(self.ids))])
+

@@ -39,7 +39,11 @@ def assign_tiles(
     convention: str = "xyz",
     prefix: str = "tile",
 ) -> DataFrame:
-    """Add ``{prefix}_z/x/y`` columns via GetTileIndices math (column-only)."""
+    """Add ``{prefix}_z/x/y`` columns via GetTileIndices math (column-only).
+
+    ``convention`` is ``'xyz'`` (y down from the north) or ``'tms'`` (y up)."""
+    if convention not in ("xyz", "tms"):
+        raise ValueError(f"convention must be 'xyz' or 'tms', got {convention!r}")
     tx_sql, ty_sql = tiling.lonlat_tile_sql(lon_col, lat_col, zoom)
     out = df.withColumn(f"{prefix}_z", F.lit(zoom)).withColumn(
         f"{prefix}_x", F.expr(tx_sql)
@@ -84,6 +88,8 @@ def point_in_polygon_join(
     set ``coords='mercator'`` if ``lon_col``/``lat_col`` already hold
     projected meters. Output = point columns + ``poly_id``.
     """
+    if coords not in ("lonlat", "mercator"):
+        raise ValueError(f"coords must be 'lonlat' or 'mercator', got {coords!r}")
     spark = points.sparkSession
     if coords == "lonlat":
         pts = with_mercator(points, lon_col, lat_col)

@@ -220,6 +220,16 @@ _RULE_ORDER = ("doc_length", "mean_word_length", "stopword_ratio",
                "dup_2gram", "dup_3gram", "top_word", "punct_ratio")
 
 
+def _gopher_rules(overrides: dict) -> dict:
+    """GOPHER_RULES with ``overrides`` applied; an unknown rule name raises
+    rather than being ignored (a misspelt threshold would silently keep
+    its default)."""
+    unknown = sorted(set(overrides) - set(GOPHER_RULES))
+    if unknown:
+        raise ValueError(f"unknown quality rule(s) {unknown}; known: {sorted(GOPHER_RULES)}")
+    return {**GOPHER_RULES, **overrides}
+
+
 def quality_filter(df: DataFrame, text_col: str = "text", **overrides) -> DataFrame:
     """Composed Gopher-style (Rae et al. 2021 §A1.1, public paper)
     keep/drop verdict per document: adds ``keep BOOLEAN`` and
@@ -228,7 +238,7 @@ def quality_filter(df: DataFrame, text_col: str = "text", **overrides) -> DataFr
     the verdict is float-free; all inputs come from the existing
     map-only metric columns — the whole filter is one JVM codegen pass,
     no shuffle."""
-    rules = {**GOPHER_RULES, **overrides}
+    rules = _gopher_rules(overrides)
     d = quality_metrics(df, text_col)
     d = repetition_metrics(d, text_col)
     n = F.col("n_words").cast("long")
@@ -265,7 +275,7 @@ def quality_filter_sql(text_expr: str, top_word_expr: str, **overrides) -> str:
     """DuckDB CASE expression producing the identical reject_reason
     (``top_word_expr`` supplies the wordcount-derived top_word_n column
     name — the oracle's independent unnest path)."""
-    rules = {**GOPHER_RULES, **overrides}
+    rules = _gopher_rules(overrides)
     qm = quality_metrics_sql(text_expr)
     rm = repetition_metrics_sql(text_expr)
     n = rm["n_words"]

@@ -142,6 +142,102 @@ def test_polygonset_tile_cover_consistency():
             assert inside[i]
 
 
+def _tile_cover_loop(ps, z):
+    """Reference oracle for ``PolygonSet.tile_cover``: every ring segment
+    against every tile of the polygon's bbox tile range, one tile at a
+    time. Slow (Python over tiles × rings) but obviously complete."""
+    from gdal_spark import tiling
+
+    n = 1 << z
+    span = tiling.WORLD_SPAN / n
+    P, X, Y, F = [], [], [], []
+    for i in range(len(ps.ids)):
+        minx, miny, maxx, maxy = ps.env[i]
+        tx0, ty1 = tiling.tile_indices_np(np.array([minx]), np.array([miny]), z)
+        tx1, ty0 = tiling.tile_indices_np(np.array([maxx]), np.array([maxy]), z)
+        txs = np.arange(tx0[0], tx1[0] + 1, dtype=np.int64)
+        tys = np.arange(ty0[0], ty1[0] + 1, dtype=np.int64)
+        gx, gy = np.meshgrid(txs, tys)
+        gx, gy = gx.ravel(), gy.ravel()
+        rx0 = -tiling.ORIGIN + gx * span
+        rx1 = rx0 + span
+        ry1 = tiling.ORIGIN - gy * span
+        ry0 = ry1 - span
+        crossed = np.zeros(len(gx), dtype=bool)
+        for ring in ps._rings(i):
+            ax, ay = ring[:-1, 0], ring[:-1, 1]
+            bx, by = ring[1:, 0], ring[1:, 1]
+            for t in range(len(gx)):
+                if not crossed[t]:
+                    crossed[t] = kernels.segments_intersect_rect_np(
+                        ax, ay, bx, by, rx0[t], ry0[t], rx1[t], ry1[t]
+                    ).any()
+        cx = (rx0 + rx1) * 0.5
+        cy = (ry0 + ry1) * 0.5
+        center_in = kernels.points_in_polygon_np(cx, cy, ps._rings(i))
+        keep = crossed | center_in
+        full = center_in & ~crossed
+        P.append(np.full(int(keep.sum()), i, dtype=np.int64))
+        X.append(gx[keep])
+        Y.append(gy[keep])
+        F.append(full[keep].astype(np.int64))
+    return tuple(np.concatenate(a) for a in (P, X, Y, F))
+
+
+def _merc_ring(lonlat):
+    from gdal_spark import tiling
+
+    a = np.asarray(lonlat, dtype=float)
+    mx, my = tiling.lonlat_to_mercator_np(a[:, 0], a[:, 1])
+    return np.column_stack([mx, my])
+
+
+def _cover_case(name, z):
+    from gdal_spark import tiling
+    from gdal_spark.fixtures import fixture_polyset
+
+    if name == "fixture200":
+        return fixture_polyset(200)
+    if name == "holes":
+        outer = _merc_ring([(-20, -15), (20, -15), (20, 25), (-20, 25), (-20, -15)])
+        box_hole = _merc_ring([(-8, 0), (-8, 12), (8, 12), (8, 0), (-8, 0)])
+        tri_hole = _merc_ring([(10, -10), (15, -10), (12, -2), (10, -10)])
+        return PolygonSet.from_coords([1], [[outer, box_hole, tri_hole]])
+    if name == "world_edge":
+        o = tiling.ORIGIN
+        north_west = _merc_ring([(-180, 60), (-150, 60), (-150, 85), (-180, 85), (-180, 60)])
+        south_east = _merc_ring([(150, -85), (180, -85), (180, -70), (150, -70), (150, -85)])
+        # one vertex a metre past the antimeridian: tile indices clamp to 2^z - 1
+        past_edge = np.array([[o - 3e6, 0.0], [o + 1.0, 1e6], [o, 4e6], [o - 3e6, 0.0]])
+        return PolygonSet.from_coords([1, 2, 3], [[north_west], [south_east], [past_edge]])
+    if name == "grid_square":
+        # vertices on zoom-z tile corners, built with the cover's own rect floats
+        span = tiling.WORLD_SPAN / (1 << z)
+        x0, x1 = -tiling.ORIGIN + 3 * span, -tiling.ORIGIN + 6 * span
+        y1, y0 = tiling.ORIGIN - 2 * span, tiling.ORIGIN - 5 * span
+        sq = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+        return PolygonSet.from_coords([1], [[sq]])
+    if name == "repeated_vertices":
+        ring = _merc_ring([(5, 5), (5, 5), (20, 8), (20, 8), (20, 8), (10, 25), (5, 5), (5, 5)])
+        return PolygonSet.from_coords([1], [[ring]])
+    raise AssertionError(name)
+
+
+@pytest.mark.parametrize("z", range(4, 10))
+@pytest.mark.parametrize(
+    "case", ["fixture200", "holes", "world_edge", "grid_square", "repeated_vertices"]
+)
+def test_tile_cover_equals_loop_oracle(case, z):
+    """The vectorized cover returns the reference loop's rows, in its order."""
+    ps = _cover_case(case, z)
+    got = ps.tile_cover(z)
+    want = _tile_cover_loop(ps, z)
+    assert len(want[0]) > 0
+    for g, w in zip(got, want):
+        assert g.dtype == np.int64
+        np.testing.assert_array_equal(g, w)
+
+
 # ---------------------------------------------------------------------------
 # general (non-convex) overlay kernel
 # ---------------------------------------------------------------------------

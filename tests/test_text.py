@@ -273,6 +273,18 @@ def test_quality_filter_rules_and_order(spark):
     assert all(out2[i].keep for i in range(5))
 
 
+def test_quality_filter_unknown_rule_raises(spark):
+    """A misspelt rule override raises, naming it, in both the Spark
+    filter and its SQL twin, instead of silently keeping the default."""
+    from gdal_spark.text.analysis import quality_filter, quality_filter_sql
+
+    df = spark.createDataFrame([(0, "some text")], "doc_id LONG, text STRING")
+    with pytest.raises(ValueError, match="min_word'"):
+        quality_filter(df, min_word=10)
+    with pytest.raises(ValueError, match="max_dup2'"):
+        quality_filter_sql("d.text", "tw.top_word_n", max_dup2=1, max_dup3_e6=1)
+
+
 def test_line_dedup_first_occurrence(spark):
     """CCNet line dedup: first corpus-wide occurrence by (doc_id, pos)
     wins; docs reassemble in original order; fully-duplicate docs
