@@ -56,24 +56,21 @@ def _with_lonlat(df: DataFrame, key: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the north-rule pages pipeline at smoke scale — synth
-    Common-Crawl-style pages, extract geotags (JVM regexp), assign
-    WebMercator z12 tiles, PIP-join against the broadcast polygon
-    fixture, count pages per polygon. Also sanity-joins the sf0.001
-    customer table as a second point source."""
-    from gdal_spark.pages import extract_geotags, synth_pages
+    """Flagship: the north-rule pages pipeline (:func:`gdal_spark.pages.flagship`)
+    at smoke scale over synth Common-Crawl-style pages, its per-tile
+    counts summed per polygon. Also sanity-joins the sf0.001 customer
+    table as a second point source."""
+    from gdal_spark.pages import flagship, synth_pages
 
-    pages = synth_pages(spark, 20_000)
-    pts = extract_geotags(pages).select("lon", "lat")
-    tiled = assign_tiles(pts, zoom=12)
-    page_counts = pip_counts(tiled, fixture_polyset(), zoom=6)
-    cust = _with_lonlat(_t(spark, SF001, "customer"), "c_custkey")
-    cust_counts = pip_counts(cust, fixture_polyset(), zoom=6)
-    return (
-        page_counts.withColumnRenamed("n_points", "n_pages")
-        .join(cust_counts.withColumnRenamed("n_points", "n_customers"), "poly_id", "left")
-        .orderBy("poly_id")
+    ps = fixture_polyset()
+    page_counts = flagship(synth_pages(spark, 20_000), ps).groupBy("poly_id").agg(
+        F.sum("n_pages").alias("n_pages")
     )
+    cust = _with_lonlat(_t(spark, SF001, "customer"), "c_custkey")
+    cust_counts = pip_counts(cust, ps, zoom=6)
+    return page_counts.join(
+        cust_counts.withColumnRenamed("n_points", "n_customers"), "poly_id", "left"
+    ).orderBy("poly_id")
 
 
 # ---------------------------------------------------------------------------

@@ -16,7 +16,9 @@ the query's cell is ≥ r*cell_span away, so a query is *final* once its
 k-th distance ≤ r*cell_span. Queries not final at ``radius`` are re-run
 with a doubled ring (driver loop, geometrically growing, at most
 ``max_rounds``) — the per-round shuffles stay proportional to the
-*unfinished* queries only.
+*unfinished* queries only. Queries still unfinished after the last round
+keep what it found, so the result is exact only within that reach (see
+:func:`knn_join`).
 """
 
 from __future__ import annotations
@@ -41,12 +43,19 @@ def knn_join(
     max_rounds: int = 4,
     broadcast_neighbors: bool | None = None,
 ) -> DataFrame:
-    """For every query row return its k nearest neighbor rows.
+    """For every query row return up to k nearest neighbor rows.
 
     Output columns: query_id, neighbor_id, dist, rank (1-based).
     Distances are planar in the coordinate space of x/y (use mercator
-    meters for geographic data). Exact: matches brute-force with ties
-    broken by (dist, neighbor_id).
+    meters for geographic data); ties are broken by (dist, neighbor_id).
+
+    Bounded, not exact: the search reaches at most
+    ``radius * 2**(max_rounds - 1)`` cells out from the query's cell (8 at
+    the defaults), and the last round accepts whatever it found. A query
+    whose k nearest all lie within that ring matches brute force; an
+    isolated query can get fewer than k rows (none, if no neighbour is
+    within reach) or rows that are not its true nearest. ROADMAP item 1
+    plans the exact, histogram-sized search.
     """
     n_tiles = 1 << zoom
     span0 = tiling.WORLD_SPAN / n_tiles

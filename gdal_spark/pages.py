@@ -13,16 +13,24 @@ arithmetic (ANSI off), so every run and every engine sees identical bytes.
 Geotag extraction is JVM-side ``regexp_extract`` over the html — the hot
 path stays inside whole-stage codegen; no Python touches the trillion-row
 table until the (already cell-pruned) PIP refine.
+
+:func:`flagship` is the one definition of the flagship pipeline; the
+driver entry, the benchmarks and the spark-submit script all call it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from gdal_spark.geometry.index import PolygonSet
+from gdal_spark.operators.spatial_join import assign_tiles, point_in_polygon_join
+
 SEED = 42
 LANGS = ["en", "de", "fr", "es", "pt", "zh", "ru", "ar"]
 # cumulative percent thresholds for the weighted lang mix
 _LANG_CUM = [45, 60, 70, 80, 87, 93, 97, 100]
+
+TILE_ZOOM = 12  # the flagship's WebMercator tile level
 
 GEO_RE = r'<meta name="geo\.position" content="(-?\d+\.\d+);(-?\d+\.\d+)"'
 
@@ -134,3 +142,15 @@ def extract_geotags(pages: DataFrame) -> DataFrame:
     lat = F.regexp_extract(html_s, GEO_RE, 1).cast("double")
     lon = F.regexp_extract(html_s, GEO_RE, 2).cast("double")
     return pages.withColumn("lat", lat).withColumn("lon", lon)
+
+
+def flagship(pages: DataFrame, polyset: PolygonSet) -> DataFrame:
+    """The flagship pipeline: geotag extract → z12 tile assign → cell-cover
+    PIP join (default cover zoom) with the Arrow ray-cast refine → one
+    ``n_pages`` count per ``(poly_id, tile_x, tile_y)``.
+
+    Only the join columns ride into the spatial stage: Catalyst does not
+    prune html/text through the PIP join and its UDF."""
+    tiled = assign_tiles(extract_geotags(pages), TILE_ZOOM)
+    joined = point_in_polygon_join(tiled.select("lon", "lat", "tile_x", "tile_y"), polyset)
+    return joined.groupBy("poly_id", "tile_x", "tile_y").agg(F.count(F.lit(1)).alias("n_pages"))

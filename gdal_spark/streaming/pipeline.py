@@ -64,40 +64,3 @@ def streaming_tile_counts(
 def streaming_url_dedup(pages: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming exact dedup by url (state aged out past the watermark)."""
     return pages.withWatermark("warc_ts", watermark).dropDuplicates(["url"])
-
-
-def streaming_site_stats(pages: DataFrame, timeout_ms: int = 60000) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: running
-    per-site page count + total text bytes, emitted on every update.
-
-    The explicit-state form the reference lacks entirely (§2.9): state is
-    a (count, bytes) pair per site key, timeout-evicted — the pattern for
-    any custom streaming accumulator (session windows, rolling sketches).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        n = 0
-        b = 0
-        for pdf in pdfs:
-            n += len(pdf)
-            b += int(pdf["text"].str.len().sum())
-        if state.exists:
-            (pn, pb) = state.get
-            n += pn
-            b += pb
-        state.update((n, b))
-        state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame({"site": [key[0]], "n_pages": [n], "text_bytes": [b]})
-
-    keyed = pages.withColumn(
-        "site", F.regexp_extract("url", r"https://([^/]+)/", 1)
-    )
-    return keyed.groupBy("site").applyInPandasWithState(
-        update,
-        outputStructType="site STRING, n_pages LONG, text_bytes LONG",
-        stateStructType="n LONG, b LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )

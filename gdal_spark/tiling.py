@@ -93,18 +93,6 @@ def k_ring_offsets(k: int) -> list[tuple[int, int]]:
     return [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
 
 
-def ring_offsets(r: int) -> list[tuple[int, int]]:
-    """Only the cells at exactly Chebyshev radius r."""
-    if r == 0:
-        return [(0, 0)]
-    return [
-        (dx, dy)
-        for dx in range(-r, r + 1)
-        for dy in range(-r, r + 1)
-        if max(abs(dx), abs(dy)) == r
-    ]
-
-
 # ---------------------------------------------------------------------------
 # SQL emission — one formula, two engines (Spark F.expr + DuckDB oracle)
 # ---------------------------------------------------------------------------

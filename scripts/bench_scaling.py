@@ -1,11 +1,14 @@
 #!/usr/bin/env python
 """Scaling-efficiency evidence for the north rule: run the identical
-flagship job at two parallelism levels (default local[8] vs local[32] —
-the sandbox stand-in for N vs 4N executors) and report throughput at both
-plus efficiency = (T_N / T_4N) / 4.
+flagship job (``bench.flagship_rows_sec``: a pages parquet written once,
+then scan-fed :func:`gdal_spark.pages.flagship` runs) at two parallelism
+levels (default local[2] vs local[8] — the sandbox stand-in for N vs 4N
+executors) and report throughput at both plus
+efficiency = (T_N / T_4N) / 4.
 
-Each level runs in a *fresh* JVM (subprocess) so executor-thread count is
-actually different and JIT/cache state doesn't leak between runs.
+Each level runs in a *fresh* interpreter (a spawned process with its own
+JVM) so executor-thread count is actually different and JIT/cache state
+doesn't leak between runs.
 
 Prints one JSON line.
 """
@@ -13,43 +16,37 @@ Prints one JSON line.
 from __future__ import annotations
 
 import json
+import multiprocessing
 import os
-import subprocess
 import sys
 
-WORKER = r"""
-import json, os, sys, time
-sys.path.insert(0, {repo!r})
-from gdal_spark.session import get_spark
-from pyspark.sql import functions as F
-from bench import flagship_rows_sec
-
-cpus = int(sys.argv[1])
-n_pages = int(sys.argv[2])
-spark = get_spark("scaling_%d" % cpus, master="local[%d]" % cpus,
-                  shuffle_partitions=cpus)
-spark.sparkContext.setLogLevel("ERROR")
-# warm up JIT + Arrow + python workers once, then measure best-of-3
-# (the sandbox VM time-shares vCPUs; best-of filters host contention)
-flagship_rows_sec(spark, max(n_pages // 10, 10000))
-obs = [flagship_rows_sec(spark, n_pages) for _ in range(3)]
-rps, el = max(obs, key=lambda t: t[0])
-print(json.dumps({{"cpus": cpus, "rows_sec": rps, "elapsed": el,
-                   "all_reps": [round(e, 2) for _, e in obs]}}))
-"""
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def run_level(cpus: int, n_pages: int, repo: str) -> dict:
-    code = WORKER.format(repo=repo)
-    out = subprocess.run(
-        [sys.executable, "-c", code, str(cpus), str(n_pages)],
-        capture_output=True, text=True, check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+def measure_level(cpus: int, n_pages: int) -> dict:
+    """Best of 3 flagship runs on a local[cpus] session (after bench's
+    untimed warm-up run; the sandbox VM time-shares vCPUs, and best-of
+    filters host contention)."""
+    from bench import flagship_rows_sec
+    from gdal_spark.session import get_spark
+
+    spark = get_spark(f"scaling_{cpus}", master=f"local[{cpus}]", shuffle_partitions=cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        obs = flagship_rows_sec(spark, n_pages, 3)
+    finally:
+        spark.stop()
+    rps, el = max(obs, key=lambda t: t[0])
+    return {"cpus": cpus, "rows_sec": rps, "elapsed": el, "all_reps": [round(e, 2) for _, e in obs]}
+
+
+def run_level(cpus: int, n_pages: int) -> dict:
+    ctx = multiprocessing.get_context("spawn")
+    with ctx.Pool(1) as pool:
+        return pool.apply(measure_level, (cpus, n_pages))
 
 
 def main():
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     n_pages = int(os.environ.get("SPARK_GRAFT_SCALING_PAGES", "4000000"))
     # default pair N=2 → 4N=8: within the sandbox VM's memory-bandwidth
     # envelope (the box plateaus at ~1.1M rows/s past 16 threads — a
@@ -66,8 +63,8 @@ def main():
         runs = int(sys.argv[sys.argv.index("--runs") + 1])
     series = []
     for _ in range(max(runs, 1)):
-        r_lo = run_level(lo, n_pages, repo)
-        r_hi = run_level(hi, n_pages, repo)
+        r_lo = run_level(lo, n_pages)
+        r_hi = run_level(hi, n_pages)
         series.append((r_lo, r_hi))
     best_lo = max((r for r, _ in series), key=lambda r: r["rows_sec"])
     best_hi = max((r for _, r in series), key=lambda r: r["rows_sec"])

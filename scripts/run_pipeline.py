@@ -4,10 +4,13 @@
     spark-submit --py-files gdal_spark.zip scripts/run_pipeline.py \
         --pages 1000000 --out /tmp/gdal_spark_out --shards 16
 
-Runs: synth/ingest pages → geotag extract → tile assign → PIP join →
-per-polygon counts; writes sharded output with per-shard lineage
-manifests (resumable — re-running skips committed shards) and one
-metrics JSON line to stdout.
+Runs: synth/ingest pages → geotag extract → z12 tile assign → resumable
+sharded write of the enriched table with per-shard lineage manifests
+(re-running skips committed shards) → lineage check of the committed table
+against the source → :func:`gdal_spark.pages.flagship` over a scan of the
+committed table, summed per polygon. Prints one metrics JSON line to
+stdout, then exits nonzero if the committed text bytes differ from the
+source's.
 """
 
 from __future__ import annotations
@@ -28,14 +31,13 @@ def main():
     ap.add_argument("--pages", type=int, default=1_000_000)
     ap.add_argument("--out", default="/tmp/gdal_spark_out")
     ap.add_argument("--shards", type=int, default=16)
-    ap.add_argument("--zoom", type=int, default=12)
     args = ap.parse_args()
 
     from gdal_spark.checkpoint import run_sharded
     from gdal_spark.fixtures import fixture_polyset
-    from gdal_spark.lineage import global_fingerprint
-    from gdal_spark.operators.spatial_join import assign_tiles, pip_counts
-    from gdal_spark.pages import extract_geotags, synth_pages
+    from gdal_spark.lineage import assert_unchanged, global_fingerprint
+    from gdal_spark.operators.spatial_join import assign_tiles
+    from gdal_spark.pages import TILE_ZOOM, extract_geotags, flagship, synth_pages
     from gdal_spark.session import get_spark
 
     spark = get_spark("gdal_spark_pipeline")
@@ -45,15 +47,17 @@ def main():
     pages = synth_pages(spark, args.pages)
     before = global_fingerprint(pages)
 
-    tagged = extract_geotags(pages)
-    tiled = assign_tiles(tagged, zoom=args.zoom)
     # resumable sharded write of the enriched table (text bytes intact)
-    summary = run_sharded(tiled, args.out, args.shards)
+    summary = run_sharded(assign_tiles(extract_geotags(pages), TILE_ZOOM), args.out, args.shards)
 
-    after = global_fingerprint(spark.read.parquet(os.path.join(args.out, "data")))
-    counts = pip_counts(
-        tagged.select("lon", "lat"), fixture_polyset(), zoom=6
-    ).collect()
+    committed = spark.read.parquet(os.path.join(args.out, "data"))
+    after = global_fingerprint(committed)
+    counts = (
+        flagship(committed, fixture_polyset())
+        .groupBy("poly_id")
+        .agg(F.sum("n_pages").alias("n_pages"))
+        .collect()
+    )
 
     print(
         json.dumps(
@@ -64,10 +68,11 @@ def main():
                 "shards_skipped": summary["skipped"],
                 "rows_written": summary["rows_written"],
                 "lineage_ok": before == after,
-                "poly_counts": {int(r.poly_id): int(r.n_points) for r in counts},
+                "poly_counts": {int(r.poly_id): int(r.n_pages) for r in counts},
             }
         )
     )
+    assert_unchanged(before, after, "sharded commit")
 
 
 if __name__ == "__main__":

@@ -1,10 +1,26 @@
-"""Pages synthesis, geotag extraction round-trip, lineage manifests."""
+"""Pages synthesis, geotag extraction round-trip, lineage manifests, and
+the flagship pipeline against an engine-free oracle."""
+import json
+import os
+import re
+import subprocess
+import sys
+from collections import Counter
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from gdal_spark import tiling
+from gdal_spark.fixtures import fixture_polyset
 from gdal_spark.lineage import assert_unchanged, global_fingerprint, partition_manifest
-from gdal_spark.operators.spatial_join import assign_tiles
-from gdal_spark.pages import extract_geotags, synth_pages
+from gdal_spark.operators.spatial_join import assign_tiles, pip_counts
+from gdal_spark.pages import extract_geotags, flagship, synth_pages
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# written out here, not imported from gdal_spark.pages, so a slip in the
+# engine's pattern shows up as a mismatch
+GEO_TAG = re.compile(r'<meta name="geo\.position" content="(-?\d+\.\d+);(-?\d+\.\d+)"')
 
 
 def test_synth_pages_schema_and_determinism(spark):
@@ -97,3 +113,84 @@ def test_skew_variant_non_hot_rows_match_plain(spark):
     )
     assert 2000 * 0.6 < rows["n"] < 2000 * 0.8  # ~70% of rows are not hot
     assert rows["diff"] == 0
+
+
+def _pip_counts(spark, pages):
+    return {
+        r.poly_id: r.n_points
+        for r in pip_counts(extract_geotags(pages).select("lon", "lat"), fixture_polyset()).collect()
+    }
+
+
+def _plan_nodes(df):
+    """Every operator of df's executed plan, AQE query stages descended."""
+    stack, out = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            stack.append(node.executedPlan())
+        elif name.startswith(("ShuffleQueryStage", "BroadcastQueryStage", "ResultQueryStage")):
+            stack.append(node.plan())
+        else:
+            out.append(node)
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+@pytest.mark.parametrize("n_poly", [6, 200])
+def test_flagship_matches_engine_free_oracle(spark, n_poly):
+    """Counts per (poly_id, tile_x, tile_y) equal Python re over the html,
+    NumPy tile math and the NumPy ray-cast against every polygon."""
+    ps = fixture_polyset(n_poly)
+    pages = synth_pages(spark, 3000)
+    got = {(r.poly_id, r.tile_x, r.tile_y): r.n_pages for r in flagship(pages, ps).collect()}
+
+    tags = [GEO_TAG.search(bytes(r.html).decode("utf-8")) for r in pages.select("html").collect()]
+    lat = np.array([float(m.group(1)) for m in tags])
+    lon = np.array([float(m.group(2)) for m in tags])
+    tx, ty = tiling.lonlat_to_tile_np(lon, lat, 12)
+    mx, my = tiling.lonlat_to_mercator_np(lon, lat)
+    want = Counter()
+    for pidx, pid in enumerate(ps.ids):
+        inside = ps.contains(mx, my, np.full(len(mx), pidx))
+        want.update(zip([int(pid)] * int(inside.sum()), tx[inside].tolist(), ty[inside].tolist()))
+    assert sum(want.values()) > 10
+    assert got == dict(want)
+
+
+def test_flagship_plan_keeps_tiles_and_refine(spark):
+    df = flagship(synth_pages(spark, 3000), fixture_polyset())
+    df.collect()
+    nodes = _plan_nodes(df)
+    projects = [n for n in nodes if n.nodeName() == "Project"]
+    outputs = [{n.output().apply(i).name() for i in range(n.output().size())} for n in projects]
+    assert any({"tile_x", "tile_y"} <= names for names in outputs)
+    assert any(n.nodeName().startswith("ArrowEvalPython") for n in nodes)
+
+
+def test_entry_counts_equal_pip_counts(spark):
+    import __spark_entry__
+
+    got = {r.poly_id: r.n_pages for r in __spark_entry__.entry(spark).collect()}
+    assert got == _pip_counts(spark, synth_pages(spark, 20_000))
+
+
+def test_run_pipeline_commits_checks_lineage_and_resumes(spark, tmp_path):
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_SHUFFLE_PARTITIONS="4", SPARK_GRAFT_DRIVER_MEM="1g")
+    cmd = [sys.executable, os.path.join(REPO, "scripts", "run_pipeline.py"),
+           "--pages", "2000", "--shards", "2", "--out", str(tmp_path / "out")]
+
+    def run():
+        proc = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+
+    first = run()
+    assert first["lineage_ok"] and first["shards_ran"] == 2
+    want = _pip_counts(spark, synth_pages(spark, 2000))
+    assert {int(k): v for k, v in first["poly_counts"].items()} == want
+    again = run()
+    assert again["shards_ran"] == 0 and again["shards_skipped"] == 2
+    assert again["lineage_ok"] and again["poly_counts"] == first["poly_counts"]

@@ -1,4 +1,4 @@
-"""GeoJSON source/sink, color relief, stateful streaming op."""
+"""GeoJSON source/sink, color relief."""
 import json
 
 import numpy as np
@@ -86,25 +86,3 @@ def test_color_relief(spark):
     # clamped ends
     assert (color_relief_np(np.array([[-10.0]]), ramp) == [0, 0, 255]).all()
     assert (color_relief_np(np.array([[2000.0]]), ramp) == [255, 0, 0]).all()
-
-
-def test_streaming_site_stats(spark):
-    from gdal_spark.streaming import streaming_pages_from_rate
-    from gdal_spark.streaming.pipeline import streaming_site_stats
-
-    pages = streaming_pages_from_rate(spark, rows_per_second=200)
-    stats = streaming_site_stats(pages)
-    q = (
-        stats.writeStream.format("memory")
-        .queryName("site_stats_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.sql("SELECT * FROM site_stats_test")
-    assert got.columns == ["site", "n_pages", "text_bytes"]
-    rows = got.collect()
-    if rows:  # rate source emitted at least one batch
-        assert all(r.n_pages >= 1 and r.text_bytes > 0 for r in rows)
-        assert all(r.site.startswith("site") for r in rows)

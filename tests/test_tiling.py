@@ -52,9 +52,6 @@ def test_tms_flip():
 
 
 def test_ring_offsets():
-    assert tiling.ring_offsets(0) == [(0, 0)]
-    assert len(tiling.ring_offsets(1)) == 8
-    assert len(tiling.ring_offsets(2)) == 16
     assert len(tiling.k_ring_offsets(2)) == 25
 
 
