@@ -24,9 +24,10 @@ from gdal_spark import sql_oracle, tiling
 from gdal_spark.fixtures import fixture_polygons, fixture_polyset
 from gdal_spark.operators.knn import knn_join
 from gdal_spark.operators.ogr_compat import distinct_list, first_match_join, summary_aggregates
-from gdal_spark.operators.similarity import cosine_sim_col, knn_cosine_join
+from gdal_spark.operators.similarity import cosine_topk, knn_cosine_join
 from gdal_spark.operators.spatial_join import assign_tiles, pip_counts, point_in_polygon_join
 from gdal_spark.text import analysis, dedup
+from gdal_spark.text.pipeline import curate
 
 SF001 = "/root/testdata/sf0.001"
 GDAL_AUTOTEST = "/root/reference/autotest"  # the reference checkout's autotest data
@@ -228,7 +229,7 @@ def q_knn_cell_join(spark, sf_dir):
     )
     # radius=2 at zoom 4 finalizes nearly all queries in round 1 (bound =
     # 2 cells ≈ 5000 km); the doubling loop remains the exactness net
-    out = knn_join(sup, cust, k=3, zoom=4, radius=2, max_rounds=4, broadcast_neighbors=True)
+    out = knn_join(sup, cust, k=3, zoom=4, radius=2, max_rounds=4)
     return out.select(
         "qid",
         "nid",
@@ -858,31 +859,18 @@ def q_decontaminate_benchmark(spark, sf_dir):
 )
 def q_corpus_curation_pipeline(spark, sf_dir):
     """The END-TO-END web-text curation flow as ONE composed Spark plan:
-    Gopher quality filter (map-only verdicts) → CCNet corpus-level line
-    dedup (first occurrence wins) → drop emptied docs → exact dedup of
-    the surviving texts (min-id representative) → content fingerprint.
-    Every stage is the same operator its standalone gate verifies — this
-    gate proves they COMPOSE, oracle included (the DuckDB side re-derives
-    the full chain). Scale: the only shuffles are the line-value window,
+    :func:`gdal_spark.text.pipeline.curate` without the PII scrub (Gopher
+    quality filter → CCNet corpus-level line dedup, first occurrence wins
+    → drop emptied docs → exact dedup, min-id representative) → content
+    fingerprint. Every stage is the same operator its standalone gate
+    verifies — this gate proves they COMPOSE, oracle included (the DuckDB
+    side re-derives the full chain). Scale: the only shuffles are the line-value window,
     the id reassembly, and the final text-hash group — the 100 TB corpus
     never materializes between stages."""
     d = _t(spark, sf_dir, "documents")
     chunked = d.select("doc_id", F.array_join(_chunk8_lines(), "\n").alias("text"))
-    kept = analysis.quality_filter(chunked).filter("keep").select("doc_id", "text")
-    ld = dedup.line_dedup(kept)
-    uniq = (
-        ld.filter(F.col("n_kept") > 0)
-        .groupBy("text")
-        .agg(F.min(F.struct("doc_id", "n_lines", "n_kept")).alias("m"))
-        .select(
-            F.col("m.doc_id").alias("doc_id"),
-            F.col("m.n_lines").alias("n_lines"),
-            F.col("m.n_kept").alias("n_kept"),
-            "text",
-        )
-    )
     return (
-        analysis.fingerprint(uniq)
+        analysis.fingerprint(curate(chunked, redact_pii=False))
         .select("doc_id", "n_lines", "n_kept", "fp")
         .orderBy("doc_id")
     )
@@ -1100,18 +1088,11 @@ def q_tfidf_top_terms(spark, sf_dir):
     """,
 )
 def q_ann_cosine_topk(spark, sf_dir):
+    """Exact top-10 by cosine to vec_id 0's embedding (collected as the
+    query vector), through :func:`~gdal_spark.operators.similarity.cosine_topk`."""
     e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    cos = cosine_sim_col(F.col("embedding"), F.col("qv"))
-    return (
-        e.crossJoin(F.broadcast(q))
-        .select(
-            F.col("vec_id").alias("id"),
-            F.floor(cos * 1_000_000 + F.lit(0.5)).cast("long").alias("cos_e6"),
-        )
-        .orderBy(F.col("cos_e6").desc(), F.col("id").asc())
-        .limit(10)
-    )
+    (qv,) = e.filter(F.col("vec_id") == 0).select("embedding").collect()[0]
+    return cosine_topk(e, qv)
 
 
 @_register(

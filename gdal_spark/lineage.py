@@ -1,17 +1,16 @@
-"""Byte-identity lineage manifests (BASELINE.json input_hint invariant:
+"""Byte-identity lineage fingerprint (BASELINE.json input_hint invariant:
 ``text`` bytes unchanged per ``url`` through every pipeline stage).
 
-Uses Spark's JVM-side ``xxhash64`` (seed 42) — no Python in the path.
-Two granularities:
-
-- :func:`partition_manifest` — one row per physical partition
-  (partition_id, row_count, xor of per-row hashes): the checkpointable
-  artifact a resumable 100 TB job emits per stage.
-- :func:`global_fingerprint` — (count, xor-of-hashes) for the whole table:
-  partitioning-invariant, so it compares across stages that repartition.
+This module is the one place the fingerprint is spelled:
+:func:`global_fingerprint` is ``(count, xor of xxhash64(url, text))``,
+computed by Spark's JVM-side ``xxhash64`` (seed 42), no Python in the
+path. :mod:`gdal_spark.checkpoint` records it per shard in each commit
+manifest (the per-partition artifact a resumable job emits) and
+re-derives it to verify a committed root.
 
 XOR aggregation is order- and partition-independent and cannot overflow,
-making stage-boundary comparison exact.
+so the fingerprint compares exactly across stages that repartition, and
+the shards' values XOR to the whole table's.
 """
 
 from __future__ import annotations
@@ -19,27 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def _row_hash(key_col: str, text_col: str):
-    return F.xxhash64(F.col(key_col), F.col(text_col))
-
-
-def partition_manifest(df: DataFrame, key_col: str = "url", text_col: str = "text") -> DataFrame:
-    return (
-        df.select(
-            F.spark_partition_id().alias("partition_id"),
-            _row_hash(key_col, text_col).alias("h"),
-        )
-        .groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.expr("bit_xor(h)").alias("xxh64_xor"),
-        )
-    )
-
-
-def global_fingerprint(df: DataFrame, key_col: str = "url", text_col: str = "text") -> tuple[int, int]:
+def global_fingerprint(df: DataFrame) -> tuple[int, int]:
     row = (
-        df.select(_row_hash(key_col, text_col).alias("h"))
+        df.select(F.xxhash64("url", "text").alias("h"))
         .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("x"))
         .collect()[0]
     )

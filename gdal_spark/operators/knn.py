@@ -41,13 +41,14 @@ def knn_join(
     neighbor_y: str = "y",
     radius: int = 1,
     max_rounds: int = 4,
-    broadcast_neighbors: bool | None = None,
 ) -> DataFrame:
     """For every query row return up to k nearest neighbor rows.
 
     Output columns: query_id, neighbor_id, dist, rank (1-based).
     Distances are planar in the coordinate space of x/y (use mercator
     meters for geographic data); ties are broken by (dist, neighbor_id).
+    The ring join carries no hint: AQE broadcasts the neighbours when
+    their measured size is under ``spark.sql.autoBroadcastJoinThreshold``.
 
     Bounded, not exact: the search reaches at most
     ``radius * 2**(max_rounds - 1)`` cells out from the query's cell (8 at
@@ -72,8 +73,6 @@ def knn_join(
         F.col(neighbor_x).alias("__nx"),
         F.col(neighbor_y).alias("__ny"),
     ).withColumn("__ncell", F.expr(tiling.mercator_cell_sql("__nx", "__ny", zoom)))
-    if broadcast_neighbors:
-        nb = F.broadcast(nb)
 
     done_parts: list[DataFrame] = []
     pending = q

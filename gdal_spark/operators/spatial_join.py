@@ -37,27 +37,18 @@ def assign_tiles(
     lon_col: str = "lon",
     lat_col: str = "lat",
     convention: str = "xyz",
-    prefix: str = "tile",
 ) -> DataFrame:
-    """Add ``{prefix}_z/x/y`` columns via GetTileIndices math (column-only).
+    """Add ``tile_z/x/y`` columns via GetTileIndices math (column-only).
 
     ``convention`` is ``'xyz'`` (y down from the north) or ``'tms'`` (y up)."""
     if convention not in ("xyz", "tms"):
         raise ValueError(f"convention must be 'xyz' or 'tms', got {convention!r}")
     tx_sql, ty_sql = tiling.lonlat_tile_sql(lon_col, lat_col, zoom)
-    out = df.withColumn(f"{prefix}_z", F.lit(zoom)).withColumn(
-        f"{prefix}_x", F.expr(tx_sql)
-    )
+    out = df.withColumn("tile_z", F.lit(zoom)).withColumn("tile_x", F.expr(tx_sql))
     y = F.expr(ty_sql)
     if convention == "tms":  # GetFileY flip, gdalalg_raster_tile.cpp:348-352
         y = F.lit((1 << zoom) - 1) - y
-    return out.withColumn(f"{prefix}_y", y)
-
-
-def with_mercator(df: DataFrame, lon_col: str, lat_col: str) -> DataFrame:
-    return df.withColumn("mx", F.expr(tiling.mercator_x_sql(lon_col))).withColumn(
-        "my", F.expr(tiling.mercator_y_sql(lat_col))
-    )
+    return out.withColumn("tile_y", y)
 
 
 def _cover_df(spark: SparkSession, polyset: PolygonSet, zoom: int) -> DataFrame:
@@ -73,29 +64,19 @@ def _cover_df(spark: SparkSession, polyset: PolygonSet, zoom: int) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
-def point_in_polygon_join(
-    points: DataFrame,
-    polyset: PolygonSet,
-    zoom: int = 7,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    coords: str = "lonlat",
-) -> DataFrame:
+def point_in_polygon_join(points: DataFrame, polyset: PolygonSet, zoom: int = 7) -> DataFrame:
     """Join each point row to every polygon containing it (inner join).
 
-    ``polyset`` coordinates must be mercator meters (convert lon/lat
-    polygons before packing). Points carry lon/lat columns by default, or
-    set ``coords='mercator'`` if ``lon_col``/``lat_col`` already hold
-    projected meters. Output = point columns + ``poly_id``.
+    Points carry ``lon``/``lat`` columns in degrees; ``polyset``
+    coordinates must be mercator meters (convert lon/lat polygons before
+    packing). Output = point columns + ``poly_id``.
     """
-    if coords not in ("lonlat", "mercator"):
-        raise ValueError(f"coords must be 'lonlat' or 'mercator', got {coords!r}")
     spark = points.sparkSession
-    if coords == "lonlat":
-        pts = with_mercator(points, lon_col, lat_col)
-    else:
-        pts = points.withColumn("mx", F.col(lon_col)).withColumn("my", F.col(lat_col))
-    pts = pts.withColumn("__cell", F.expr(tiling.mercator_cell_sql("mx", "my", zoom)))
+    pts = (
+        points.withColumn("mx", F.expr(tiling.mercator_x_sql("lon")))
+        .withColumn("my", F.expr(tiling.mercator_y_sql("lat")))
+        .withColumn("__cell", F.expr(tiling.mercator_cell_sql("mx", "my", zoom)))
+    )
 
     cover = _cover_df(spark, polyset, zoom)
     cand = pts.join(F.broadcast(cover), on=["__cell"], how="inner")
@@ -121,12 +102,10 @@ def point_in_polygon_join(
     return hit.drop("__cell", "__pidx", "__full", "__hit", "mx", "my")
 
 
-def pip_counts(
-    points: DataFrame, polyset: PolygonSet, zoom: int = 7, **kw
-) -> DataFrame:
+def pip_counts(points: DataFrame, polyset: PolygonSet, zoom: int = 7) -> DataFrame:
     """Count points per polygon (the flagship aggregate of the north rule).
 
     Partial aggregation is map-side (Catalyst HashAggregate) so the shuffle
     moves one row per (partition, polygon)."""
-    joined = point_in_polygon_join(points, polyset, zoom=zoom, **kw)
+    joined = point_in_polygon_join(points, polyset, zoom=zoom)
     return joined.groupBy("poly_id").agg(F.count(F.lit(1)).alias("n_points"))

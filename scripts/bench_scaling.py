@@ -2,9 +2,11 @@
 """Scaling-efficiency evidence for the north rule: run the identical
 flagship job (``bench.flagship_rows_sec``: a pages parquet written once,
 then scan-fed :func:`gdal_spark.pages.flagship` runs) at two parallelism
-levels (default local[2] vs local[8] — the sandbox stand-in for N vs 4N
+levels N and 4N local threads (the single-host stand-in for N vs 4N
 executors) and report throughput at both plus
-efficiency = (T_N / T_4N) / 4.
+efficiency = (T_N / T_4N) / 4. The pair comes from the CPUs this process
+may run on: 2 → 8 with at least 8, else 1 → 4, so 4N never oversubscribes
+the host; fewer than 4 CPUs cannot hold a 4N level and exit nonzero.
 
 Each level runs in a *fresh* interpreter (a spawned process with its own
 JVM) so executor-thread count is actually different and JIT/cache state
@@ -48,19 +50,17 @@ def run_level(cpus: int, n_pages: int) -> dict:
 
 def main():
     n_pages = int(os.environ.get("SPARK_GRAFT_SCALING_PAGES", "4000000"))
-    # default pair N=2 → 4N=8: within the sandbox VM's memory-bandwidth
-    # envelope (the box plateaus at ~1.1M rows/s past 16 threads — a
-    # single-node constraint real multi-executor clusters don't share;
-    # see BASELINE.md for the full 2/4/8/16/32 curve)
-    lo = int(os.environ.get("SPARK_GRAFT_SCALE_N", "2"))
-    hi = int(os.environ.get("SPARK_GRAFT_SCALE_4N", "8"))
-    # --runs N / SPARK_GRAFT_SCALE_RUNS: repeat the whole pair N times
-    # and report the max-throughput pair — the sandbox VM time-shares
-    # vCPUs, so one JSON line should carry its own best-of evidence
-    # instead of hand-logged rows
-    runs = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "1"))
-    if "--runs" in sys.argv:
-        runs = int(sys.argv[sys.argv.index("--runs") + 1])
+    cpus = len(os.sched_getaffinity(0))
+    if cpus < 4:
+        sys.exit(f"bench_scaling: {cpus} CPUs available, 4N needs at least 4")
+    # 4N stops at 8: a single box plateaus past 16 threads on memory
+    # bandwidth (BASELINE.md's 2/4/8/16/32 curve), which executors don't share
+    hi = 8 if cpus >= 8 else 4
+    lo = hi // 4
+    # --runs N: repeat the whole pair N times and report the
+    # max-throughput pair — a shared host time-shares vCPUs, so one JSON
+    # line should carry its own best-of evidence
+    runs = int(sys.argv[sys.argv.index("--runs") + 1]) if "--runs" in sys.argv else 1
     series = []
     for _ in range(max(runs, 1)):
         r_lo = run_level(lo, n_pages)

@@ -1,10 +1,13 @@
 """kNN join (k-ring expansion) vs the brute-force oracle."""
+from contextlib import contextmanager
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from gdal_spark.operators.knn import knn_join, knn_join_bruteforce
 from gdal_spark import tiling
+from test_spatial_join import _executed_nodes
 
 
 def _xy_df(spark, n, seed, idc):
@@ -43,16 +46,41 @@ def _edge_df(spark, n, seed, idc, z):
     return spark.createDataFrame(pdf)
 
 
-@pytest.mark.parametrize("broadcast", [True, None])
-def test_knn_world_edge_cells(spark, broadcast):
+@contextmanager
+def _sql_conf(spark, settings):
+    """Set session conf keys for the block, then restore (or unset) them."""
+    old = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("threshold", [None, "-1"])
+def test_knn_world_edge_cells(spark, threshold):
     """Ring cells off the world edge are dropped before the cell key is
-    packed; queries in edge tiles still match brute force."""
+    packed; queries in edge tiles still match brute force on both join
+    paths: the session default, where AQE broadcasts the small neighbour
+    side, and a shuffle join with broadcasting switched off."""
     z = 3
     q = _edge_df(spark, 60, 31, "qid", z)
     nb = _edge_df(spark, 200, 37, "nid", z)
-    got = _collect_pairs(
-        knn_join(q, nb, k=3, zoom=z, radius=1, max_rounds=4, broadcast_neighbors=broadcast)
-    )
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    with _sql_conf(spark, {} if threshold is None else dict.fromkeys(keys, threshold)):
+        out = knn_join(q, nb, k=3, zoom=z, radius=1, max_rounds=4)
+        got = _collect_pairs(out)
+        joins = {
+            n.nodeName()
+            for n in _executed_nodes(out)
+            if n.nodeName().endswith("Join") and "__ncell#" in n.simpleString(25)
+        }
+    assert joins == {"BroadcastHashJoin" if threshold is None else "SortMergeJoin"}
     want = _collect_pairs(knn_join_bruteforce(q, nb, k=3))
     assert got == want
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from gdal_spark import tiling
 from gdal_spark.fixtures import fixture_polyset
-from gdal_spark.lineage import assert_unchanged, global_fingerprint, partition_manifest
+from gdal_spark.lineage import assert_unchanged, global_fingerprint
 from gdal_spark.operators.spatial_join import assign_tiles, pip_counts
 from gdal_spark.pages import extract_geotags, flagship, synth_pages
 
@@ -71,17 +71,6 @@ def test_lineage_byte_identity_through_pipeline(spark):
     after = global_fingerprint(tiled)
     assert_unchanged(before, after, "tile-assign")
     assert before[0] == 400
-
-
-def test_partition_manifest_sums_to_global(spark):
-    pages = synth_pages(spark, 300, partitions=6)
-    man = partition_manifest(pages).collect()
-    n, x = global_fingerprint(pages)
-    assert sum(r.row_count for r in man) == n == 300
-    acc = 0
-    for r in man:
-        acc ^= r.xxh64_xor
-    assert acc == x
 
 
 def test_skew_variant_hotspot(spark):

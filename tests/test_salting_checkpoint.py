@@ -1,13 +1,17 @@
 """Salted joins (skew fallback) and checkpoint/resume machinery."""
+import functools
 import json
+import operator
 import os
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
-from gdal_spark.checkpoint import manifest_path, pending_shards, run_sharded, verify_manifests
+from gdal_spark.checkpoint import manifest_path, pending_shards, run_sharded, shard_of, verify_manifests
+from gdal_spark.lineage import global_fingerprint
 from gdal_spark.operators.salting import salted_join, salted_join_hot_keys, top_hot_keys
 from gdal_spark.pages import synth_pages
 
@@ -70,6 +74,76 @@ def test_checkpoint_total_rows_partition_invariant(spark, tmp_path):
         json.load(open(manifest_path(root, s)))["row_count"] for s in range(3)
     )
     assert total == 300
+
+
+def _manifest(root, shard):
+    with open(manifest_path(root, shard)) as f:
+        return json.load(f)
+
+
+def _shard_lineage(root, n_shards):
+    return [(m["row_count"], m["xxh64_xor"]) for m in (_manifest(root, s) for s in range(n_shards))]
+
+
+def test_run_sharded_resumes_after_mid_commit_crash(spark, tmp_path):
+    """A commit that dies partway resumes from its manifests. A UDF that
+    raises on one url of shard 2 (of 4) stops run_sharded after shards 0
+    and 1 have committed; the clean re-run writes only shards 2 and 3, and
+    the root ends with the lineage of an uninterrupted run."""
+    pages = synth_pages(spark, 400)
+    root, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    marker = pages.filter(shard_of(F.col("url"), 4) == 2).orderBy("url").first()["url"]
+
+    @F.udf("boolean")
+    def fail_on_marker(url):
+        if url == marker:
+            raise RuntimeError(f"injected failure at {url}")
+        return True
+
+    with pytest.raises(PythonException, match="injected failure"):
+        run_sharded(pages.filter(fail_on_marker("url")), root, n_shards=4)
+    assert pending_shards(root, 4) == [2, 3]
+    before = [_manifest(root, s) for s in (0, 1)]
+
+    resumed = run_sharded(pages, root, n_shards=4)
+    run_sharded(pages, clean, n_shards=4)
+    assert resumed["ran"] == 2 and resumed["skipped"] == 2
+    assert resumed["rows_written"] == sum(_manifest(clean, s)["row_count"] for s in (2, 3))
+    assert [_manifest(root, s) for s in (0, 1)] == before  # not rewritten
+    shards = _shard_lineage(root, 4)
+    assert shards == _shard_lineage(clean, 4)
+    n, x = global_fingerprint(pages)
+    assert global_fingerprint(spark.read.parquet(os.path.join(root, "data"))) == (n, x)
+    # the per-shard fingerprints add up to the whole table's
+    assert sum(c for c, _ in shards) == n and functools.reduce(operator.xor, (h for _, h in shards)) == x
+    assert verify_manifests(spark, root, 4)
+
+
+def test_root_refuses_another_shard_count(spark, tmp_path):
+    """Shard ids mean different rows under another shard count, so a root
+    is resumed and verified only under the count it was committed with:
+    an 8-shard commit that stopped after shards 0-2 is not complete to a
+    4-shard resume, and neither is a manifest that records no count."""
+    root = str(tmp_path / "ckpt")
+    pages = synth_pages(spark, 200)
+    run_sharded(pages, root, n_shards=8)
+    for s in range(3, 8):
+        os.remove(manifest_path(root, s))
+    with pytest.raises(ValueError, match=r"n_shards=8.*n_shards=4"):
+        run_sharded(pages, root, n_shards=4)
+    with pytest.raises(ValueError, match=r"n_shards=8.*n_shards=4"):
+        verify_manifests(spark, root, 4)
+    assert run_sharded(pages, root, n_shards=8)["ran"] == 5
+    assert verify_manifests(spark, root, 8)
+
+    m = _manifest(root, 5)
+    del m["n_shards"]
+    with open(manifest_path(root, 5), "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match=r"n_shards=None.*n_shards=8"):
+        run_sharded(pages, root, n_shards=8)
+    with pytest.raises(ValueError, match=r"n_shards=None.*n_shards=8"):
+        verify_manifests(spark, root, 8)
 
 
 def test_salted_join_rejects_right_full(spark):

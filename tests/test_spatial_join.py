@@ -100,12 +100,9 @@ def test_assign_tiles_matches_numpy(spark):
 
 
 def test_unknown_coords_and_convention_raise(spark):
-    """A typo in ``coords`` or ``convention`` fails loudly instead of
-    joining degrees as metres or emitting xyz rows labelled tms."""
+    """A typo in ``convention`` fails loudly instead of emitting xyz rows
+    labelled tms."""
     df, _ = _points_df(spark, n=10, seed=3)
-    ps = PolygonSet.from_coords([1], [[np.array([[0.0, 0.0], [1e6, 0.0], [0.0, 1e6], [0.0, 0.0]])]])
-    with pytest.raises(ValueError, match="wgs84"):
-        point_in_polygon_join(df, ps, coords="wgs84")
     with pytest.raises(ValueError, match="TMS"):
         assign_tiles(df, zoom=11, convention="TMS")
 
