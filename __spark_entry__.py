@@ -31,6 +31,7 @@ from gdal_spark.text.pipeline import curate
 
 SF001 = "/root/testdata/sf0.001"
 GDAL_AUTOTEST = "/root/reference/autotest"  # the reference checkout's autotest data
+TESTS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests")  # fixtures_poly
 
 
 def _gdal_ref(rel: str) -> str:
@@ -1629,7 +1630,7 @@ def q_ogr_sql_where_summary(spark, sf_dir):
 def _vp_clip_oracle() -> str:
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from fixtures_poly import POLY_ATTRS, poly_rings
 
     from gdal_spark.geometry import kernels, ops
@@ -1662,7 +1663,7 @@ def q_vector_pipeline_clip(spark, sf_dir):
     measure remaining areas (oracle = the same NumPy convex clip)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from fixtures_poly import POLY_ATTRS, poly_rings
 
     from gdal_spark.functions.st import st_area
@@ -1790,7 +1791,7 @@ def q_layer_algebra_intersection(spark, sf_dir):
 def _st_area_oracle() -> str:
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from fixtures_poly import POLY_ATTRS, poly_rings
 
     from gdal_spark.geometry import kernels
@@ -1811,7 +1812,7 @@ def q_st_area_reference_polys(spark, sf_dir):
     goldens, verified in tests/test_geometry.py)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from fixtures_poly import POLY_ATTRS, poly_rings
 
     from gdal_spark.functions.st import st_area
@@ -2635,7 +2636,7 @@ def _oracle_shapefile_poly() -> str:
     in round 1 (independent of the binary parser)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from fixtures_poly import POLY_ATTRS
 
     rows = ", ".join(
@@ -4206,7 +4207,7 @@ def q_ogr_layer_extent_index(spark, sf_dir):
     RAW fixture ring coordinates (never touching the WKB codec)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from fixtures_poly import poly_rings
 
     from gdal_spark.geometry import wkb as _wkb
@@ -4235,7 +4236,7 @@ def _oracle_layer_extent_index() -> str:
     import math
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from fixtures_poly import poly_rings
 
     rings = poly_rings()

@@ -81,8 +81,9 @@ def run_sharded(df: DataFrame, root: str, n_shards: int) -> dict:
         part = sharded.filter(F.col("__shard") == s).drop("__shard")
         out_dir = os.path.join(root, "data", f"shard={s}")
         part.write.mode("overwrite").parquet(out_dir)
-        # fingerprint what was written (read back = what downstream sees)
-        n, x = global_fingerprint(part.sparkSession.read.parquet(out_dir))
+        # fingerprint what was written (read back = what downstream sees);
+        # the known schema spares the read its schema-inference job
+        n, x = global_fingerprint(part.sparkSession.read.schema(part.schema).parquet(out_dir))
         manifest = {
             "shard": s,
             "n_shards": n_shards,

@@ -16,14 +16,17 @@ the query's cell is ≥ r*cell_span away, so a query is *final* once its
 k-th distance ≤ r*cell_span. Queries not final at ``radius`` are re-run
 with a doubled ring (driver loop, geometrically growing, at most
 ``max_rounds``) — the per-round shuffles stay proportional to the
-*unfinished* queries only. Queries still unfinished after the last round
-keep what it found, so the result is exact only within that reach (see
-:func:`knn_join`).
+*unfinished* queries only. The eager checkpoint of a round's final ids
+also observes how many queries went in and how many came out final, so
+no count job runs; the loop stops when the two agree. Queries still
+unfinished after the last round keep what it found, so the result is
+exact only within that reach (see :func:`knn_join`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from gdal_spark import tiling
 
@@ -76,16 +79,18 @@ def knn_join(
 
     done_parts: list[DataFrame] = []
     pending = q
-    n_pending = -1  # lazily initialized on first finality check
     r = radius
     for round_i in range(max_rounds):
-        offs = tiling.k_ring_offsets(r)
-        offs_df = pending.sparkSession.createDataFrame(offs, "dx INT, dy INT")
+        # from pandas the offsets take the Arrow path and plan as a
+        # LocalTableScan: no Python worker starts to broadcast them
+        offs = pd.DataFrame(tiling.k_ring_offsets(r), columns=["dx", "dy"], dtype="int32")
+        seen, done = Observation(), Observation()
         rx, ry = "(__qcx + dx)", "(__qcy + dy)"
         # off-world ring cells hold no points, and packed they would alias
         # a cell across the row edge: drop them before packing
         expanded = (
-            pending.crossJoin(F.broadcast(offs_df))
+            pending.observe(seen, F.count(F.lit(1)).alias("n"))
+            .crossJoin(F.broadcast(pending.sparkSession.createDataFrame(offs)))
             .filter(f"{rx} BETWEEN 0 AND {n_tiles - 1} AND {ry} BETWEEN 0 AND {n_tiles - 1}")
             .select(
                 "__qid",
@@ -117,20 +122,15 @@ def knn_join(
         if round_i == max_rounds - 1:
             final_ids = agg.select("__qid")  # last round: accept what we have
         # Eager localCheckpoint instead of persist(): tiny ids-only table,
-        # lineage cut, blocks reclaimed by the ContextCleaner on GC — no
-        # executor-memory creep across rounds in a long-lived session
-        # (r3 VERDICT "what's wrong" #3).
-        final_ids = final_ids.localCheckpoint()
-        n_final = final_ids.count()  # free post-checkpoint; replaces isEmpty()
-        done_parts.append(
-            topk.join(F.broadcast(final_ids), "__qid", "leftsemi")
-        )
-        pending = pending.join(F.broadcast(final_ids), "__qid", "leftanti")
-        if n_pending < 0:
-            n_pending = q.count()
-        n_pending -= n_final
-        if n_pending <= 0:
+        # lineage cut, blocks reclaimed by the ContextCleaner on GC. Running
+        # it fills both counts: `seen` counts pending rows (a query with no
+        # candidate never reaches `agg`), `done` the final ids.
+        final_ids = final_ids.observe(done, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        done_parts.append(topk.join(F.broadcast(final_ids), "__qid", "leftsemi"))
+        if done.get["n"] == seen.get["n"]:
             break
+        # from the unobserved pending: each observation is in one plan once
+        pending = pending.join(F.broadcast(final_ids), "__qid", "leftanti")
         r *= 2
 
     out = done_parts[0]

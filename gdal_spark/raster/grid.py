@@ -229,10 +229,12 @@ def grid_points(
     pts = pts.withColumn("__pbx", F.floor(px / meta.block_w).cast("int")).withColumn(
         "__pby", F.floor(py / meta.block_h).cast("int")
     )
-    offs = spark.createDataFrame(
+    # pandas frames take the Arrow path and plan as LocalTableScans; a list
+    # of tuples would scan a Python RDD and start Python workers to read it
+    offs = spark.createDataFrame(pd.DataFrame(
         [(dx, dy) for dx in range(-pad_bx, pad_bx + 1) for dy in range(-pad_by, pad_by + 1)],
-        "dx INT, dy INT",
-    )
+        columns=["dx", "dy"], dtype="int32",
+    ))
     spread = (
         pts.crossJoin(F.broadcast(offs))
         .select(
@@ -245,10 +247,10 @@ def grid_points(
             & (F.col("block_y") >= 0) & (F.col("block_y") < meta.blocks_y)
         )
     )
-    all_blocks = spark.createDataFrame(
+    all_blocks = spark.createDataFrame(pd.DataFrame(
         [(x, y) for y in range(meta.blocks_y) for x in range(meta.blocks_x)],
-        "block_x INT, block_y INT",
-    )
+        columns=["block_x", "block_y"], dtype="int32",
+    ))
     joined = all_blocks.join(spread, ["block_x", "block_y"], "left")
 
     def interp(key, pdf: pd.DataFrame) -> pd.DataFrame:

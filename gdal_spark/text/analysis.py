@@ -343,6 +343,17 @@ def vocab_topk(
     )
 
 
+# score_e6 = tf * floor(n_docs * 1e6 / df), exactly. BIGINT math wraps
+# (n_docs * 1000000 past 9.2e12 docs, tf times the rarity past 9.2e18),
+# and Spark's `div` returns a BIGINT even on decimals, so the rarity is
+# spelled q * 1e6 + floor(r * 1e6 / df) with (q, r) = divmod(n_docs, df)
+# and summed and multiplied in DECIMAL(38,0): exact while tf * n_docs < 1e32.
+SCORE_E6_SQL = (
+    "CAST(tf AS DECIMAL(38,0)) * (CAST(n_docs div df AS DECIMAL(38,0)) * 1000000"
+    " + CAST(n_docs % df AS DECIMAL(38,0)) * 1000000 div df)"
+)
+
+
 def tfidf_top_terms(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -354,7 +365,8 @@ def tfidf_top_terms(
     (a monotonic transform of idf — same ranking, float-free so both
     engines agree bit-for-bit; the classic log-idf differs only by a
     monotone map). Returns ``(id_col, word, tf, df, score_e6)``, ties
-    broken by word.
+    broken by word; ``score_e6`` is an exact DECIMAL(38,0)
+    (:data:`SCORE_E6_SQL`).
 
     Scale shape: three slim shuffles — (id, word) wordcount with
     map-side combine, per-word document frequency (aggregate of the
@@ -376,12 +388,7 @@ def tfidf_top_terms(
     scored = (
         tf.join(docfreq, "word")
         .crossJoin(F.broadcast(n_docs))
-        .withColumn(
-            # integer div, not floor(double /): exact even when
-            # n_docs * 1e6 exceeds 2^53 (trillion-doc corpora)
-            "score_e6",
-            F.expr("tf * (CAST(n_docs AS BIGINT) * 1000000 div df)").cast("long"),
-        )
+        .withColumn("score_e6", F.expr(SCORE_E6_SQL))
     )
     win = Window.partitionBy("id").orderBy(
         F.desc("score_e6"), F.col("word")

@@ -12,10 +12,12 @@ Usage: python scripts/check_correctness.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script sits in, so a second checkout checks its own engine
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
@@ -52,8 +54,6 @@ def main():
     only = [a for a in sys.argv[1:] if "/" not in a]
     # data-dependent lazy oracles (Python reference implementations) read
     # the same sf dir the Spark side runs against
-    import os
-
     os.environ["SPARK_GRAFT_ORACLE_SF"] = sf_dir
 
     import __spark_entry__ as entrymod

@@ -62,7 +62,22 @@ def _sql_conf(spark, settings):
                 spark.conf.set(k, v)
 
 
-@pytest.mark.parametrize("threshold", [None, "-1"])
+_PATHS = pytest.mark.parametrize("threshold", [None, "-1"])
+_THRESHOLDS = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+
+
+def _join_path(spark, threshold):
+    """The session default (AQE broadcasts the small neighbour side), or a
+    shuffle join with broadcasting switched off."""
+    return _sql_conf(spark, {} if threshold is None else dict.fromkeys(_THRESHOLDS, threshold))
+
+
+def _ring_joins(out):
+    """The plan's joins on the packed ring cell key."""
+    return [n for n in _executed_nodes(out) if n.nodeName().endswith("Join") and "__ncell#" in n.simpleString(25)]
+
+
+@_PATHS
 def test_knn_world_edge_cells(spark, threshold):
     """Ring cells off the world edge are dropped before the cell key is
     packed; queries in edge tiles still match brute force on both join
@@ -71,15 +86,10 @@ def test_knn_world_edge_cells(spark, threshold):
     z = 3
     q = _edge_df(spark, 60, 31, "qid", z)
     nb = _edge_df(spark, 200, 37, "nid", z)
-    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    with _sql_conf(spark, {} if threshold is None else dict.fromkeys(keys, threshold)):
+    with _join_path(spark, threshold):
         out = knn_join(q, nb, k=3, zoom=z, radius=1, max_rounds=4)
         got = _collect_pairs(out)
-        joins = {
-            n.nodeName()
-            for n in _executed_nodes(out)
-            if n.nodeName().endswith("Join") and "__ncell#" in n.simpleString(25)
-        }
+        joins = {n.nodeName() for n in _ring_joins(out)}
     assert joins == {"BroadcastHashJoin" if threshold is None else "SortMergeJoin"}
     want = _collect_pairs(knn_join_bruteforce(q, nb, k=3))
     assert got == want
@@ -130,3 +140,82 @@ def test_knn_join_no_persisted_leftovers(spark):
     leaked = [v.name() for v in persisted.values()
               if v.name() and "final_ids" in str(v.name())]
     assert leaked == []
+
+
+def _cluster(spark, n, seed, idc, z, extra=()):
+    """n points within a tenth of a zoom-z cell around one cell centre,
+    then the points of ``extra`` given as (dx, dy) in cell spans from it."""
+    rng = np.random.default_rng(seed)
+    span = tiling.WORLD_SPAN / (1 << z)
+    c = -tiling.ORIGIN + 20.5 * span
+    x = c + rng.uniform(-0.05, 0.05, n) * span
+    y = c + rng.uniform(-0.05, 0.05, n) * span
+    x = np.concatenate([x, [c + dx * span for dx, _ in extra]])
+    y = np.concatenate([y, [c + dy * span for _, dy in extra]])
+    pdf = pd.DataFrame({idc: np.arange(len(x), dtype=np.int64), "x": x, "y": y})
+    return spark.createDataFrame(pdf)
+
+
+def _build_side(join):
+    """The operator a broadcast join builds from, under AQE's stage and
+    exchange wrappers; also returns the BroadcastExchange itself."""
+    node = join.children().apply(1 if join.buildSide().toString() == "BuildRight" else 0)
+    exchange = None
+    while node.nodeName().endswith("QueryStage") or node.nodeName().startswith(
+        ("BroadcastExchange", "InputAdapter", "WholeStageCodegen")
+    ):
+        if node.nodeName() == "BroadcastExchange":
+            exchange = node
+        node = node.plan() if node.nodeName().endswith("QueryStage") else node.children().apply(0)
+    return node, exchange
+
+
+def _rows(node):
+    opt = node.metrics().get("numOutputRows")
+    return int(opt.get().value()) if opt.isDefined() else -1
+
+
+@_PATHS
+def test_knn_query_with_empty_first_ring(spark, threshold):
+    """One query sits 3 cells from every neighbour: its radius-1 and
+    radius-2 rings hold none, so it never reaches round 1's aggregate
+    while every clustered query is final there. The loop must go on
+    until radius 4 finds its neighbours, so it counts the pending query
+    rows, not the queries that found a candidate."""
+    z = 6
+    q = _cluster(spark, 20, 41, "qid", z, extra=[(3.0, 0.0)])
+    nb = _cluster(spark, 40, 43, "nid", z)
+    with _join_path(spark, threshold):
+        got = _collect_pairs(knn_join(q, nb, k=3, zoom=z))
+    want = _collect_pairs(knn_join_bruteforce(q, nb, k=3))
+    assert got == want
+    assert sum(1 for qid, _, _ in got if qid == 20) == 3
+
+
+@_PATHS
+def test_knn_one_ring_join_over_local_offsets(spark, threshold):
+    """Dense neighbours: every query is final at radius 1, so the result's
+    plan holds exactly one ring join. The ring offsets are a JVM-local
+    relation: the nested-loop join broadcasts a LocalTableScan of
+    (2r+1)^2 rows, not a Python-RDD scan. Where the ring join broadcasts,
+    it broadcasts the neighbour rows, not the expanded query side."""
+    z, n_nb = 6, 40
+    q = _cluster(spark, 20, 59, "qid", z)
+    nb = _cluster(spark, n_nb, 61, "nid", z)
+    with _join_path(spark, threshold):
+        out = knn_join(q, nb, k=3, zoom=z)
+        got = _collect_pairs(out)
+        nodes = _executed_nodes(out)
+        (bnlj,) = [n for n in nodes if n.nodeName() == "BroadcastNestedLoopJoin"]
+        offs, _ = _build_side(bnlj)
+        assert (offs.nodeName(), _rows(offs)) == ("LocalTableScan", 9)
+        rings = _ring_joins(out)
+        assert len(rings) == 1
+        ring = rings[0]
+        if threshold is None:
+            assert ring.nodeName() == "BroadcastHashJoin"
+            _, exchange = _build_side(ring)
+            assert _rows(exchange) == n_nb
+        else:
+            assert ring.nodeName() == "SortMergeJoin"
+    assert got == _collect_pairs(knn_join_bruteforce(q, nb, k=3))

@@ -372,6 +372,18 @@ def test_tfidf_top_terms(spark):
     assert all(len(v) == 2 for v in by_doc.values())
 
 
+def test_tfidf_score_exact_at_trillion_docs(spark):
+    """The score is tf * floor(n_docs * 1e6 / df) exactly where BIGINT
+    math wraps: 10 * 1e18 at n_docs = 1e12, and n_docs * 1e6 itself at
+    the largest BIGINT corpus."""
+    big = 2**63 - 1
+    rows = [(10, 10**12, 1), (3, 10**12, 7), (7, 10**12 + 5, 10**12), (2, big, 1), (1, big, 3)]
+    df = spark.createDataFrame(rows, "tf LONG, n_docs LONG, df LONG")
+    got = [r.s for r in df.selectExpr(f"{analysis.SCORE_E6_SQL} AS s").collect()]
+    assert got == [tf * (n * 10**6 // d) for tf, n, d in rows]
+    assert got[0] == 10**19 > 2**63
+
+
 def test_line_dedup_randomized_vs_python_reference(spark):
     """200 seeded docs drawn from a small line alphabet (heavy cross-doc
     duplication) vs an independent dict-based first-occurrence pass."""
