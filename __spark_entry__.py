@@ -14,7 +14,11 @@ Determinism rules used throughout so value-hashes match bit-for-bit:
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 import numpy as np
@@ -29,7 +33,6 @@ from gdal_spark.operators.spatial_join import assign_tiles, pip_counts, point_in
 from gdal_spark.text import analysis, dedup
 from gdal_spark.text.pipeline import curate
 
-SF001 = "/root/testdata/sf0.001"
 GDAL_AUTOTEST = "/root/reference/autotest"  # the reference checkout's autotest data
 TESTS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests")  # fixtures_poly
 
@@ -41,6 +44,20 @@ def _gdal_ref(rel: str) -> str:
     if not os.path.exists(path):
         raise FileNotFoundError(f"GDAL reference file missing: {path}")
     return path
+
+
+@functools.cache
+def _gate_root() -> str:
+    root = tempfile.mkdtemp(prefix="gdal_spark_gates_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def _gate_dir(prefix: str) -> str:
+    """A fresh directory for one gate's files. All of them sit under one
+    per-process root that is removed at interpreter exit, not sooner: a
+    gate's DataFrame may read its directory until the caller collects it."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_gate_root())
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -60,19 +77,15 @@ def _with_lonlat(df: DataFrame, key: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the north-rule pages pipeline (:func:`gdal_spark.pages.flagship`)
     at smoke scale over synth Common-Crawl-style pages, its per-tile
-    counts summed per polygon. Also sanity-joins the sf0.001 customer
-    table as a second point source."""
+    counts summed per polygon: ``(poly_id, n_pages)``."""
     from gdal_spark.pages import flagship, synth_pages
 
-    ps = fixture_polyset()
-    page_counts = flagship(synth_pages(spark, 20_000), ps).groupBy("poly_id").agg(
-        F.sum("n_pages").alias("n_pages")
+    return (
+        flagship(synth_pages(spark, 20_000), fixture_polyset())
+        .groupBy("poly_id")
+        .agg(F.sum("n_pages").alias("n_pages"))
+        .orderBy("poly_id")
     )
-    cust = _with_lonlat(_t(spark, SF001, "customer"), "c_custkey")
-    cust_counts = pip_counts(cust, ps, zoom=6)
-    return page_counts.join(
-        cust_counts.withColumnRenamed("n_points", "n_customers"), "poly_id", "left"
-    ).orderBy("poly_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2409,20 +2422,19 @@ def q_geojson_roundtrip(spark, sf_dir):
     verify properties, geometry type, and area survive the roundtrip
     (reference driver: ogr/ogrsf_frmts/geojson)."""
     import os
-    import tempfile
 
     from gdal_spark.functions.st import st_area, st_geometrytype
     from gdal_spark.sources.geojson import read_geojson, write_geojson_strings
 
     from gdal_spark.sources.geojson import geojson_col_to_wkb
 
-    d = tempfile.mkdtemp(prefix="gj_gate_")
+    d = _gate_dir("gj_gate_")
     path = os.path.join(d, "fixture.geojson")
     with open(path, "w") as f:
         f.write(_GJ_FIXTURE)
     df = read_geojson(spark, path)
     # full roundtrip: WKB → GeoJSON string → WKB again
-    written = write_geojson_strings(df, "geometry")
+    written = write_geojson_strings(df)
     back = written.withColumn("geometry", geojson_col_to_wkb(F.col("geometry")))
     return (
         back.select(
@@ -2661,13 +2673,12 @@ def q_gpkg_roundtrip(spark, sf_dir):
     the same POLY goldens — WKB payloads byte-identical through the
     blob wrap/unwrap."""
     import os as _os
-    import tempfile as _tempfile
 
     from gdal_spark.functions.st import st_area
     from gdal_spark.sources.gpkg import read_gpkg, write_gpkg
 
     src = read_gpkg(spark, _gdal_ref("ogr/data/gpkg/poly_golden.gpkg"))
-    path = _os.path.join(_tempfile.mkdtemp(prefix="gpkg_rt_"), "roundtrip.gpkg")
+    path = _os.path.join(_gate_dir("gpkg_rt_"), "roundtrip.gpkg")
     write_gpkg(src.drop("fid"), path, "poly", srs_id=27700, geometry_type="POLYGON")
     df = read_gpkg(spark, path)
     return df.select(
@@ -2689,14 +2700,13 @@ def q_fgb_poly_read(spark, sf_dir):
     the feature section is record-splittable — executors parse disjoint
     byte ranges (mapInPandas over the offset list)."""
     import os as _os
-    import tempfile as _tempfile
 
     from gdal_spark.functions.st import st_area
     from gdal_spark.sources.flatgeobuf import read_fgb, write_fgb
     from gdal_spark.sources.gpkg import read_gpkg
 
     src = read_gpkg(spark, _gdal_ref("ogr/data/gpkg/poly_golden.gpkg"))
-    path = _os.path.join(_tempfile.mkdtemp(prefix="fgb_"), "poly.fgb")
+    path = _os.path.join(_gate_dir("fgb_"), "poly.fgb")
     write_fgb(src.drop("fid"), path, name="poly", geometry_type="Polygon")
     df = read_fgb(spark, path)
     return df.select(
@@ -2716,14 +2726,13 @@ def q_gml_poly_read(spark, sf_dir):
     through GML3 posList/exterior encodings must reproduce the same
     goldens as the shapefile/GPKG/FGB readers."""
     import os as _os
-    import tempfile as _tempfile
 
     from gdal_spark.functions.st import st_area
     from gdal_spark.sources.gml import read_gml, write_gml
     from gdal_spark.sources.gpkg import read_gpkg
 
     src = read_gpkg(spark, _gdal_ref("ogr/data/gpkg/poly_golden.gpkg"))
-    path = _os.path.join(_tempfile.mkdtemp(prefix="gml_"), "poly.gml")
+    path = _os.path.join(_gate_dir("gml_"), "poly.gml")
     write_gml(src.drop("fid"), path, layer="poly")
     df = read_gml(spark, path)
     return df.select(
@@ -2845,14 +2854,13 @@ def q_kml_poly_read(spark, sf_dir):
     encoding): the POLY layer reproduces the same goldens as the
     shapefile/GPKG/FGB/GML readers."""
     import os as _os
-    import tempfile as _tempfile
 
     from gdal_spark.functions.st import st_area
     from gdal_spark.sources.gpkg import read_gpkg
     from gdal_spark.sources.kml import read_kml, write_kml
 
     src = read_gpkg(spark, _gdal_ref("ogr/data/gpkg/poly_golden.gpkg"))
-    path = _os.path.join(_tempfile.mkdtemp(prefix="kml_"), "poly.kml")
+    path = _os.path.join(_gate_dir("kml_"), "poly.kml")
     write_kml(src.drop("fid"), path, layer="poly")
     df = read_kml(spark, path, keep_z=False)
     return df.select(
@@ -2872,7 +2880,6 @@ def q_csv_geom_read(spark, sf_dir):
     round-trip — Spark's native splittable csv scan + WKT→WKB column."""
     import csv as _csv
     import os as _os
-    import tempfile as _tempfile
 
     from gdal_spark.functions.st import st_area
     from gdal_spark.geometry import wkt as _wkt
@@ -2884,7 +2891,7 @@ def q_csv_geom_read(spark, sf_dir):
         (int(r["EAS_ID"]), r["PRFEDEA"], _wkt.wkb_to_wkt(bytes(r["geometry"])))
         for r in src.collect()
     )
-    path = _os.path.join(_tempfile.mkdtemp(prefix="csvgeom_"), "poly.csv")
+    path = _os.path.join(_gate_dir("csvgeom_"), "poly.csv")
     with open(path, "w", newline="") as f:
         w = _csv.writer(f)
         w.writerow(["EAS_ID", "PRFEDEA", "WKT"])
@@ -2941,12 +2948,11 @@ def q_mvt_tileset_read(spark, sf_dir):
     shoelace areas. Oracle is an independent pure-Python shoelace over
     the same fixture coordinates."""
     import os as _os
-    import tempfile as _tempfile
 
     from gdal_spark.functions.st import st_area
     from gdal_spark.sources.mvt import read_mvt, write_mvt_tile
 
-    d = _tempfile.mkdtemp(prefix="mvt_")
+    d = _gate_dir("mvt_")
     paths = []
     for i in range(4):
         p = _os.path.join(d, f"tile_{i}.pbf")
@@ -2980,12 +2986,11 @@ def q_mvt_tileset_write_counts(spark, sf_dir):
     zero driver collect) → distributed decode of every written tile →
     per-tile feature counts must equal the plain tile-assignment oracle
     (same GetTileIndices math DuckDB-side)."""
-    import tempfile as _tempfile
 
     from gdal_spark.sources.mvt import read_mvt, write_mvt_tileset
 
     pts = _with_lonlat(_t(spark, sf_dir, "customer"), "c_custkey")
-    out_dir = _tempfile.mkdtemp(prefix="mvt_sink_")
+    out_dir = _gate_dir("mvt_sink_")
     written = write_mvt_tileset(pts, out_dir, zoom=8, layer="customers")
     paths = [r.path for r in written.collect()]
     back = read_mvt(spark, paths)
@@ -3076,12 +3081,11 @@ def q_osm_pbf_ways(spark, sf_dir):
     for the reference's on-disk node hash), and emit per-way vertex
     counts and exact 1e-7-degree integer coordinate sums."""
     import os as _os
-    import tempfile as _tempfile
 
     from gdal_spark.sources.osm import osm_ways_to_lines, read_osm_pbf, write_osm_pbf
 
     nodes, ways, rels = _osm_fixture()
-    path = _os.path.join(_tempfile.mkdtemp(prefix="osm_"), "fixture.osm.pbf")
+    path = _os.path.join(_gate_dir("osm_"), "fixture.osm.pbf")
     write_osm_pbf(path, nodes, ways, rels, block_nodes=32)
     osm = read_osm_pbf(spark, path)
 
@@ -3185,7 +3189,6 @@ def q_osm_multipolygon_assembly(spark, sf_dir):
     group per relation. Areas compare exactly: integer-degree coords →
     doubled shoelace is integral, so area×5e5 is an exact BIGINT."""
     import os as _os
-    import tempfile as _tempfile
 
     from gdal_spark.functions.st import st_area
     from gdal_spark.sources.osm import (
@@ -3195,7 +3198,7 @@ def q_osm_multipolygon_assembly(spark, sf_dir):
     )
 
     nodes, ways, rels, _rings = _osm_mp_fixture()
-    path = _os.path.join(_tempfile.mkdtemp(prefix="osmmp_"), "mp.osm.pbf")
+    path = _os.path.join(_gate_dir("osmmp_"), "mp.osm.pbf")
     write_osm_pbf(path, nodes, ways, rels, block_nodes=8)
     mp = osm_relations_to_multipolygons(read_osm_pbf(spark, path))
     return mp.select(
@@ -3480,7 +3483,6 @@ def q_raster_tile_pyramid_checksums(spark, sf_dir):
     executor-side → re-read DISTRIBUTED and checksummed. Oracle is the
     single-node warp path (warp_crs_np) sliced per tile — the identical
     transform+sampling math the warp gates pin."""
-    import tempfile as _tempfile
 
     from gdal_spark.raster.checksum import checksum_df
     from gdal_spark.raster.model import byte_fixture, tiles_from_array
@@ -3488,7 +3490,7 @@ def q_raster_tile_pyramid_checksums(spark, sf_dir):
     from gdal_spark.sources.geotiff import read_geotiff
 
     arr, meta = byte_fixture()
-    out_dir = _tempfile.mkdtemp(prefix="pyramid_")
+    out_dir = _gate_dir("pyramid_")
     written = raster_tile_pyramid(
         tiles_from_array(spark, arr, meta), meta, 26711, out_dir,
         zooms=_PYRAMID_ZOOMS,
@@ -3614,7 +3616,6 @@ def q_raster_tile_pyramid_png_checksums(spark, sf_dir):
     hand-rolled codec). The oracle is the same single-node warp slicing
     as the GeoTIFF pyramid gate: PNG is a pixel-identical re-encoding of
     the same sampled values."""
-    import tempfile as _tempfile
 
     from gdal_spark.raster.checksum import checksum_np
     from gdal_spark.raster.model import byte_fixture, tiles_from_array
@@ -3622,7 +3623,7 @@ def q_raster_tile_pyramid_png_checksums(spark, sf_dir):
     from gdal_spark.sources.png import decode_png
 
     arr, meta = byte_fixture()
-    out_dir = _tempfile.mkdtemp(prefix="pyramid_png_")
+    out_dir = _gate_dir("pyramid_png_")
     written = raster_tile_pyramid(
         tiles_from_array(spark, arr, meta), meta, 26711, out_dir,
         zooms=_PYRAMID_ZOOMS, tile_format="png",
@@ -3907,12 +3908,11 @@ def q_streaming_windowed_counts(spark, sf_dir):
     import time as _time
 
     import os as _os
-    import tempfile as _tempfile
 
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     # the file streaming source requires a DIRECTORY; testdata is a flat
     # read-only dir of single files — stage a symlink dir (no copy)
-    tmpdir = _tempfile.mkdtemp(prefix="stream_events_")
+    tmpdir = _gate_dir("stream_events_")
     link = _os.path.join(tmpdir, "events.parquet")
     if not _os.path.exists(link):
         _os.symlink(_os.path.abspath(f"{sf_dir}/events.parquet"), link)
@@ -3969,12 +3969,11 @@ def q_streaming_tile_counts(spark, sf_dir):
     import time as _time
 
     import os as _os
-    import tempfile as _tempfile
 
     from gdal_spark.operators.spatial_join import assign_tiles
 
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    tmpdir = _tempfile.mkdtemp(prefix="stream_tiles_")
+    tmpdir = _gate_dir("stream_tiles_")
     link = _os.path.join(tmpdir, "events.parquet")
     if not _os.path.exists(link):
         _os.symlink(_os.path.abspath(f"{sf_dir}/events.parquet"), link)
@@ -4011,11 +4010,10 @@ def q_streaming_dedup_count(spark, sf_dir):
     face of dedup_exact): distinct-user count after the stream drains
     must equal the batch COUNT(DISTINCT)."""
     import os as _os
-    import tempfile as _tempfile
     import time as _time
 
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    tmpdir = _tempfile.mkdtemp(prefix="stream_dedup_")
+    tmpdir = _gate_dir("stream_dedup_")
     link = _os.path.join(tmpdir, "events.parquet")
     if not _os.path.exists(link):
         _os.symlink(_os.path.abspath(f"{sf_dir}/events.parquet"), link)
@@ -4052,11 +4050,10 @@ def q_streaming_line_dedup_count(spark, sf_dir):
     horizon × distinct lines (at production scale the key would be the
     line's xxhash64, same first-wins semantics)."""
     import os as _os
-    import tempfile as _tempfile
     import time as _time
 
     batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tmpdir = _tempfile.mkdtemp(prefix="stream_ld_")
+    tmpdir = _gate_dir("stream_ld_")
     link = _os.path.join(tmpdir, "documents.parquet")
     if not _os.path.exists(link):
         _os.symlink(_os.path.abspath(f"{sf_dir}/documents.parquet"), link)
@@ -4107,11 +4104,10 @@ def q_streaming_quality_filter(spark, sf_dir):
     availableNow. The 100 TB ingest story: filtering happens at scan
     speed as documents arrive, only per-reason counters are stateful."""
     import os as _os
-    import tempfile as _tempfile
     import time as _time
 
     batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tmpdir = _tempfile.mkdtemp(prefix="stream_qf_")
+    tmpdir = _gate_dir("stream_qf_")
     link = _os.path.join(tmpdir, "documents.parquet")
     if not _os.path.exists(link):
         _os.symlink(_os.path.abspath(f"{sf_dir}/documents.parquet"), link)

@@ -8,7 +8,7 @@ cells are exploded over Chebyshev-ring offsets, offsets that leave the
 world's ``[0, 2^z)`` tile range are dropped, the rest are packed into the
 one BIGINT cell key of :mod:`gdal_spark.tiling`, an equi-join on that key
 finds candidates, and ``row_number() OVER (PARTITION BY query ORDER BY dist,
-neighbor_id)`` keeps the top k — ties broken by (dist, id) to stay
+nid)`` keeps the top k — ties broken by (dist, id) to stay
 deterministic.
 
 Correctness bound: any point in a cell at Chebyshev distance ≥ r+1 from
@@ -36,20 +36,15 @@ def knn_join(
     neighbors: DataFrame,
     k: int,
     zoom: int = 8,
-    query_id: str = "qid",
-    query_x: str = "x",
-    query_y: str = "y",
-    neighbor_id: str = "nid",
-    neighbor_x: str = "x",
-    neighbor_y: str = "y",
     radius: int = 1,
     max_rounds: int = 4,
 ) -> DataFrame:
     """For every query row return up to k nearest neighbor rows.
 
-    Output columns: query_id, neighbor_id, dist, rank (1-based).
+    ``query`` has columns ``qid``, ``x``, ``y`` and ``neighbors`` has
+    ``nid``, ``x``, ``y``. Output columns: qid, nid, dist, rank (1-based).
     Distances are planar in the coordinate space of x/y (use mercator
-    meters for geographic data); ties are broken by (dist, neighbor_id).
+    meters for geographic data); ties are broken by (dist, nid).
     The ring join carries no hint: AQE broadcasts the neighbours when
     their measured size is under ``spark.sql.autoBroadcastJoinThreshold``.
 
@@ -64,17 +59,13 @@ def knn_join(
     n_tiles = 1 << zoom
     span0 = tiling.WORLD_SPAN / n_tiles
     q = query.select(
-        F.col(query_id).alias("__qid"),
-        F.col(query_x).alias("__qx"),
-        F.col(query_y).alias("__qy"),
+        F.col("qid").alias("__qid"), F.col("x").alias("__qx"), F.col("y").alias("__qy")
     )
     q = q.withColumn("__qcx", F.expr(tiling.tile_x_sql("__qx", zoom))).withColumn(
         "__qcy", F.expr(tiling.tile_y_sql("__qy", zoom))
     )
     nb = neighbors.select(
-        F.col(neighbor_id).alias("__nid"),
-        F.col(neighbor_x).alias("__nx"),
-        F.col(neighbor_y).alias("__ny"),
+        F.col("nid").alias("__nid"), F.col("x").alias("__nx"), F.col("y").alias("__ny")
     ).withColumn("__ncell", F.expr(tiling.mercator_cell_sql("__nx", "__ny", zoom)))
 
     done_parts: list[DataFrame] = []
@@ -137,8 +128,8 @@ def knn_join(
     for p in done_parts[1:]:
         out = out.unionByName(p)
     return out.select(
-        F.col("__qid").alias(query_id),
-        F.col("__nid").alias(neighbor_id),
+        F.col("__qid").alias("qid"),
+        F.col("__nid").alias("nid"),
         F.sqrt("__d2").alias("dist"),
         F.col("__rank").alias("rank"),
     )
@@ -148,19 +139,15 @@ def knn_join_bruteforce(
     query: DataFrame,
     neighbors: DataFrame,
     k: int,
-    query_id: str = "qid",
-    query_x: str = "x",
-    query_y: str = "y",
-    neighbor_id: str = "nid",
-    neighbor_x: str = "x",
-    neighbor_y: str = "y",
 ) -> DataFrame:
-    """O(N*M) oracle path (broadcast cross join + window). Small dims only."""
+    """O(N*M) oracle path (broadcast cross join + window). Small dims only.
+
+    Same input columns and output as :func:`knn_join`."""
     q = query.select(
-        F.col(query_id).alias("__qid"), F.col(query_x).alias("__qx"), F.col(query_y).alias("__qy")
+        F.col("qid").alias("__qid"), F.col("x").alias("__qx"), F.col("y").alias("__qy")
     )
     nb = neighbors.select(
-        F.col(neighbor_id).alias("__nid"), F.col(neighbor_x).alias("__nx"), F.col(neighbor_y).alias("__ny")
+        F.col("nid").alias("__nid"), F.col("x").alias("__nx"), F.col("y").alias("__ny")
     )
     dx_ = F.col("__qx") - F.col("__nx")
     dy_ = F.col("__qy") - F.col("__ny")
@@ -172,8 +159,8 @@ def knn_join_bruteforce(
         .withColumn("__rank", F.row_number().over(w))
         .filter(F.col("__rank") <= k)
         .select(
-            F.col("__qid").alias(query_id),
-            F.col("__nid").alias(neighbor_id),
+            F.col("__qid").alias("qid"),
+            F.col("__nid").alias("nid"),
             F.sqrt("__d2").alias("dist"),
             F.col("__rank").alias("rank"),
         )

@@ -19,6 +19,9 @@ Here:
    fields, with names colliding between layers prefixed
    ``input_``/``method_`` (options INPUT_PREFIX/METHOD_PREFIX).
 
+Both layers, and every result, carry their WKB geometry in the
+``geometry`` column.
+
 Deviation (documented): difference results are emitted as MultiPolygon
 *piece decompositions* (union-equal to GEOS's dissolved polygons, same
 total area, same feature counts for the reference fixtures).
@@ -36,9 +39,9 @@ from pyspark.sql.types import BinaryType
 from gdal_spark.geometry import kernels, ops, wkb, wkt
 
 
-def _prefixed(input_df: DataFrame, method_df: DataFrame, geom: str, input_prefix: str, method_prefix: str):
-    in_cols = [c for c in input_df.columns if c != geom]
-    m_cols = [c for c in method_df.columns if c != geom]
+def _prefixed(input_df: DataFrame, method_df: DataFrame, input_prefix: str, method_prefix: str):
+    in_cols = [c for c in input_df.columns if c != "geometry"]
+    m_cols = [c for c in method_df.columns if c != "geometry"]
     collide = set(in_cols) & set(m_cols)
     in_sel = [
         F.col(c).alias(input_prefix + c if c in collide else c) for c in in_cols
@@ -49,7 +52,7 @@ def _prefixed(input_df: DataFrame, method_df: DataFrame, geom: str, input_prefix
     return in_sel, m_sel, collide
 
 
-def _env_struct(df: DataFrame, geom: str, pref: str) -> DataFrame:
+def _env_struct(df: DataFrame, pref: str) -> DataFrame:
     @F.pandas_udf("minx DOUBLE, miny DOUBLE, maxx DOUBLE, maxy DOUBLE")
     def _env(g: pd.Series) -> pd.DataFrame:
         rows = []
@@ -58,20 +61,19 @@ def _env_struct(df: DataFrame, geom: str, pref: str) -> DataFrame:
             rows.append(e)
         return pd.DataFrame(rows, columns=["minx", "miny", "maxx", "maxy"])
 
-    return df.withColumn(pref + "env", _env(F.col(geom)))
+    return df.withColumn(pref + "env", _env(F.col("geometry")))
 
 
 def _candidates(
-    input_df: DataFrame, method_df: DataFrame, geom: str,
-    input_prefix: str, method_prefix: str,
+    input_df: DataFrame, method_df: DataFrame, input_prefix: str, method_prefix: str
 ) -> DataFrame:
     """Envelope-overlap candidate pairs; method side broadcast."""
-    in_sel, m_sel, _ = _prefixed(input_df, method_df, geom, input_prefix, method_prefix)
-    a = _env_struct(input_df, geom, "a_").select(
-        *in_sel, F.col(geom).alias("__ga"), F.col("a_env").alias("__ea")
+    in_sel, m_sel, _ = _prefixed(input_df, method_df, input_prefix, method_prefix)
+    a = _env_struct(input_df, "a_").select(
+        *in_sel, F.col("geometry").alias("__ga"), F.col("a_env").alias("__ea")
     )
-    b = _env_struct(method_df, geom, "b_").select(
-        *m_sel, F.col(geom).alias("__gb"), F.col("b_env").alias("__eb")
+    b = _env_struct(method_df, "b_").select(
+        *m_sel, F.col("geometry").alias("__gb"), F.col("b_env").alias("__eb")
     )
     cond = (
         (F.col("__ea.minx") <= F.col("__eb.maxx"))
@@ -103,15 +105,14 @@ def _intersection_udf(ga: pd.Series, gb: pd.Series) -> pd.Series:
 def intersection(
     input_df: DataFrame,
     method_df: DataFrame,
-    geom: str = "geometry",
     input_prefix: str = "input_",
     method_prefix: str = "method_",
 ) -> DataFrame:
     """ogrlayer.cpp:3345 Intersection: pairs of intersecting features with
     both attribute sets and the overlay geometry."""
-    cand = _candidates(input_df, method_df, geom, input_prefix, method_prefix)
-    out = cand.withColumn(geom, _intersection_udf(F.col("__ga"), F.col("__gb")))
-    return out.filter(F.col(geom).isNotNull()).drop("__ga", "__gb", "__ea", "__eb")
+    cand = _candidates(input_df, method_df, input_prefix, method_prefix)
+    out = cand.withColumn("geometry", _intersection_udf(F.col("__ga"), F.col("__gb")))
+    return out.filter(F.col("geometry").isNotNull()).drop("__ga", "__gb", "__ea", "__eb")
 
 
 def _multipolygon_from_rings(rings: list) -> bytes | None:
@@ -122,18 +123,15 @@ def _multipolygon_from_rings(rings: list) -> bytes | None:
     return wkb.multipolygon_wkb([(r, ()) for r in rings])
 
 
-def _erase_pieces_df(
-    input_df: DataFrame, method_df: DataFrame, geom: str,
-    input_prefix: str, method_prefix: str,
-) -> DataFrame:
+def _erase_pieces_df(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """Per input row: geometry ∖ union(intersecting method geoms); rows
     with nothing left are dropped; rows with no candidate pass through."""
-    in_cols = [c for c in input_df.columns if c != geom]
-    a = _env_struct(input_df, geom, "a_").withColumn(
+    in_cols = [c for c in input_df.columns if c != "geometry"]
+    a = _env_struct(input_df, "a_").withColumn(
         "__rid", F.monotonically_increasing_id()
     )
-    b = _env_struct(method_df, geom, "b_").select(
-        F.col(geom).alias("__gb"), F.col("b_env").alias("__eb")
+    b = _env_struct(method_df, "b_").select(
+        F.col("geometry").alias("__gb"), F.col("b_env").alias("__eb")
     )
     cond = (
         (F.col("a_env.minx") <= F.col("__eb.maxx"))
@@ -142,19 +140,18 @@ def _erase_pieces_df(
         & (F.col("__eb.miny") <= F.col("a_env.maxy"))
     )
     paired = a.join(F.broadcast(b), cond, "left").select(
-        "__rid", *in_cols, geom, "__gb"
+        "__rid", *in_cols, "geometry", "__gb"
     )
-    gcol = geom
 
     def erase_group(pdf: pd.DataFrame) -> pd.DataFrame:
         first = pdf.iloc[0]
-        subject = wkb.parse_wkb(bytes(first[gcol]))
+        subject = wkb.parse_wkb(bytes(first["geometry"]))
         clips = []
         for gb in pdf["__gb"]:
             if gb is not None:
                 for rings in ops._polygons_of(wkb.parse_wkb(bytes(gb))):
                     clips.append(rings)  # full polygon (holes survive)
-        keep = {c: [first[c]] for c in ["__rid"] + in_cols + [gcol]}
+        keep = {c: [first[c]] for c in ["__rid"] + in_cols + ["geometry"]}
         if not clips:
             return pd.DataFrame(keep)
         rings_out = []
@@ -163,36 +160,32 @@ def _erase_pieces_df(
         g = _multipolygon_from_rings(rings_out)
         if g is None:
             return pd.DataFrame({c: [] for c in keep})
-        keep[gcol] = [bytearray(g)]
+        keep["geometry"] = [bytearray(g)]
         return pd.DataFrame(keep)
 
     from pyspark.sql.types import StructType
 
-    schema = StructType([paired.schema[c] for c in ["__rid"] + in_cols + [gcol]])
+    schema = StructType([paired.schema[c] for c in ["__rid"] + in_cols + ["geometry"]])
     out = paired.groupBy("__rid").applyInPandas(
         lambda key, pdf: erase_group(pdf), schema
     )
     return out.drop("__rid")
 
 
-def erase(
-    input_df: DataFrame, method_df: DataFrame, geom: str = "geometry",
-) -> DataFrame:
+def erase(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """ogrlayer.cpp:5806 Erase: input ∖ union(method), input attrs only."""
-    return _erase_pieces_df(input_df, method_df, geom, "input_", "method_")
+    return _erase_pieces_df(input_df, method_df)
 
 
-def clip(
-    input_df: DataFrame, method_df: DataFrame, geom: str = "geometry",
-) -> DataFrame:
+def clip(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """ogrlayer.cpp:5497 Clip: input ∩ union(method), input attrs only.
 
     Implemented as per-pair intersection then per-input-row union of the
     (disjoint-by-construction for convex non-overlapping method) pieces.
     """
-    in_cols = [c for c in input_df.columns if c != geom]
+    in_cols = [c for c in input_df.columns if c != "geometry"]
     a = input_df.withColumn("__rid", F.monotonically_increasing_id())
-    cand = _candidates(a, method_df.select(geom), geom, "input_", "method_")
+    cand = _candidates(a, method_df.select("geometry"), "input_", "method_")
     pieces = cand.withColumn("__pg", _intersection_udf(F.col("__ga"), F.col("__gb"))).filter(
         F.col("__pg").isNotNull()
     )
@@ -204,7 +197,7 @@ def clip(
                 rings.append(r[0])
         first = pdf.iloc[0]
         keep = {c: [first[c]] for c in in_cols + ["__rid"]}
-        keep[geom] = [bytearray(_multipolygon_from_rings(rings))]
+        keep["geometry"] = [bytearray(_multipolygon_from_rings(rings))]
         return pd.DataFrame(keep)
 
     from pyspark.sql.types import StructType
@@ -212,7 +205,7 @@ def clip(
     schema = StructType(
         [f for f in a.schema.fields if f.name in in_cols]
         + [f for f in a.schema.fields if f.name == "__rid"]
-        + [f for f in a.schema.fields if f.name == geom]
+        + [f for f in a.schema.fields if f.name == "geometry"]
     )
     return (
         pieces.groupBy("__rid")
@@ -221,17 +214,15 @@ def clip(
     )
 
 
-def union(
-    input_df: DataFrame, method_df: DataFrame, geom: str = "geometry",
-) -> DataFrame:
+def union(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """ogrlayer.cpp:3763 Union = intersections ∪ (input ∖ method) ∪
     (method ∖ input); attribute columns from the respective sides, NULLs
     elsewhere (unionByName with missing columns)."""
-    inter = intersection(input_df, method_df, geom)
-    in_only = _erase_pieces_df(input_df, method_df, geom, "input_", "method_")
-    m_only = _erase_pieces_df(method_df, input_df, geom, "input_", "method_")
+    inter = intersection(input_df, method_df)
+    in_only = _erase_pieces_df(input_df, method_df)
+    m_only = _erase_pieces_df(method_df, input_df)
     # align collided column names with the intersection schema
-    _, _, collide = _prefixed(input_df, method_df, geom, "input_", "method_")
+    _, _, collide = _prefixed(input_df, method_df, "input_", "method_")
     for c in collide:
         in_only = in_only.withColumnRenamed(c, "input_" + c)
         m_only = m_only.withColumnRenamed(c, "method_" + c)
@@ -240,49 +231,40 @@ def union(
     )
 
 
-def sym_difference(
-    input_df: DataFrame, method_df: DataFrame, geom: str = "geometry",
-) -> DataFrame:
+def sym_difference(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """ogrlayer.cpp:4300 SymDifference = (input∖method) ∪ (method∖input)."""
-    in_only = _erase_pieces_df(input_df, method_df, geom, "input_", "method_")
-    m_only = _erase_pieces_df(method_df, input_df, geom, "input_", "method_")
-    _, _, collide = _prefixed(input_df, method_df, geom, "input_", "method_")
+    in_only = _erase_pieces_df(input_df, method_df)
+    m_only = _erase_pieces_df(method_df, input_df)
+    _, _, collide = _prefixed(input_df, method_df, "input_", "method_")
     for c in collide:
         in_only = in_only.withColumnRenamed(c, "input_" + c)
         m_only = m_only.withColumnRenamed(c, "method_" + c)
     return in_only.unionByName(m_only, allowMissingColumns=True)
 
 
-def identity(
-    input_df: DataFrame, method_df: DataFrame, geom: str = "geometry",
-) -> DataFrame:
+def identity(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """ogrlayer.cpp:4730 Identity = intersections ∪ (input ∖ method):
     input split by method, keeping input extent."""
-    inter = intersection(input_df, method_df, geom)
-    in_only = _erase_pieces_df(input_df, method_df, geom, "input_", "method_")
-    _, _, collide = _prefixed(input_df, method_df, geom, "input_", "method_")
+    inter = intersection(input_df, method_df)
+    in_only = _erase_pieces_df(input_df, method_df)
+    _, _, collide = _prefixed(input_df, method_df, "input_", "method_")
     for c in collide:
         in_only = in_only.withColumnRenamed(c, "input_" + c)
     return inter.unionByName(in_only, allowMissingColumns=True)
 
 
-def update(
-    input_df: DataFrame, method_df: DataFrame, geom: str = "geometry",
-) -> DataFrame:
+def update(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """ogrlayer.cpp:5148 Update = (input ∖ method) ∪ method (method
     overwrites input where overlapping; method attrs only on its rows)."""
-    in_only = _erase_pieces_df(input_df, method_df, geom, "input_", "method_")
+    in_only = _erase_pieces_df(input_df, method_df)
     return in_only.unionByName(method_df, allowMissingColumns=True)
 
 
-def dissolve(
-    df: DataFrame, by: list | None = None, geom: str = "geometry",
-    n_partial: int = 8,
-) -> DataFrame:
-    """Aggregate union per key group — the engine's UnaryUnion/cascaded
-    union (GEOS ``CascadedUnion``; the reference reaches it via
-    ``OGRGeometry::UnaryUnion``, ogr/ogr_geometry.h:589, and the SQLite
-    dialect's ST_Union aggregate).
+def dissolve(df: DataFrame, by: list | None = None, n_partial: int = 8) -> DataFrame:
+    """Aggregate union of ``geometry`` per key group — the engine's
+    UnaryUnion/cascaded union (GEOS ``CascadedUnion``; the reference
+    reaches it via ``OGRGeometry::UnaryUnion``, ogr/ogr_geometry.h:589,
+    and the SQLite dialect's ST_Union aggregate).
 
     Distributed as a two-level union tree: rows are salted by
     ``xxhash64(wkb) mod n_partial`` (DETERMINISTIC — the tree shape
@@ -293,27 +275,22 @@ def dissolve(
     contract; cross-key work is embarrassingly parallel."""
     keys = list(by) if by else []
     out_fields = [f"`{k}` {df.schema[k].dataType.simpleString()}" for k in keys]
-    schema = ", ".join(out_fields + [f"`{geom}` binary"])
+    schema = ", ".join(out_fields + ["`geometry` binary"])
 
     def _fold(pdf: pd.DataFrame) -> bytes | None:
-        blobs = sorted(bytes(b) for b in pdf[geom] if b is not None)
+        blobs = sorted(bytes(b) for b in pdf["geometry"] if b is not None)
         if not blobs:
             return None
         parts = [wkb.parse_wkb(b) for b in blobs]
         return wkt.geom_to_wkb(*ops.unary_union(("GeometryCollection", parts)))
 
-    def partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(pdf):  # the partial and the final union alike
         row = {k: [pdf[k].iloc[0]] for k in keys}
-        row[geom] = [_fold(pdf)]
+        row["geometry"] = [_fold(pdf)]
         return pd.DataFrame(row)
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row[geom] = [_fold(pdf)]
-        return pd.DataFrame(row)
-
-    salted = df.select(*keys, geom).withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(geom)), F.lit(int(n_partial)))
+    salted = df.select(*keys, "geometry").withColumn(
+        "__salt", F.pmod(F.xxhash64(F.col("geometry")), F.lit(int(n_partial)))
     )
-    partials = salted.groupBy(*(keys + ["__salt"])).applyInPandas(partial, schema)
-    return partials.groupBy(*keys).applyInPandas(final, schema)
+    partials = salted.groupBy(*(keys + ["__salt"])).applyInPandas(fold, schema)
+    return partials.groupBy(*keys).applyInPandas(fold, schema)

@@ -342,16 +342,15 @@ def execute_sql(
     tables: dict[str, DataFrame],
     fid_cols: dict[str, str] | None = None,
     spatial_filter: tuple | None = None,
-    geom_col: str = "geometry",
 ) -> DataFrame:
     """Run one OGR-SQL statement (incl. UNION ALL chains) over the given
     layers with reference semantics.
 
     ``spatial_filter=(minx, miny, maxx, maxy)`` replicates
     ``ExecuteSQL(..., poSpatialFilter)``: the primary layer is restricted
-    to features intersecting the rect with OGR's filter-refine staging
-    (envelope reject → exact intersects, ogrlayer.cpp:2253-2325) before
-    the statement runs.
+    to features whose ``geometry`` intersects the rect, with OGR's
+    filter-refine staging (envelope reject → exact intersects,
+    ogrlayer.cpp:2253-2325), before the statement runs.
     """
     if spatial_filter is not None:
         from gdal_spark.operators.vector_pipeline import VectorPipeline
@@ -359,7 +358,7 @@ def execute_sql(
         tables = dict(tables)
         m = re.search(r"\bFROM\s+([A-Za-z_][A-Za-z_0-9]*)", sql, re.IGNORECASE)
         main = m.group(1)
-        tables[main] = VectorPipeline(tables[main], geom_col).spat(*spatial_filter).df
+        tables[main] = VectorPipeline(tables[main]).spat(*spatial_filter).df
     parts = re.split(r"\bUNION\s+ALL\b", sql, flags=re.IGNORECASE)
     out = _execute_single(spark, parts[0], tables, fid_cols or {})
     for p in parts[1:]:

@@ -44,20 +44,19 @@ def cosine_topk(
     df: DataFrame,
     query_vec,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     scale: int = 1_000_000,
 ) -> DataFrame:
-    """Exact top-k by cosine to one query vector.
+    """Exact top-k by cosine to one query vector over ``df``'s
+    ``(vec_id, embedding)`` rows.
 
     Output (id, cos_e6) where cos_e6 = floor(cos * 1e6 + 0.5); ordering is
     (cos_e6 DESC, id ASC) — integer, deterministic, oracle-safe. Physical
     plan is TakeOrderedAndProject: per-partition heaps, no full sort.
     """
     qv = F.array(*[F.lit(float(v)).cast("double") for v in query_vec])
-    cos = cosine_sim_col(F.col(vec_col), qv)
+    cos = cosine_sim_col(F.col("embedding"), qv)
     out = df.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         F.floor(cos * scale + F.lit(0.5)).cast("long").alias("cos_e6"),
     )
     return out.orderBy(F.col("cos_e6").desc(), F.col("id").asc()).limit(k)
@@ -68,16 +67,16 @@ def knn_cosine_join(
     corpus: DataFrame,
     k: int = 5,
     query_id: str = "qid",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact all-pairs cosine kNN: broadcast queries × corpus + window
-    prune. Output (qid, id, cos_e6, rank). Queries side must be small
-    (it's broadcast); corpus side streams."""
+    prune. Both sides carry an ``embedding`` column; the corpus is keyed
+    by ``vec_id``, the queries by ``query_id``. Output (qid, id, cos_e6,
+    rank). Queries side must be small (it's broadcast); corpus side
+    streams."""
     q = queries.select(
-        F.col(query_id).alias("qid"), F.col(vec_col).alias("qv")
+        F.col(query_id).alias("qid"), F.col("embedding").alias("qv")
     )
-    c = corpus.select(F.col(corpus_id).alias("id"), F.col(vec_col).alias("cv"))
+    c = corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("cv"))
     cos = cosine_sim_col(F.col("cv"), F.col("qv"))
     w = Window.partitionBy("qid").orderBy(F.col("cos_e6").desc(), F.col("id").asc())
     return (
@@ -173,18 +172,17 @@ def lsh_bucketed_topk(
     k: int = 5,
     n_planes: int = 12,
     probe_flips: int = 1,
-    query_id: str = "qid",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
     seed: int = 42,
     score: str = "fold",
 ) -> DataFrame:
     """Approximate kNN: random-hyperplane buckets + multiprobe.
 
-    Corpus rows hash to one bucket; each query probes its bucket plus all
-    buckets at Hamming distance ≤ probe_flips (multiprobe LSH). The join
-    is an equi-join on bucket id, so the per-query work is the bucket
+    Queries are ``(qid, embedding)`` rows, the corpus ``(vec_id,
+    embedding)`` rows; output (qid, id, cos_e6, rank). Corpus rows hash
+    to one bucket; each query probes its bucket plus all buckets at
+    Hamming distance ≤ probe_flips (multiprobe LSH). The join is an
+    equi-join on bucket id, so the per-query work is the bucket
     occupancy, not the corpus size. Recall grows with probe_flips.
 
     ``dim`` is required: inferring it would need a driver-side action
@@ -201,10 +199,10 @@ def lsh_bucketed_topk(
             "inferring it from the corpus would run a driver-side job"
         )
     planes = random_hyperplanes(dim, n_planes, seed)
-    c = corpus.select(F.col(corpus_id).alias("id"), F.col(vec_col).alias("cv")).withColumn(
+    c = corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("cv")).withColumn(
         "bucket", _sign_bucket(F.col("cv"), planes)
     )
-    q = queries.select(F.col(query_id).alias("qid"), F.col(vec_col).alias("qv")).withColumn(
+    q = queries.select("qid", F.col("embedding").alias("qv")).withColumn(
         "bucket0", _sign_bucket(F.col("qv"), planes)
     )
     # multiprobe: bucket0 xor each subset of ≤ probe_flips bits
@@ -244,16 +242,15 @@ def lsh_bucketed_topk(
 def cosine_dedup_pairs(
     df: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int | None = None,
     probe_flips: int = 2,
     dim: int | None = None,
     seed: int = 42,
     score: str = "fold",
 ) -> DataFrame:
-    """All id1 < id2 pairs with cosine ≥ threshold — the embedding-space
-    near-dup detector of a training-data pipeline.
+    """All id1 < id2 pairs of ``df``'s ``(vec_id, embedding)`` rows with
+    cosine ≥ threshold — the embedding-space near-dup detector of a
+    training-data pipeline.
 
     ``n_planes=None`` → exact all-pairs self-join (O(N²) candidate
     volume; the correctness baseline, and what the DuckDB oracle can
@@ -263,8 +260,8 @@ def cosine_dedup_pairs(
     cos ≥ 0.9 pairs differ in few plane signs w.h.p.).
     Output: (id1, id2, cos_e6).
     """
-    a = df.select(F.col(id_col).alias("id1"), F.col(vec_col).alias("v1"))
-    b = df.select(F.col(id_col).alias("id2"), F.col(vec_col).alias("v2"))
+    a = df.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("v1"))
+    b = df.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("v2"))
     if n_planes is None:
         cand = a.crossJoin(b).filter(F.col("id1") < F.col("id2"))
     else:
@@ -425,12 +422,10 @@ def ivf_topk(
     n_probe: int = 4,
     iters: int = 5,
     sample_size: int = 2048,
-    query_id: str = "qid",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
     score: str = "fold",
 ) -> DataFrame:
-    """Approximate kNN via an IVF index: corpus vectors are partitioned
+    """Approximate kNN via an IVF index over ``(qid, embedding)`` queries
+    and ``(vec_id, embedding)`` corpus rows: corpus vectors are partitioned
     into ``n_centroids`` Voronoi cells of a k-means coarse quantizer;
     each query probes its ``n_probe`` nearest cells. The candidate join
     is an equi-join on cell id — per-query work ∝ probed-cell occupancy
@@ -444,7 +439,7 @@ def ivf_topk(
     ``score``: "fold" (JVM sequential aggregate, bit-equal to the Python
     oracle) or "arrow" (einsum batch, throughput path at real dims)."""
     sample_rows = (
-        corpus.select(corpus_id, vec_col).orderBy(corpus_id).limit(sample_size).collect()
+        corpus.select("vec_id", "embedding").orderBy("vec_id").limit(sample_size).collect()
     )
     C = kmeans_fit(
         np.array([list(r[1]) for r in sample_rows], dtype=np.float64),
@@ -470,10 +465,10 @@ def ivf_topk(
         order = _ivf_probe_fast(V, C, n_probe)
         return pd.Series([[int(i) for i in row] for row in order])
 
-    c = corpus.select(F.col(corpus_id).alias("id"), F.col(vec_col).alias("cv")).withColumn(
+    c = corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("cv")).withColumn(
         "cell", assign(F.col("cv"))
     )
-    qp = queries.select(F.col(query_id).alias("qid"), F.col(vec_col).alias("qv")).select(
+    qp = queries.select("qid", F.col("embedding").alias("qv")).select(
         "qid", "qv", F.explode(probe(F.col("qv"))).alias("cell")
     )
     sim_fn = cosine_sim_arrow if score == "arrow" else cosine_sim_col

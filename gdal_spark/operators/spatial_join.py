@@ -34,16 +34,15 @@ from gdal_spark.geometry.index import PolygonSet
 def assign_tiles(
     df: DataFrame,
     zoom: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     convention: str = "xyz",
 ) -> DataFrame:
-    """Add ``tile_z/x/y`` columns via GetTileIndices math (column-only).
+    """Add ``tile_z/x/y`` columns for the ``lon``/``lat`` degree columns
+    via GetTileIndices math (column-only).
 
     ``convention`` is ``'xyz'`` (y down from the north) or ``'tms'`` (y up)."""
     if convention not in ("xyz", "tms"):
         raise ValueError(f"convention must be 'xyz' or 'tms', got {convention!r}")
-    tx_sql, ty_sql = tiling.lonlat_tile_sql(lon_col, lat_col, zoom)
+    tx_sql, ty_sql = tiling.lonlat_tile_sql("lon", "lat", zoom)
     out = df.withColumn("tile_z", F.lit(zoom)).withColumn("tile_x", F.expr(tx_sql))
     y = F.expr(ty_sql)
     if convention == "tms":  # GetFileY flip, gdalalg_raster_tile.cpp:348-352

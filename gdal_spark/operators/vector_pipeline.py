@@ -18,8 +18,8 @@ apps/ogr2ogr_lib.cpp:136):
         .explode_collections()       # -explode_collections
         .df                          # terminal DataFrame
 
-Geometry steps are Arrow pandas UDFs over the WKB column; attribute
-steps are plain Catalyst expressions (pushdown-friendly). Supported CRS
+Geometry steps are Arrow pandas UDFs over the WKB ``geometry`` column;
+attribute steps are plain Catalyst expressions (pushdown-friendly). Supported CRS
 transforms without PROJ: EPSG:4326 ⇄ EPSG:3857 (spherical mercator) and
 arbitrary affine — the reference delegates everything else to PROJ
 (ogr/ogrct.cpp), out of scope GEOS/PROJ-free v1.
@@ -62,29 +62,26 @@ def _merc_to_lonlat(xs, ys):
 
 
 class VectorPipeline:
-    def __init__(self, df: DataFrame, geom_col: str = "geometry"):
+    def __init__(self, df: DataFrame):
         self.df = df
-        self.geom = geom_col
 
     def _with_geom(self, udf) -> "VectorPipeline":
-        return VectorPipeline(
-            self.df.withColumn(self.geom, udf(F.col(self.geom))), self.geom
-        )
+        return VectorPipeline(self.df.withColumn("geometry", udf(F.col("geometry"))))
 
     # -- attribute steps (stay in Catalyst) --------------------------------
 
     def where(self, predicate: str | Column) -> "VectorPipeline":
-        return VectorPipeline(self.df.filter(predicate), self.geom)
+        return VectorPipeline(self.df.filter(predicate))
 
     def select(self, fields: list[str]) -> "VectorPipeline":
         cols = list(fields)
-        if self.geom not in cols:
-            cols.append(self.geom)
-        return VectorPipeline(self.df.select(*cols), self.geom)
+        if "geometry" not in cols:
+            cols.append("geometry")
+        return VectorPipeline(self.df.select(*cols))
 
     def sql(self, spark, query: str, view: str = "__pipe") -> "VectorPipeline":
         self.df.createOrReplaceTempView(view)
-        return VectorPipeline(spark.sql(query), self.geom)
+        return VectorPipeline(spark.sql(query))
 
     # -- spatial filter (filter-refine, ogrlayer.cpp:2253-2325) ------------
 
@@ -108,7 +105,7 @@ class VectorPipeline:
                     out.append(ops.intersects(geom, rect))  # exact refine
             return pd.Series(out)
 
-        return VectorPipeline(self.df.filter(hits(F.col(self.geom))), self.geom)
+        return VectorPipeline(self.df.filter(hits(F.col("geometry"))))
 
     # -- geometry steps ----------------------------------------------------
 
@@ -133,7 +130,7 @@ class VectorPipeline:
             return ("MultiPolygon", [("Polygon", [r]) for r in rings])
 
         out = self._with_geom(_geom_udf(_clip))
-        return VectorPipeline(out.df.filter(F.col(self.geom).isNotNull()), self.geom)
+        return VectorPipeline(out.df.filter(F.col("geometry").isNotNull()))
 
     def reproject(self, src: str, dst: str) -> "VectorPipeline":
         """Arbitrary supported-CRS reprojection (4326 / 3857 / WGS84 UTM
@@ -191,9 +188,9 @@ class VectorPipeline:
                     out.append([bytes(b)])
             return pd.Series(out)
 
-        df = self.df.withColumn("__parts", parts(F.col(self.geom)))
-        df = df.withColumn(self.geom, F.explode("__parts")).drop("__parts")
-        return VectorPipeline(df, self.geom)
+        df = self.df.withColumn("__parts", parts(F.col("geometry")))
+        df = df.withColumn("geometry", F.explode("__parts")).drop("__parts")
+        return VectorPipeline(df)
 
     def set_geom_type(self, promote_to_multi: bool = True) -> "VectorPipeline":
         """PROMOTE_TO_MULTI (ogr2ogr -nlt PROMOTE_TO_MULTI)."""
@@ -228,14 +225,12 @@ class VectorPipeline:
         geometries become NULL and are dropped (SKIP_INVALID semantics)."""
 
         out = self._with_geom(_geom_udf(ops.make_valid_geom))
-        return VectorPipeline(out.df.filter(F.col(self.geom).isNotNull()), self.geom)
+        return VectorPipeline(out.df.filter(F.col("geometry").isNotNull()))
 
     def concat(self, other: "VectorPipeline") -> "VectorPipeline":
         """`... concat` (gdalalg_vector_concat.cpp): layer union by field
         name, missing fields NULL (OGRUnionLayer schema-union contract)."""
-        return VectorPipeline(
-            self.df.unionByName(other.df, allowMissingColumns=True), self.geom
-        )
+        return VectorPipeline(self.df.unionByName(other.df, allowMissingColumns=True))
 
     def grid(self, meta, alg: str = "invdist", z_col: str = "z", **kw):
         """`... grid` step: terminate the vector pipeline into a raster
@@ -254,7 +249,7 @@ class VectorPipeline:
             return pd.DataFrame({"x": xs, "y": ys})
 
         pts = self.df.select(
-            _xy(F.col(self.geom)).alias("p"), F.col(z_col).alias("z")
+            _xy(F.col("geometry")).alias("p"), F.col(z_col).alias("z")
         ).select(F.col("p.x").alias("x"), F.col("p.y").alias("y"), "z")
         return grid_points(pts, meta, alg=alg, **kw)
 
@@ -263,9 +258,7 @@ class VectorPipeline:
         UnaryUnion per key; layer_algebra.dissolve salted union tree)."""
         from gdal_spark.operators.layer_algebra import dissolve as _dissolve
 
-        return VectorPipeline(
-            _dissolve(self.df, by=by, geom=self.geom, n_partial=n_partial), self.geom
-        )
+        return VectorPipeline(_dissolve(self.df, by=by, n_partial=n_partial))
 
     def rasterize(self, meta, burn_col: str | None = None, burn: float = 1.0, **kw):
         """``... rasterize`` step: terminate into a raster tiles
@@ -277,4 +270,4 @@ class VectorPipeline:
         if burn_col is None:
             df = df.withColumn("__burn", F.lit(float(burn)))
             burn_col = "__burn"
-        return _rasterize(df, meta, geom_col=self.geom, burn_col=burn_col, **kw)
+        return _rasterize(df, meta, burn_col=burn_col, **kw)

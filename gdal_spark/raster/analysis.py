@@ -256,7 +256,7 @@ def proximity(
         .select("block_x", "block_y", "tx", "ty")
     )
 
-    def dist_block(key, tiles_pdf: pd.DataFrame, tgt_pdf: pd.DataFrame) -> pd.DataFrame:
+    def dist_block(key, tiles_pdf, tgt_pdf):
         txs = tgt_pdf["tx"].to_numpy(np.float64)
         tys = tgt_pdf["ty"].to_numpy(np.float64)
         rows = []
@@ -638,7 +638,7 @@ def contour_lines(
         "fb BOOLEAN, lb BOOLEAN, xs ARRAY<DOUBLE>, ys ARRAY<DOUBLE>"
     )
 
-    def stitch_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def stitch_chunk(key, pdf):
         level = float(key[0])
         seg_list = list(zip(pdf["x0"], pdf["y0"], pdf["x1"], pdf["y1"]))
         breaks = set()
@@ -667,7 +667,7 @@ def contour_lines(
     final_local = chains.filter(F.col("done"))
     open_chains = chains.filter(~F.col("done"))
 
-    def merge_level(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_level(key, pdf):
         from collections import defaultdict
 
         level = float(key[0])

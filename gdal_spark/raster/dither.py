@@ -212,7 +212,7 @@ def dither_rgb2pct(
     dtype = meta.dtype
     band_pos = {b: i for i, b in enumerate(bands)}
 
-    def proc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def proc(key, pdf):
         by, bu = int(key[0]), int(key[1])
         y0, y1 = by * bh, min((by + 1) * bh, H)
         nrow = y1 - y0
@@ -293,7 +293,7 @@ def dither_rgb2pct(
         nb = out.filter(F.col("role").isin(["R", "TB", "TD"]))
         bounds = nb if bounds is None else bounds.unionByName(nb)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         by, tx = int(key[0]), int(key[1])
         y0t, x0t = by * bh, tx * bw
         hgt = min(bh, H - y0t)

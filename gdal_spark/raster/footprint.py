@@ -70,7 +70,7 @@ def footprint(
     mask_tiles = raster_calc(band_tiles, mm, mask_fn, out_dtype="uint8")
     feats = polygonize_polygons(mask_tiles, mm, exclude_values=(0.0,), geo=geo)
 
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(key, pdf):
         from gdal_spark.geometry import wkb as W
         from gdal_spark.geometry import wkt as WT
         from gdal_spark.geometry import kernels, ops

@@ -253,7 +253,7 @@ def grid_points(
     ))
     joined = all_blocks.join(spread, ["block_x", "block_y"], "left")
 
-    def interp(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def interp(key, pdf):
         bx, by = int(key[0]), int(key[1])
         h, w = meta.block_shape(bx, by)
         gx, gy = _node_coords(meta, bx, by, h, w)
@@ -537,16 +537,13 @@ def grid_linear(
     meta: RasterMeta,
     radius: float = -1.0,
     nodata: float = 0.0,
-    x_col: str = "x",
-    y_col: str = "y",
-    z_col: str = "z",
     band: int = 1,
     mode: str = "auto",
     margin_rings: int = 2,
     broadcast_threshold: int = 20_000,
 ) -> DataFrame:
     """GGA_Linear: Delaunay-TIN interpolation (alg/gdalgrid.cpp
-    GDALGridLinear).
+    GDALGridLinear) of ``(x, y, z)`` point rows.
 
     ``mode='tiled'`` (default for large clouds): DISTRIBUTED TIN — no
     driver collect (r2 VERDICT wrong-3 fix). Points are hashed to cells
@@ -566,9 +563,9 @@ def grid_linear(
     broadcast (cell math assumes axis-aligned gt)."""
     spark = points.sparkSession
     pts = points.select(
-        F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"),
-        F.col(z_col).cast("double").alias("z"),
+        F.col("x").cast("double").alias("x"),
+        F.col("y").cast("double").alias("y"),
+        F.col("z").cast("double").alias("z"),
     )
     g = meta.gt
     rotated = g[2] != 0.0 or g[4] != 0.0
@@ -608,7 +605,7 @@ def grid_linear(
     ) + 1
 
     def make_interp(k: int):
-        def interp(key, pdf: pd.DataFrame):
+        def interp(key, pdf):
             bx, by = int(key[0]), int(key[1])
             h, w = meta.block_shape(bx, by)
             gxs, gys = _node_coords(meta, bx, by, h, w)

@@ -74,7 +74,7 @@ def padded_blocks(tiles: DataFrame, meta: RasterMeta, halo: int) -> DataFrame:
         "band INT, block_y INT, block_x INT, gy0 INT, gx0 INT, ph INT, pw INT, piece BINARY",
     )
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         band, by, bx = int(key[0]), int(key[1]), int(key[2])
         h = min(meta.block_h, meta.height - by * meta.block_h)
         w = min(meta.block_w, meta.width - bx * meta.block_w)

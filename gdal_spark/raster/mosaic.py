@@ -48,7 +48,7 @@ def mosaic(
 
     nod = src_nodata
 
-    def composite(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def composite(key, pdf):
         h, w = int(pdf["h"].iloc[0]), int(pdf["w"].iloc[0])
         out = np.full((h, w), np.nan)
         for r in pdf.sort_values("__order").itertuples():

@@ -98,7 +98,7 @@ def pansharpen(
 
     pan_dtype = pan_meta.dtype
 
-    def fuse(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fuse(key, pdf):
         h, w = int(pdf["h"].iloc[0]), int(pdf["w"].iloc[0])
         arrs = {
             int(r.band): np.frombuffer(r.data, dtype=np.float64).reshape(h, w)

@@ -618,7 +618,7 @@ def sieve_apply(
     )
     dtype = meta.dtype
 
-    def rewrite(key, tiles_pdf: pd.DataFrame, relabel_pdf: pd.DataFrame) -> pd.DataFrame:
+    def rewrite(key, tiles_pdf, relabel_pdf):
         rows = []
         new_by_lab = dict(zip(relabel_pdf["lab"], relabel_pdf["new_value"]))
         for _, r in tiles_pdf.iterrows():
@@ -812,7 +812,7 @@ def polygonize_polygons(
     allsegs = interior.unionByName(border).select("root", "value", "x0", "y0", "x1", "y1")
     gt = meta.gt if geo else (0.0, 1.0, 0.0, 0.0, 0.0, 1.0)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         root = int(key[0])
         val = float(pdf["value"].iloc[0])
         rings = _walk_rings(pdf["x0"], pdf["y0"], pdf["x1"], pdf["y1"])

@@ -162,7 +162,7 @@ def compute_median_cut_pct(
     dtype = meta.dtype
     rb, gb, bb = bands
 
-    def partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def partial(key, pdf):
         # one group per block: the shuffle co-locates the 3 band rows
         bmap = {
             int(row.band): np.frombuffer(row.data, dtype=dtype)
@@ -194,7 +194,7 @@ def apply_pct(
     rb, gb, bb = bands
     P = np.asarray(palette, dtype=np.uint8)
 
-    def mapb(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def mapb(key, pdf):
         h, w = int(pdf["h"].iloc[0]), int(pdf["w"].iloc[0])
         bmap = {
             int(row.band): np.frombuffer(row.data, dtype=dtype).reshape(h, w)

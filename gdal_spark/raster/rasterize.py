@@ -493,7 +493,7 @@ def rasterize(
         )
     )
 
-    def burn_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def burn_block(key, pdf):
         bx, by = int(key[0]), int(key[1])
         h, w = meta.block_shape(bx, by)
         img = np.full((h, w), init, dtype=np.float64)

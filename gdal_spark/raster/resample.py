@@ -147,12 +147,10 @@ def interpolate_at_points(
     meta: RasterMeta,
     points: DataFrame,
     alg: str = "bilinear",
-    px_col: str = "px",
-    py_col: str = "py",
-    id_col: str = "pid",
     band: int = 1,
 ) -> DataFrame:
-    """Distributed fractional-pixel sampling: (id, value) per point.
+    """Distributed fractional-pixel sampling of ``(pid, px, py)`` point
+    rows: (pid, value) per point.
 
     The raster→vector value-extraction core: points join their containing
     halo-padded block (equi-join on block id, broadcast if small) and each
@@ -160,11 +158,7 @@ def interpolate_at_points(
     """
     halo = 2
     padded = padded_blocks(tiles.filter(F.col("band") == band), meta, halo)
-    pts = points.select(
-        F.col(id_col).alias("pid"),
-        F.col(px_col).alias("px"),
-        F.col(py_col).alias("py"),
-    ).withColumn(
+    pts = points.select("pid", "px", "py").withColumn(
         "block_x",
         F.least(
             F.greatest(F.floor(F.col("px") / meta.block_w), F.lit(0)),
@@ -181,7 +175,7 @@ def interpolate_at_points(
     dtype = meta.dtype
     W, H = meta.width, meta.height
 
-    def sample(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def sample(key, pdf):
         bx, by = int(key[0]), int(key[1])
         h, w = int(pdf.h.iloc[0]), int(pdf.w.iloc[0])
         r = int(pdf.halo.iloc[0])
@@ -270,7 +264,7 @@ def downsample2(tiles: DataFrame, meta: RasterMeta, alg: str = "average") -> tup
         "oby", (F.col("block_y") / 2).cast("int")
     )
 
-    def reduce_quad(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def reduce_quad(key, pdf):
         band, oby, obx = int(key[0]), int(key[1]), int(key[2])
         oh = min(out_meta.block_h, out_meta.height - oby * out_meta.block_h)
         ow = min(out_meta.block_w, out_meta.width - obx * out_meta.block_w)
@@ -438,7 +432,7 @@ def downsample2_kernel(
         "band INT, oby INT, obx INT, gy0 INT, gx0 INT, ph INT, pw INT, piece BINARY",
     )
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         band, oby, obx = int(key[0]), int(key[1]), int(key[2])
         oh = min(obh, out_meta.height - oby * obh)
         ow = min(obw, out_meta.width - obx * obw)

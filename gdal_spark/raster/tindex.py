@@ -41,13 +41,10 @@ def _ring_wkb(x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series,
     return pd.Series(out)
 
 
-def tile_index(
-    catalog: DataFrame,
-    geom_col: str = "geometry",
-) -> DataFrame:
+def tile_index(catalog: DataFrame) -> DataFrame:
     """``catalog``: one row per raster with columns ``width, height,
     gt0..gt5`` plus any identifying columns (location, path, …) which
-    pass through untouched. Returns the catalog plus ``geom_col``
+    pass through untouched. Returns the catalog plus ``geometry``
     (extent polygon WKB) and ``xmin/ymin/xmax/ymax`` (the bbox of the
     four corners — valid for rotated transforms too).
     """
@@ -67,7 +64,7 @@ def tile_index(
         d = d.withColumn(f"__cx{i}", cx).withColumn(f"__cy{i}", cy)
     args = [F.col(f"__c{ax}{i}") for i in range(4) for ax in ("x", "y")]
     return (
-        d.withColumn(geom_col, _ring_wkb(*args))
+        d.withColumn("geometry", _ring_wkb(*args))
         .withColumn("xmin", F.least(*xs))
         .withColumn("ymin", F.least(*ys))
         .withColumn("xmax", F.greatest(*xs))
@@ -76,9 +73,9 @@ def tile_index(
     )
 
 
-def layer_extent(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
-    """OGRLayer::GetExtent / ``ogrtindex`` building block: the layer's
-    bbox as ONE row ``(xmin, ymin, xmax, ymax, n_geoms)``. Per-row
+def layer_extent(df: DataFrame) -> DataFrame:
+    """OGRLayer::GetExtent / ``ogrtindex`` building block: the bbox of the
+    layer's ``geometry`` column as ONE row ``(xmin, ymin, xmax, ymax, n_geoms)``. Per-row
     envelopes come from the vectorized WKB gather (the same kernel the
     staged spatial predicates use); the extent is a single min/max
     reduce — partial aggregation map-side, a one-row shuffle, works
@@ -96,7 +93,7 @@ def layer_extent(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
             {"minx": minx, "miny": miny, "maxx": maxx, "maxy": maxy}
         )
 
-    e = df.select(env(F.col(geom_col)).alias("e"))
+    e = df.select(env(F.col("geometry")).alias("e"))
     return e.agg(
         F.min("e.minx").alias("xmin"),
         F.min("e.miny").alias("ymin"),

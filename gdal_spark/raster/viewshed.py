@@ -333,7 +333,7 @@ def viewshed(
     hchain = {0: chains["L"], 1: chains["R"], 2: chains["L"], 3: chains["R"]}
     vchain = {0: chains["U"], 1: chains["U"], 2: chains["D"], 3: chains["D"]}
 
-    def proc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def proc(key, pdf):
         quad, bi, bj = int(key[0]), int(key[1]), int(key[2])
         d = {str(r.role): r for r in pdf.itertuples()}
         if "DEM" not in d:  # boundary targeted past the raster edge
@@ -415,7 +415,7 @@ def viewshed(
                 columns=["gby", "gbx", "quad", "u0", "v0", "nv", "nu", "data"],
             )
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         by, bx = int(key[0]), int(key[1])
         y0, x0 = by * bh, bx * bw
         hgt = min(bh, H - y0)
@@ -527,7 +527,7 @@ def viewshed_cumulative(
         )
         acc = v if acc is None else acc.unionByName(v)
 
-    def rollup(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def rollup(key, pdf):
         b, by, bx = int(key[0]), int(key[1]), int(key[2])
         h, w = int(pdf.h.iloc[0]), int(pdf.w.iloc[0])
         total = np.zeros((h, w), dtype=np.uint32)

@@ -573,7 +573,7 @@ def _gather_and_warp(
     # a handful of rings); they ship to executors in the UDF closure.
     polys_px = _cutline_polys_px(cutline, src_meta) if cutline is not None else None
 
-    def warp_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def warp_block(key, pdf):
         to_src = _make_to_src_px(dst_meta, src_meta, tf)
         dbx, dby = int(key[0]), int(key[1])
         h, w = dst_meta.block_shape(dbx, dby)

@@ -54,14 +54,13 @@ def read_csv_geometry(
     wkt_col: str | None = None,
     x_col: str | None = None,
     y_col: str | None = None,
-    geom_col: str = "geometry",
     header: bool = True,
     infer_schema: bool = True,
     **csv_options,
 ) -> DataFrame:
     """Read a CSV layer with geometry. The scan itself is Spark's native
     (splittable) csv reader; the detected WKT column is replaced by a
-    ``geom_col`` WKB column, or X/Y columns produce point WKBs."""
+    ``geometry`` WKB column, or X/Y columns produce point WKBs."""
     rd = (
         spark.read.option("header", str(header).lower())
         .option("inferSchema", str(infer_schema).lower())
@@ -81,12 +80,12 @@ def read_csv_geometry(
         if xs and ys:
             x_col, y_col = xs[0], ys[0]
     if wkt_col is not None:
-        return df.withColumn(geom_col, _wkt_to_wkb_udf(F.col(wkt_col).cast("string"))).drop(
-            *( [wkt_col] if wkt_col != geom_col else [] )
+        return df.withColumn("geometry", _wkt_to_wkb_udf(F.col(wkt_col).cast("string"))).drop(
+            *( [wkt_col] if wkt_col != "geometry" else [] )
         )
     if x_col is not None and y_col is not None:
         return df.withColumn(
-            geom_col,
+            "geometry",
             _xy_to_point_udf(F.col(x_col).cast("double"), F.col(y_col).cast("double")),
         )
     raise ValueError(

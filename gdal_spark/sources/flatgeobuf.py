@@ -391,7 +391,7 @@ def _decode_props(buf, schema: list[tuple[str, int]]) -> dict:
 
 
 def write_fgb(
-    df, path: str, name: str = "layer", geom_col: str = "geometry",
+    df, path: str, name: str = "layer",
     geometry_type: str = "Unknown", max_rows: int = 1_000_000,
 ) -> None:
     """Write a DataFrame (WKB geometry + typed columns) as FlatGeobuf.
@@ -403,7 +403,7 @@ def write_fgb(
     n = df.limit(max_rows + 1).count()
     if n > max_rows:
         raise ValueError(f"write_fgb is a fixture sink (> {max_rows} rows)")
-    cols = [(c, _SPARK_TO_COL[t]) for c, t in df.dtypes if c != geom_col]
+    cols = [(c, _SPARK_TO_COL[t]) for c, t in df.dtypes if c != "geometry"]
     rows = df.collect()
     other = [c for c, _ in cols]
     rows = sorted(rows, key=lambda r: tuple(str(r[c]) for c in other))
@@ -430,7 +430,7 @@ def write_fgb(
         f.write(hbuf)
         for r in rows:
             fb = _Builder()
-            g = r[geom_col]
+            g = r["geometry"]
             fields = []
             if g is not None:
                 gt = fb.table(_geom_fields(fb, _wkb.parse_wkb(bytes(g))))
@@ -496,7 +496,7 @@ def parse_feature(buf: bytes, schema) -> tuple:
     return wkb_bytes, props
 
 
-def read_fgb(spark: SparkSession, path: str, geom_col: str = "geometry") -> DataFrame:
+def read_fgb(spark: SparkSession, path: str) -> DataFrame:
     """Distributed FlatGeobuf read: the driver reads header + offsets;
     executors each parse a disjoint slice of feature records (the format
     is record-splittable by construction — this is why FGB distributes
@@ -506,7 +506,7 @@ def read_fgb(spark: SparkSession, path: str, geom_col: str = "geometry") -> Data
     fields = ", ".join(
         f"`{c}` {_COL_TO_SPARK[t]}" for c, t in schema
     )
-    out_schema = (fields + ", " if fields else "") + f"`{geom_col}` binary"
+    out_schema = (fields + ", " if fields else "") + "`geometry` binary"
     off_df = spark.createDataFrame(
         [(int(o), int(l)) for o, l in offsets], "off LONG, len INT"
     ).repartition(max(1, min(len(offsets) // 64 + 1, spark.sparkContext.defaultParallelism)))
@@ -521,6 +521,6 @@ def read_fgb(spark: SparkSession, path: str, geom_col: str = "geometry") -> Data
                     rows.append(
                         [props.get(c) for c, _ in schema] + [wkb_bytes]
                     )
-                yield pd.DataFrame(rows, columns=[c for c, _ in schema] + [geom_col])
+                yield pd.DataFrame(rows, columns=[c for c, _ in schema] + ["geometry"])
 
     return off_df.mapInPandas(scan, out_schema)

@@ -164,6 +164,6 @@ def geojson_col_to_wkb(col):
     return _gj_to_wkb_udf(col)
 
 
-def write_geojson_strings(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
+def write_geojson_strings(df: DataFrame) -> DataFrame:
     """WKB geometry column → GeoJSON geometry string column (sink side)."""
-    return df.withColumn(geom_col, _wkb_to_gj_udf(F.col(geom_col)))
+    return df.withColumn("geometry", _wkb_to_gj_udf(F.col("geometry")))

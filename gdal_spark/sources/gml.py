@@ -206,7 +206,6 @@ def _xsd_types(path: str) -> dict[str, str]:
 
 def read_gml(
     spark: SparkSession, path: str, layer: str | None = None,
-    geom_col: str = "geometry",
 ) -> DataFrame:
     """GML document → DataFrame (fid string, properties, WKB geometry).
 
@@ -270,7 +269,7 @@ def read_gml(
             return "string"
 
     col_types = [(c, infer(c)) for c in names]
-    schema = "fid STRING, " + "".join(f"`{c}` {t}, " for c, t in col_types) + f"`{geom_col}` BINARY"
+    schema = "fid STRING, " + "".join(f"`{c}` {t}, " for c, t in col_types) + "`geometry` BINARY"
     cast = {"bigint": int, "int": int, "double": float, "string": str,
             "boolean": lambda v: str(v).lower() in ("true", "1")}
     out_rows = []
@@ -285,7 +284,7 @@ def read_gml(
 
 
 def write_gml(
-    df, path: str, layer: str = "layer", geom_col: str = "geometry",
+    df, path: str, layer: str = "layer",
     srs: str | None = None, max_rows: int = 100_000,
 ) -> None:
     """Fixture-scale GML 3 writer (ogr:FeatureCollection with posList /
@@ -299,7 +298,7 @@ def write_gml(
     if n > max_rows:
         raise ValueError(f"write_gml is a fixture sink (> {max_rows} rows)")
     rows = df.collect()
-    cols = [c for c, _ in df.dtypes if c != geom_col]
+    cols = [c for c, _ in df.dtypes if c != "geometry"]
     srs_attr = f' srsName="{srs}"' if srs else ""
     xsd_of = {"bigint": "xsd:long", "int": "xsd:int", "double": "xsd:double",
               "string": "xsd:string", "boolean": "xsd:boolean"}
@@ -308,7 +307,7 @@ def write_gml(
                 '<xsd:schema xmlns:xsd="http://www.w3.org/2001/XMLSchema" '
                 'xmlns:gml="http://www.opengis.net/gml">\n')
         for c, t in df.dtypes:
-            if c != geom_col and t in xsd_of:
+            if c != "geometry" and t in xsd_of:
                 f.write(f'  <xsd:element name="{c}" nillable="true" '
                         f'type="{xsd_of[t]}"/>\n')
         f.write("</xsd:schema>\n")
@@ -358,7 +357,7 @@ def write_gml(
                 'xmlns:gml="http://www.opengis.net/gml">\n')
         for i, r in enumerate(rows):
             f.write(f'  <gml:featureMember>\n    <ogr:{layer} fid="{layer}.{i}">\n')
-            g = r[geom_col]
+            g = r["geometry"]
             if g is not None:
                 geom = _wkb.parse_wkb(bytes(g))
                 f.write("      <ogr:geometryProperty>"

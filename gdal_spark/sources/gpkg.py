@@ -84,12 +84,12 @@ def _spark_type(decl: str) -> str:
     return "string"  # TEXT(n), DATE, DATETIME travel as strings
 
 
-def read_gpkg(spark, path: str, layer: str | None = None, geom_col: str = "geometry"):
+def read_gpkg(spark, path: str, layer: str | None = None):
     """Read one feature layer of a GeoPackage into a DataFrame.
 
     Columns: the layer's attribute columns (SQLite declared types mapped
     INTEGER→bigint, REAL→double, TEXT/DATE→string, BLOB→binary) plus
-    ``geom_col`` holding standard WKB. ``layer=None`` picks the single
+    ``geometry`` holding standard WKB. ``layer=None`` picks the single
     feature layer, erroring if the package has several."""
     layers = gpkg_layers(path)
     if layer is None:
@@ -119,7 +119,7 @@ def read_gpkg(spark, path: str, layer: str | None = None, geom_col: str = "geome
     rows = []
     for n in names:
         if n == gcol:
-            fields.append(f"`{geom_col}` binary")
+            fields.append("`geometry` binary")
         else:
             fields.append(f"`{n}` {_spark_type(decls[n])}")
     gi = names.index(gcol) if gcol in names else -1
@@ -152,7 +152,7 @@ def _gp_blob(wkb_bytes: bytes | None, srs_id: int) -> bytes | None:
 
 
 def write_gpkg(
-    df, path: str, layer: str, geom_col: str = "geometry",
+    df, path: str, layer: str,
     srs_id: int = 4326, geometry_type: str = "GEOMETRY",
     max_rows: int = 1_000_000,
 ) -> None:
@@ -172,8 +172,8 @@ def write_gpkg(
         )
     rows = df.collect()
     names = df.columns
-    gi = names.index(geom_col)
-    other = [n for n in names if n != geom_col]
+    gi = names.index("geometry")
+    other = [n for n in names if n != "geometry"]
     idx = [names.index(n) for n in other]
     rows = sorted(rows, key=lambda r: tuple(str(r[i]) for i in idx))
 
@@ -221,11 +221,11 @@ def write_gpkg(
             "CONSTRAINT pk_geom_cols PRIMARY KEY (table_name, column_name))"
         )
         cols_sql = ", ".join(
-            [f'"{geom_col}" {geometry_type}'] + [f'"{n}" {decl(n)}' for n in other]
+            [f'"geometry" {geometry_type}'] + [f'"{n}" {decl(n)}' for n in other]
         )
         cur.execute(f'CREATE TABLE "{layer}" (fid INTEGER PRIMARY KEY AUTOINCREMENT, {cols_sql})')
         ins = (
-            f'INSERT INTO "{layer}" ("{geom_col}", '
+            f'INSERT INTO "{layer}" ("geometry", '
             + ", ".join(f'"{n}"' for n in other)
             + ") VALUES ("
             + ", ".join("?" * (1 + len(other)))
@@ -256,7 +256,7 @@ def write_gpkg(
         )
         cur.execute(
             "INSERT INTO gpkg_geometry_columns VALUES (?, ?, ?, ?, 0, 0)",
-            (layer, geom_col, geometry_type, int(srs_id)),
+            (layer, "geometry", geometry_type, int(srs_id)),
         )
         con.commit()
     finally:

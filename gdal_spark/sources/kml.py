@@ -140,8 +140,7 @@ def _drop_z(g):
 
 
 def read_kml(
-    spark: SparkSession, path: str, layer: str | None = None,
-    geom_col: str = "geometry", keep_z: bool = True,
+    spark: SparkSession, path: str, layer: str | None = None, keep_z: bool = True,
 ) -> DataFrame:
     """KML → DataFrame. ``layer`` selects a Folder by <name> (default:
     the first Folder, or the Document when none). Schema: layer STRING,
@@ -208,7 +207,7 @@ def read_kml(
             rows.append((fname, name, desc, props, wkb_bytes))
     schema = ("layer STRING, Name STRING, description STRING, "
               + "".join(f"`{c}` STRING, " for c in extra)
-              + f"`{geom_col}` BINARY")
+              + "`geometry` BINARY")
     out = [
         [ly, nm, de] + [pr.get(c) for c in extra] + [gb]
         for ly, nm, de, pr, gb in rows
@@ -217,7 +216,7 @@ def read_kml(
 
 
 def write_kml(
-    df, path: str, layer: str = "layer", geom_col: str = "geometry",
+    df, path: str, layer: str = "layer",
     name_col: str | None = None, max_rows: int = 100_000,
 ) -> None:
     """Fixture-scale KML writer: one Folder, Placemarks with attributes
@@ -227,7 +226,7 @@ def write_kml(
     if n > max_rows:
         raise ValueError(f"write_kml is a fixture sink (> {max_rows} rows)")
     rows = df.collect()
-    cols = [c for c, _ in df.dtypes if c != geom_col]
+    cols = [c for c, _ in df.dtypes if c != "geometry"]
 
     def esc(s: str) -> str:
         return (str(s).replace("&", "&amp;").replace("<", "&lt;")
@@ -278,7 +277,7 @@ def write_kml(
                     f.write(f'<Data name="{esc(c)}"><value>{esc(r[c])}'
                             "</value></Data>")
                 f.write("</ExtendedData>")
-            g = r[geom_col]
+            g = r["geometry"]
             if g is not None:
                 f.write(geom_xml(_wkb.parse_wkb(bytes(g))))
             f.write("</Placemark>\n")

@@ -359,9 +359,7 @@ def write_mvt_tile(path: str, layers: list[dict]) -> None:
         f.write(encode_tile(layers))
 
 
-def read_mvt(
-    spark: SparkSession, paths, layer: str | None = None, geom_col: str = "geometry"
-) -> DataFrame:
+def read_mvt(spark: SparkSession, paths, layer: str | None = None) -> DataFrame:
     """Distributed MVT read: ``paths`` is a list of .pbf tile paths (a
     tileset directory's files); executors decode disjoint subsets.
     Output: (tile_path, layer, fid, props json-ish map, geometry WKB in
@@ -391,13 +389,13 @@ def read_mvt(
                                 _wkt.geom_to_wkb(*geom),
                             ))
             yield pd.DataFrame(
-                rows, columns=["tile_path", "layer", "fid", "props", geom_col]
+                rows, columns=["tile_path", "layer", "fid", "props", "geometry"]
             )
 
     return pdf.mapInPandas(
         scan,
         f"tile_path STRING, layer STRING, fid LONG, "
-        f"props MAP<STRING,STRING>, {geom_col} BINARY",
+        "props MAP<STRING,STRING>, geometry BINARY",
     )
 
 
@@ -406,15 +404,13 @@ def write_mvt_tileset(
     out_dir: str,
     zoom: int,
     layer: str = "layer",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     id_col: str | None = None,
     prop_cols: tuple = (),
     extent: int = 4096,
 ) -> DataFrame:
     """Distributed MVT tileset SINK (the reference's ``ogr2ogr -f MVT``
     directory layout, ogr/ogrsf_frmts/mvt/ writer side): POINT features
-    are tile-assigned with the exact GetTileIndices math
+    (``lon``/``lat`` columns) are tile-assigned with the exact GetTileIndices math
     (tiling.tile_indices_np), grouped per tile, and each ``{z}/{x}/{y}
     .pbf`` is encoded and written ON THE EXECUTOR that owns the group —
     one shuffle on the tile key, zero driver collect, which is the
@@ -427,10 +423,10 @@ def write_mvt_tileset(
     from gdal_spark import tiling
     from gdal_spark.operators.spatial_join import assign_tiles
 
-    sel = [lon_col, lat_col, *prop_cols]
+    sel = ["lon", "lat", *prop_cols]
     if id_col is not None:
         sel.append(id_col)
-    tiled = assign_tiles(df.select(*sel), zoom, lon_col=lon_col, lat_col=lat_col)
+    tiled = assign_tiles(df.select(*sel), zoom)
 
     def emit(key, pdf):
         tx, ty = int(key[0]), int(key[1])
@@ -438,9 +434,7 @@ def write_mvt_tileset(
         span = tiling.WORLD_SPAN / n
         x0 = -tiling.ORIGIN + tx * span
         y0 = tiling.ORIGIN - ty * span
-        mx, my = tiling.lonlat_to_mercator_np(
-            pdf[lon_col].to_numpy(), pdf[lat_col].to_numpy()
-        )
+        mx, my = tiling.lonlat_to_mercator_np(pdf["lon"].to_numpy(), pdf["lat"].to_numpy())
         px = np.round((mx - x0) / span * extent).astype(np.int64)
         py = np.round((y0 - my) / span * extent).astype(np.int64)
         feats = []

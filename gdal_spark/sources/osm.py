@@ -407,7 +407,7 @@ def _way_coords(osm: DataFrame) -> DataFrame:
     )
 
 
-def osm_ways_to_lines(osm: DataFrame, geom_col: str = "geometry") -> DataFrame:
+def osm_ways_to_lines(osm: DataFrame) -> DataFrame:
     """Assemble way geometries (see :func:`_way_coords` for the join
     shape). Output: (id, n_pts, tags, geometry WKB LineString)."""
     ways = osm.filter(F.col("kind") == "way").select("id", "refs", "tags")
@@ -421,17 +421,15 @@ def osm_ways_to_lines(osm: DataFrame, geom_col: str = "geometry") -> DataFrame:
             for wid, pts_ in zip(chunk["way_id"], chunk["pts"]):
                 coords = [(p["lon"], p["lat"]) for p in pts_]
                 out.append((wid, len(coords), linestring_wkb(coords)))
-            yield pd.DataFrame(out, columns=["id", "n_pts", geom_col])
+            yield pd.DataFrame(out, columns=["id", "n_pts", "geometry"])
 
     lines = pts.mapInPandas(
-        build, f"id LONG, n_pts INT, {geom_col} BINARY"
+        build, "id LONG, n_pts INT, geometry BINARY"
     )
     return lines.join(ways.select("id", "tags"), "id", "left")
 
 
-def osm_relations_to_multipolygons(
-    osm: DataFrame, geom_col: str = "geometry"
-) -> DataFrame:
+def osm_relations_to_multipolygons(osm: DataFrame) -> DataFrame:
     """OSM multipolygon/boundary relation assembly (reference:
     ogrosmdatasource.cpp multipolygon relation build — member ways are
     stitched end-to-end into closed rings; ``inner`` members become
@@ -523,6 +521,6 @@ def osm_relations_to_multipolygons(
 
     out = with_coords.groupBy("rel_id").applyInPandas(
         assemble,
-        f"id LONG, n_polys INT, n_holes INT, n_pts INT, {geom_col} BINARY",
+        "id LONG, n_polys INT, n_holes INT, n_pts INT, geometry BINARY",
     )
     return out.join(rels.select(F.col("rel_id").alias("id"), "tags"), "id", "left")

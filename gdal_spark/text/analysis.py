@@ -35,17 +35,18 @@ def stopword_hits_col(text_col: str, lang: str) -> Column:
     return F.size(F.regexp_extract_all(F.col(text_col), F.lit(_stop_re(lang)), F.lit(0)))
 
 
-def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_guess") -> DataFrame:
-    """n-gram-free stopword-vote language ID; deterministic argmax with
-    ties broken by LANG_ORDER; 0 hits everywhere → 'und'."""
-    hits = {l: stopword_hits_col(text_col, l) for l in LANG_ORDER}
+def lang_id(df: DataFrame) -> DataFrame:
+    """n-gram-free stopword-vote language ID of the ``text`` column into
+    ``lang_guess``; deterministic argmax with ties broken by LANG_ORDER;
+    0 hits everywhere → 'und'."""
+    hits = {l: stopword_hits_col("text", l) for l in LANG_ORDER}
     best = F.lit("und")
     best_n = F.lit(0)
     for l in LANG_ORDER:  # later langs must beat strictly → order is tiebreak
         take = hits[l] > best_n
         best = F.when(take, F.lit(l)).otherwise(best)
         best_n = F.when(take, hits[l]).otherwise(best_n)
-    return df.withColumn(out_col, best)
+    return df.withColumn("lang_guess", best)
 
 
 def lang_id_sql(text_expr: str, dialect: str = "duckdb") -> str:
@@ -175,22 +176,23 @@ def repetition_metrics_sql(text_expr: str) -> dict[str, str]:
     }
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fp") -> DataFrame:
-    """Order-sensitive polynomial rolling hash over words:
+def fingerprint(df: DataFrame) -> DataFrame:
+    """Order-sensitive polynomial rolling hash over the words of ``text``,
+    added as ``fp``:
 
         acc = (acc*131 + len(w)*31 + ascii(w[0])) mod 1e9+7
 
     Engine-portable (same integer arithmetic in ANSI SQL), content- and
     order-sensitive, and fully JVM-side via ``aggregate``.
     """
-    w = F.split(F.trim(F.col(text_col)), r"\s+")
+    w = F.split(F.trim(F.col("text")), r"\s+")
     acc = F.aggregate(
         w,
         F.lit(0).cast("long"),
         lambda a, x: (a * FP_MULT + F.length(x) * 31 + F.ascii(F.substring(x, 1, 1)))
         % FP_MOD,
     )
-    return df.withColumn(out_col, acc)
+    return df.withColumn("fp", acc)
 
 
 def fingerprint_sql(text_expr: str) -> str:
@@ -313,15 +315,11 @@ def quality_filter_sql(text_expr: str, top_word_expr: str, **overrides) -> str:
 # corpus vocabulary statistics
 # ---------------------------------------------------------------------------
 
-def vocab_topk(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 100,
-) -> DataFrame:
-    """Corpus vocabulary: the ``k`` most frequent words with total
-    occurrence count and document frequency, ties broken by word so the
-    result is deterministic. Returns ``(word, n, df)``.
+def vocab_topk(df: DataFrame, k: int = 100) -> DataFrame:
+    """Corpus vocabulary of ``(doc_id, text)`` rows: the ``k`` most
+    frequent words with total occurrence count and document frequency,
+    ties broken by word so the result is deterministic. Returns
+    ``(word, n, df)``.
 
     Scale shape: ONE pass over the exploded text — a (word, id)
     wordcount with map-side partial combine, then a second slim
@@ -330,8 +328,8 @@ def vocab_topk(
     Spark's TakeOrderedAndProject — no global sort materialization.
     """
     w = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"),
     )
     per_doc = w.groupBy("word", "id").agg(F.count(F.lit(1)).alias("c"))
     return (
@@ -354,17 +352,12 @@ SCORE_E6_SQL = (
 )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
-    """Per-document top-``k`` keywords by TF × rarity. Rarity is the
-    integerized inverse document frequency ``floor(n_docs * 1e6 / df)``
-    (a monotonic transform of idf — same ranking, float-free so both
-    engines agree bit-for-bit; the classic log-idf differs only by a
-    monotone map). Returns ``(id_col, word, tf, df, score_e6)``, ties
+def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
+    """Per-document top-``k`` keywords of ``(doc_id, text)`` rows by
+    TF × rarity. Rarity is the integerized inverse document frequency
+    ``floor(n_docs * 1e6 / df)`` (a monotonic transform of idf — same
+    ranking, float-free so both engines agree bit-for-bit; the classic
+    log-idf differs only by a monotone map). Returns ``(doc_id, word, tf, df, score_e6)``, ties
     broken by word; ``score_e6`` is an exact DECIMAL(38,0)
     (:data:`SCORE_E6_SQL`).
 
@@ -375,8 +368,8 @@ def tfidf_top_terms(
     tf⋈df join shuffles only (word, counts) pairs.
     """
     w = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"),
     )
     # materialize the wordcount once: Catalyst has no cross-consumer
     # subplan elimination, and tf feeds BOTH join sides — without this
@@ -397,7 +390,7 @@ def tfidf_top_terms(
         scored.withColumn("rk", F.row_number().over(win))
         .filter(F.col("rk") <= k)
         .select(
-            F.col("id").alias(id_col), "word",
+            F.col("id").alias("doc_id"), "word",
             F.col("tf").cast("long").alias("tf"),
             F.col("df").cast("long").alias("df"),
             "score_e6",
@@ -418,12 +411,11 @@ PII_PATTERNS = (
 )
 
 
-def pii_redact(df: DataFrame, text_col: str = "text",
-               out_col: str = "text_redacted") -> DataFrame:
-    """RefinedWeb/C4-style PII scrub: emails, IPv4 addresses and long
-    digit runs (phone-like) replaced by typed tokens, plus per-kind
-    match counts (``n_email/n_ipv4/n_phone``, counted on the ORIGINAL
-    text). Replacements apply in PII_PATTERNS order — earlier tokens
+def pii_redact(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """RefinedWeb/C4-style PII scrub into ``text_redacted``: emails, IPv4
+    addresses and long digit runs (phone-like) replaced by typed tokens,
+    plus per-kind match counts (``n_email/n_ipv4/n_phone``, counted on
+    the ORIGINAL text). Replacements apply in PII_PATTERNS order — earlier tokens
     contain no digits, so later patterns cannot match inside them.
     Map-only JVM regexps: scrubs at scan speed, no shuffle."""
     out = df
@@ -436,7 +428,7 @@ def pii_redact(df: DataFrame, text_col: str = "text",
     red = F.col(text_col)
     for _, pat, rep in PII_PATTERNS:
         red = F.regexp_replace(red, pat, rep)
-    return out.withColumn(out_col, red)
+    return out.withColumn("text_redacted", red)
 
 
 def pii_redact_sql(text_expr: str) -> dict[str, str]:
@@ -524,21 +516,21 @@ def token_metrics_sql(text_expr: str) -> dict[str, str]:
     }
 
 
-def line_metrics(df: DataFrame, text_col: str = "text",
-                 sep: str = "\n") -> DataFrame:
+def line_metrics(df: DataFrame, sep: str = "\n") -> DataFrame:
     """The Gopher line-level rules (Rae et al. 2021 §A1.1: drop docs
     with >90% bullet-started lines, >30% ellipsis-ended lines, or <80%
-    words containing an alphabetic character) as integer metric columns:
+    words containing an alphabetic character) over the ``text`` column,
+    as integer metric columns:
     ``n_lines, bullet_lines, ellipsis_lines, n_words, alpha_words``.
     Map-only array filters; ``sep`` is a literal separator."""
-    ls = F.split(F.col(text_col), "\\Q" + sep + "\\E")
+    ls = F.split(F.col("text"), "\\Q" + sep + "\\E")
     bullets = F.size(F.filter(
         ls, lambda t: F.substring(F.ltrim(t), 1, 1).isin("•", "-", "*")
     ))
     ellipsis = F.size(F.filter(
         ls, lambda t: F.rtrim(t).endswith("...") | F.rtrim(t).endswith("…")
     ))
-    ws = F.split(F.trim(F.col(text_col)), r"\s+")
+    ws = F.split(F.trim(F.col("text")), r"\s+")
     alpha = F.size(F.filter(ws, lambda w: w.rlike("[A-Za-z]")))
     return (
         df.withColumn("n_lines", F.size(ls).cast("long"))
@@ -569,19 +561,16 @@ def line_metrics_sql(text_expr: str, sep_chr: str = "chr(10)") -> dict[str, str]
     }
 
 
-def unigram_surprisal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_surprisal(df: DataFrame) -> DataFrame:
     """CCNet-style LM quality scoring (Wenzek et al. 2020 §3.3 score
     documents with a language model; the production form broadcasts a
     trained model into a map-only pass) — here the corpus's own unigram
     model with a FLOAT-FREE whole-bit surprisal so both engines agree
     exactly: surprisal(w) = ⌊log2 N⌋ − ⌊log2 count(w)⌋ bits, computed as
-    ``length(bin(x))`` differences. Returns ``(id_col, n_words,
-    surprisal_bits, bits_per_word_e3)`` — high bits/word ≈ improbable
-    text (gibberish/rare-token soup), low ≈ common filler.
+    ``length(bin(x))`` differences. Scores ``(doc_id, text)`` rows and
+    returns ``(doc_id, n_words, surprisal_bits, bits_per_word_e3)`` —
+    high bits/word ≈ improbable text (gibberish/rare-token soup), low ≈
+    common filler.
 
     Scale shape: the token stream aggregates to per-doc wordcounts
     FIRST (map-side combine), and THAT table — distinct (doc, word)
@@ -593,8 +582,8 @@ def unigram_surprisal(
     shuffles."""
     tf = (
         df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"),
+            F.col("doc_id").alias("id"),
+            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"),
         )
         .groupBy("id", "word")
         .agg(F.count(F.lit(1)).alias("k"))
@@ -619,5 +608,5 @@ def unigram_surprisal(
             F.floor(F.sum("wbits") * F.lit(1000) / F.sum("k"))
             .cast("long").alias("bits_per_word_e3"),
         )
-        .withColumnRenamed("id", id_col)
+        .withColumnRenamed("id", "doc_id")
     )

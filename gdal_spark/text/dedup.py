@@ -25,37 +25,33 @@ from pyspark.sql import DataFrame, Window, functions as F
 MERSENNE_P = (1 << 61) - 1
 
 
-def words_col(text_col: str = "text"):
-    """Whitespace tokenization — shared by all dedup ops."""
-    return F.split(F.trim(F.col(text_col)), r"\s+")
+def words_col():
+    """Whitespace tokenization of ``text`` — shared by all dedup ops."""
+    return F.split(F.trim(F.col("text")), r"\s+")
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one representative (min id) per distinct text.
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Keep one representative (min ``doc_id``) per distinct ``text``.
 
     Groups on ``xxhash64(text)`` so the shuffle key is 8 bytes; exactness
     is preserved by a secondary group on the text itself *within* each
     hash group (a no-op unless xxhash collides).
     """
     return (
-        df.select(F.col(id_col), F.col(text_col), F.xxhash64(text_col).alias("__h"))
-        .groupBy("__h", text_col)
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
+        df.select(F.col("doc_id"), F.col("text"), F.xxhash64("text").alias("__h"))
+        .groupBy("__h", "text")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
     )
 
 
-def shingles(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (id, shingle STRING).
+def shingles(df: DataFrame, n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles per ``(doc_id, text)`` row:
+    (id, shingle STRING).
 
     Pure column math: split → sequence → transform(slice) → explode.
     """
-    w = words_col(text_col)
+    w = words_col()
     # sequence(1, 0) DESCENDS in Spark — docs shorter than n words must
     # yield an empty shingle array explicitly
     sh = F.when(
@@ -66,20 +62,19 @@ def shingles(
         ),
     ).otherwise(F.array().cast("array<string>"))
     return (
-        df.select(F.col(id_col).alias("id"), F.explode(sh).alias("shingle"))
+        df.select(F.col("doc_id").alias("id"), F.explode(sh).alias("shingle"))
         .distinct()
     )
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | float | None = 0.005,
 ) -> DataFrame:
-    """All doc pairs (id1 < id2) with shingle-set Jaccard ≥ threshold.
+    """All pairs of ``(doc_id, text)`` rows (id1 < id2) with shingle-set
+    Jaccard ≥ threshold.
 
     Output: (id1, id2, common, n1, n2) — Jaccard = common/(n1+n2-common),
     emitted as exact integers so oracles compare without float hashing.
@@ -93,7 +88,7 @@ def ngram_jaccard_pairs(
     affected pairs are only those sharing *solely* stop-shingles, which
     sit far below any useful threshold at scale anyway).
     """
-    sh = shingles(df, id_col, text_col, n)
+    sh = shingles(df, n)
     # join on the 8-byte hash of the shingle, not the string
     sh = sh.select("id", F.xxhash64("shingle").alias("sh")).distinct()
     # Materialize once: this subtree (string n-gram explode + distinct
@@ -157,19 +152,18 @@ def _perm_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
 
 def minhash_signatures(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     num_hashes: int = 64,
     seed: int = 42,
 ) -> DataFrame:
-    """(id, sig ARRAY<BIGINT>) MinHash signatures over word n-gram shingles.
+    """(id, sig ARRAY<BIGINT>) MinHash signatures over the word n-gram
+    shingles of ``(doc_id, text)`` rows.
 
     One xxhash64 per shingle, then ``num_hashes`` affine permutations
     ``(a*h + b) mod (2^61-1)`` minimized per doc — all column math; the
     aggregation is a single groupBy with ``min`` partials map-side.
     """
-    sh = shingles(df, id_col, text_col, n).select(
+    sh = shingles(df, n).select(
         "id", F.pmod(F.xxhash64("shingle"), F.lit(MERSENNE_P)).alias("h")
     )
     coeffs = _perm_coeffs(num_hashes, seed)
@@ -233,19 +227,17 @@ def lsh_candidate_pairs(
 
 def minhash_dedup_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
 ) -> DataFrame:
-    """End-to-end near-dup pairs: MinHash → LSH buckets → signature-estimate
-    filter. Output (id1, id2, est_e6) with est = fraction of agreeing
-    minhashes, scaled to integer millionths."""
+    """End-to-end near-dup pairs of ``(doc_id, text)`` rows: MinHash → LSH
+    buckets → signature-estimate filter. Output (id1, id2, est_e6) with
+    est = fraction of agreeing minhashes, scaled to integer millionths."""
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes, seed)
+    sigs = minhash_signatures(df, n, num_hashes, seed)
     # The signature subtree (shingle explode → xxhash → 64-perm min agg)
     # feeds FOUR consumers below (LSH self-join l/r + est join s1/s2) and
     # Catalyst performs no cross-consumer common-subplan elimination — an
@@ -272,20 +264,16 @@ def minhash_dedup_pairs(
     return est.select("id1", "id2", "est_e6")
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 64,
-) -> DataFrame:
-    """(id, simhash BIGINT): sign-sum of per-word 64-bit hashes.
+def simhash(df: DataFrame, bits: int = 64) -> DataFrame:
+    """(id, simhash BIGINT) of ``(doc_id, text)`` rows: sign-sum of
+    per-word 64-bit hashes.
 
     Explode words → per-(doc, bit) sign sums via bit tests on the JVM-side
     xxhash64 — no Python. The per-doc reduction folds 64 bit-counters with
     map-side partial aggregation.
     """
     w = (
-        df.select(F.col(id_col).alias("id"), F.explode(words_col(text_col)).alias("w"))
+        df.select(F.col("doc_id").alias("id"), F.explode(words_col()).alias("w"))
         .withColumn("h", F.xxhash64("w"))
     )
     # pre-aggregate to distinct (id, h) with counts: repeated words collapse
@@ -369,14 +357,12 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 
 def dedup_clusters(
-    pairs: DataFrame, ids: DataFrame | None = None,
-    id1: str = "id1", id2: str = "id2", id_col: str = "doc_id",
-    max_rounds: int = 50,
+    pairs: DataFrame, ids: DataFrame | None = None, max_rounds: int = 50,
 ) -> DataFrame:
     """Near-duplicate CLUSTERING: connected components over the dup-pair
-    graph → (doc_id, cluster_id) with cluster_id = the component's
-    minimum doc id (the canonical "keep" document — standard
-    keep-one-per-cluster dedup).
+    graph of ``(id1, id2)`` rows → (doc_id, cluster_id) with cluster_id =
+    the component's minimum doc id (the canonical "keep" document —
+    standard keep-one-per-cluster dedup).
 
     Distributed min-label propagation WITH POINTER DOUBLING: each round
     takes the neighbor minimum and then jumps labels through labels
@@ -389,7 +375,7 @@ def dedup_clusters(
     ``ids``: optional one-column DataFrame of ALL doc ids (isolated
     documents then appear as singleton clusters); defaults to the ids
     present in ``pairs``."""
-    e = pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
+    e = pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
     edges = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct().persist()
     if ids is None:
         nodes = edges.select(F.col("a").alias("id")).distinct()
@@ -434,7 +420,7 @@ def dedup_clusters(
             f"dedup_clusters did not converge in {max_rounds} rounds; "
             "raise max_rounds (components deeper than 2^rounds hops)"
         )
-    return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
+    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -507,15 +493,14 @@ def line_dedup(
 def contamination_flags(
     docs: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C / PaLM §C n-gram
     overlap screen, public papers): flag every training document that
-    shares any word ``n``-gram with an evaluation/benchmark set.
+    shares any word ``n``-gram with an evaluation/benchmark set. Both
+    sides are ``(doc_id, text)`` rows.
 
-    Returns ``(id_col, n_hits, contaminated)`` for ALL docs (``n_hits``
+    Returns ``(doc_id, n_hits, contaminated)`` for ALL docs (``n_hits``
     counts the doc's DISTINCT shingles found in the benchmark — the
     shingle stream is already distinct per doc; zero hits →
     ``contaminated = false``).
@@ -527,18 +512,18 @@ def contamination_flags(
     (rare) reach the per-doc aggregation, and the final flag join back
     to ``docs`` is on the 8-byte id.
     """
-    bsh = shingles(benchmark, id_col, text_col, n).select("shingle").distinct()
-    dsh = shingles(docs, id_col, text_col, n)
+    bsh = shingles(benchmark, n).select("shingle").distinct()
+    dsh = shingles(docs, n)
     hits = (
         dsh.join(F.broadcast(bsh), "shingle")
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     return (
-        docs.select(F.col(id_col).alias("id"))
+        docs.select(F.col("doc_id").alias("id"))
         .join(hits, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
             (F.coalesce(F.col("n_hits"), F.lit(0)) > 0).alias("contaminated"),
         )

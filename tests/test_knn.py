@@ -128,8 +128,7 @@ def test_knn_join_no_persisted_leftovers(spark):
         [(i, float((i * 3) % 11), float((i * 5) % 9)) for i in range(200)],
         "nid INT, x DOUBLE, y DOUBLE",
     )
-    out = knn_join(q, nb, k=3, query_id="qid", neighbor_id="nid",
-                   query_x="x", query_y="y", neighbor_x="x", neighbor_y="y")
+    out = knn_join(q, nb, k=3)
     assert out.count() == 40 * 3
     del out
     gc.collect()

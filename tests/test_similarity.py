@@ -45,7 +45,7 @@ def test_knn_cosine_join_matches_numpy(spark, vecs):
     df, v = vecs
     queries = df.filter(F.col("vec_id") < 5).withColumnRenamed("vec_id", "qid")
     got = {}
-    for r in knn_cosine_join(queries, df, k=4, query_id="qid").collect():
+    for r in knn_cosine_join(queries, df, k=4).collect():
         got.setdefault(r.qid, []).append((r.id, r.cos_e6))
     for qid in range(5):
         want = _np_topk(v.astype(np.float64), v[qid].astype(np.float64), 4)
@@ -194,7 +194,7 @@ def test_ivf_topk_recall_and_exactness(spark):
     # rank-1 is the query itself (cos 1.0)
     assert all(r.id == r.qid for r in got if r.rank == 1)
     # recall@3 vs exact brute force
-    exact = knn_cosine_join(q, df, k=3, query_id="qid").collect()
+    exact = knn_cosine_join(q, df, k=3).collect()
     exact_sets = {}
     for r in exact:
         exact_sets.setdefault(r.qid, set()).add(r.id)
