@@ -1726,7 +1726,7 @@ def q_asof_join_events_orders(spark, sf_dir):
         .groupBy((F.col("o_custkey") % 50).alias("k"), F.col("o_orderdate").alias("ts"))
         .agg(F.max("o_orderkey").alias("o_orderkey"))
     )
-    out = asof_join(ev, orders, key="k", left_ts="ts", right_ts="ts")
+    out = asof_join(ev, orders, key="k")
     return out.select(
         "event_id", F.col("o_orderkey").cast("long").alias("o_orderkey")
     ).orderBy("event_id")
@@ -1753,7 +1753,7 @@ def q_events_sessionize(spark, sf_dir):
     from gdal_spark.operators.temporal import sessionize
 
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
-    out = sessionize(ev, key="user_id", ts="ts", gap_seconds=1800, tiebreak="event_id")
+    out = sessionize(ev, gap_seconds=1800, tiebreak="event_id")
     return out.select(
         "event_id", F.col("session_id").cast("long").alias("session_id")
     ).orderBy("event_id")

@@ -15,4 +15,7 @@ geometry/raster math Spark cannot express natively.
 
 __version__ = "0.1.0"
 
+from gdal_spark import pyworker
 from gdal_spark.session import get_spark  # noqa: F401
+
+pyworker.install()

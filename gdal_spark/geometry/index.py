@@ -36,6 +36,12 @@ class PolygonSet:
             rs = self._rings(i)
             env[i] = kernels.envelope(rs)
         self.env = env
+        self._covers: dict[int, tuple] = {}  # zoom -> tile_cover(zoom)
+
+    def __getstate__(self):
+        # the cover memo stays with the driver's object: pickled closures
+        # (the refine UDF) would otherwise ship every cover computed so far
+        return {**self.__dict__, "_covers": {}}
 
     # -- construction --------------------------------------------------
 
@@ -112,6 +118,10 @@ class PolygonSet:
     def tile_cover(self, z: int):
         """Cover every polygon with zoom-z WebMercator tiles.
 
+        Memoized per zoom: the cover depends on nothing but the polygons
+        and ``z``, so a second call returns the first call's arrays, made
+        read-only. Only joining one ``PolygonSet`` object again gains.
+
         Returns int64 arrays (poly_idx, tx, ty, full): per polygon, in
         row-major (ty, tx) order, each tile of its bbox tile range that a
         ring segment touches or whose centre is inside. ``full=1`` marks
@@ -128,6 +138,14 @@ class PolygonSet:
 
         Coordinates are mercator meters; convert lon/lat rings first.
         """
+        if z not in self._covers:
+            cover = self._tile_cover(z)
+            for a in cover:
+                a.flags.writeable = False
+            self._covers[z] = cover
+        return self._covers[z]
+
+    def _tile_cover(self, z: int):
         span = tiling.WORLD_SPAN / (1 << z)
         P, X, Y, F = [], [], [], []
         for i, (minx, miny, maxx, maxy) in enumerate(self.env):

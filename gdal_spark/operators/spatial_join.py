@@ -71,11 +71,9 @@ def point_in_polygon_join(points: DataFrame, polyset: PolygonSet, zoom: int = 7)
     packing). Output = point columns + ``poly_id``.
     """
     spark = points.sparkSession
-    pts = (
-        points.withColumn("mx", F.expr(tiling.mercator_x_sql("lon")))
-        .withColumn("my", F.expr(tiling.mercator_y_sql("lat")))
-        .withColumn("__cell", F.expr(tiling.mercator_cell_sql("mx", "my", zoom)))
-    )
+    pts = points.withColumns(
+        {"mx": F.expr(tiling.mercator_x_sql("lon")), "my": F.expr(tiling.mercator_y_sql("lat"))}
+    ).withColumn("__cell", F.expr(tiling.mercator_cell_sql("mx", "my", zoom)))
 
     cover = _cover_df(spark, polyset, zoom)
     cand = pts.join(F.broadcast(cover), on=["__cell"], how="inner")

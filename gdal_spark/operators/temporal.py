@@ -7,14 +7,14 @@ pipeline needs (join each page/event to the latest dimension snapshot at
 or before its timestamp; segment user activity into sessions).
 
 - :func:`asof_join` — backward as-of: for each left row, the single
-  right row with the greatest ``right_ts ≤ left_ts`` per key. Expressed
+  right row with the greatest right ``ts`` ≤ left ``ts`` per key. Expressed
   as union + window carry-forward: both sides interleave sorted by
   (key, ts); ``last(right cols, ignorenulls)`` over the ordered window
   propagates the most recent right values onto left rows. ONE shuffle
   (by key), no range-join explosion — the standard distributed as-of.
 - :func:`sessionize` — events split into sessions when the gap to the
-  previous event of the same key exceeds ``gap``: lag + cumulative sum
-  windows, exactly compilable by DuckDB for the oracle.
+  previous event of the same ``user_id`` exceeds ``gap``: lag +
+  cumulative sum windows, exactly compilable by DuckDB for the oracle.
 """
 
 from __future__ import annotations
@@ -26,21 +26,20 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     value_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Backward as-of join; output = left columns + right value columns
-    (NULL when no right row at-or-before). Ties on equal timestamps take
-    the right row (≤ semantics), matching DuckDB ``ASOF JOIN``."""
+    """Backward as-of join on the ``ts`` column of both sides; output =
+    left columns + right value columns (NULL when no right row
+    at-or-before). Ties on equal timestamps take the right row (≤
+    semantics), matching DuckDB ``ASOF JOIN``."""
     if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (key, right_ts)]
+        value_cols = [c for c in right.columns if c not in (key, "ts")]
     l = left.withColumn("__side", F.lit(1))
     # all value columns travel as ONE struct so the carried values always
     # come from the same (latest) right row — per-column last(ignorenulls)
     # would back-fill a NULL field from an older snapshot, mixing rows
     r = right.select(
-        F.col(key), F.col(right_ts).alias(left_ts),
+        F.col(key), F.col("ts"),
         F.struct(*[F.col(c).alias(c) for c in value_cols]).alias("__v"),
     ).withColumn("__side", F.lit(0))
     unioned = l.unionByName(r, allowMissingColumns=True)
@@ -48,7 +47,7 @@ def asof_join(
     # carry-forward includes same-instant right values (≤ semantics)
     w = (
         Window.partitionBy(key)
-        .orderBy(F.col(left_ts).asc(), F.col("__side").asc())
+        .orderBy(F.col("ts").asc(), F.col("__side").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = unioned.select("*", F.last("__v", ignorenulls=True).over(w).alias("__c"))
@@ -60,20 +59,19 @@ def asof_join(
 
 def sessionize(
     events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
     gap_seconds: int = 1800,
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Add ``session_id`` (0-based per key): a new session starts when
-    the gap to the previous event exceeds ``gap_seconds``. Pass a unique
-    ``tiebreak`` column when timestamps can repeat within a key (keeps
-    the window order — and thus session ids — deterministic)."""
-    order = [F.col(ts).asc()] + ([F.col(tiebreak).asc()] if tiebreak else [])
-    w = Window.partitionBy(key).orderBy(*order)
-    prev = F.lag(F.col(ts)).over(w)
+    """Add ``session_id`` (0-based per ``user_id``, ordered by ``ts``): a
+    new session starts when the gap to the previous event exceeds
+    ``gap_seconds``. Pass a unique ``tiebreak`` column when timestamps can
+    repeat within a key (keeps the window order — and thus session ids —
+    deterministic)."""
+    order = [F.col("ts").asc()] + ([F.col(tiebreak).asc()] if tiebreak else [])
+    w = Window.partitionBy("user_id").orderBy(*order)
+    prev = F.lag(F.col("ts")).over(w)
     # NTZ timestamps cannot cast straight to long; go via TIMESTAMP
-    secs = F.col(ts).cast("timestamp").cast("long")
+    secs = F.col("ts").cast("timestamp").cast("long")
     prev_secs = prev.cast("timestamp").cast("long")
     new_sess = F.when(
         prev.isNull() | (secs - prev_secs > gap_seconds), 1

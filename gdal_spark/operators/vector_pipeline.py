@@ -232,9 +232,9 @@ class VectorPipeline:
         name, missing fields NULL (OGRUnionLayer schema-union contract)."""
         return VectorPipeline(self.df.unionByName(other.df, allowMissingColumns=True))
 
-    def grid(self, meta, alg: str = "invdist", z_col: str = "z", **kw):
+    def grid(self, meta, alg: str = "invdist", **kw):
         """`... grid` step: terminate the vector pipeline into a raster
-        tiles DataFrame (centroid x/y of each geometry + z attribute →
+        tiles DataFrame (centroid x/y of each geometry + ``z`` column →
         raster/grid.py). Returns the tiles DataFrame, not a pipeline."""
         from gdal_spark.raster.grid import grid_points
 
@@ -248,9 +248,7 @@ class VectorPipeline:
                 ys.append(cy)
             return pd.DataFrame({"x": xs, "y": ys})
 
-        pts = self.df.select(
-            _xy(F.col("geometry")).alias("p"), F.col(z_col).alias("z")
-        ).select(F.col("p.x").alias("x"), F.col("p.y").alias("y"), "z")
+        pts = self.df.select(_xy(F.col("geometry")).alias("p"), "z").select("p.x", "p.y", "z")
         return grid_points(pts, meta, alg=alg, **kw)
 
     def dissolve(self, by: list | None = None, n_partial: int = 8) -> "VectorPipeline":

@@ -205,12 +205,10 @@ def grid_points(
     nodata: float = 0.0,
     min_ppq: int = 0,
     max_ppq: int = 0,
-    x_col: str = "x",
-    y_col: str = "y",
-    z_col: str = "z",
     band: int = 1,
 ) -> DataFrame:
-    """Interpolate (x, y, z) points onto the meta grid → float64 tiles."""
+    """Interpolate the ``x``/``y``/``z`` columns of ``points`` onto the meta
+    grid → float64 tiles."""
     spark = points.sparkSession
     g = meta.gt
     # block span in geo units (axis-aligned geotransforms)
@@ -219,9 +217,7 @@ def grid_points(
     pad_bx = int(np.ceil(radius / span_x)) + 1
     pad_by = int(np.ceil(radius / span_y)) + 1
 
-    pts = points.select(
-        F.col(x_col).alias("x"), F.col(y_col).alias("y"), F.col(z_col).alias("z")
-    )
+    pts = points.select("x", "y", "z")
     # point → home block via geo_to_px column math
     det = g[1] * g[5] - g[2] * g[4]
     px = ((F.col("x") - g[0]) * g[5] - (F.col("y") - g[3]) * g[2]) / det

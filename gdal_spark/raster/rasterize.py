@@ -425,7 +425,6 @@ def rasterize(
     features: DataFrame,
     meta: RasterMeta,
     burn_col: str = "burn",
-    geom_col: str = "geometry",
     fid_col: str | None = None,
     all_touched: bool = False,
     merge_alg: str = "REPLACE",
@@ -435,10 +434,11 @@ def rasterize(
 ) -> DataFrame:
     """Distributed rasterize → float64 tiles DataFrame.
 
-    Geometries are WKB in *georeferenced* coords; converted to pixel space
-    via the meta geotransform. Features shuffle only to the blocks their
-    envelope covers; burn order within a block follows ``fid_col``
-    (insertion order — the reference's feature iteration order).
+    Geometries are WKB in the ``geometry`` column, in *georeferenced*
+    coords; converted to pixel space via the meta geotransform. Features
+    shuffle only to the blocks their envelope covers; burn order within a
+    block follows ``fid_col`` (insertion order — the reference's feature
+    iteration order).
 
     ``burn_value_from_z`` (gdal_rasterize -3d / BURN_VALUE_FROM=Z,
     alg/gdalrasterize.cpp:780-796): burn value becomes ``burn + Z``.
@@ -454,7 +454,7 @@ def rasterize(
 
     fid = F.col(fid_col) if fid_col else F.monotonically_increasing_id()
     feats = features.select(
-        fid.alias("__fid"), F.col(geom_col).alias("__g"), F.col(burn_col).alias("__v")
+        fid.alias("__fid"), F.col("geometry").alias("__g"), F.col(burn_col).alias("__v")
     )
 
     @F.pandas_udf("ARRAY<STRUCT<bx: INT, by: INT>>")

@@ -407,7 +407,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
 PII_PATTERNS = (
     ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
     ("ipv4", r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b", "<IP>"),
-    ("phone", r"\b\+?\d{9,15}\b", "<PHONE>"),
+    ("phone", r"(?:\+|\b)\d{9,}\b", "<PHONE>"),  # a leading + is part of the number
 )
 
 

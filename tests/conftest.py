@@ -11,6 +11,15 @@ from gdal_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def gdal_ref(rel: str) -> str:
+    """Path of a GDAL autotest reference file, by the gates' own lookup:
+    raises FileNotFoundError naming the path when the reference checkout
+    does not have it."""
+    from __spark_entry__ import _gdal_ref
+
+    return _gdal_ref(rel)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

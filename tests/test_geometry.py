@@ -238,6 +238,30 @@ def test_tile_cover_equals_loop_oracle(case, z):
         np.testing.assert_array_equal(g, w)
 
 
+def test_tile_cover_is_memoized_read_only_and_not_pickled(monkeypatch):
+    """A second call reuses the first cover: equal arrays, none writable,
+    and the memo is not part of the pickled object (the refine UDF's
+    closure ships the PolygonSet to every task)."""
+    import pickle
+
+    ps = _cover_case("holes", 7)
+    size = len(pickle.dumps(ps))
+    first = ps.tile_cover(7)
+    calls = []
+    seg_rect = kernels.segments_intersect_rect_np
+    monkeypatch.setattr(kernels, "segments_intersect_rect_np", lambda *a: calls.append(1) or seg_rect(*a))
+    second = ps.tile_cover(7)
+    assert calls == []
+    for a, b in zip(first, second):
+        np.testing.assert_array_equal(a, b)
+        assert not b.flags.writeable
+        with pytest.raises(ValueError):
+            b[:1] = 0
+    assert len(pickle.dumps(ps)) == size
+    ps.tile_cover(8)
+    assert calls  # another zoom is computed
+
+
 # ---------------------------------------------------------------------------
 # general (non-convex) overlay kernel
 # ---------------------------------------------------------------------------

@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import gdal_ref
 from gdal_spark.raster.checksum import checksum_df, checksum_np
 from gdal_spark.raster.model import tiles_from_array, tiles_to_array
 from gdal_spark.sources.geotiff import (
@@ -22,7 +23,7 @@ from gdal_spark.sources.geotiff import (
     write_geotiff,
 )
 
-DATA = "/root/reference/autotest/gcore/data/"
+DATA = "gcore/data/"  # under the GDAL autotest checkout
 
 # (file, band, checksum) — every value is the reference's own documented
 # golden (autotest/gcore/tiff_read.py:45+, gtiff_write.py:32+, cog.py:139)
@@ -72,12 +73,12 @@ def _band_array(path, band):
 @pytest.mark.parametrize("name,band,want", GOLDENS,
                          ids=[f"{n}:{b}" for n, b, _ in GOLDENS])
 def test_decode_goldens(name, band, want):
-    got = checksum_np(_band_array(os.path.join(DATA, name), band))
+    got = checksum_np(_band_array(gdal_ref(DATA + name), band))
     assert got == want
 
 
 def test_geotransform_and_meta():
-    info = read_tiff_header(DATA + "byte.tif")
+    info = read_tiff_header(gdal_ref(DATA + "byte.tif"))
     assert info.gt == (440720.0, 60.0, 0.0, 3751320.0, 0.0, -60.0)
     assert (info.width, info.height, info.dtype) == (20, 20, "uint8")
 
@@ -101,9 +102,9 @@ def test_lzw_repeated_pattern():
 
 
 def test_spark_read_and_roundtrips(spark):
-    t, meta = read_geotiff(spark, DATA + "byte.tif")
+    t, meta = read_geotiff(spark, gdal_ref(DATA + "byte.tif"))
     assert int(checksum_df(t, meta)) == 4672
-    t3, m3 = read_geotiff(spark, DATA + "rgbsmall.tif")
+    t3, m3 = read_geotiff(spark, gdal_ref(DATA + "rgbsmall.tif"))
     got = [
         int(checksum_df(t3.filter(F.col("band") == b).withColumn("band", F.lit(1)), m3))
         for b in (1, 2, 3)
@@ -133,7 +134,7 @@ def test_ifd_chain_and_sparse(spark):
     blocks reading as implicit zeros."""
     from gdal_spark.sources.geotiff import tiff_ifd_count
 
-    p = DATA + "cog_sparse_strile_arrays_zeroified_when_possible.tif"
+    p = gdal_ref(DATA + "cog_sparse_strile_arrays_zeroified_when_possible.tif")
     assert tiff_ifd_count(p) == 2
     t, meta = read_geotiff(spark, p)
     assert (meta.width, meta.height) == (512, 512)

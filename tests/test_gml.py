@@ -4,10 +4,11 @@ encoding variants."""
 import numpy as np
 import pytest
 
+from conftest import gdal_ref
 from gdal_spark.geometry import wkt
 from gdal_spark.sources.gml import parse_gml_geometry, read_gml, write_gml
 
-REF = "/root/reference/autotest/ogr/data/gml"
+REF = "ogr/data/gml"  # under the GDAL autotest checkout
 
 
 def _el(xml: str):
@@ -65,7 +66,7 @@ def test_urn_axis_inversion():
 
 
 def test_read_reference_gml3_fixture(spark):
-    df = read_gml(spark, f"{REF}/expected_gml_gml3.gml")
+    df = read_gml(spark, gdal_ref(f"{REF}/expected_gml_gml3.gml"))
     rows = {r.fid: r for r in df.collect()}
     assert len(rows) == 2
     assert wkt.wkb_to_wkt(bytes(rows["firstlayer.0"].geometry)) == "POINT (2 49)"
@@ -73,7 +74,7 @@ def test_read_reference_gml3_fixture(spark):
 
 
 def test_read_archsites_with_xsd_types(spark):
-    df = read_gml(spark, f"{REF}/archsites.gml")
+    df = read_gml(spark, gdal_ref(f"{REF}/archsites.gml"))
     assert dict(df.dtypes)["cat"] == "bigint"  # from the sidecar .xsd
     r = df.collect()[0]
     assert (r.fid, r.cat, r.str1) == ("archsites.3951", 1, "Signature Rock")

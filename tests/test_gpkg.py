@@ -1,24 +1,21 @@
 """GeoPackage reader vs the reference's own .gpkg fixtures."""
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import gdal_ref
+from fixtures_poly import POLY_ATTRS
 from gdal_spark.functions.st import st_area
 from gdal_spark.sources.gpkg import gpkg_layers, parse_gpkg_blob, read_gpkg
 
-sys.path.insert(0, "/root/repo/tests")
-from fixtures_poly import POLY_ATTRS
-
-GPKG = "/root/reference/autotest/ogr/data/gpkg/poly_golden.gpkg"
+GPKG = "ogr/data/gpkg/poly_golden.gpkg"  # under the GDAL autotest checkout
 
 
 def test_layers_listing():
-    assert gpkg_layers(GPKG) == ["poly"]
+    assert gpkg_layers(gdal_ref(GPKG)) == ["poly"]
 
 
 def test_poly_golden_attrs_and_areas(spark):
-    df = read_gpkg(spark, GPKG)
+    df = read_gpkg(spark, gdal_ref(GPKG))
     assert df.columns == ["fid", "geometry", "AREA", "EAS_ID", "PRFEDEA"]
     got = {
         r.EAS_ID: (r.area, r.PRFEDEA)
@@ -34,9 +31,7 @@ def test_poly_golden_attrs_and_areas(spark):
 
 
 def test_first_geometry_null(spark):
-    df = read_gpkg(
-        spark, "/root/reference/autotest/ogr/data/gpkg/first_geometry_null.gpkg"
-    )
+    df = read_gpkg(spark, gdal_ref("ogr/data/gpkg/first_geometry_null.gpkg"))
     rows = df.collect()
     geoms = [r[df.columns.index("geometry")] for r in [list(r) for r in rows]]
     assert geoms[0] is None and any(g is not None for g in geoms[1:])
@@ -58,7 +53,7 @@ def test_blob_parse_edges():
 
 def test_write_read_roundtrip(spark, tmp_path):
     """write_gpkg → read_gpkg: WKB byte-identical, schema/srs preserved."""
-    src = read_gpkg(spark, GPKG)
+    src = read_gpkg(spark, gdal_ref(GPKG))
     path = str(tmp_path / "rt.gpkg")
     from gdal_spark.sources.gpkg import write_gpkg
 

@@ -5,10 +5,11 @@ with the vendored libjpeg 6b decode path."""
 import numpy as np
 import pytest
 
+from conftest import gdal_ref
 from gdal_spark.raster.checksum import checksum_np
 from gdal_spark.sources.jpeg import decode_jpeg, idct_islow_blocks, read_jpeg
 
-JP = "/root/reference/autotest/gdrivers/data/jpeg"
+JP = "gdrivers/data/jpeg"  # under the GDAL autotest checkout
 
 
 @pytest.mark.parametrize(
@@ -21,15 +22,15 @@ JP = "/root/reference/autotest/gdrivers/data/jpeg"
     ],
 )
 def test_reference_fixture_checksums(path, band, expected):
-    bands, info = decode_jpeg(open(path, "rb").read())
+    bands, info = decode_jpeg(open(gdal_ref(path), "rb").read())
     assert checksum_np(bands[band]) == expected
 
 
 def test_decode_shapes_and_gray():
-    bands, info = decode_jpeg(open(f"{JP}/albania.jpg", "rb").read())
+    bands, info = decode_jpeg(open(gdal_ref(f"{JP}/albania.jpg"), "rb").read())
     assert (info["width"], info["height"]) == (361, 260) and len(bands) == 3
     bands, info = decode_jpeg(
-        open(f"{JP}/black_with_white_exif_ovr.jpg", "rb").read())
+        open(gdal_ref(f"{JP}/black_with_white_exif_ovr.jpg"), "rb").read())
     assert len(bands) == 1 and bands[1].shape == (1024, 1024)
     # fixture is a black square with a white rectangle: bimodal values
     assert set(np.unique(bands[1])) <= set(range(0, 8)) | set(range(248, 256))
@@ -37,11 +38,11 @@ def test_decode_shapes_and_gray():
 
 def test_out_of_scope_variants_raise():
     with pytest.raises(NotImplementedError, match="non-baseline"):
-        decode_jpeg(open(f"{JP}/arcgis_geodataxform_gcp.jpg", "rb").read())
+        decode_jpeg(open(gdal_ref(f"{JP}/arcgis_geodataxform_gcp.jpg"), "rb").read())
     with pytest.raises(NotImplementedError, match="12-bit"):
-        decode_jpeg(open(f"{JP}/12bit_rose_extract.jpg", "rb").read())
+        decode_jpeg(open(gdal_ref(f"{JP}/12bit_rose_extract.jpg"), "rb").read())
     with pytest.raises(ValueError):
-        decode_jpeg(open(f"{JP}/bogus.jpg", "rb").read())
+        decode_jpeg(open(gdal_ref(f"{JP}/bogus.jpg"), "rb").read())
 
 
 def test_idct_islow_matches_float_dct():
@@ -63,7 +64,7 @@ def test_idct_islow_matches_float_dct():
 def test_read_jpeg_spark(spark):
     from gdal_spark.raster.model import tiles_to_array
 
-    tiles, meta = read_jpeg(spark, f"{JP}/albania.jpg")
+    tiles, meta = read_jpeg(spark, gdal_ref(f"{JP}/albania.jpg"))
     assert (meta.width, meta.height, meta.bands) == (361, 260, 3)
     g = tiles_to_array(tiles, meta, band=2)
     assert checksum_np(g) == 17016
@@ -74,7 +75,7 @@ def test_multimodal_real_decode_jpeg(spark):
 
     from gdal_spark.multimodal import image_features
 
-    data = open(f"{JP}/albania.jpg", "rb").read()
+    data = open(gdal_ref(f"{JP}/albania.jpg"), "rb").read()
     media = spark.createDataFrame(
         [(0, "image", bytearray(data), 361, 260, 3, 0, 1)],
         "media_id LONG, kind STRING, data BINARY, width INT, height INT, "

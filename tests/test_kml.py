@@ -3,11 +3,12 @@ expectations (autotest/ogr/ogr_kml.py) + roundtrip."""
 
 import numpy as np
 
+from conftest import gdal_ref
 from gdal_spark.geometry import wkb as _wkb
 from gdal_spark.sources.kml import parse_kml_geometry, read_kml, write_kml
 
-SAMPLES = "/root/reference/autotest/ogr/data/kml/samples.kml"
-GEOMETRIES = "/root/reference/autotest/ogr/data/kml/geometries.kml"
+SAMPLES = "ogr/data/kml/samples.kml"  # under the GDAL autotest checkout
+GEOMETRIES = "ogr/data/kml/geometries.kml"
 
 
 def _el(xml: str):
@@ -17,7 +18,7 @@ def _el(xml: str):
 
 
 def test_samples_attributes_and_layers(spark):
-    df = read_kml(spark, SAMPLES)
+    df = read_kml(spark, gdal_ref(SAMPLES))
     layers = {r.layer for r in df.select("layer").distinct().collect()}
     # nested <Document> containers are layers too (ogr_kml.py attributes_2)
     assert {"Placemarks", "Highlighted Icon", "Paths", "Google Campus"} <= layers
@@ -32,7 +33,7 @@ def test_samples_attributes_and_layers(spark):
 
 
 def test_samples_point_z(spark):
-    df = read_kml(spark, SAMPLES)
+    df = read_kml(spark, gdal_ref(SAMPLES))
     r = df.filter(df.Name == "Simple placemark").collect()[0]
     name, payload = _wkb.parse_wkb_z(bytes(r.geometry))
     # POINT(-122.0822035425683 37.42228990140251 0) — ogr_kml.py:191
@@ -45,7 +46,7 @@ def test_samples_point_z(spark):
 def test_geometries_fixture_degenerate_cases(spark):
     """geometries.kml (#3558): empty/partial geometry elements must not
     crash; rows with no usable coordinates read as NULL geometry."""
-    df = read_kml(spark, GEOMETRIES)
+    df = read_kml(spark, gdal_ref(GEOMETRIES))
     rows = df.collect()
     assert len(rows) == 25
     kinds = {}

@@ -5,29 +5,28 @@ full encode/decode roundtrip matrix."""
 import numpy as np
 import pytest
 
+from conftest import gdal_ref
 from gdal_spark.raster.checksum import checksum_np
 from gdal_spark.sources.png import decode_png, encode_png, read_png, write_png
-
-REF = "/root/reference/autotest"
 
 
 @pytest.mark.parametrize(
     "path,band,expected",
     [
-        (f"{REF}/gdrivers/data/png/test.png", 1, 57921),       # palette
-        (f"{REF}/gdrivers/data/png/rgba16.png", 3, 1815),      # 16-bit
-        (f"{REF}/gdrivers/data/png/rgba16.png", 4, 4873),
-        (f"{REF}/gcore/data/stefan_full_rgba.png", 1, 12603),  # Adam7
+        ("gdrivers/data/png/test.png", 1, 57921),       # palette
+        ("gdrivers/data/png/rgba16.png", 3, 1815),      # 16-bit
+        ("gdrivers/data/png/rgba16.png", 4, 4873),
+        ("gcore/data/stefan_full_rgba.png", 1, 12603),  # Adam7
     ],
 )
 def test_reference_fixture_checksums(path, band, expected):
-    bands, info = decode_png(open(path, "rb").read())
+    bands, info = decode_png(open(gdal_ref(path), "rb").read())
     assert checksum_np(bands[band]) == expected
 
 
 def test_stefan_is_interlaced_and_sized():
     bands, info = decode_png(
-        open(f"{REF}/gcore/data/stefan_full_rgba.png", "rb").read())
+        open(gdal_ref("gcore/data/stefan_full_rgba.png"), "rb").read())
     # documented by gdrivers/tga.py:143-144 for the same pixels
     assert (info["width"], info["height"]) == (162, 150)
     assert info["interlace"] == 1 and len(bands) == 4

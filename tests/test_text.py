@@ -454,10 +454,13 @@ def test_pii_redact(spark):
             (1, "server 192.168.001.005 and phone +4915123456789 ok"),
             (2, "clean text with no pii at all"),
             (3, "two mails x@y.io z@w.co and ip 10.0.0.1"),
+            (4, "call +41791234567 or 1234567890123456, not 12345678"),
         ],
         "doc_id LONG, text STRING",
     )
     got = {r.doc_id: r for r in pii_redact(df).collect()}
+    assert got[4].n_phone == 2
+    assert got[4].text_redacted == "call <PHONE> or <PHONE>, not 12345678"
     assert got[0].n_email == 1 and "<EMAIL>" in got[0].text_redacted
     assert "a.b+c" not in got[0].text_redacted
     assert got[1].n_ipv4 == 1 and got[1].n_phone == 1

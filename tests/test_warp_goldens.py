@@ -11,11 +11,12 @@ import struct
 import numpy as np
 import pytest
 
+from conftest import gdal_ref
 from gdal_spark.raster.checksum import checksum_np
 from gdal_spark.raster.model import RasterMeta, byte_fixture, tiles_from_array, tiles_to_array
 from gdal_spark.raster.warp import warp_affine, warp_affine_np
 
-REF = "/root/reference/autotest/utilities/ref_data"
+REF = "utilities/ref_data"  # under the GDAL autotest checkout
 
 
 def _read_tiff_gray(path):
@@ -83,7 +84,7 @@ def test_near_2x_checksum_18784():
 def test_kernel_2x_vs_reference_raster(alg, ref):
     arr, meta = byte_fixture()
     out = _to_byte(warp_affine_np(arr, meta, _dst40(), alg=alg))
-    want = _read_tiff_gray(f"{REF}/{ref}")
+    want = _read_tiff_gray(gdal_ref(f"{REF}/{ref}"))
     maxdiff = np.abs(out.astype(int) - want.astype(int)).max()
     assert maxdiff <= 1, (alg, maxdiff)  # the reference's own tolerance
 
@@ -102,7 +103,7 @@ def test_distributed_warp_matches_goldens(spark):
     out2 = tiles_to_array(
         warp_affine(tiles, meta_blocked, _dst40(), alg="lanczos"), _dst40()
     )
-    want = _read_tiff_gray(f"{REF}/testgdalwarp14.tif")
+    want = _read_tiff_gray(gdal_ref(f"{REF}/testgdalwarp14.tif"))
     assert np.abs(_to_byte(out2).astype(int) - want.astype(int)).max() <= 1
 
 
