@@ -241,9 +241,7 @@ def q_knn_cell_join(spark, sf_dir):
         F.expr(tiling.mercator_x_sql(sql_oracle.lon_sql("c_custkey"))).alias("x"),
         F.expr(tiling.mercator_y_sql(sql_oracle.lat_sql("c_custkey"))).alias("y"),
     )
-    # radius=2 at zoom 4 finalizes nearly all queries in round 1 (bound =
-    # 2 cells ≈ 5000 km); the doubling loop remains the exactness net
-    out = knn_join(sup, cust, k=3, zoom=4, radius=2, max_rounds=4)
+    out = knn_join(sup, cust, k=3, zoom=4)
     return out.select(
         "qid",
         "nid",
@@ -1180,9 +1178,7 @@ def q_dedup_embedding_cosine_lsh(spark, sf_dir):
     from gdal_spark.operators.similarity import cosine_dedup_pairs
 
     e = _t(spark, sf_dir, "embeddings")
-    return cosine_dedup_pairs(
-        e, threshold=0.2, n_planes=10, probe_flips=2, dim=64
-    ).orderBy("id1", "id2")
+    return cosine_dedup_pairs(e, threshold=0.2, n_planes=10, dim=64).orderBy("id1", "id2")
 
 
 def _oracle_embedding_cosine_lsh() -> str:
@@ -1209,7 +1205,7 @@ def q_dedup_cluster_assign(spark, sf_dir):
     from gdal_spark.text.dedup import dedup_clusters
 
     e = _t(spark, sf_dir, "embeddings")
-    pairs = cosine_dedup_pairs(e, threshold=0.2, n_planes=10, probe_flips=2, dim=64)
+    pairs = cosine_dedup_pairs(e, threshold=0.2, n_planes=10, dim=64)
     out = dedup_clusters(pairs, ids=e.select("vec_id"))
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -3837,31 +3833,6 @@ def _terrain_full_np():
     return out, meta
 
 
-@_register("dem_hillshade_checksum")
-def q_dem_hillshade_checksum(spark, sf_dir):
-    from gdal_spark.raster.checksum import checksum_df
-    from gdal_spark.raster.dem import dem_op
-    from gdal_spark.raster.model import RasterMeta, synth_raster
-
-    meta = _terrain_meta()
-    out = dem_op(synth_raster(spark, meta), meta, "hillshade")
-    out_meta = RasterMeta(width=meta.width, height=meta.height, dtype="float64",
-                          block_w=meta.block_w, block_h=meta.block_h, gt=meta.gt)
-    cs = checksum_df(out, out_meta)
-    return spark.createDataFrame([(int(cs),)], "checksum BIGINT")
-
-
-def _oracle_hillshade() -> str:
-    from gdal_spark.raster.checksum import checksum_np
-    from gdal_spark.raster.dem import dem_op_np
-
-    full, meta = _terrain_full_np()
-    return f"SELECT CAST({checksum_np(dem_op_np(full, meta, 'hillshade'))} AS BIGINT) AS checksum"
-
-
-_lazy_oracle("dem_hillshade_checksum", _oracle_hillshade)
-
-
 def _make_dem_gate(qname: str, op: str, kw: dict):
     """Checksum gate for one DEM operator vs the single-node NumPy oracle."""
 
@@ -3887,6 +3858,9 @@ def _make_dem_gate(qname: str, op: str, kw: dict):
     q.__doc__ = f"gdaldem hillshade variant {op!r} (apps/gdaldem_lib.cpp)"
     _register(qname)(q)
     _lazy_oracle(qname, oracle)
+
+
+_make_dem_gate("dem_hillshade_checksum", "hillshade", {})
 
 
 @_register(

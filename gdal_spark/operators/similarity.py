@@ -14,6 +14,8 @@ signs so each query only scans its bucket ∪ neighboring buckets.
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -97,6 +99,20 @@ def random_hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> np.ndarr
     return rng.standard_normal((n_planes, dim))
 
 
+def _probe_buckets(bucket: Column, n_planes: int, probe_flips: int) -> Column:
+    """Multiprobe LSH: one row per bucket id at Hamming distance ≤
+    ``probe_flips`` (0, 1 or 2) from ``bucket``."""
+    if probe_flips not in (0, 1, 2):
+        raise ValueError(f"probe_flips must be 0, 1 or 2, not {probe_flips!r}")
+    masks = [
+        sum(1 << j for j in bits)
+        for n in range(probe_flips + 1)
+        for bits in itertools.combinations(range(n_planes), n)
+    ]
+    probe_arr = F.array(*[F.lit(m).cast("long") for m in masks])
+    return F.explode(F.transform(probe_arr, lambda m: bucket.bitwiseXOR(m)))
+
+
 def _sign_bucket_jvm(vec_col: Column, planes: np.ndarray) -> Column:
     """Pack sign(v·plane_j) bits into one BIGINT bucket id (column math).
 
@@ -173,7 +189,6 @@ def lsh_bucketed_topk(
     n_planes: int = 12,
     probe_flips: int = 1,
     dim: int | None = None,
-    seed: int = 42,
     score: str = "fold",
 ) -> DataFrame:
     """Approximate kNN: random-hyperplane buckets + multiprobe.
@@ -181,7 +196,8 @@ def lsh_bucketed_topk(
     Queries are ``(qid, embedding)`` rows, the corpus ``(vec_id,
     embedding)`` rows; output (qid, id, cos_e6, rank). Corpus rows hash
     to one bucket; each query probes its bucket plus all buckets at
-    Hamming distance ≤ probe_flips (multiprobe LSH). The join is an
+    Hamming distance ≤ probe_flips, one of 0, 1 or 2 (multiprobe LSH;
+    other values raise ``ValueError``). The join is an
     equi-join on bucket id, so the per-query work is the bucket
     occupancy, not the corpus size. Recall grows with probe_flips.
 
@@ -198,24 +214,15 @@ def lsh_bucketed_topk(
             "lsh_bucketed_topk requires dim= (embedding length); "
             "inferring it from the corpus would run a driver-side job"
         )
-    planes = random_hyperplanes(dim, n_planes, seed)
+    planes = random_hyperplanes(dim, n_planes)
     c = corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("cv")).withColumn(
         "bucket", _sign_bucket(F.col("cv"), planes)
     )
     q = queries.select("qid", F.col("embedding").alias("qv")).withColumn(
         "bucket0", _sign_bucket(F.col("qv"), planes)
     )
-    # multiprobe: bucket0 xor each subset of ≤ probe_flips bits
-    probes = [0]
-    if probe_flips >= 1:
-        probes += [1 << j for j in range(n_planes)]
-    if probe_flips >= 2:
-        probes += [
-            (1 << i) | (1 << j) for i in range(n_planes) for j in range(i + 1, n_planes)
-        ]
-    probe_arr = F.array(*[F.lit(p).cast("long") for p in probes])
     qp = q.select(
-        "qid", "qv", F.explode(F.transform(probe_arr, lambda m: F.col("bucket0").bitwiseXOR(m))).alias("bucket")
+        "qid", "qv", _probe_buckets(F.col("bucket0"), n_planes, probe_flips).alias("bucket")
     )
     sim_fn = cosine_sim_arrow if score == "arrow" else cosine_sim_col
     cos = sim_fn(F.col("cv"), F.col("qv"))
@@ -243,10 +250,7 @@ def cosine_dedup_pairs(
     df: DataFrame,
     threshold: float = 0.9,
     n_planes: int | None = None,
-    probe_flips: int = 2,
     dim: int | None = None,
-    seed: int = 42,
-    score: str = "fold",
 ) -> DataFrame:
     """All id1 < id2 pairs of ``df``'s ``(vec_id, embedding)`` rows with
     cosine ≥ threshold — the embedding-space near-dup detector of a
@@ -255,9 +259,9 @@ def cosine_dedup_pairs(
     ``n_planes=None`` → exact all-pairs self-join (O(N²) candidate
     volume; the correctness baseline, and what the DuckDB oracle can
     recompute). With ``n_planes`` set → random-hyperplane blocking: only
-    pairs sharing a bucket within ``probe_flips`` bit flips are scored,
-    which is the subquadratic scale path (recall grows with probe_flips;
-    cos ≥ 0.9 pairs differ in few plane signs w.h.p.).
+    pairs whose buckets differ in at most 2 bits are scored, which is the
+    subquadratic scale path (cos ≥ 0.9 pairs differ in few plane signs
+    w.h.p.).
     Output: (id1, id2, cos_e6).
     """
     a = df.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("v1"))
@@ -267,27 +271,12 @@ def cosine_dedup_pairs(
     else:
         if dim is None:
             raise ValueError("bucketed mode requires dim=")
-        planes = random_hyperplanes(dim, n_planes, seed)
+        planes = random_hyperplanes(dim, n_planes)
         a = a.withColumn("b1", _sign_bucket(F.col("v1"), planes))
-        b = b.withColumn("b2", _sign_bucket(F.col("v2"), planes))
-        probes = [0] + [1 << j for j in range(n_planes)]
-        if probe_flips >= 2:
-            probes += [
-                (1 << i) | (1 << j)
-                for i in range(n_planes)
-                for j in range(i + 1, n_planes)
-            ]
-        probe_arr = F.array(*[F.lit(p).cast("long") for p in probes])
-        ax = a.select(
-            "id1", "v1",
-            F.explode(
-                F.transform(probe_arr, lambda m: F.col("b1").bitwiseXOR(m))
-            ).alias("bkt"),
-        )
-        bx = b.withColumnRenamed("b2", "bkt")
+        ax = a.select("id1", "v1", _probe_buckets(F.col("b1"), n_planes, 2).alias("bkt"))
+        bx = b.withColumn("bkt", _sign_bucket(F.col("v2"), planes))
         cand = ax.join(bx, "bkt").filter(F.col("id1") < F.col("id2")).drop("bkt")
-    sim_fn = cosine_sim_arrow if score == "arrow" else cosine_sim_col
-    cos = sim_fn(F.col("v1"), F.col("v2"))
+    cos = cosine_sim_col(F.col("v1"), F.col("v2"))
     return (
         cand.withColumn("cos_e6", F.floor(cos * 1_000_000 + F.lit(0.5)).cast("long"))
         .filter(F.col("cos_e6") >= F.lit(int(threshold * 1_000_000)))
@@ -422,7 +411,6 @@ def ivf_topk(
     n_probe: int = 4,
     iters: int = 5,
     sample_size: int = 2048,
-    score: str = "fold",
 ) -> DataFrame:
     """Approximate kNN via an IVF index over ``(qid, embedding)`` queries
     and ``(vec_id, embedding)`` corpus rows: corpus vectors are partitioned
@@ -435,9 +423,7 @@ def ivf_topk(
     → NumPy Lloyd, deterministic); centroids ship to executors inside
     the Arrow UDF closure. At 100 TB the assignment pass is a linear
     map-only scan and the probe join shuffles only cell ids + scores.
-
-    ``score``: "fold" (JVM sequential aggregate, bit-equal to the Python
-    oracle) or "arrow" (einsum batch, throughput path at real dims)."""
+    Scores are the JVM sequential fold, bit-equal to the Python oracle."""
     sample_rows = (
         corpus.select("vec_id", "embedding").orderBy("vec_id").limit(sample_size).collect()
     )
@@ -471,8 +457,7 @@ def ivf_topk(
     qp = queries.select("qid", F.col("embedding").alias("qv")).select(
         "qid", "qv", F.explode(probe(F.col("qv"))).alias("cell")
     )
-    sim_fn = cosine_sim_arrow if score == "arrow" else cosine_sim_col
-    cos = sim_fn(F.col("cv"), F.col("qv"))
+    cos = cosine_sim_col(F.col("cv"), F.col("qv"))
     w = Window.partitionBy("qid").orderBy(F.col("cos_e6").desc(), F.col("id").asc())
     return (
         F.broadcast(qp).join(c, "cell")

@@ -31,6 +31,7 @@ LANGS = ["en", "de", "fr", "es", "pt", "zh", "ru", "ar"]
 _LANG_CUM = [45, 60, 70, 80, 87, 93, 97, 100]
 
 TILE_ZOOM = 12  # the flagship's WebMercator tile level
+HOT_LON, HOT_LAT = 8.54, 47.37  # south-west corner of the skew hot spot
 
 GEO_RE = r'<meta name="geo\.position" content="(-?\d+\.\d+);(-?\d+\.\d+)"'
 
@@ -104,15 +105,13 @@ def synth_pages(
     spark: SparkSession,
     n: int,
     skew_hot_fraction: float = 0.0,
-    hot_lon: float = 8.54,
-    hot_lat: float = 47.37,
     partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic pages table of n rows (FIXTURES.md §1).
 
-    ``skew_hot_fraction > 0`` collapses that fraction of rows onto one
-    0.1°×0.1° hot spot (the skew-stress variant that forces AQE/salting to
-    earn its keep).
+    ``skew_hot_fraction > 0`` collapses that fraction of rows onto the
+    0.1°×0.1° hot spot at ``(HOT_LON, HOT_LAT)`` (the skew-stress variant
+    that forces AQE/salting to earn its keep).
     """
     df = spark.range(0, n, 1, partitions or spark.sparkContext.defaultParallelism)
     i = F.col("id")
@@ -122,10 +121,10 @@ def synth_pages(
     h2 = splitmix64_col(i + F.lit(1_000_000_007))
     hot = F.pmod(h, F.lit(1000)) < F.lit(int(skew_hot_fraction * 1000))
     lon_u = F.when(
-        hot, F.lit(int((hot_lon + 180.0) * 1e6)) + F.pmod(h2, F.lit(100_000))
+        hot, F.lit(int((HOT_LON + 180.0) * 1e6)) + F.pmod(h2, F.lit(100_000))
     ).otherwise(F.pmod(h, F.lit(360_000_000)))
     lat_u = F.when(
-        hot, F.lit(int((hot_lat + 84.0) * 1e6)) + F.pmod(h, F.lit(100_000))
+        hot, F.lit(int((HOT_LAT + 84.0) * 1e6)) + F.pmod(h, F.lit(100_000))
     ).otherwise(F.pmod(h2, F.lit(168_000_000)))
     return df.select(pages_columns(i, lon_u=lon_u, lat_u=lat_u))
 

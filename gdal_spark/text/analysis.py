@@ -49,11 +49,11 @@ def lang_id(df: DataFrame) -> DataFrame:
     return df.withColumn("lang_guess", best)
 
 
-def lang_id_sql(text_expr: str, dialect: str = "duckdb") -> str:
-    """Equivalent CASE expression for the oracle (same argmax + tiebreak)."""
-    ln = "len" if dialect == "duckdb" else "size"
+def lang_id_sql(text_expr: str) -> str:
+    """Equivalent DuckDB CASE expression for the oracle (same argmax +
+    tiebreak)."""
     hit = {
-        l: f"{ln}(regexp_extract_all({text_expr}, '{_stop_re(l)}', 0))" for l in LANG_ORDER
+        l: f"len(regexp_extract_all({text_expr}, '{_stop_re(l)}', 0))" for l in LANG_ORDER
     }
     expr = "'und'"
     best = "0"
@@ -516,14 +516,14 @@ def token_metrics_sql(text_expr: str) -> dict[str, str]:
     }
 
 
-def line_metrics(df: DataFrame, sep: str = "\n") -> DataFrame:
+def line_metrics(df: DataFrame) -> DataFrame:
     """The Gopher line-level rules (Rae et al. 2021 §A1.1: drop docs
     with >90% bullet-started lines, >30% ellipsis-ended lines, or <80%
     words containing an alphabetic character) over the ``text`` column,
     as integer metric columns:
     ``n_lines, bullet_lines, ellipsis_lines, n_words, alpha_words``.
-    Map-only array filters; ``sep`` is a literal separator."""
-    ls = F.split(F.col("text"), "\\Q" + sep + "\\E")
+    Map-only array filters; lines are split on ``\\n``."""
+    ls = F.split(F.col("text"), "\n")
     bullets = F.size(F.filter(
         ls, lambda t: F.substring(F.ltrim(t), 1, 1).isin("•", "-", "*")
     ))
@@ -541,8 +541,8 @@ def line_metrics(df: DataFrame, sep: str = "\n") -> DataFrame:
     )
 
 
-def line_metrics_sql(text_expr: str, sep_chr: str = "chr(10)") -> dict[str, str]:
-    ls = f"string_split({text_expr}, {sep_chr})"
+def line_metrics_sql(text_expr: str) -> dict[str, str]:
+    ls = f"string_split({text_expr}, chr(10))"
     ws = f"string_split_regex(trim({text_expr}), '\\s+')"
     bullets = (
         f"len(list_filter({ls}, t -> substr(ltrim(t), 1, 1) IN ('•', '-', '*')))"

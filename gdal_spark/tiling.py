@@ -85,10 +85,11 @@ def lonlat_to_tile_np(lon, lat, z):
 
 
 def k_ring_offsets(k: int) -> list[tuple[int, int]]:
-    """Chebyshev-disk ring offsets (dx, dy) for |dx|,|dy| <= k.
+    """The whole Chebyshev disk of radius k: every offset (dx, dy) with
+    max(|dx|, |dy|) <= k, (2k+1)² of them, not only the ring at k.
 
-    The kNN operator expands candidate cells ring by ring; ring r is the set
-    with max(|dx|,|dy|) == r.
+    The kNN operator explodes each pending query over the disk of its
+    round's radius.
     """
     return [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
 

@@ -27,7 +27,7 @@ def _collect_pairs(df):
 def test_knn_matches_bruteforce(spark):
     q, _ = _xy_df(spark, 120, 7, "qid")
     nb, _ = _xy_df(spark, 900, 13, "nid")
-    got = _collect_pairs(knn_join(q, nb, k=3, zoom=6, radius=1, max_rounds=5))
+    got = _collect_pairs(knn_join(q, nb, k=3, zoom=6))
     want = _collect_pairs(knn_join_bruteforce(q, nb, k=3))
     assert got == want
 
@@ -87,7 +87,7 @@ def test_knn_world_edge_cells(spark, threshold):
     q = _edge_df(spark, 60, 31, "qid", z)
     nb = _edge_df(spark, 200, 37, "nid", z)
     with _join_path(spark, threshold):
-        out = knn_join(q, nb, k=3, zoom=z, radius=1, max_rounds=4)
+        out = knn_join(q, nb, k=3, zoom=z)
         got = _collect_pairs(out)
         joins = {n.nodeName() for n in _ring_joins(out)}
     assert joins == {"BroadcastHashJoin" if threshold is None else "SortMergeJoin"}
@@ -99,7 +99,7 @@ def test_knn_sparse_neighbors_needs_expansion(spark):
     """Few neighbors → first ring usually empty → exercises the doubling."""
     q, _ = _xy_df(spark, 40, 17, "qid")
     nb, _ = _xy_df(spark, 25, 19, "nid")
-    got = _collect_pairs(knn_join(q, nb, k=2, zoom=8, radius=1, max_rounds=6))
+    got = _collect_pairs(knn_join(q, nb, k=2))
     want = _collect_pairs(knn_join_bruteforce(q, nb, k=2))
     assert got == want
 
@@ -108,7 +108,7 @@ def test_knn_exact_under_k_neighbors(spark):
     """k larger than the neighbor table: every query returns all neighbors."""
     q, _ = _xy_df(spark, 10, 23, "qid")
     nb, _ = _xy_df(spark, 4, 29, "nid")
-    got = knn_join(q, nb, k=6, zoom=6, radius=1, max_rounds=6).toPandas()
+    got = knn_join(q, nb, k=6, zoom=6).toPandas()
     assert (got.groupby("qid").size() == 4).all()
 
 
@@ -218,3 +218,42 @@ def test_knn_one_ring_join_over_local_offsets(spark, threshold):
         else:
             assert ring.nodeName() == "SortMergeJoin"
     assert got == _collect_pairs(knn_join_bruteforce(q, nb, k=3))
+
+
+@pytest.mark.parametrize(
+    "near, far",
+    [
+        pytest.param(0, [(30.0, 0.1 * i) for i in range(5)], id="5_neighbours_30_cells_out"),
+        pytest.param(2, [(30.0, 0.1 * i) for i in range(4)], id="2_near_4_far"),
+        pytest.param(0, [(40.0, 0.0), (40.0, 0.5)], id="only_2_neighbours_40_cells_out"),
+    ],
+)
+@_PATHS
+def test_knn_far_neighbours_exact(spark, threshold, near, far):
+    """At the default zoom a query's k nearest may lie tens of cells out,
+    or the world may hold fewer than k neighbours: the ring keeps doubling
+    until the answer is exact, capped at the ring that holds the world."""
+    q = _cluster(spark, 1, 67, "qid", 8)
+    nb = _cluster(spark, near, 71, "nid", 8, extra=far)
+    with _join_path(spark, threshold):
+        got = _collect_pairs(knn_join(q, nb, k=3))
+    want = _collect_pairs(knn_join_bruteforce(q, nb, k=3))
+    assert got == want
+    assert len(got) == min(3, near + len(far))
+
+
+@pytest.mark.parametrize("empty", ["neighbours", "queries"])
+@_PATHS
+def test_knn_empty_side(spark, threshold, empty):
+    """No neighbour (or no query) at all: no query ever reaches a round's
+    aggregate, and where the optimizer drops the ring join for its empty
+    side the pending-query count is never observed. The loop still ends,
+    with no rows."""
+    q = _cluster(spark, 3, 73, "qid", 8)
+    nb = _cluster(spark, 3, 79, "nid", 8)
+    if empty == "neighbours":
+        nb = spark.createDataFrame([], "nid BIGINT, x DOUBLE, y DOUBLE")
+    else:
+        q = spark.createDataFrame([], "qid BIGINT, x DOUBLE, y DOUBLE")
+    with _join_path(spark, threshold):
+        assert knn_join(q, nb, k=3).count() == 0

@@ -102,13 +102,34 @@ def test_cosine_dedup_pairs_exact_and_bucketed(spark, vecs):
     # nearly all plane signs)
     bucketed = {
         (r.id1, r.id2)
-        for r in cosine_dedup_pairs(
-            df2, threshold=0.98, n_planes=10, probe_flips=2, dim=allv.shape[1]
-        ).collect()
+        for r in cosine_dedup_pairs(df2, threshold=0.98, n_planes=10, dim=allv.shape[1]).collect()
     }
     assert bucketed <= want
     near_dup_pairs = {p for p in want if len(v) <= p[1]}
     assert near_dup_pairs & bucketed
+
+
+@pytest.mark.parametrize("flips", [0, 1, 2])
+def test_lsh_bucketed_probes_hamming_ball(spark, vecs, flips):
+    """Each query probes exactly the buckets within ``probe_flips`` bits
+    of its own, so its top-k equals the oracle's over that candidate set;
+    any other ``probe_flips`` raises instead of acting as 2."""
+    from gdal_spark.text.ref_impl import lsh_bucketed_topk_ref
+
+    df, v = vecs
+    queries = df.filter(F.col("vec_id") < 12).withColumnRenamed("vec_id", "qid")
+    got = sorted(
+        tuple(r)
+        for r in lsh_bucketed_topk(queries, df, k=3, n_planes=8, probe_flips=flips, dim=v.shape[1])
+        .select("qid", "id", "cos_e6", "rank")
+        .collect()
+    )
+    emb = [(i, [float(x) for x in v[i]]) for i in range(len(v))]
+    want = lsh_bucketed_topk_ref(emb, set(range(12)), k=3, n_planes=8, probe_flips=flips)
+    assert got == sorted(want)
+    for bad in (-1, 3):
+        with pytest.raises(ValueError, match="probe_flips"):
+            lsh_bucketed_topk(queries, df, k=3, n_planes=8, probe_flips=bad, dim=v.shape[1])
 
 
 def test_sign_bucket_arrow_equals_jvm(spark, vecs):
