@@ -525,7 +525,7 @@ def q_dedup_exact(spark, sf_dir):
 )
 def q_dedup_ngram_jaccard(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    out = dedup.ngram_jaccard_pairs(d, n=3, threshold=0.2, max_df=None)
+    out = dedup.ngram_jaccard_pairs(d, threshold=0.2, max_df=None)
     return out.select(
         F.col("id1"),
         F.col("id2"),
@@ -560,7 +560,7 @@ def q_dedup_ngram_jaccard_capped(spark, sf_dir):
     """The SCALE path: stop-shingles (doc frequency > cap) dropped before
     the self-join — the subquadratic default at corpus scale."""
     d = _t(spark, sf_dir, "documents")
-    out = dedup.ngram_jaccard_pairs(d, n=3, threshold=0.2, max_df=4)
+    out = dedup.ngram_jaccard_pairs(d, threshold=0.2, max_df=4)
     return out.select(
         F.col("id1"),
         F.col("id2"),
@@ -819,7 +819,7 @@ def q_decontaminate_benchmark(spark, sf_dir):
     corpus shuffle; the flag join back rides the 8-byte doc_id."""
     d = _t(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 97 == 0)
-    return dedup.contamination_flags(d, bench, n=5).orderBy("doc_id")
+    return dedup.contamination_flags(d, bench).orderBy("doc_id")
 
 
 @_register(
@@ -1171,6 +1171,11 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     return cosine_dedup_pairs(e, threshold=0.2).orderBy("id1", "id2")
 
 
+# (threshold, n_planes) of the bucketed embedding-dedup gates, passed to
+# the engine and to the oracle alike
+_COS_LSH = (0.2, 10)
+
+
 @_register("dedup_embedding_cosine_lsh")
 def q_dedup_embedding_cosine_lsh(spark, sf_dir):
     """The SCALE path: sign-bucket blocking (multiprobe) before scoring —
@@ -1178,15 +1183,13 @@ def q_dedup_embedding_cosine_lsh(spark, sf_dir):
     from gdal_spark.operators.similarity import cosine_dedup_pairs
 
     e = _t(spark, sf_dir, "embeddings")
-    return cosine_dedup_pairs(e, threshold=0.2, n_planes=10, dim=64).orderBy("id1", "id2")
+    return cosine_dedup_pairs(e, *_COS_LSH, dim=64).orderBy("id1", "id2")
 
 
 def _oracle_embedding_cosine_lsh() -> str:
     from gdal_spark.text import ref_impl
 
-    rows = ref_impl.lsh_cosine_pairs_ref(
-        ref_impl.load_embeddings(), threshold=0.2, n_planes=10, probe_flips=2
-    )
+    rows = ref_impl.lsh_cosine_pairs_ref(ref_impl.load_embeddings(), *_COS_LSH)
     return ref_impl.values_sql(
         rows, ["id1", "id2", "cos_e6"], ["BIGINT", "BIGINT", "BIGINT"], "id1, id2"
     )
@@ -1205,7 +1208,7 @@ def q_dedup_cluster_assign(spark, sf_dir):
     from gdal_spark.text.dedup import dedup_clusters
 
     e = _t(spark, sf_dir, "embeddings")
-    pairs = cosine_dedup_pairs(e, threshold=0.2, n_planes=10, dim=64)
+    pairs = cosine_dedup_pairs(e, *_COS_LSH, dim=64)
     out = dedup_clusters(pairs, ids=e.select("vec_id"))
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1217,7 +1220,7 @@ def _oracle_dedup_clusters() -> str:
     from gdal_spark.text import ref_impl
 
     emb = ref_impl.load_embeddings()
-    pairs = ref_impl.lsh_cosine_pairs_ref(emb, threshold=0.2, n_planes=10, probe_flips=2)
+    pairs = ref_impl.lsh_cosine_pairs_ref(emb, *_COS_LSH)
     rows = ref_impl.dedup_clusters_ref([i for i, _ in emb], pairs)
     return ref_impl.values_sql(
         rows, ["doc_id", "cluster_id"], ["BIGINT", "BIGINT"], "doc_id"
@@ -1227,15 +1230,17 @@ def _oracle_dedup_clusters() -> str:
 _lazy_oracle("dedup_cluster_assign", _oracle_dedup_clusters)
 
 
+# (k, n_planes, probe_flips) of the LSH ANN gate, engine and oracle alike
+_ANN_LSH = (3, 10, 1)
+
+
 @_register("ann_lsh_bucketed")
 def q_ann_lsh_bucketed(spark, sf_dir):
     from gdal_spark.operators.similarity import lsh_bucketed_topk
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10).withColumnRenamed("vec_id", "qid")
-    return lsh_bucketed_topk(q, e, k=3, n_planes=10, probe_flips=1, dim=64).orderBy(
-        "qid", "rank"
-    )
+    return lsh_bucketed_topk(q, e, *_ANN_LSH, dim=64).orderBy("qid", "rank")
 
 
 def _oracle_ann_lsh() -> str:
@@ -1243,10 +1248,7 @@ def _oracle_ann_lsh() -> str:
     multiprobe set, and sequential-fold cosine — exact, not recall-only."""
     from gdal_spark.text import ref_impl
 
-    rows = ref_impl.lsh_bucketed_topk_ref(
-        ref_impl.load_embeddings(), query_ids=set(range(10)), k=3, n_planes=10,
-        probe_flips=1,
-    )
+    rows = ref_impl.lsh_bucketed_topk_ref(ref_impl.load_embeddings(), set(range(10)), *_ANN_LSH)
     return ref_impl.values_sql(
         rows,
         ["qid", "id", "cos_e6", "rank"],
@@ -1258,6 +1260,10 @@ def _oracle_ann_lsh() -> str:
 _lazy_oracle("ann_lsh_bucketed", _oracle_ann_lsh)
 
 
+# (k, n_centroids, n_probe) of the IVF ANN gate, engine and oracle alike
+_ANN_IVF = (3, 8, 3)
+
+
 @_register("ann_ivf_topk")
 def q_ann_ivf_topk(spark, sf_dir):
     """IVF ANN (FAISS-style coarse k-means quantizer + probed-cell join):
@@ -1267,7 +1273,7 @@ def q_ann_ivf_topk(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10).withColumnRenamed("vec_id", "qid")
-    return ivf_topk(q, e, k=3, n_centroids=8, n_probe=3).orderBy("qid", "rank")
+    return ivf_topk(q, e, *_ANN_IVF).orderBy("qid", "rank")
 
 
 def _oracle_ann_ivf() -> str:
@@ -1275,10 +1281,7 @@ def _oracle_ann_ivf() -> str:
     cell assignment, probe set, and sequential-fold cosine."""
     from gdal_spark.text import ref_impl
 
-    rows = ref_impl.ivf_topk_ref(
-        ref_impl.load_embeddings(), query_ids=set(range(10)), k=3,
-        n_centroids=8, n_probe=3,
-    )
+    rows = ref_impl.ivf_topk_ref(ref_impl.load_embeddings(), set(range(10)), *_ANN_IVF)
     return ref_impl.values_sql(
         rows,
         ["qid", "id", "cos_e6", "rank"],
@@ -1749,7 +1752,7 @@ def q_events_sessionize(spark, sf_dir):
     from gdal_spark.operators.temporal import sessionize
 
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
-    out = sessionize(ev, gap_seconds=1800, tiebreak="event_id")
+    out = sessionize(ev, tiebreak="event_id")
     return out.select(
         "event_id", F.col("session_id").cast("long").alias("session_id")
     ).orderBy("event_id")
@@ -1970,7 +1973,7 @@ def q_band_histogram(spark, sf_dir):
 
     arr, meta = byte_fixture()
     mb = RasterMeta(width=20, height=20, dtype="uint8", block_w=8, block_h=8, gt=meta.gt)
-    out = band_histogram(tiles_from_array(spark, arr, mb), mb, n_bins=16)
+    out = band_histogram(tiles_from_array(spark, arr, mb), mb)
     return out.select(
         F.col("bin").cast("long").alias("bin"), F.col("count").cast("long").alias("count")
     ).orderBy("bin")
@@ -4383,7 +4386,7 @@ def q_mosaic_checksum(spark, sf_dir):
     dmeta = RasterMeta(width=48, height=30, dtype="float64", block_w=16, block_h=15,
                        gt=(-2.0, 1.0, 0.0, 26.0, 0.0, -1.0))
     ta, tb = synth_raster(spark, ma), synth_raster(spark, mb)
-    out = mosaic([(ta, ma), (tb, mb)], dmeta, alg="near", init=-1.0)
+    out = mosaic([(ta, ma), (tb, mb)], dmeta, init=-1.0)
     cs = checksum_df(out, dmeta)
     return spark.createDataFrame([(int(cs),)], "checksum BIGINT")
 
@@ -4408,7 +4411,7 @@ def _oracle_mosaic() -> str:
                     gt=(20.0, 1.0, 0.0, 18.0, 0.0, -1.0))
     dmeta = RasterMeta(width=48, height=30, dtype="float64", block_w=16, block_h=15,
                        gt=(-2.0, 1.0, 0.0, 26.0, 0.0, -1.0))
-    img = mosaic_np([(full_of(ma), ma), (full_of(mb), mb)], dmeta, alg="near", init=-1.0)
+    img = mosaic_np([(full_of(ma), ma), (full_of(mb), mb)], dmeta, init=-1.0)
     return f"SELECT CAST({checksum_np(img)} AS BIGINT) AS checksum"
 
 
@@ -5151,7 +5154,7 @@ def q_warp_utm_to_4326(spark, sf_dir):
     mb = RasterMeta(width=20, height=20, dtype="uint8", block_w=8, block_h=8, gt=meta.gt)
     dst = suggested_warp_output(mb, "EPSG:32611", "EPSG:4326", block_w=10, block_h=10)
     out = warp_crs(tiles_from_array(spark, arr, mb), mb, dst,
-                   "EPSG:32611", "EPSG:4326", alg="near", init=0.0)
+                   "EPSG:32611", "EPSG:4326", alg="near")
     cs = checksum_df(out, dst)
     return spark.createDataFrame([(int(cs),)], "checksum BIGINT")
 
@@ -5164,7 +5167,7 @@ def _oracle_warp_utm() -> str:
     arr, meta = byte_fixture()
     mb = RasterMeta(width=20, height=20, dtype="uint8", block_w=8, block_h=8, gt=meta.gt)
     dst = suggested_warp_output(mb, "EPSG:32611", "EPSG:4326", block_w=10, block_h=10)
-    img = warp_crs_np(arr, mb, dst, "EPSG:32611", "EPSG:4326", alg="near", init=0.0)
+    img = warp_crs_np(arr, mb, dst, "EPSG:32611", "EPSG:4326", alg="near")
     return f"SELECT CAST({checksum_np(img)} AS BIGINT) AS checksum"
 
 
@@ -5186,7 +5189,7 @@ def q_warp_26711_to_4326(spark, sf_dir):
     mb = RasterMeta(width=20, height=20, dtype="uint8", block_w=8, block_h=8, gt=meta.gt)
     dst = suggested_warp_output(mb, "EPSG:26711", "EPSG:4326", block_w=10, block_h=10)
     out = warp_crs(tiles_from_array(spark, arr, mb), mb, dst,
-                   "EPSG:26711", "EPSG:4326", alg="near", init=0.0)
+                   "EPSG:26711", "EPSG:4326", alg="near")
     cs = checksum_df(out, dst)
     return spark.createDataFrame([(int(cs),)], "checksum BIGINT")
 
@@ -5199,7 +5202,7 @@ def _oracle_warp_26711() -> str:
     arr, meta = byte_fixture()
     mb = RasterMeta(width=20, height=20, dtype="uint8", block_w=8, block_h=8, gt=meta.gt)
     dst = suggested_warp_output(mb, "EPSG:26711", "EPSG:4326", block_w=10, block_h=10)
-    img = warp_crs_np(arr, mb, dst, "EPSG:26711", "EPSG:4326", alg="near", init=0.0)
+    img = warp_crs_np(arr, mb, dst, "EPSG:26711", "EPSG:4326", alg="near")
     return f"SELECT CAST({checksum_np(img)} AS BIGINT) AS checksum"
 
 

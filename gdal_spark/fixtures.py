@@ -41,6 +41,6 @@ def fixture_polygons(n_poly: int = 6, seed: int = POLY_SEED):
     return ids, rings
 
 
-def fixture_polyset(n_poly: int = 6, seed: int = POLY_SEED) -> PolygonSet:
-    ids, rings = fixture_polygons(n_poly, seed)
+def fixture_polyset(n_poly: int = 6) -> PolygonSet:
+    ids, rings = fixture_polygons(n_poly, POLY_SEED)
     return PolygonSet.from_coords(ids, rings)

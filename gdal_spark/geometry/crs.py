@@ -34,20 +34,19 @@ F_WGS84 = 1.0 / 298.257223563
 
 
 class TMerc:
-    """Ellipsoidal transverse Mercator (Krüger series, 6th order in n)."""
+    """Ellipsoidal transverse Mercator (Krüger series, 6th order in n) with
+    the UTM scale 0.9996 and false easting 500 km."""
 
     def __init__(
         self,
         lon0_deg: float,
-        k0: float = 0.9996,
-        false_e: float = 500000.0,
         false_n: float = 0.0,
         a: float = A_WGS84,
         f: float = F_WGS84,
     ):
         self.lon0 = np.deg2rad(lon0_deg)
-        self.k0 = k0
-        self.fe = false_e
+        self.k0 = 0.9996
+        self.fe = 500000.0
         self.fn = false_n
         self.a = a
         self.f = f
@@ -185,9 +184,10 @@ def geodetic_to_geocentric(lon_deg, lat_deg, a: float, f: float):
     return X, Y, Z
 
 
-def geocentric_to_geodetic(X, Y, Z, a: float, f: float, iters: int = 8):
-    """ECEF → (lon, lat) degrees on the ellipsoid (height discarded —
-    the engine's transforms are 2D, matching the reference's default)."""
+def geocentric_to_geodetic(X, Y, Z, a: float, f: float):
+    """ECEF → (lon, lat) degrees on the ellipsoid by 8 fixed-point
+    latitude iterations (height discarded — the engine's transforms are
+    2D, matching the reference's default)."""
     X = np.asarray(X, np.float64)
     Y = np.asarray(Y, np.float64)
     Z = np.asarray(Z, np.float64)
@@ -195,7 +195,7 @@ def geocentric_to_geodetic(X, Y, Z, a: float, f: float, iters: int = 8):
     lon = np.arctan2(Y, X)
     p = np.hypot(X, Y)
     phi = np.arctan2(Z, p * (1.0 - e2))
-    for _ in range(iters):
+    for _ in range(8):
         N = a / np.sqrt(1.0 - e2 * np.sin(phi) ** 2)
         phi = np.arctan2(Z + e2 * N * np.sin(phi), p)
     return np.rad2deg(lon), np.rad2deg(phi)
@@ -274,8 +274,6 @@ def _utm_tmerc(epsg: int) -> TMerc:
     a, f = ELLIPSOIDS[DATUMS[datum][0]]
     return TMerc(
         lon0_deg=zone * 6.0 - 183.0,
-        k0=0.9996,
-        false_e=500000.0,
         false_n=10000000.0 if south else 0.0,
         a=a,
         f=f,
@@ -368,11 +366,12 @@ def transformer(src: str | int, dst: str | int):
 # ---------------------------------------------------------------------------
 
 def utm_forward_redfearn(
-    lon_deg, lat_deg, zone: int, south: bool = False,
+    lon_deg, lat_deg, zone: int,
     a: float = A_WGS84, f: float = F_WGS84,
 ):
-    """UTM forward by the classic Redfearn/Snyder expansion (eq. 8-9..8-17)
-    — shares NOTHING with the Krüger path above; test oracle only.
+    """Northern-hemisphere UTM forward by the classic Redfearn/Snyder
+    expansion (eq. 8-9..8-17) — shares NOTHING with the Krüger path
+    above; test oracle only.
     Takes the ellipsoid so NAD27 (Clarke 1866) zones cross-check too."""
     e2 = f * (2 - f)
     ep2 = e2 / (1 - e2)
@@ -406,6 +405,4 @@ def utm_forward_redfearn(
             + (61 - 58 * T + T**2 + 600 * C - 330 * ep2) * Aq**6 / 720
         )
     )
-    if south:
-        y = y + 10000000.0
     return x, y

@@ -1282,10 +1282,10 @@ def geodesic_area(g) -> float:
     return total
 
 
-def vincenty_distance(lon1, lat1, lon2, lat2, iters: int = 60):
+def vincenty_distance(lon1, lat1, lon2, lat2):
     """Vectorized Vincenty inverse (WGS84): geodesic distance in meters
-    (public algorithm, T. Vincenty 1975). Antipodal near-failures fall
-    back to the haversine-on-authalic-sphere value."""
+    (public algorithm, T. Vincenty 1975), 60 λ iterations. Antipodal
+    near-failures fall back to the haversine-on-authalic-sphere value."""
     a = 6378137.0
     f = 1.0 / 298.257223563
     b = a * (1.0 - f)
@@ -1299,7 +1299,7 @@ def vincenty_distance(lon1, lat1, lon2, lat2, iters: int = 60):
     sinU1, cosU1 = np.sin(U1), np.cos(U1)
     sinU2, cosU2 = np.sin(U2), np.cos(U2)
     lam = L.copy()
-    for _ in range(iters):
+    for _ in range(60):
         sinl, cosl = np.sin(lam), np.cos(lam)
         sin_sigma = np.sqrt(
             (cosU2 * sinl) ** 2 + (cosU1 * sinU2 - sinU1 * cosU2 * cosl) ** 2

@@ -37,9 +37,9 @@ WKB_MULTISURFACE = 12
 _POINT_HDR = struct.pack("<BI", 1, WKB_POINT)
 
 
-def linearize_circularstring(pts: np.ndarray, max_angle_deg: float = 4.0) -> np.ndarray:
+def linearize_circularstring(pts: np.ndarray) -> np.ndarray:
     """Linearize a CircularString's arc triples (p0→p1→p2 per arc) into a
-    polyline, ≤ ``max_angle_deg`` per step — the reference's
+    polyline, ≤ 4° per step — the reference's
     OGR_ARC_STEPSIZE default (ogr/ogrgeometryfactory.cpp
     approximateArcAngles contract). Collinear triples emit straight
     segments; endpoints are exact."""
@@ -47,7 +47,7 @@ def linearize_circularstring(pts: np.ndarray, max_angle_deg: float = 4.0) -> np.
     if len(pts) < 3:
         return pts.copy()
     out = [pts[0]]
-    step = np.radians(max_angle_deg)
+    step = np.radians(4.0)
     for i in range(0, len(pts) - 2, 2):
         p0, p1, p2 = pts[i], pts[i + 1], pts[i + 2]
         d = 2.0 * (p0[0] * (p1[1] - p2[1]) + p1[0] * (p2[1] - p0[1]) + p2[0] * (p0[1] - p1[1]))

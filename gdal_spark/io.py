@@ -23,10 +23,10 @@ def write_bucketed(
     bucket_cols: list[str],
     n_buckets: int = 32,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist df as a bucketed (and optionally sorted) managed table."""
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
+    """Persist df as a bucketed (and optionally sorted) managed table,
+    replacing any table of that name."""
+    w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)

@@ -235,9 +235,10 @@ def image_features(media: DataFrame, decode: str = "fake") -> DataFrame:
     )
 
 
-def resize_images(media: DataFrame, out_w: int, out_h: int, decode: str = "fake") -> DataFrame:
-    """Nearest-neighbor resize; output raw uint8 HWC bytes + dims."""
-    dec = _decoder(decode)
+def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
+    """Nearest-neighbor resize of the fake-decoded pixels; output raw
+    uint8 HWC bytes + dims."""
+    dec = fake_decode_image
 
     def rs(iterator):
         for pdf in iterator:
@@ -265,24 +266,18 @@ def sample_frames(media: DataFrame, every_k: int = 10) -> DataFrame:
     )
 
 
-def fake_decode_audio(data: bytes, sample_rate: int, n_seconds: float = 1.0) -> np.ndarray:
-    """Deterministic stand-in PCM decode: int16 samples seeded from the
-    payload bytes (same contract as fake_decode_image)."""
+def fake_decode_audio(data: bytes, sample_rate: int) -> np.ndarray:
+    """Deterministic stand-in PCM decode: one second of int16 samples
+    seeded from the payload bytes (same contract as fake_decode_image)."""
     rng = np.random.default_rng(_seed_from_bytes(data))
-    n = int(sample_rate * n_seconds)
-    return rng.integers(-32768, 32768, n, dtype=np.int16)
+    return rng.integers(-32768, 32768, int(sample_rate), dtype=np.int16)
 
 
-def audio_features(media: DataFrame, decode: str = "fake") -> DataFrame:
-    """Per-clip audio features over the gated decode: duration samples,
-    RMS (e6-integerized) and zero-crossing count — the audio analogue of
-    image_features (Arrow batches, one decode per row, vectorized
-    stats)."""
-    if decode == "real":  # pragma: no cover - codecs absent in container
-        raise NotImplementedError(
-            "real audio decode needs an audio codec library, not installed; "
-            "use decode='fake' for plumbing tests"
-        )
+def audio_features(media: DataFrame) -> DataFrame:
+    """Per-clip audio features over the fake decode (no audio codec is
+    installed): duration samples, RMS (e6-integerized) and zero-crossing
+    count — the audio analogue of image_features (Arrow batches, one
+    decode per row, vectorized stats)."""
 
     def feat(iterator):
         for pdf in iterator:

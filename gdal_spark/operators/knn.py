@@ -20,7 +20,9 @@ only. The eager checkpoint of a round's final ids also observes how many
 queries went in and how many came out final, so no count job runs; the
 loop stops when the two agree. Once r reaches ``2^zoom - 1`` the capped
 ring holds every cell of the world: that round's answers are exact as
-found, so it accepts them all and ends the loop.
+found, so it accepts them all and ends the loop. The ring join also
+observes how many neighbours it reads: when round one reads none, no
+query can become final, so the loop ends there.
 """
 
 from __future__ import annotations
@@ -46,9 +48,10 @@ def knn_join(query: DataFrame, neighbors: DataFrame, k: int, zoom: int = 8) -> D
     than k only when the neighbour table holds fewer than k rows. A query
     whose k-th neighbour lies d cells out is final after about
     ``log2(d) + 1`` rounds. One that never meets the bound (far neighbours,
-    or fewer than k in the world) runs ``zoom + 1`` rounds, the last over
-    511² ring offsets at z8: 10–13 s for one such query, 16 s for 2,000
-    with 5 neighbours in the world at k=8 (``local[4]``, shared 4-vCPU VM).
+    or 1 to k-1 neighbours in the world) runs ``zoom + 1`` rounds, the last
+    over 511² ring offsets at z8: 10–13 s for one such query, 16 s for
+    2,000 with 5 neighbours in the world at k=8 (``local[4]``, shared
+    4-vCPU VM). An empty neighbour table ends after the first round.
     """
     n_tiles = 1 << zoom
     span0 = tiling.WORLD_SPAN / n_tiles
@@ -61,6 +64,14 @@ def knn_join(query: DataFrame, neighbors: DataFrame, k: int, zoom: int = 8) -> D
     nb = neighbors.select(
         F.col("nid").alias("__nid"), F.col("x").alias("__nx"), F.col("y").alias("__ny")
     ).withColumn("__ncell", F.expr(tiling.mercator_cell_sql("__nx", "__ny", zoom)))
+    n_nb = Observation()
+    nb_counted = nb.observe(n_nb, F.count(F.lit(1)).alias("n"))
+    # explicit multiply (not pow): bit-identical to the SQL oracle's
+    # (qx-nx)*(qx-nx) form in every engine
+    dx_ = F.col("__qx") - F.col("__nx")
+    dy_ = F.col("__qy") - F.col("__ny")
+    d2 = dx_ * dx_ + dy_ * dy_
+    w = Window.partitionBy("__qid").orderBy(F.col("__d2").asc(), F.col("__nid").asc())
 
     done_parts: list[DataFrame] = []
     pending = q
@@ -86,19 +97,21 @@ def knn_join(query: DataFrame, neighbors: DataFrame, k: int, zoom: int = 8) -> D
                 F.expr(tiling.cell_id_sql(rx, ry, zoom)).alias("__ncell"),
             )
         )
-        cand = expanded.join(nb, on=["__ncell"], how="inner")
-        # explicit multiply (not pow): bit-identical to the SQL oracle's
-        # (qx-nx)*(qx-nx) form in every engine
-        dx_ = F.col("__qx") - F.col("__nx")
-        dy_ = F.col("__qy") - F.col("__ny")
-        d2 = dx_ * dx_ + dy_ * dy_
-        w = Window.partitionBy("__qid").orderBy(F.col("__d2").asc(), F.col("__nid").asc())
-        topk = (
-            cand.withColumn("__d2", d2)
-            .withColumn("__rank", F.row_number().over(w))
-            .filter(F.col("__rank") <= k)
-        )
-        agg = topk.groupBy("__qid").agg(
+
+        def ring_topk(nb_side: DataFrame) -> DataFrame:
+            return (
+                expanded.join(nb_side, on=["__ncell"], how="inner")
+                .withColumn("__d2", d2)
+                .withColumn("__rank", F.row_number().over(w))
+                .filter(F.col("__rank") <= k)
+            )
+
+        topk = ring_topk(nb)
+        # round one's checkpoint also counts the neighbours it reads; the
+        # result keeps the unobserved join, so its rounds share one
+        # neighbour exchange
+        first = not done_parts
+        agg = (ring_topk(nb_counted) if first else topk).groupBy("__qid").agg(
             F.count(F.lit(1)).alias("__cnt"), F.max(F.sqrt("__d2")).alias("__kth")
         )
         # final iff k found AND kth dist within the ring-r guarantee
@@ -106,12 +119,14 @@ def knn_join(query: DataFrame, neighbors: DataFrame, k: int, zoom: int = 8) -> D
         final_ids = agg.filter(final | F.lit(world)).select("__qid")
         # Eager localCheckpoint instead of persist(): tiny ids-only table,
         # lineage cut, blocks reclaimed by the ContextCleaner on GC. Running
-        # it fills both counts: `seen` counts pending rows, `done` final ids.
+        # it fills the counts: `seen` counts pending rows, `done` final ids,
+        # and in round one `n_nb` the neighbours.
         final_ids = final_ids.observe(done, F.count(F.lit(1)).alias("n")).localCheckpoint()
         done_parts.append(topk.join(F.broadcast(final_ids), "__qid", "leftsemi"))
-        try:  # a query with no candidate never reaches `agg`: `world` ends the loop
-            stop = world or done.get["n"] == seen.get["n"]
-        except Py4JJavaError:  # `seen` unfilled: the join was dropped for an empty side
+        try:  # a query with no candidate never reaches `agg`: `world`, or no
+            # neighbour at all, ends the loop
+            stop = world or done.get["n"] == seen.get["n"] or (first and n_nb.get["n"] == 0)
+        except Py4JJavaError:  # unfilled: the join was dropped for an empty side
             stop = True
         if stop:
             break

@@ -17,7 +17,7 @@ Here:
    simple polygons with holes, GEOS-free.
 3. **attribute schema** — mirrors ogrlayer.cpp:3412-3470: both sides'
    fields, with names colliding between layers prefixed
-   ``input_``/``method_`` (options INPUT_PREFIX/METHOD_PREFIX).
+   ``input_``/``method_`` (the INPUT_PREFIX/METHOD_PREFIX defaults).
 
 Both layers, and every result, carry their WKB geometry in the
 ``geometry`` column.
@@ -39,15 +39,15 @@ from pyspark.sql.types import BinaryType
 from gdal_spark.geometry import kernels, ops, wkb, wkt
 
 
-def _prefixed(input_df: DataFrame, method_df: DataFrame, input_prefix: str, method_prefix: str):
+def _prefixed(input_df: DataFrame, method_df: DataFrame):
     in_cols = [c for c in input_df.columns if c != "geometry"]
     m_cols = [c for c in method_df.columns if c != "geometry"]
     collide = set(in_cols) & set(m_cols)
     in_sel = [
-        F.col(c).alias(input_prefix + c if c in collide else c) for c in in_cols
+        F.col(c).alias("input_" + c if c in collide else c) for c in in_cols
     ]
     m_sel = [
-        F.col(c).alias(method_prefix + c if c in collide else c) for c in m_cols
+        F.col(c).alias("method_" + c if c in collide else c) for c in m_cols
     ]
     return in_sel, m_sel, collide
 
@@ -64,11 +64,9 @@ def _env_struct(df: DataFrame, pref: str) -> DataFrame:
     return df.withColumn(pref + "env", _env(F.col("geometry")))
 
 
-def _candidates(
-    input_df: DataFrame, method_df: DataFrame, input_prefix: str, method_prefix: str
-) -> DataFrame:
+def _candidates(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """Envelope-overlap candidate pairs; method side broadcast."""
-    in_sel, m_sel, _ = _prefixed(input_df, method_df, input_prefix, method_prefix)
+    in_sel, m_sel, _ = _prefixed(input_df, method_df)
     a = _env_struct(input_df, "a_").select(
         *in_sel, F.col("geometry").alias("__ga"), F.col("a_env").alias("__ea")
     )
@@ -102,15 +100,10 @@ def _intersection_udf(ga: pd.Series, gb: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def intersection(
-    input_df: DataFrame,
-    method_df: DataFrame,
-    input_prefix: str = "input_",
-    method_prefix: str = "method_",
-) -> DataFrame:
+def intersection(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """ogrlayer.cpp:3345 Intersection: pairs of intersecting features with
     both attribute sets and the overlay geometry."""
-    cand = _candidates(input_df, method_df, input_prefix, method_prefix)
+    cand = _candidates(input_df, method_df)
     out = cand.withColumn("geometry", _intersection_udf(F.col("__ga"), F.col("__gb")))
     return out.filter(F.col("geometry").isNotNull()).drop("__ga", "__gb", "__ea", "__eb")
 
@@ -185,7 +178,7 @@ def clip(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """
     in_cols = [c for c in input_df.columns if c != "geometry"]
     a = input_df.withColumn("__rid", F.monotonically_increasing_id())
-    cand = _candidates(a, method_df.select("geometry"), "input_", "method_")
+    cand = _candidates(a, method_df.select("geometry"))
     pieces = cand.withColumn("__pg", _intersection_udf(F.col("__ga"), F.col("__gb"))).filter(
         F.col("__pg").isNotNull()
     )
@@ -222,7 +215,7 @@ def union(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     in_only = _erase_pieces_df(input_df, method_df)
     m_only = _erase_pieces_df(method_df, input_df)
     # align collided column names with the intersection schema
-    _, _, collide = _prefixed(input_df, method_df, "input_", "method_")
+    _, _, collide = _prefixed(input_df, method_df)
     for c in collide:
         in_only = in_only.withColumnRenamed(c, "input_" + c)
         m_only = m_only.withColumnRenamed(c, "method_" + c)
@@ -235,7 +228,7 @@ def sym_difference(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     """ogrlayer.cpp:4300 SymDifference = (input∖method) ∪ (method∖input)."""
     in_only = _erase_pieces_df(input_df, method_df)
     m_only = _erase_pieces_df(method_df, input_df)
-    _, _, collide = _prefixed(input_df, method_df, "input_", "method_")
+    _, _, collide = _prefixed(input_df, method_df)
     for c in collide:
         in_only = in_only.withColumnRenamed(c, "input_" + c)
         m_only = m_only.withColumnRenamed(c, "method_" + c)
@@ -247,7 +240,7 @@ def identity(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     input split by method, keeping input extent."""
     inter = intersection(input_df, method_df)
     in_only = _erase_pieces_df(input_df, method_df)
-    _, _, collide = _prefixed(input_df, method_df, "input_", "method_")
+    _, _, collide = _prefixed(input_df, method_df)
     for c in collide:
         in_only = in_only.withColumnRenamed(c, "input_" + c)
     return inter.unionByName(in_only, allowMissingColumns=True)
@@ -260,16 +253,16 @@ def update(input_df: DataFrame, method_df: DataFrame) -> DataFrame:
     return in_only.unionByName(method_df, allowMissingColumns=True)
 
 
-def dissolve(df: DataFrame, by: list | None = None, n_partial: int = 8) -> DataFrame:
+def dissolve(df: DataFrame, by: list | None = None) -> DataFrame:
     """Aggregate union of ``geometry`` per key group — the engine's
     UnaryUnion/cascaded union (GEOS ``CascadedUnion``; the reference
     reaches it via ``OGRGeometry::UnaryUnion``, ogr/ogr_geometry.h:589,
     and the SQLite dialect's ST_Union aggregate).
 
     Distributed as a two-level union tree: rows are salted by
-    ``xxhash64(wkb) mod n_partial`` (DETERMINISTIC — the tree shape
+    ``xxhash64(wkb) mod 8`` (DETERMINISTIC — the tree shape
     depends on content, not shuffle order), partial unions run per
-    (key, salt) in parallel, then one bounded fold of ≤ n_partial partial
+    (key, salt) in parallel, then one bounded fold of ≤ 8 partial
     results per key. Each fold sorts its inputs by WKB bytes, so the
     whole result is bit-reproducible. Per-key cost is the GEOS memory
     contract; cross-key work is embarrassingly parallel."""
@@ -290,7 +283,7 @@ def dissolve(df: DataFrame, by: list | None = None, n_partial: int = 8) -> DataF
         return pd.DataFrame(row)
 
     salted = df.select(*keys, "geometry").withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col("geometry")), F.lit(int(n_partial)))
+        "__salt", F.pmod(F.xxhash64(F.col("geometry")), F.lit(8))
     )
     partials = salted.groupBy(*(keys + ["__salt"])).applyInPandas(fold, schema)
     return partials.groupBy(*keys).applyInPandas(fold, schema)

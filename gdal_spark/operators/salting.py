@@ -30,12 +30,11 @@ def salted_join(
     on: list[str],
     n_salt: int = 8,
     how: str = "inner",
-    fact_salt_col: str | None = None,
 ) -> DataFrame:
     """Equi-join with every dim row replicated n_salt times.
 
     Only inner/left joins are valid: with right/full, unmatched dim rows
-    would be emitted once per replica. The default salt hashes the FULL
+    would be emitted once per replica. The salt hashes the FULL
     fact row content (not the join keys alone, which would put every hot
     key in one salt bucket; not spark_partition_id, which is not stable
     across re-runs/resumes).
@@ -45,11 +44,7 @@ def salted_join(
             f"salted_join supports inner/left only (got {how!r}): dim rows are "
             "replicated n_salt times, so right/full would duplicate unmatched dim rows"
         )
-    salt_src = (
-        F.col(fact_salt_col)
-        if fact_salt_col
-        else F.xxhash64(*[F.col(c) for c in fact.columns])
-    )
+    salt_src = F.xxhash64(*[F.col(c) for c in fact.columns])
     f = fact.withColumn("__salt", F.pmod(salt_src, F.lit(n_salt)).cast("int"))
     d = dim.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
@@ -63,10 +58,10 @@ def salted_join_hot_keys(
     on: list[str],
     hot_keys: DataFrame,
     n_salt: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Salt only the hot keys (``hot_keys``: distinct rows of the join
-    columns, small, broadcast); the tail joins unsalted."""
+    """Inner join that salts only the hot keys (``hot_keys``: distinct
+    rows of the join columns, small, broadcast); the tail joins
+    unsalted."""
     hk = F.broadcast(hot_keys.select(*on).distinct().withColumn("__hot", F.lit(True)))
     f = fact.join(hk, on, "left")
     d = dim.join(hk, on, "left")
@@ -74,8 +69,8 @@ def salted_join_hot_keys(
     f_tail = f.filter(F.col("__hot").isNull()).drop("__hot")
     d_hot = d.filter(F.col("__hot").isNotNull()).drop("__hot")
     d_tail = d.filter(F.col("__hot").isNull()).drop("__hot")
-    joined_hot = salted_join(f_hot, d_hot, on, n_salt, how)
-    joined_tail = f_tail.join(d_tail, on, how)
+    joined_hot = salted_join(f_hot, d_hot, on, n_salt)
+    joined_tail = f_tail.join(d_tail, on)
     return joined_hot.unionByName(joined_tail)
 
 

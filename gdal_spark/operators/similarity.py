@@ -21,6 +21,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
+# Fixed settings; the pure-Python oracles in ``gdal_spark.text.ref_impl``
+# import these rather than repeat them.
+DEDUP_PROBE_FLIPS = 2  # cosine_dedup_pairs probes buckets within 2 bit flips
+KMEANS_ITERS = 5  # Lloyd iterations of the IVF coarse quantizer
+IVF_SAMPLE = 2048  # corpus rows (lowest vec_id first) the quantizer trains on
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -42,13 +48,14 @@ def cosine_sim_col(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(
-    df: DataFrame,
-    query_vec,
-    k: int = 10,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Exact top-k by cosine to one query vector over ``df``'s
+def _cos_e6(cos: Column) -> Column:
+    """Cosine as integer millionths, ``floor(cos * 1e6 + 0.5)`` — the one
+    rounding every operator here emits and every oracle re-derives."""
+    return F.floor(cos * 1_000_000 + F.lit(0.5)).cast("long")
+
+
+def cosine_topk(df: DataFrame, query_vec) -> DataFrame:
+    """Exact top-10 by cosine to one query vector over ``df``'s
     ``(vec_id, embedding)`` rows.
 
     Output (id, cos_e6) where cos_e6 = floor(cos * 1e6 + 0.5); ordering is
@@ -57,11 +64,8 @@ def cosine_topk(
     """
     qv = F.array(*[F.lit(float(v)).cast("double") for v in query_vec])
     cos = cosine_sim_col(F.col("embedding"), qv)
-    out = df.select(
-        F.col("vec_id").alias("id"),
-        F.floor(cos * scale + F.lit(0.5)).cast("long").alias("cos_e6"),
-    )
-    return out.orderBy(F.col("cos_e6").desc(), F.col("id").asc()).limit(k)
+    out = df.select(F.col("vec_id").alias("id"), _cos_e6(cos).alias("cos_e6"))
+    return out.orderBy(F.col("cos_e6").desc(), F.col("id").asc()).limit(10)
 
 
 def knn_cosine_join(
@@ -83,7 +87,7 @@ def knn_cosine_join(
     w = Window.partitionBy("qid").orderBy(F.col("cos_e6").desc(), F.col("id").asc())
     return (
         c.crossJoin(F.broadcast(q))
-        .withColumn("cos_e6", F.floor(cos * 1_000_000 + F.lit(0.5)).cast("long"))
+        .withColumn("cos_e6", _cos_e6(cos))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qid", "id", "cos_e6", "rank")
@@ -231,7 +235,7 @@ def lsh_bucketed_topk(
         # queries side is small by contract — broadcast the probes so the
         # corpus never shuffles on bucket
         F.broadcast(qp).join(c, "bucket")
-        .withColumn("cos_e6", F.floor(cos * 1_000_000 + F.lit(0.5)).cast("long"))
+        .withColumn("cos_e6", _cos_e6(cos))
         # project the vectors away BEFORE the rank window: Catalyst does
         # not prune them through the Arrow scoring UDF, and at real dims
         # they dominate the window exchange (dim doubles per side per row)
@@ -259,9 +263,9 @@ def cosine_dedup_pairs(
     ``n_planes=None`` → exact all-pairs self-join (O(N²) candidate
     volume; the correctness baseline, and what the DuckDB oracle can
     recompute). With ``n_planes`` set → random-hyperplane blocking: only
-    pairs whose buckets differ in at most 2 bits are scored, which is the
-    subquadratic scale path (cos ≥ 0.9 pairs differ in few plane signs
-    w.h.p.).
+    pairs whose buckets differ in at most ``DEDUP_PROBE_FLIPS`` (2) bits
+    are scored, which is the subquadratic scale path (cos ≥ 0.9 pairs
+    differ in few plane signs w.h.p.).
     Output: (id1, id2, cos_e6).
     """
     a = df.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("v1"))
@@ -273,12 +277,13 @@ def cosine_dedup_pairs(
             raise ValueError("bucketed mode requires dim=")
         planes = random_hyperplanes(dim, n_planes)
         a = a.withColumn("b1", _sign_bucket(F.col("v1"), planes))
-        ax = a.select("id1", "v1", _probe_buckets(F.col("b1"), n_planes, 2).alias("bkt"))
+        probes = _probe_buckets(F.col("b1"), n_planes, DEDUP_PROBE_FLIPS)
+        ax = a.select("id1", "v1", probes.alias("bkt"))
         bx = b.withColumn("bkt", _sign_bucket(F.col("v2"), planes))
         cand = ax.join(bx, "bkt").filter(F.col("id1") < F.col("id2")).drop("bkt")
     cos = cosine_sim_col(F.col("v1"), F.col("v2"))
     return (
-        cand.withColumn("cos_e6", F.floor(cos * 1_000_000 + F.lit(0.5)).cast("long"))
+        cand.withColumn("cos_e6", _cos_e6(cos))
         .filter(F.col("cos_e6") >= F.lit(int(threshold * 1_000_000)))
         .select("id1", "id2", "cos_e6")
         .distinct()
@@ -289,16 +294,17 @@ def cosine_dedup_pairs(
 # IVF (inverted-file) ANN — coarse k-means quantizer + probed cell join
 # ---------------------------------------------------------------------------
 
-def kmeans_fit(sample: np.ndarray, n_centroids: int, iters: int = 5) -> np.ndarray:
-    """Deterministic Lloyd k-means (public algorithm; the IVF coarse
-    quantizer shape used by FAISS-style indexes): init = the first
+def kmeans_fit(sample: np.ndarray, n_centroids: int) -> np.ndarray:
+    """Deterministic Lloyd k-means, ``KMEANS_ITERS`` rounds (public
+    algorithm; the IVF coarse quantizer shape used by FAISS-style
+    indexes): init = the first
     ``n_centroids`` sample rows, assignment ties → lowest centroid index
     (np.argmin first-occurrence), empty clusters keep their previous
     centroid. Training is a bounded driver step over a deterministic
     sample — standard IVF practice (train small, assign at scale)."""
     C = np.asarray(sample[:n_centroids], dtype=np.float64).copy()
     sample = np.asarray(sample, dtype=np.float64)
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         d2 = ((sample[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         a = d2.argmin(axis=1)
         for c in range(len(C)):
@@ -409,8 +415,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    iters: int = 5,
-    sample_size: int = 2048,
 ) -> DataFrame:
     """Approximate kNN via an IVF index over ``(qid, embedding)`` queries
     and ``(vec_id, embedding)`` corpus rows: corpus vectors are partitioned
@@ -419,18 +423,15 @@ def ivf_topk(
     is an equi-join on cell id — per-query work ∝ probed-cell occupancy
     (≈ n_probe/n_centroids of the corpus), not corpus size.
 
-    Training is ONE bounded driver action (``orderBy(id).limit(sample)``
+    Training is ONE bounded driver action (``orderBy(id).limit(IVF_SAMPLE)``
     → NumPy Lloyd, deterministic); centroids ship to executors inside
     the Arrow UDF closure. At 100 TB the assignment pass is a linear
     map-only scan and the probe join shuffles only cell ids + scores.
     Scores are the JVM sequential fold, bit-equal to the Python oracle."""
     sample_rows = (
-        corpus.select("vec_id", "embedding").orderBy("vec_id").limit(sample_size).collect()
+        corpus.select("vec_id", "embedding").orderBy("vec_id").limit(IVF_SAMPLE).collect()
     )
-    C = kmeans_fit(
-        np.array([list(r[1]) for r in sample_rows], dtype=np.float64),
-        n_centroids, iters,
-    )
+    C = kmeans_fit(np.array([list(r[1]) for r in sample_rows], dtype=np.float64), n_centroids)
 
     @F.pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
@@ -461,7 +462,7 @@ def ivf_topk(
     w = Window.partitionBy("qid").orderBy(F.col("cos_e6").desc(), F.col("id").asc())
     return (
         F.broadcast(qp).join(c, "cell")
-        .withColumn("cos_e6", F.floor(cos * 1_000_000 + F.lit(0.5)).cast("long"))
+        .withColumn("cos_e6", _cos_e6(cos))
         .select("qid", "id", "cos_e6")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

@@ -26,14 +26,12 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    value_cols: list[str] | None = None,
 ) -> DataFrame:
     """Backward as-of join on the ``ts`` column of both sides; output =
-    left columns + right value columns (NULL when no right row
+    left columns + right's other columns (NULL when no right row
     at-or-before). Ties on equal timestamps take the right row (≤
     semantics), matching DuckDB ``ASOF JOIN``."""
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (key, "ts")]
+    value_cols = [c for c in right.columns if c not in (key, "ts")]
     l = left.withColumn("__side", F.lit(1))
     # all value columns travel as ONE struct so the carried values always
     # come from the same (latest) right row — per-column last(ignorenulls)
@@ -59,12 +57,11 @@ def asof_join(
 
 def sessionize(
     events: DataFrame,
-    gap_seconds: int = 1800,
     tiebreak: str | None = None,
 ) -> DataFrame:
     """Add ``session_id`` (0-based per ``user_id``, ordered by ``ts``): a
-    new session starts when the gap to the previous event exceeds
-    ``gap_seconds``. Pass a unique ``tiebreak`` column when timestamps can
+    new session starts when the gap to the previous event exceeds 30
+    minutes. Pass a unique ``tiebreak`` column when timestamps can
     repeat within a key (keeps the window order — and thus session ids —
     deterministic)."""
     order = [F.col("ts").asc()] + ([F.col(tiebreak).asc()] if tiebreak else [])
@@ -74,7 +71,7 @@ def sessionize(
     secs = F.col("ts").cast("timestamp").cast("long")
     prev_secs = prev.cast("timestamp").cast("long")
     new_sess = F.when(
-        prev.isNull() | (secs - prev_secs > gap_seconds), 1
+        prev.isNull() | (secs - prev_secs > 1800), 1
     ).otherwise(0)
     return events.withColumn(
         "session_id",

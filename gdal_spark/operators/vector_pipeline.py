@@ -79,8 +79,9 @@ class VectorPipeline:
             cols.append("geometry")
         return VectorPipeline(self.df.select(*cols))
 
-    def sql(self, spark, query: str, view: str = "__pipe") -> "VectorPipeline":
-        self.df.createOrReplaceTempView(view)
+    def sql(self, spark, query: str) -> "VectorPipeline":
+        """Run ``query`` over the current layer, registered as view ``__pipe``."""
+        self.df.createOrReplaceTempView("__pipe")
         return VectorPipeline(spark.sql(query))
 
     # -- spatial filter (filter-refine, ogrlayer.cpp:2253-2325) ------------
@@ -192,7 +193,7 @@ class VectorPipeline:
         df = df.withColumn("geometry", F.explode("__parts")).drop("__parts")
         return VectorPipeline(df)
 
-    def set_geom_type(self, promote_to_multi: bool = True) -> "VectorPipeline":
+    def set_geom_type(self) -> "VectorPipeline":
         """PROMOTE_TO_MULTI (ogr2ogr -nlt PROMOTE_TO_MULTI)."""
 
         def _promote(g):
@@ -207,13 +208,13 @@ class VectorPipeline:
 
         return self._with_geom(_geom_udf(_promote))
 
-    def buffer(self, distance: float, quadsegs: int = 30) -> "VectorPipeline":
+    def buffer(self, distance: float) -> "VectorPipeline":
         """`gdal vector pipeline ... buffer` (gdalalg_vector_buffer.cpp):
         per-feature true round buffer via ops.buffer_geom (capsule-union
         set identity; concavity/holes preserved, negative dist erodes)."""
 
         def _buf(g):
-            return ops.buffer_geom(g, distance, quadsegs)
+            return ops.buffer_geom(g, distance)
 
         return self._with_geom(_geom_udf(_buf))
 
@@ -251,12 +252,12 @@ class VectorPipeline:
         pts = self.df.select(_xy(F.col("geometry")).alias("p"), "z").select("p.x", "p.y", "z")
         return grid_points(pts, meta, alg=alg, **kw)
 
-    def dissolve(self, by: list | None = None, n_partial: int = 8) -> "VectorPipeline":
+    def dissolve(self, by: list | None = None) -> "VectorPipeline":
         """``gdal vector pipeline ... dissolve`` analogue (aggregate
         UnaryUnion per key; layer_algebra.dissolve salted union tree)."""
         from gdal_spark.operators.layer_algebra import dissolve as _dissolve
 
-        return VectorPipeline(_dissolve(self.df, by=by, n_partial=n_partial))
+        return VectorPipeline(_dissolve(self.df, by=by))
 
     def rasterize(self, meta, burn_col: str | None = None, burn: float = 1.0, **kw):
         """``... rasterize`` step: terminate into a raster tiles

@@ -89,14 +89,12 @@ def contour_segments_np(arr: np.ndarray, levels) -> list:
     return sorted(out)
 
 
-def contour_segments(
-    tiles: DataFrame, meta: RasterMeta, levels, band: int = 1
-) -> DataFrame:
+def contour_segments(tiles: DataFrame, meta: RasterMeta, levels) -> DataFrame:
     """Distributed marching squares → (level, x0, y0, x1, y1)."""
     dtype = meta.dtype
     H, W = meta.height, meta.width
     bh, bw = meta.block_h, meta.block_w
-    padded = padded_blocks(tiles.filter(F.col("band") == band), meta, 1)
+    padded = padded_blocks(tiles.filter(F.col("band") == 1), meta, 1)
     lv = list(map(float, levels))
 
     def cells(iterator):
@@ -212,7 +210,6 @@ def proximity(
     meta: RasterMeta,
     target_values: list,
     max_dist: float | None = None,
-    band: int = 1,
 ) -> DataFrame:
     """Distance raster to the nearest target pixel (exact Euclidean,
     pixel units), fully distributed:
@@ -237,7 +234,7 @@ def proximity(
     dtype = meta.dtype
     bw, bh = meta.block_w, meta.block_h
     tv = sorted(float(v) for v in target_values)
-    src = tiles.filter(F.col("band") == band)
+    src = tiles.filter(F.col("band") == 1)
     if max_dist is None:
         return _proximity_broadcast_targets(
             src, meta, tv, float(np.hypot(meta.width, meta.height))
@@ -388,7 +385,7 @@ def fillnodata_smooth_np(
 
 def fillnodata(
     tiles: DataFrame, meta: RasterMeta, nodata: float, max_distance: int,
-    band: int = 1, smoothing_iterations: int = 0,
+    smoothing_iterations: int = 0,
 ) -> DataFrame:
     """Distributed fill: halo = max_distance (+ smoothing_iterations when
     -si is on) so every directional scan AND every 3×3 smoothing pass
@@ -399,7 +396,7 @@ def fillnodata(
     si = int(smoothing_iterations)
     md_fill = int(max_distance)
     padded = padded_blocks(
-        tiles.filter(F.col("band") == band), meta, md_fill + si
+        tiles.filter(F.col("band") == 1), meta, md_fill + si
     )
 
     def fill(iterator):
@@ -443,18 +440,19 @@ def fillnodata(
 # contour stitching + interval mode (alg/contour.cpp:331,568)
 # ---------------------------------------------------------------------------
 
-def interval_levels(zmin: float, zmax: float, interval: float, base: float = 0.0):
-    """The reference's fixed-interval level set: every base + k*interval
-    strictly inside (zmin, zmax] (contour.cpp IntervalLevelRangeIterator)."""
+def interval_levels(zmin: float, zmax: float, interval: float):
+    """The reference's fixed-interval level set: every k*interval
+    strictly inside (zmin, zmax] (contour.cpp IntervalLevelRangeIterator,
+    base 0)."""
     import math
 
-    k0 = int(math.ceil((zmin - base) / interval))
-    if base + k0 * interval <= zmin:
+    k0 = int(math.ceil(zmin / interval))
+    if k0 * interval <= zmin:
         k0 += 1
     out = []
     k = k0
-    while base + k * interval <= zmax:
-        out.append(base + k * interval)
+    while k * interval <= zmax:
+        out.append(k * interval)
         k += 1
     return out
 
@@ -558,8 +556,6 @@ def contour_lines(
     meta: RasterMeta,
     levels=None,
     interval: float | None = None,
-    base: float = 0.0,
-    band: int = 1,
     chunk_px: int | None = None,
 ) -> DataFrame:
     """Stitched contour polylines: (level, line_id, wkt). ``interval``
@@ -591,19 +587,19 @@ def contour_lines(
                 yield pd.DataFrame(rows, columns=["mn", "mx"])
 
         agg = (
-            tiles.filter(F.col("band") == band)
+            tiles.filter(F.col("band") == 1)
             .mapInPandas(mm, "mn DOUBLE, mx DOUBLE")
             .agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"))
             .collect()[0]
         )
-        levels = interval_levels(agg.mn, agg.mx, interval, base)
+        levels = interval_levels(agg.mn, agg.mx, interval)
         if not levels:
             empty = tiles.sparkSession.createDataFrame(
                 [], "level DOUBLE, line_id INT, wkt STRING"
             )
             return empty
 
-    segs = contour_segments(tiles, meta, levels, band)
+    segs = contour_segments(tiles, meta, levels)
     if chunk_px is None:
         chunk_px = max(meta.block_w, meta.block_h) * 4
     span = float(chunk_px)
@@ -789,14 +785,11 @@ def contour_lines_np(arr: np.ndarray, levels) -> list:
     return out
 
 
-def contour_polygons(
-    tiles: DataFrame, meta: RasterMeta, interval: float, base: float = 0.0,
-    band: int = 1,
-) -> DataFrame:
+def contour_polygons(tiles: DataFrame, meta: RasterMeta, interval: float) -> DataFrame:
     """``gdal_contour -p`` (polygon output, apps/gdal_contour_bin.cpp /
     marching-squares polygon mode): polygons BETWEEN successive levels.
-    Compositional: pixels classify into level bands (idx = floor((v −
-    base)/interval), the reference's fixed-interval banding), then the
+    Compositional: pixels classify into level bands (idx =
+    floor(v/interval), the reference's fixed-interval banding, base 0), then the
     existing distributed ring assembly (polygonize_polygons) emits one
     polygon per connected band region with ELEV_MIN/ELEV_MAX attributes.
 
@@ -811,10 +804,10 @@ def contour_polygons(
         for pdf in iterator:
             rows = []
             for r in pdf.itertuples():
-                if int(r.band) != band:
+                if int(r.band) != 1:
                     continue
                 a = np.frombuffer(r.data, dtype=dtype).reshape(r.h, r.w)
-                idx = np.floor((a.astype(np.float64) - base) / interval)
+                idx = np.floor(a.astype(np.float64) / interval)
                 rows.append((1, int(r.block_y), int(r.block_x), int(r.h),
                              int(r.w), idx.tobytes()))
             yield pd.DataFrame(
@@ -827,20 +820,19 @@ def contour_polygons(
     polys = polygonize_polygons(banded, bmeta)
     return polys.select(
         "region_id",
-        (F.lit(base) + F.col("value") * F.lit(interval)).alias("elev_min"),
-        (F.lit(base) + (F.col("value") + 1) * F.lit(interval)).alias("elev_max"),
+        (F.col("value") * F.lit(interval)).alias("elev_min"),
+        ((F.col("value") + 1) * F.lit(interval)).alias("elev_max"),
         "wkt",
     )
 
 
-def contour_polygons_np(arr: np.ndarray, meta: RasterMeta, interval: float,
-                        base: float = 0.0) -> list:
+def contour_polygons_np(arr: np.ndarray, meta: RasterMeta, interval: float) -> list:
     """Single-node oracle: same banding + ring assembly. Returns
     [(elev_min, elev_max, wkt)] in region order."""
     from gdal_spark.raster.polygonize import polygonize_polygons_np
 
-    idx = np.floor((arr.astype(np.float64) - base) / interval)
+    idx = np.floor(arr.astype(np.float64) / interval)
     out = []
     for val, wkt in polygonize_polygons_np(idx, gt=meta.gt):
-        out.append((base + val * interval, base + (val + 1) * interval, wkt))
+        out.append((val * interval, (val + 1) * interval, wkt))
     return out

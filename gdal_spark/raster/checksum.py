@@ -45,7 +45,7 @@ def _c_mod(v: np.ndarray, p: np.ndarray) -> np.ndarray:
     return np.sign(v) * (np.abs(v) % p)
 
 
-def checksum_np(arr: np.ndarray, x_off: int = 0, y_off: int = 0, full_width: int | None = None) -> int:
+def checksum_np(arr: np.ndarray) -> int:
     """Single-node oracle. ``arr`` is the window; prime phase derives from
     the window's own row-major index (matching the reference, which indexes
     i over the *window*)."""

@@ -214,7 +214,7 @@ def color_relief_np(arr: np.ndarray, ramp: list) -> np.ndarray:
     return np.floor(out + 0.5).astype(np.uint8)
 
 
-def color_relief(tiles: DataFrame, meta: RasterMeta, ramp: list, band: int = 1) -> DataFrame:
+def color_relief(tiles: DataFrame, meta: RasterMeta, ramp: list) -> DataFrame:
     """Distributed color relief → 3 tile rows (bands 1..3, uint8) per block."""
     dtype = meta.dtype
 
@@ -231,45 +231,43 @@ def color_relief(tiles: DataFrame, meta: RasterMeta, ramp: list, band: int = 1) 
                     )
             yield pd.DataFrame(rows, columns=["band", "block_y", "block_x", "h", "w", "data"])
 
-    return tiles.filter(F.col("band") == band).mapInPandas(compute, TILES_SCHEMA)
+    return tiles.filter(F.col("band") == 1).mapInPandas(compute, TILES_SCHEMA)
 
 
 _ALGS = {
-    "hillshade": lambda pad, meta, kw: hillshade_np(
-        pad, meta.gt[1], meta.gt[5], kw.get("z", 1.0), kw.get("xscale", 1.0),
-        kw.get("yscale", 1.0), kw.get("az", 315.0), kw.get("alt", 45.0),
-        kw.get("grad", "horn"),
-    ),
+    "hillshade": lambda pad, meta, kw: hillshade_np(pad, meta.gt[1], meta.gt[5], **kw),
     "hillshade_combined": lambda pad, meta, kw: hillshade_combined_np(
-        pad, meta.gt[1], meta.gt[5], kw.get("z", 1.0), kw.get("xscale", 1.0),
-        kw.get("yscale", 1.0), kw.get("az", 315.0), kw.get("alt", 45.0),
-        kw.get("grad", "horn"),
+        pad, meta.gt[1], meta.gt[5], **kw
     ),
     "hillshade_multidirectional": lambda pad, meta, kw: hillshade_multidirectional_np(
-        pad, meta.gt[1], meta.gt[5], kw.get("z", 1.0), kw.get("xscale", 1.0),
-        kw.get("yscale", 1.0), kw.get("alt", 45.0), kw.get("grad", "horn"),
+        pad, meta.gt[1], meta.gt[5], **kw
     ),
-    "hillshade_igor": lambda pad, meta, kw: hillshade_igor_np(
-        pad, meta.gt[1], meta.gt[5], kw.get("z", 1.0), kw.get("xscale", 1.0),
-        kw.get("yscale", 1.0), kw.get("az", 315.0), kw.get("grad", "horn"),
-    ),
-    "slope": lambda pad, meta, kw: slope_np(
-        pad, meta.gt[1], meta.gt[5], kw.get("xscale", 1.0), kw.get("yscale", 1.0),
-        kw.get("degrees", True), kw.get("grad", "horn"),
-    ),
-    "aspect": lambda pad, meta, kw: aspect_np(
-        pad, kw.get("azimuth", True), kw.get("grad", "horn")
-    ),
-    "tri": lambda pad, meta, kw: tri_np(pad, kw.get("alg", "Riley")),
-    "tri_wilson": lambda pad, meta, kw: tri_np(pad, "Wilson"),
-    "tpi": lambda pad, meta, kw: tpi_np(pad),
-    "roughness": lambda pad, meta, kw: roughness_np(pad),
+    "hillshade_igor": lambda pad, meta, kw: hillshade_igor_np(pad, meta.gt[1], meta.gt[5], **kw),
+    "slope": lambda pad, meta, kw: slope_np(pad, meta.gt[1], meta.gt[5], **kw),
+    "aspect": lambda pad, meta, kw: aspect_np(pad, **kw),
+    "tri": lambda pad, meta, kw: tri_np(pad, **kw),
+    "tri_wilson": lambda pad, meta, kw: tri_np(pad, "Wilson", **kw),
+    "tpi": lambda pad, meta, kw: tpi_np(pad, **kw),
+    "roughness": lambda pad, meta, kw: roughness_np(pad, **kw),
 }
 
 
-def dem_op(tiles: DataFrame, meta: RasterMeta, op: str, band: int = 1, **kw) -> DataFrame:
-    """Run one DEM operator over the tiles DataFrame → float64 tiles."""
+def _check_options(op: str, meta: RasterMeta, kw: dict) -> None:
+    """Raise ValueError for an option ``op`` does not read: the operator's
+    own signature is the list, so a misspelled option cannot be dropped."""
+    try:
+        with np.errstate(all="ignore"):
+            _ALGS[op](np.zeros((3, 3)), meta, kw)
+    except TypeError as e:
+        raise ValueError(f"dem_op {op!r}: {e}") from None
+
+
+def dem_op(tiles: DataFrame, meta: RasterMeta, op: str, **kw) -> DataFrame:
+    """Run one DEM operator over every band of the tiles DataFrame →
+    float64 tiles. ``kw`` are the operator's options (``z``, ``az``,
+    ``grad``, ...); one it does not read raises ValueError."""
     fn = _ALGS[op]
+    _check_options(op, meta, kw)
     dtype = meta.dtype
     padded = padded_blocks(tiles, meta, 1)
 
@@ -287,5 +285,6 @@ def dem_op(tiles: DataFrame, meta: RasterMeta, op: str, band: int = 1, **kw) -> 
 
 def dem_op_np(arr: np.ndarray, meta: RasterMeta, op: str, **kw) -> np.ndarray:
     """Single-node oracle: same formula over the edge-replicated full array."""
+    _check_options(op, meta, kw)
     pad = np.pad(arr, 1, mode="edge")
     return _ALGS[op](pad, meta, kw).astype(np.float64)

@@ -82,14 +82,14 @@ def _trunc6(e: np.ndarray) -> np.ndarray:
 
 def dither_rgb2pct_np(
     r: np.ndarray, g: np.ndarray, b: np.ndarray, pct: np.ndarray,
-    n_levels: int = N_LEVELS,
 ) -> np.ndarray:
     """Single-node oracle: the reference's scanline loop transcribed as
     plain per-pixel integer arithmetic (no vectorization tricks — this
     is the ground truth the distributed kernel is tested against)."""
     H, W = r.shape
     pct = np.asarray(pct, dtype=np.int64)
-    cmap = build_colormap(pct, n_levels)
+    cmap = build_colormap(pct)
+    n_levels = N_LEVELS
     out = np.zeros((H, W), dtype=np.uint8)
     err = np.zeros((W + 2, 3), dtype=np.int64)  # slot j at index j+1
     chans = (r.astype(np.int64), g.astype(np.int64), b.astype(np.int64))
@@ -163,11 +163,9 @@ def dither_rgb2pct(
     tiles: DataFrame,
     meta: RasterMeta,
     pct: np.ndarray,
-    n_levels: int = N_LEVELS,
-    bands: tuple[int, int, int] = (1, 2, 3),
     block_u: int | None = None,
 ) -> DataFrame:
-    """Distributed GDALDitherRGB2PCT: RGB tiles (bands ``bands``) →
+    """Distributed GDALDitherRGB2PCT: RGB tiles (bands 1, 2, 3) →
     single-band uint8 palette-index tiles on ``meta``'s grid.
 
     Wavefront rounds t = by + bu over skewed blocks (module docstring);
@@ -176,7 +174,7 @@ def dither_rgb2pct(
     H, W = meta.height, meta.width
     bh, bw = meta.block_h, meta.block_w
     pct = np.asarray(pct, dtype=np.int64)
-    cmap = build_colormap(pct, n_levels)
+    cmap = build_colormap(pct)
     buw = int(block_u) if block_u else bw + 2 * bh
     nby = meta.blocks_y
     umax = (W - 1) + 2 * (H - 1)
@@ -196,7 +194,7 @@ def dither_rgb2pct(
             for tx in range(xlo // bw, (xhi - 1) // bw + 1):
                 needs.append((by, bu, tx))
     need_df = spark.createDataFrame(needs, "by INT, bu INT, tx INT")
-    src = tiles.filter(F.col("band").isin(list(bands))).select(
+    src = tiles.filter(F.col("band").isin(1, 2, 3)).select(
         F.col("block_y").alias("by"),
         F.col("block_x").alias("tx"),
         "band", "h", "w", "data",
@@ -210,7 +208,6 @@ def dither_rgb2pct(
         )
     )
     dtype = meta.dtype
-    band_pos = {b: i for i, b in enumerate(bands)}
 
     def proc(key, pdf):
         by, bu = int(key[0]), int(key[1])
@@ -234,7 +231,7 @@ def dither_rgb2pct(
                 cx0 = max(gx0, xlo)
                 cx1 = min(gx0 + a.shape[1], xhi)
                 if cx1 > cx0:
-                    rect[:, cx0 - xlo : cx1 - xlo, band_pos[int(rr.band)]] = a[
+                    rect[:, cx0 - xlo : cx1 - xlo, int(rr.band) - 1] = a[
                         :nrow, cx0 - gx0 : cx1 - gx0
                     ]
             elif role == "R":
@@ -254,7 +251,7 @@ def dither_rgb2pct(
         xc = np.clip(xs - xlo, 0, max(0, xhi - xlo - 1))
         raw = rect[np.arange(nrow)[:, None], xc]
         out_idx, err_out, c2_out = _dither_sweep(
-            raw, valid, err_in, c2_in, pct, cmap, n_levels
+            raw, valid, err_in, c2_in, pct, cmap, N_LEVELS
         )
         rows = []
         # result fragments: one per covered storage tile column

@@ -39,19 +39,18 @@ def _mask_meta(meta: RasterMeta) -> RasterMeta:
 def footprint(
     band_tiles: dict[str, DataFrame],
     meta: RasterMeta,
-    src_nodata: float | None = None,
     combine_bands: str = "union",
     min_ring_area: float = 0.0,
     convex_hull: bool = False,
     geo: bool = True,
 ) -> DataFrame:
     """Returns a single-row DataFrame (n_polys, n_rings, wkt) holding
-    the footprint MultiPolygon. ``src_nodata`` falls back to
-    ``meta.nodata``; with neither set every pixel is valid (matching
-    the reference when no nodata/mask band exists)."""
+    the footprint MultiPolygon. Pixels equal to ``meta.nodata`` (and NaN)
+    are invalid; with no nodata every pixel is valid (matching the
+    reference when no nodata/mask band exists)."""
     if combine_bands not in ("union", "intersection"):
         raise ValueError("combine_bands must be 'union' or 'intersection'")
-    nodata = meta.nodata if src_nodata is None else src_nodata
+    nodata = meta.nodata
 
     def mask_fn(bands: dict[str, np.ndarray]) -> np.ndarray:
         acc = None

@@ -84,7 +84,7 @@ def gcp_residuals(gcps, fit) -> np.ndarray:
 
 def warp_gcp(
     src_tiles, src_meta: RasterMeta, dst_meta: RasterMeta, gcps,
-    order: int = 0, alg: str = "near", init: float = 0.0, band: int = 1,
+    order: int = 0, alg: str = "near", init: float = 0.0,
 ):
     """gdalwarp of a GCP-georeferenced source: dst px → dst geo →
     (reverse polynomial, geo→src pixel) → sample. The source carries no
@@ -102,7 +102,7 @@ def warp_gcp(
     def tf(gx, gy):
         return gcp_transform(gx, gy, fit["E21"], fit["N21"], fit["order"])
 
-    return warp_with_transform(src_tiles, ident, dst_meta, tf, alg, init, band)
+    return warp_with_transform(src_tiles, ident, dst_meta, tf, alg, init)
 
 
 def warp_gcp_np(
@@ -179,7 +179,7 @@ def tps_transform(x, y, fit: dict):
 
 def warp_tps(
     src_tiles, src_meta: RasterMeta, dst_meta: RasterMeta, gcps,
-    alg: str = "near", init: float = 0.0, band: int = 1,
+    alg: str = "near", init: float = 0.0,
 ):
     """gdalwarp -tps of a GCP-georeferenced source: exact interpolation
     through every control point (thin plate spline, reverse direction
@@ -197,7 +197,7 @@ def warp_tps(
     def tf(gx, gy):
         return tps_transform(gx, gy, fit)
 
-    return warp_with_transform(src_tiles, ident, dst_meta, tf, alg, init, band)
+    return warp_with_transform(src_tiles, ident, dst_meta, tf, alg, init)
 
 
 def warp_tps_np(

@@ -110,13 +110,14 @@ def synth_block_np(bx: int, by: int, h: int, w: int, meta: RasterMeta, seed: int
     return (z % np.uint64(np.iinfo(meta.dtype).max)).astype(meta.dtype)
 
 
-def synth_raster(spark: SparkSession, meta: RasterMeta, band: int = 1, seed: int = 42) -> DataFrame:
-    """Distributed deterministic raster: one task per group of blocks; block
-    content generated executor-side (no driver materialization)."""
+def synth_raster(spark: SparkSession, meta: RasterMeta, seed: int = 42) -> DataFrame:
+    """Distributed deterministic band-1 raster: one task per group of
+    blocks; block content generated executor-side (no driver
+    materialization)."""
     n_blocks = meta.blocks_x * meta.blocks_y
     blocks = spark.createDataFrame(
-        [(band, by, bx) for by in range(meta.blocks_y) for bx in range(meta.blocks_x)],
-        "band INT, block_y INT, block_x INT",
+        [(by, bx) for by in range(meta.blocks_y) for bx in range(meta.blocks_x)],
+        "block_y INT, block_x INT",
     ).repartition(min(n_blocks, spark.sparkContext.defaultParallelism))
 
     def gen(iterator):
@@ -125,7 +126,7 @@ def synth_raster(spark: SparkSession, meta: RasterMeta, band: int = 1, seed: int
             for _, r in pdf.iterrows():
                 h, w = meta.block_shape(int(r.block_x), int(r.block_y))
                 blk = synth_block_np(int(r.block_x), int(r.block_y), h, w, meta, seed)
-                out.append((int(r.band), int(r.block_y), int(r.block_x), h, w, blk.tobytes()))
+                out.append((1, int(r.block_y), int(r.block_x), h, w, blk.tobytes()))
             yield pd.DataFrame(out, columns=["band", "block_y", "block_x", "h", "w", "data"])
 
     return blocks.mapInPandas(gen, TILES_SCHEMA)

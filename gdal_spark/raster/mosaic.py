@@ -29,18 +29,17 @@ def _mask_np(arr: np.ndarray, src_nodata) -> np.ndarray:
 def mosaic(
     inputs: list,
     dst_meta: RasterMeta,
-    alg: str = "near",
     init: float = 0.0,
     src_nodata: float | None = None,
-    band: int = 1,
 ) -> DataFrame:
     """``inputs``: list of (tiles DataFrame, RasterMeta) in paint order
-    (later wins). Returns float64 tiles on ``dst_meta``'s grid."""
+    (later wins), band 1 of each nearest-neighbour sampled. Returns
+    float64 band-1 tiles on ``dst_meta``'s grid."""
     if not inputs:
         raise ValueError("mosaic needs at least one input")
     parts = []
     for order, (tiles, meta) in enumerate(inputs):
-        w = warp_affine(tiles, meta, dst_meta, alg=alg, init=np.nan, band=band)
+        w = warp_affine(tiles, meta, dst_meta, init=np.nan)
         parts.append(w.withColumn("__order", F.lit(order)))
     allp = parts[0]
     for p in parts[1:]:
@@ -60,7 +59,7 @@ def mosaic(
         out = np.where(np.isnan(out), init, out)
         by, bx = int(key[0]), int(key[1])
         return pd.DataFrame(
-            [(band, by, bx, h, w, out.tobytes())],
+            [(1, by, bx, h, w, out.tobytes())],
             columns=["band", "block_y", "block_x", "h", "w", "data"],
         )
 
@@ -70,7 +69,6 @@ def mosaic(
 def mosaic_np(
     inputs: list,
     dst_meta: RasterMeta,
-    alg: str = "near",
     init: float = 0.0,
     src_nodata: float | None = None,
 ) -> np.ndarray:
@@ -79,7 +77,7 @@ def mosaic_np(
     out = np.full((dst_meta.height, dst_meta.width), np.nan)
     for arr, meta in inputs:
         w = _mask_np(
-            warp_affine_np(arr, meta, dst_meta, alg=alg, init=np.nan), src_nodata
+            warp_affine_np(arr, meta, dst_meta, init=np.nan), src_nodata
         )
         valid = ~np.isnan(w)
         out[valid] = w[valid]

@@ -60,23 +60,20 @@ def pansharpen(
     spectral_meta: RasterMeta,
     pan_tiles: DataFrame,
     pan_meta: RasterMeta,
-    bands: list[int] | None = None,
     weights: list[float] | None = None,
     resample: str = "cubic",
     nodata: float | None = None,
     max_value: float = 0.0,
     out_nodata: float = 0.0,
-    pan_band: int = 1,
 ) -> DataFrame:
-    """Distributed pansharpen → float64 tiles on the pan grid, one row
-    per (band, block). ``bands`` defaults to all of 1..max(band) in the
-    spectral tiles' meta ordering; ``weights`` default to 1/k each
+    """Distributed pansharpen of every spectral band, in band order, with
+    band 1 of ``pan_tiles`` → float64 tiles on the pan grid, one row per
+    (band, block). ``weights`` default to 1/k each
     (GDALCreatePansharpenedVRT default)."""
-    if bands is None:
-        bands = [
-            int(r.band)
-            for r in spectral_tiles.select("band").distinct().orderBy("band").collect()
-        ]
+    bands = [
+        int(r.band)
+        for r in spectral_tiles.select("band").distinct().orderBy("band").collect()
+    ]
     k = len(bands)
     if weights is None:
         weights = [1.0 / k] * k
@@ -93,7 +90,7 @@ def pansharpen(
     for p in up_parts[1:]:
         up = up.unionByName(p)
     # pan rides along as band 0 (never a spectral band id)
-    pan0 = pan_tiles.filter(F.col("band") == pan_band).withColumn("band", F.lit(0))
+    pan0 = pan_tiles.filter(F.col("band") == 1).withColumn("band", F.lit(0))
     all_tiles = up.unionByName(pan0)
 
     pan_dtype = pan_meta.dtype
@@ -127,10 +124,10 @@ def pansharpen(
 def pansharpen_np(
     spectral_full: np.ndarray, spectral_meta: RasterMeta,
     pan_full: np.ndarray, pan_meta: RasterMeta,
-    weights: list[float] | None = None, resample: str = "cubic",
+    weights: list[float] | None = None,
     nodata: float | None = None, max_value: float = 0.0, out_nodata: float = 0.0,
 ) -> np.ndarray:
-    """Single-node oracle: identical upsample + Brovey math.
+    """Single-node oracle: identical cubic upsample + Brovey math.
     ``spectral_full`` is (k, H_s, W_s); returns (k, H_p, W_p)."""
     k = spectral_full.shape[0]
     if weights is None:
@@ -138,7 +135,7 @@ def pansharpen_np(
     up = np.stack(
         [
             warp_affine_np(
-                spectral_full[i], spectral_meta, pan_meta, alg=resample,
+                spectral_full[i], spectral_meta, pan_meta, alg="cubic",
                 init=(nodata if nodata is not None else 0.0),
             )
             for i in range(k)

@@ -104,11 +104,11 @@ def _ccl_np(arr: np.ndarray, connect8: bool = False) -> np.ndarray:
 
 
 def polygonize_regions(
-    tiles: DataFrame, meta: RasterMeta, connect8: bool = False, band: int = 1
+    tiles: DataFrame, meta: RasterMeta, connect8: bool = False
 ) -> DataFrame:
-    """Connected regions of equal value → one row per region:
+    """Connected regions of equal value in band 1 → one row per region:
     (region_id, value DOUBLE, n_pixels, min_x, min_y, max_x, max_y)."""
-    regions, _, _, combined = _polygonize_internal(tiles, meta, connect8, band)
+    regions, _, _, combined = _polygonize_internal(tiles, meta, connect8)
     return regions
 
 
@@ -443,16 +443,17 @@ def _cc_roots(eq: DataFrame, max_rounds: int = 50) -> DataFrame | None:
 
 
 def _polygonize_internal(
-    tiles: DataFrame, meta: RasterMeta, connect8: bool = False, band: int = 1,
+    tiles: DataFrame, meta: RasterMeta, connect8: bool = False,
     emit_segments: bool = False, exclude_values=(),
 ):
     """(regions, map_df(lab→root) or None, adjacency(root1,root2), combined)
+    of band 1.
 
     ``combined`` is the persisted kind-tagged tile-pass output — callers
     (sieve_apply, polygonize_polygons) reuse it instead of re-running the
     CCL.
     """
-    dtiles = tiles.filter(F.col("band") == band)
+    dtiles = tiles.filter(F.col("band") == 1)
     combined = dtiles.mapInPandas(
         _tile_pass(meta, connect8, emit_segments, exclude_values), _COMBINED_SCHEMA
     ).persist()
@@ -536,15 +537,13 @@ def polygonize_np(arr: np.ndarray, connect8: bool = False):
     return sorted(out)
 
 
-def sieve(
-    tiles: DataFrame, meta: RasterMeta, threshold: int,
-    connect8: bool = False, band: int = 1,
-) -> DataFrame:
-    """Sieve filter: relabel TABLE (region_id, old_value, new_value) —
-    small regions take their largest truly-adjacent neighbor's value.
+def sieve(tiles: DataFrame, meta: RasterMeta, threshold: int) -> DataFrame:
+    """Sieve filter of band 1's 4-connected regions: relabel TABLE
+    (region_id, old_value, new_value) — small regions take their largest
+    truly-adjacent neighbor's value.
     Fully distributed: adjacency from the pixel graph, decision via a
     join + window pick; ties break on (n_pixels DESC, region_id ASC)."""
-    regions, _, adj, _ = _polygonize_internal(tiles, meta, connect8, band)
+    regions, _, adj, _ = _polygonize_internal(tiles, meta)
     return _sieve_decide(regions, adj, threshold)
 
 
@@ -581,17 +580,15 @@ def _sieve_decide(regions: DataFrame, adj: DataFrame, threshold: int) -> DataFra
     )
 
 
-def sieve_apply(
-    tiles: DataFrame, meta: RasterMeta, threshold: int,
-    connect8: bool = False, band: int = 1,
-) -> DataFrame:
-    """Apply the sieve relabel to pixels → filtered tiles DataFrame.
+def sieve_apply(tiles: DataFrame, meta: RasterMeta, threshold: int) -> DataFrame:
+    """Apply the sieve relabel to band 1's pixels → filtered tiles
+    DataFrame.
 
     One polygonize pass (persisted tile output reused); the per-tile
     label→new-value table arrives via a cogrouped applyInPandas join —
     no driver-side region collect anywhere on the path.
     """
-    regions, map_df, adj, combined = _polygonize_internal(tiles, meta, connect8, band)
+    regions, map_df, adj, combined = _polygonize_internal(tiles, meta)
     relabel = _sieve_decide(regions, adj, threshold).filter(
         F.col("old_value") != F.col("new_value")
     )
@@ -625,7 +622,7 @@ def sieve_apply(
             arr = np.frombuffer(r.data, dtype=dtype).reshape(r.h, r.w)
             bx, by = int(r.block_x), int(r.block_y)
             tile_id = by * nbx + bx
-            lab = _ccl_np(arr, connect8) + (np.int64(tile_id) << 32)
+            lab = _ccl_np(arr) + (np.int64(tile_id) << 32)
             out = arr.astype(np.float64).copy()
             if new_by_lab:
                 uniq = np.unique(lab)
@@ -639,7 +636,7 @@ def sieve_apply(
             rows, columns=["band", "block_y", "block_x", "h", "w", "data"]
         )
 
-    src = tiles.filter(F.col("band") == band)
+    src = tiles.filter(F.col("band") == 1)
     return (
         src.groupBy("block_x", "block_y")
         .cogroup(tile_relabel.groupBy("block_x", "block_y"))
@@ -748,12 +745,10 @@ def _walk_rings(x0s, y0s, x1s, y1s):
 def polygonize_polygons(
     tiles: DataFrame,
     meta: RasterMeta,
-    connect8: bool = False,
-    band: int = 1,
     exclude_values=(),
     geo: bool = True,
 ) -> DataFrame:
-    """Full GDALPolygonize: one feature per connected region with its
+    """Full GDALPolygonize of band 1: one feature per 4-connected region with its
     polygon geometry — exterior ring CCW (geo axes), holes CW, collinear
     vertices dropped, rings starting at their topmost-leftmost corner
     (matching alg/polygonize_polygonizer.cpp ring output; golden:
@@ -771,14 +766,8 @@ def polygonize_polygons(
     neighbors. 8-connected ring assembly (self-touching rings) is not
     supported; use :func:`polygonize_regions` for connect8 stats.
     """
-    if connect8:
-        raise NotImplementedError(
-            "ring assembly is 4-connected only (8-connected regions can "
-            "self-touch at corners, which needs multi-ring pinch handling)"
-        )
     regions, map_df, _, combined = _polygonize_internal(
-        tiles, meta, connect8, band, emit_segments=True,
-        exclude_values=exclude_values,
+        tiles, meta, emit_segments=True, exclude_values=exclude_values,
     )
     segs = combined.filter(F.col("kind") == "g").select(
         "lab",

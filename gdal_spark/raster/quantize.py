@@ -4,14 +4,14 @@ via libtiff's tiffmedian; ``gdal_translate -of ... rgb→pct``).
 
 Palette construction replicates the reference exactly:
 
-- colors quantize to a (1<<nbits)³ cube (default nbits=5, shift 3)
+- colors quantize to a (1<<NBITS)³ cube (NBITS=5, shift 3)
 - box 0 shrinks to the observed per-channel min/max
 - repeat until ``n_colors`` boxes: take the splittable box with the
   largest pixel total (first-wins ties in list order, new boxes
   PREPENDED — gdalmediancut.cpp:1004-1044 list discipline), split along
   its longest axis (tie priority R ≥ G ≥ B) at the cumulative-median
   level (``i == first → i++``), shrink both halves to observed extent
-- palette entry = ((min + max) << shift) / 2 per channel, in final list
+- palette entry = ((min + max) << SHIFT) / 2 per channel, in final list
   order
 
 Mapping here is exact nearest palette color (squared-RGB distance,
@@ -34,12 +34,14 @@ from pyspark.sql import DataFrame, functions as F
 
 from gdal_spark.raster.model import RasterMeta, TILES_SCHEMA
 
+NBITS = 5  # bits kept per channel (the reference's default)
+L = 1 << NBITS  # quantized levels per channel
+SHIFT = 8 - NBITS
 
-def median_cut_palette(hist: np.ndarray, n_colors: int = 256, nbits: int = 5) -> np.ndarray:
-    """Median-cut over a (L,L,L) histogram (L = 1<<nbits) → (k, 3) uint8
+
+def median_cut_palette(hist: np.ndarray, n_colors: int = 256) -> np.ndarray:
+    """Median-cut over a (L,L,L) histogram (L = 1<<NBITS) → (k, 3) uint8
     palette in the reference's box-list order."""
-    L = 1 << nbits
-    shift = 8 - nbits
     hist = np.asarray(hist, dtype=np.int64).reshape(L, L, L)
     nz = np.argwhere(hist > 0)
     if not len(nz):
@@ -118,9 +120,9 @@ def median_cut_palette(hist: np.ndarray, n_colors: int = 256, nbits: int = 5) ->
     return np.array(
         [
             (
-                ((b.rmin + b.rmax) << shift) // 2,
-                ((b.gmin + b.gmax) << shift) // 2,
-                ((b.bmin + b.bmax) << shift) // 2,
+                ((b.rmin + b.rmax) << SHIFT) // 2,
+                ((b.gmin + b.gmax) << SHIFT) // 2,
+                ((b.bmin + b.bmax) << SHIFT) // 2,
             )
             for b in used
         ],
@@ -128,14 +130,12 @@ def median_cut_palette(hist: np.ndarray, n_colors: int = 256, nbits: int = 5) ->
     )
 
 
-def rgb_hist_np(r: np.ndarray, g: np.ndarray, b: np.ndarray, nbits: int = 5) -> np.ndarray:
+def rgb_hist_np(r: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Quantized (L,L,L) color histogram of 8-bit bands."""
-    L = 1 << nbits
-    shift = 8 - nbits
     code = (
-        (r.astype(np.int64) >> shift) * L * L
-        + (g.astype(np.int64) >> shift) * L
-        + (b.astype(np.int64) >> shift)
+        (r.astype(np.int64) >> SHIFT) * L * L
+        + (g.astype(np.int64) >> SHIFT) * L
+        + (b.astype(np.int64) >> SHIFT)
     )
     return np.bincount(code.ravel(), minlength=L * L * L).reshape(L, L, L)
 
@@ -152,15 +152,12 @@ def nearest_color_np(r, g, b, palette: np.ndarray) -> np.ndarray:
 
 
 def compute_median_cut_pct(
-    tiles: DataFrame, meta: RasterMeta, n_colors: int = 256, nbits: int = 5,
-    bands: tuple = (1, 2, 3),
+    tiles: DataFrame, meta: RasterMeta, n_colors: int = 256,
 ) -> np.ndarray:
-    """Distributed GDALComputeMedianCutPCT: map-side partial bincount per
-    block → one ≤(1<<nbits)³-row shuffle → driver median-cut. Returns the
-    (k, 3) uint8 palette."""
-    L = 1 << nbits
+    """Distributed GDALComputeMedianCutPCT over RGB bands 1, 2, 3: map-side
+    partial bincount per block → one ≤(1<<NBITS)³-row shuffle → driver
+    median-cut. Returns the (k, 3) uint8 palette."""
     dtype = meta.dtype
-    rb, gb, bb = bands
 
     def partial(key, pdf):
         # one group per block: the shuffle co-locates the 3 band rows
@@ -168,12 +165,12 @@ def compute_median_cut_pct(
             int(row.band): np.frombuffer(row.data, dtype=dtype)
             for row in pdf.itertuples()
         }
-        acc = rgb_hist_np(bmap[rb], bmap[gb], bmap[bb], nbits).ravel()
+        acc = rgb_hist_np(bmap[1], bmap[2], bmap[3]).ravel()
         nz = np.flatnonzero(acc)
         return pd.DataFrame({"code": nz, "cnt": acc[nz]})
 
     counts = (
-        tiles.filter(F.col("band").isin(list(bands)))
+        tiles.filter(F.col("band").isin(1, 2, 3))
         .groupBy("block_y", "block_x")
         .applyInPandas(partial, "code LONG, cnt LONG")
         .groupBy("code").agg(F.sum("cnt").alias("cnt"))
@@ -182,16 +179,13 @@ def compute_median_cut_pct(
     hist = np.zeros(L * L * L, dtype=np.int64)
     for row in counts:
         hist[int(row.code)] = int(row.cnt)
-    return median_cut_palette(hist, n_colors, nbits)
+    return median_cut_palette(hist, n_colors)
 
 
-def apply_pct(
-    tiles: DataFrame, meta: RasterMeta, palette: np.ndarray,
-    bands: tuple = (1, 2, 3), band_out: int = 1,
-) -> DataFrame:
-    """Map RGB tiles to palette indices (uint8 tiles, nearest color)."""
+def apply_pct(tiles: DataFrame, meta: RasterMeta, palette: np.ndarray) -> DataFrame:
+    """Map RGB tiles (bands 1, 2, 3) to palette indices (uint8 band-1
+    tiles, nearest color)."""
     dtype = meta.dtype
-    rb, gb, bb = bands
     P = np.asarray(palette, dtype=np.uint8)
 
     def mapb(key, pdf):
@@ -200,23 +194,23 @@ def apply_pct(
             int(row.band): np.frombuffer(row.data, dtype=dtype).reshape(h, w)
             for row in pdf.itertuples()
         }
-        idx = nearest_color_np(bmap[rb], bmap[gb], bmap[bb], P)
+        idx = nearest_color_np(bmap[1], bmap[2], bmap[3], P)
         by, bx = int(key[0]), int(key[1])
         return pd.DataFrame(
-            [(band_out, by, bx, h, w, idx.tobytes())],
+            [(1, by, bx, h, w, idx.tobytes())],
             columns=["band", "block_y", "block_x", "h", "w", "data"],
         )
 
     return (
-        tiles.filter(F.col("band").isin(list(bands)))
+        tiles.filter(F.col("band").isin(1, 2, 3))
         .groupBy("block_y", "block_x")
         .applyInPandas(mapb, TILES_SCHEMA)
     )
 
 
 def rgb_to_pct_np(
-    r: np.ndarray, g: np.ndarray, b: np.ndarray, n_colors: int = 256, nbits: int = 5,
+    r: np.ndarray, g: np.ndarray, b: np.ndarray, n_colors: int = 256,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Single-node oracle: (palette, index image)."""
-    pal = median_cut_palette(rgb_hist_np(r, g, b, nbits), n_colors, nbits)
+    pal = median_cut_palette(rgb_hist_np(r, g, b), n_colors)
     return pal, nearest_color_np(r, g, b, pal)

@@ -358,10 +358,10 @@ def rasterize_np(
     meta: RasterMeta,
     all_touched: bool = False,
     merge_add: bool = False,
-    init: float = 0.0,
 ) -> np.ndarray:
-    """Single-node oracle: burn features (pixel-space rings) in order."""
-    img = np.full((meta.height, meta.width), init, dtype=np.float64)
+    """Single-node oracle: burn features (pixel-space rings) in order
+    onto zeros."""
+    img = np.zeros((meta.height, meta.width), dtype=np.float64)
     for rings, v in zip(rings_list, values):
         visited = set() if (all_touched and merge_add) else None
         if all_touched:
@@ -384,13 +384,12 @@ def rasterize_z_np(
     values: list,
     meta: RasterMeta,
     merge_add: bool = False,
-    init: float = 0.0,
 ) -> np.ndarray:
     """Single-node BURN_VALUE_FROM=Z oracle: the same collection + burn
-    discipline as the distributed kernel over the whole raster at once
-    (fills = first-vertex Z constant; lines = interpolated variants;
-    points = own Z)."""
-    img = np.full((meta.height, meta.width), init, dtype=np.float64)
+    discipline as the distributed kernel over the whole raster at once,
+    onto zeros (fills = first-vertex Z constant; lines = interpolated
+    variants; points = own Z)."""
+    img = np.zeros((meta.height, meta.width), dtype=np.float64)
     for buf, v in zip(geoms_wkb, values):
         geom = wkb.parse_wkb_z(bytes(buf))
         polys = ops._polygons_of(geom)

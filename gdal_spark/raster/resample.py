@@ -52,12 +52,13 @@ def cubic_spline_kernel(x):
     return (a - 4.0 * b + 6.0 * c - 4.0 * d) / 6.0
 
 
-def lanczos_kernel(x, radius: int = 3):
+def lanczos_kernel(x):
+    """Lanczos-3: sinc(x)·sinc(x/3) on |x| < 3."""
     ax = np.abs(x)
     out = np.zeros_like(np.asarray(x, dtype=np.float64))
-    nz = (ax < radius) & (ax > 1e-12)
+    nz = (ax < 3) & (ax > 1e-12)
     xi = np.pi * np.asarray(x, dtype=np.float64)[nz]
-    out[nz] = radius * np.sin(xi) * np.sin(xi / radius) / (xi * xi)
+    out[nz] = 3 * np.sin(xi) * np.sin(xi / 3) / (xi * xi)
     out[ax <= 1e-12] = 1.0
     return out
 
@@ -147,17 +148,16 @@ def interpolate_at_points(
     meta: RasterMeta,
     points: DataFrame,
     alg: str = "bilinear",
-    band: int = 1,
 ) -> DataFrame:
-    """Distributed fractional-pixel sampling of ``(pid, px, py)`` point
-    rows: (pid, value) per point.
+    """Distributed fractional-pixel sampling of band 1 at ``(pid, px, py)``
+    point rows: (pid, value) per point.
 
     The raster→vector value-extraction core: points join their containing
     halo-padded block (equi-join on block id, broadcast if small) and each
     block samples its points in one vectorized call.
     """
     halo = 2
-    padded = padded_blocks(tiles.filter(F.col("band") == band), meta, halo)
+    padded = padded_blocks(tiles.filter(F.col("band") == 1), meta, halo)
     pts = points.select("pid", "px", "py").withColumn(
         "block_x",
         F.least(

@@ -34,12 +34,13 @@ from gdal_spark import tiling
 from gdal_spark.raster.model import RasterMeta
 from gdal_spark.raster.warp import warp_crs
 
+TILE_SIZE = 256  # pixels per XYZ tile side
 
-def zoom_window(src_meta: RasterMeta, src_crs, zoom: int,
-                tile_size: int = 256) -> tuple[RasterMeta, int, int]:
+
+def zoom_window(src_meta: RasterMeta, src_crs, zoom: int) -> tuple[RasterMeta, int, int]:
     """Tile-grid-aligned EPSG:3857 window covering the source at this
     zoom. Returns (dst_meta, tile_x0, tile_y0) with dst blocks == XYZ
-    tiles."""
+    tiles of ``TILE_SIZE`` pixels."""
     from gdal_spark.geometry import crs as _crs
 
     tf = _crs.transformer(src_crs, 3857)
@@ -56,13 +57,13 @@ def zoom_window(src_meta: RasterMeta, src_crs, zoom: int,
     tx1 = int(np.clip(np.floor((mx.max() + tiling.ORIGIN) / span), 0, n - 1))
     ty0 = int(np.clip(np.floor((tiling.ORIGIN - my.max()) / span), 0, n - 1))
     ty1 = int(np.clip(np.floor((tiling.ORIGIN - my.min()) / span), 0, n - 1))
-    res = span / tile_size
+    res = span / TILE_SIZE
     dst_meta = RasterMeta(
-        width=(tx1 - tx0 + 1) * tile_size,
-        height=(ty1 - ty0 + 1) * tile_size,
+        width=(tx1 - tx0 + 1) * TILE_SIZE,
+        height=(ty1 - ty0 + 1) * TILE_SIZE,
         dtype=src_meta.dtype,
-        block_w=tile_size,
-        block_h=tile_size,
+        block_w=TILE_SIZE,
+        block_h=TILE_SIZE,
         gt=(-tiling.ORIGIN + tx0 * span, res, 0.0,
             tiling.ORIGIN - ty0 * span, 0.0, -res),
         nodata=src_meta.nodata,
@@ -77,19 +78,15 @@ def raster_tile_pyramid(
     src_crs,
     out_dir: str,
     zooms,
-    tile_size: int = 256,
-    alg: str = "near",
-    init: float = 0.0,
-    band: int = 1,
-    compress: str | None = "deflate",
     tile_format: str = "tif",
 ) -> DataFrame:
     """Write the ``{out_dir}/{z}/{x}/{y}.{tile_format}`` tree for each
     zoom in ``zooms`` (``tif``, ``png`` or ``jpg`` — PNG is the reference CLI's
-    default; uint8/uint16 only). Returns the written-tile summary
-    (z, x, y, path) — one DataFrame unioned over levels; each level is an
-    independent distributed warp whose blocks land directly in tile
-    files."""
+    default; uint8/uint16 only) from band 1, nearest-neighbour sampled,
+    0 outside the source, GeoTIFF tiles deflate-compressed. Returns the
+    written-tile summary (z, x, y, path) — one DataFrame unioned over
+    levels; each level is an independent distributed warp whose blocks
+    land directly in tile files."""
     from gdal_spark.sources.geotiff import encode_geotiff
     from gdal_spark.sources.jpeg import encode_jpeg
     from gdal_spark.sources.png import encode_png
@@ -105,11 +102,10 @@ def raster_tile_pyramid(
 
     out = None
     for zoom in zooms:
-        dst_meta, tx0, ty0 = zoom_window(src_meta, src_crs, zoom, tile_size)
-        warped = warp_crs(src_tiles, src_meta, dst_meta, src_crs, 3857,
-                          alg=alg, init=init, band=band)
+        dst_meta, tx0, ty0 = zoom_window(src_meta, src_crs, zoom)
+        warped = warp_crs(src_tiles, src_meta, dst_meta, src_crs, 3857)
         span = tiling.WORLD_SPAN / (1 << zoom)
-        res = span / tile_size
+        res = span / TILE_SIZE
 
         def emit(iterator, zoom=zoom, dst_meta=dst_meta, tx0=tx0, ty0=ty0,
                  span=span, res=res):
@@ -145,7 +141,7 @@ def raster_tile_pyramid(
                         elif tile_format == "jpg":
                             f.write(encode_jpeg(arr, quality=90))
                         else:
-                            f.write(encode_geotiff({int(b): arr}, tmeta, compress))
+                            f.write(encode_geotiff({int(b): arr}, tmeta, "deflate"))
                     rows.append((zoom, tx, ty, path))
                 yield pd.DataFrame(rows, columns=["z", "x", "y", "path"])
 

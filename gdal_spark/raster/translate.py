@@ -37,10 +37,9 @@ def translate(
     out_size: tuple | None = None,     # (width, height)
     out_dtype: str | None = None,
     scale: tuple | None = None,        # (src0, src1, dst0, dst1)
-    resample: str = "near",
-    band: int = 1,
 ) -> tuple[DataFrame, RasterMeta]:
-    """Crop/resize/cast/scale. Returns (tiles, out_meta)."""
+    """Crop/resize/cast/scale of band 1, nearest-neighbour sampled.
+    Returns (tiles, out_meta)."""
     xoff, yoff, xsize, ysize = src_win or (0, 0, meta.width, meta.height)
     ow, oh = out_size or (xsize, ysize)
     g = meta.gt
@@ -58,7 +57,7 @@ def translate(
     warped = warp_affine(tiles, meta, RasterMeta(
         width=ow, height=oh, dtype="float64", block_w=meta.block_w,
         block_h=meta.block_h, gt=dst_gt,
-    ), alg=resample, band=band)
+    ))
 
     if scale:
         s0, s1, d0, d1 = scale
@@ -81,7 +80,7 @@ def translate(
 
 def translate_np(
     src: np.ndarray, meta: RasterMeta, src_win=None, out_size=None,
-    out_dtype=None, scale=None, resample="near",
+    out_dtype=None, scale=None,
 ) -> np.ndarray:
     """Single-node oracle via the warp oracle + same cast/scale."""
     from gdal_spark.raster.warp import warp_affine_np
@@ -96,7 +95,7 @@ def translate_np(
     dst_gt = (ox, g[1] * fx, g[2] * fy, oy, g[4] * fx, g[5] * fy)
     dst_meta = RasterMeta(width=ow, height=oh, dtype="float64",
                           block_w=meta.block_w, block_h=meta.block_h, gt=dst_gt)
-    arr = warp_affine_np(src, meta, dst_meta, alg=resample)
+    arr = warp_affine_np(src, meta, dst_meta)
     if scale:
         s0, s1, d0, d1 = scale
         arr = (arr - s0) * (d1 - d0) / (s1 - s0) + d0
@@ -108,10 +107,9 @@ def raster_calc(
     meta: RasterMeta,
     fn,
     out_dtype: str = "float64",
-    band: int = 1,
 ) -> DataFrame:
     """Per-pixel algebra over aligned bands: fn(dict[name → ndarray]) →
-    ndarray. Bands equi-join on (block_y, block_x) — co-partitioned, one
+    ndarray, written as band 1. Bands equi-join on (block_y, block_x) — co-partitioned, one
     shuffle, no Python until the per-block NumPy call."""
     names = list(band_tiles)
     joined = None
@@ -131,7 +129,7 @@ def raster_calc(
                     for n in names
                 }
                 out = _cast_np(np.asarray(fn(arrs), dtype=np.float64), out_dtype)
-                rows.append((band, int(r.block_y), int(r.block_x), int(r.h), int(r.w), out.tobytes()))
+                rows.append((1, int(r.block_y), int(r.block_x), int(r.h), int(r.w), out.tobytes()))
             yield pd.DataFrame(rows, columns=["band", "block_y", "block_x", "h", "w", "data"])
 
     return joined.mapInPandas(compute, TILES_SCHEMA)
@@ -153,9 +151,10 @@ def reclassify_np(arr: np.ndarray, mappings, default=None) -> np.ndarray:
 
 
 def reclassify(
-    tiles: DataFrame, meta: RasterMeta, mappings, default=None, band: int = 1
+    tiles: DataFrame, meta: RasterMeta, mappings, default=None
 ) -> DataFrame:
-    """Distributed reclassify: pure per-tile NumPy, no halo, no shuffle."""
+    """Distributed reclassify of band 1: pure per-tile NumPy, no halo, no
+    shuffle."""
     dtype = meta.dtype
 
     def go(iterator):
@@ -170,4 +169,4 @@ def reclassify(
                 rows, columns=["band", "block_y", "block_x", "h", "w", "data"]
             )
 
-    return tiles.filter(F.col("band") == band).mapInPandas(go, TILES_SCHEMA)
+    return tiles.filter(F.col("band") == 1).mapInPandas(go, TILES_SCHEMA)

@@ -76,7 +76,7 @@ def _zcalc(mode: str):
 def _block_sweep(
     h: np.ndarray, u0: int, v0: int,
     left_this_col: np.ndarray, last_row: np.ndarray, corner: float,
-    target: float, visible: float, invisible: float, zcalc,
+    target: float, visible: float, zcalc,
     r2max: float = np.inf, resx: float = 1.0, resy: float = 1.0,
     out_of_range: float = 0.0,
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -90,8 +90,9 @@ def _block_sweep(
     (v0=1 → the first-line chain).
     ``corner``: updated value at (u0−1, v0−1).
 
-    Returns (result block, updated heights block); also the inputs for
-    the neighboring blocks are slices of the updated heights.
+    Returns (result block: ``visible`` or 0, updated heights block); also
+    the inputs for the neighboring blocks are slices of the updated
+    heights.
     """
     V, U = h.shape
     res = np.empty((V, U), dtype=np.float64)
@@ -116,7 +117,7 @@ def _block_sweep(
                 z = cell if u == 1 else last_diag * u / (u - 1)
             else:
                 z = zcalc(u, v, this_prev, lastv, last_diag)
-            res[vi, ui] = invisible if cell + target < z else visible
+            res[vi, ui] = 0.0 if cell + target < z else visible
             cell = max(cell, z)
             hh[vi, ui] = cell
             this_prev = cell
@@ -125,12 +126,13 @@ def _block_sweep(
     return res, hh
 
 
-def _line_chain(vals: np.ndarray, target: float, visible: float, invisible: float,
+def _line_chain(vals: np.ndarray, target: float, visible: float,
                 res_unit: float = 1.0, rmax: float = np.inf,
                 out_of_range: float = 0.0):
     """1-D CalcHeightLine chain for the observer row/column: element i is
     distance i+1 from the observer (adjacent cell first). Returns
-    (result, updated). Distances past ``rmax`` emit ``out_of_range``."""
+    (result: ``visible`` or 0, updated). Distances past ``rmax`` emit
+    ``out_of_range``."""
     v = vals.astype(np.float64).copy()
     res = np.empty(len(v), dtype=np.float64)
     if len(v) == 0:
@@ -142,41 +144,42 @@ def _line_chain(vals: np.ndarray, target: float, visible: float, invisible: floa
             res[i:] = out_of_range
             break
         z = v[i - 1] * d / (d - 1)
-        res[i] = invisible if v[i] + target < z else visible
+        res[i] = 0.0 if v[i] + target < z else visible
         v[i] = max(v[i], z)
     return res, v
 
 
 def viewshed_np(
     dem: np.ndarray, nx: int, ny: int, observer_height: float = 2.0,
-    target_height: float = 0.0, visible: float = 255.0, invisible: float = 0.0,
+    target_height: float = 0.0, visible: float = 255.0,
     cell_mode: str = "edge", max_dist: float | None = None,
     out_of_range: float = 0.0, resx: float = 1.0, resy: float = 1.0,
 ) -> np.ndarray:
-    """Single-node oracle: exact reference recurrence (Normal mode).
-    ``max_dist`` (geo units via resx/resy) bounds the analysis — the
-    reference's ``-md`` option; cells beyond emit ``out_of_range``."""
+    """Single-node oracle: exact reference recurrence (Normal mode);
+    hidden cells are 0. ``max_dist`` (geo units via resx/resy) bounds the
+    analysis — the reference's ``-md`` option; cells beyond emit
+    ``out_of_range``."""
     H, W = dem.shape
     zcalc = _zcalc(cell_mode)
     rmax = np.inf if max_dist is None else float(max_dist)
     r2max = rmax * rmax if np.isfinite(rmax) else np.inf
     zobs = observer_height + float(dem[ny, nx])
     h = dem.astype(np.float64) - zobs
-    res = np.full((H, W), invisible, dtype=np.float64)
+    res = np.zeros((H, W), dtype=np.float64)
     res[ny, nx] = visible
 
     # first line: two 1-D chains
     left0 = h[ny, :nx][::-1]          # distances 1..nx
     right0 = h[ny, nx + 1:]           # distances 1..W-1-nx
-    rl, ul = _line_chain(left0, target_height, visible, invisible, abs(resx), rmax, out_of_range)
-    rr, ur = _line_chain(right0, target_height, visible, invisible, abs(resx), rmax, out_of_range)
+    rl, ul = _line_chain(left0, target_height, visible, abs(resx), rmax, out_of_range)
+    rr, ur = _line_chain(right0, target_height, visible, abs(resx), rmax, out_of_range)
     res[ny, :nx] = rl[::-1]
     res[ny, nx + 1:] = rr
     # center column: two 1-D chains
     up0 = h[:ny, nx][::-1]
     dn0 = h[ny + 1:, nx]
-    rcu, ucu = _line_chain(up0, target_height, visible, invisible, abs(resy), rmax, out_of_range)
-    rcd, ucd = _line_chain(dn0, target_height, visible, invisible, abs(resy), rmax, out_of_range)
+    rcu, ucu = _line_chain(up0, target_height, visible, abs(resy), rmax, out_of_range)
+    rcd, ucd = _line_chain(dn0, target_height, visible, abs(resy), rmax, out_of_range)
     res[:ny, nx] = rcu[::-1]
     res[ny + 1:, nx] = rcd
 
@@ -190,7 +193,7 @@ def viewshed_np(
         first = (ul if hd < 0 else ur)[: len(cols)]
         center = (ucu if vd < 0 else ucd)[: len(rows)]
         rq, _ = _block_sweep(
-            q, 1, 1, center, first, 0.0, target_height, visible, invisible, zcalc,
+            q, 1, 1, center, first, 0.0, target_height, visible, zcalc,
             r2max, abs(resx), abs(resy), out_of_range,
         )
         res[np.ix_(rows, cols)] = rq
@@ -198,21 +201,20 @@ def viewshed_np(
 
 
 def _center_chains(tiles: DataFrame, meta: RasterMeta, nx: int, ny: int,
-                   observer_height: float, target: float, visible: float,
-                   invisible: float, band: int, rmax: float = np.inf,
+                   observer_height: float, visible: float, rmax: float = np.inf,
                    out_of_range: float = 0.0):
-    """Collect the observer row and column (two O(W)+O(H) vectors — the
-    algorithm's inherent sequential critical path) and run the 1-D
+    """Collect band 1's observer row and column (two O(W)+O(H) vectors —
+    the algorithm's inherent sequential critical path) and run the 1-D
     chains driver-side. Everything 2-D stays distributed."""
     bh, bw = meta.block_h, meta.block_w
     oby, obx = ny // bh, nx // bw
     dtype = meta.dtype
     rows = (
-        tiles.filter((F.col("band") == band) & (F.col("block_y") == oby))
+        tiles.filter((F.col("band") == 1) & (F.col("block_y") == oby))
         .select("block_x", "h", "w", "data").collect()
     )
     cols = (
-        tiles.filter((F.col("band") == band) & (F.col("block_x") == obx))
+        tiles.filter((F.col("band") == 1) & (F.col("block_x") == obx))
         .select("block_y", "h", "w", "data").collect()
     )
     row_vals = np.zeros(meta.width, dtype=np.float64)
@@ -227,10 +229,10 @@ def _center_chains(tiles: DataFrame, meta: RasterMeta, nx: int, ny: int,
     row_vals = row_vals - zobs
     col_vals = col_vals - zobs
     rx, ry = abs(meta.gt[1]), abs(meta.gt[5])
-    rl, ul = _line_chain(row_vals[:nx][::-1], target, visible, invisible, rx, rmax, out_of_range)
-    rr, ur = _line_chain(row_vals[nx + 1:], target, visible, invisible, rx, rmax, out_of_range)
-    rcu, ucu = _line_chain(col_vals[:ny][::-1], target, visible, invisible, ry, rmax, out_of_range)
-    rcd, ucd = _line_chain(col_vals[ny + 1:], target, visible, invisible, ry, rmax, out_of_range)
+    rl, ul = _line_chain(row_vals[:nx][::-1], 0.0, visible, rx, rmax, out_of_range)
+    rr, ur = _line_chain(row_vals[nx + 1:], 0.0, visible, rx, rmax, out_of_range)
+    rcu, ucu = _line_chain(col_vals[:ny][::-1], 0.0, visible, ry, rmax, out_of_range)
+    rcd, ucd = _line_chain(col_vals[ny + 1:], 0.0, visible, ry, rmax, out_of_range)
     return zobs, (rl, rr, rcu, rcd), {"L": ul, "R": ur, "U": ucu, "D": ucd}
 
 
@@ -242,12 +244,11 @@ _VS_SCHEMA = (
 
 def viewshed(
     tiles: DataFrame, meta: RasterMeta, nx: int, ny: int,
-    observer_height: float = 2.0, target_height: float = 0.0,
-    visible: float = 255.0, invisible: float = 0.0,
-    cell_mode: str = "edge", band: int = 1,
+    observer_height: float = 2.0, visible: float = 255.0,
     max_dist: float | None = None, out_of_range: float = 0.0,
 ) -> DataFrame:
-    """Distributed viewshed → float64 tiles (visible/invisible values).
+    """Distributed viewshed of band 1 → float64 tiles (``visible``, or 0
+    where hidden; target height 0, CellMode::Edge).
 
     Block wavefront per quadrant (module docstring): round k processes
     the anti-diagonal bi+bj = k of each quadrant in parallel; boundary
@@ -262,13 +263,12 @@ def viewshed(
         )
     bh, bw = meta.block_h, meta.block_w
     dtype = meta.dtype
-    zcalc = _zcalc(cell_mode)
+    zcalc = _zcalc("edge")
     resx, resy = abs(meta.gt[1]), abs(meta.gt[5])
     rmax = np.inf if max_dist is None else float(max_dist)
     r2max = rmax * rmax if np.isfinite(rmax) else np.inf
     zobs, (rl, rr, rcu, rcd), chains = _center_chains(
-        tiles, meta, nx, ny, observer_height, target_height, visible, invisible,
-        band, rmax, out_of_range,
+        tiles, meta, nx, ny, observer_height, visible, rmax, out_of_range,
     )
 
     # quadrant geometry: quad id -> (vd, hd)
@@ -282,7 +282,7 @@ def viewshed(
         for pdf in iterator:
             out = []
             for r in pdf.itertuples():
-                if int(r.band) != band:
+                if int(r.band) != 1:
                     continue
                 a = np.frombuffer(r.data, dtype=dtype).reshape(r.h, r.w).astype(np.float64) - zobs
                 x0, y0 = r.block_x * bw, r.block_y * bh
@@ -363,7 +363,7 @@ def viewshed(
         else:
             corner = float(np.frombuffer(d["C"].data, dtype=np.float64)[0])
         res, hh = _block_sweep(
-            h, u0, v0, left, last, corner, target_height, visible, invisible, zcalc,
+            h, u0, v0, left, last, corner, 0.0, visible, zcalc,
             r2max, resx, resy, out_of_range,
         )
         rows = [
@@ -391,11 +391,11 @@ def viewshed(
         bounds = nb if bounds is None else bounds.unionByName(nb)
 
     # assemble global tiles: quadrant results + the center row/col chains
-    res_row = np.full(W, invisible)
+    res_row = np.zeros(W)
     res_row[:nx] = rl[::-1]
     res_row[nx + 1:] = rr
     res_row[nx] = visible
-    res_col = np.full(H, invisible)
+    res_col = np.zeros(H)
     res_col[:ny] = rcu[::-1]
     res_col[ny + 1:] = rcd
     res_col[ny] = visible
@@ -420,7 +420,7 @@ def viewshed(
         y0, x0 = by * bh, bx * bw
         hgt = min(bh, H - y0)
         wid = min(bw, W - x0)
-        arr = np.full((hgt, wid), invisible, dtype=np.float64)
+        arr = np.zeros((hgt, wid), dtype=np.float64)
         if np.isfinite(r2max):
             # default fill for cells outside max_dist (covers pruned blocks)
             gx = (np.arange(x0, x0 + wid) - nx) * resx
@@ -445,7 +445,7 @@ def viewshed(
         if bx == obx:
             arr[:, nx - x0] = res_col[y0 : y0 + hgt]
         return pd.DataFrame(
-            [(band, by, bx, hgt, wid, arr.tobytes())],
+            [(1, by, bx, hgt, wid, arr.tobytes())],
             columns=["band", "block_y", "block_x", "h", "w", "data"],
         )
 
@@ -459,7 +459,7 @@ def viewshed(
     # every block must emit a tile even with no quadrant piece (center
     # row/col blocks at raster edges): left-join from the full block set
     keys = (
-        tiles.filter(F.col("band") == band)
+        tiles.filter(F.col("band") == 1)
         .select(F.col("block_y").alias("gby"), F.col("block_x").alias("gbx"))
         .distinct()
     )
@@ -482,8 +482,6 @@ def _observer_grid(W: int, H: int, spacing: int):
 
 def viewshed_cumulative_np(
     dem: np.ndarray, spacing: int, observer_height: float = 2.0,
-    target_height: float = 0.0, cell_mode: str = "edge",
-    max_dist: float | None = None, resx: float = 1.0, resy: float = 1.0,
 ) -> np.ndarray:
     """Single-node oracle: per-observer Normal viewsheds with
     visibleVal=1 (cumulative.cpp:46-47), uint32 rollup
@@ -492,11 +490,7 @@ def viewshed_cumulative_np(
     H, W = dem.shape
     acc = np.zeros((H, W), dtype=np.uint32)
     for (x, y) in _observer_grid(W, H, spacing):
-        acc += viewshed_np(
-            dem, x, y, observer_height, target_height, visible=1.0,
-            invisible=0.0, cell_mode=cell_mode, max_dist=max_dist,
-            out_of_range=0.0, resx=resx, resy=resy,
-        ).astype(np.uint32)
+        acc += viewshed_np(dem, x, y, observer_height, visible=1.0).astype(np.uint32)
     m = int(acc.max())
     if m == 0:
         return acc.astype(np.float64)
@@ -506,8 +500,7 @@ def viewshed_cumulative_np(
 
 def viewshed_cumulative(
     tiles: DataFrame, meta: RasterMeta, spacing: int,
-    observer_height: float = 2.0, target_height: float = 0.0,
-    cell_mode: str = "edge", band: int = 1, max_dist: float | None = None,
+    observer_height: float = 2.0,
 ) -> DataFrame:
     """Distributed cumulative viewshed: one per-observer wavefront
     viewshed per grid location (embarrassingly parallel across
@@ -520,11 +513,7 @@ def viewshed_cumulative(
     agg over per-block maxima; no pixel bytes reach the driver."""
     acc = None
     for (x, y) in _observer_grid(meta.width, meta.height, int(spacing)):
-        v = viewshed(
-            tiles, meta, x, y, observer_height, target_height,
-            visible=1.0, invisible=0.0, cell_mode=cell_mode, band=band,
-            max_dist=max_dist, out_of_range=0.0,
-        )
+        v = viewshed(tiles, meta, x, y, observer_height, visible=1.0)
         acc = v if acc is None else acc.unionByName(v)
 
     def rollup(key, pdf):

@@ -691,20 +691,13 @@ def warp_crs(
     src_crs: str | int,
     dst_crs: str | int,
     alg: str = "near",
-    init: float = 0.0,
-    band: int = 1,
-    cutline=None,
-    cutline_blend_dist: float = 0.0,
 ) -> DataFrame:
     """gdalwarp with reprojection: dst px → dst geo → (dst_crs→src_crs via
     geometry/crs.py Krüger transforms) → src geo → src px."""
     from gdal_spark.geometry import crs as _crs
 
     tf = _crs.transformer(dst_crs, src_crs)
-    return warp_with_transform(
-        src_tiles, src_meta, dst_meta, tf, alg, init, band, cutline=cutline,
-        cutline_blend_dist=cutline_blend_dist,
-    )
+    return warp_with_transform(src_tiles, src_meta, dst_meta, tf, alg)
 
 
 def warp_with_transform(
@@ -714,9 +707,6 @@ def warp_with_transform(
     tf,
     alg: str = "near",
     init: float = 0.0,
-    band: int = 1,
-    cutline=None,
-    cutline_blend_dist: float = 0.0,
 ) -> DataFrame:
     """Generic non-affine warp: ``tf`` is any vectorized geo→geo mapping
     (dst CRS geo → src CRS geo) slotted between the two geotransforms —
@@ -790,10 +780,7 @@ def warp_with_transform(
         .withColumn("block_y", F.explode(sby_arr))
         .select("dbx", "dby", "block_x", "block_y", "sx0", "sy0", "sx1", "sy1")
     )
-    return _gather_and_warp(
-        need, src_tiles, src_meta, dst_meta, alg, init, band, tf=tf,
-        cutline=cutline, cutline_blend_dist=cutline_blend_dist,
-    )
+    return _gather_and_warp(need, src_tiles, src_meta, dst_meta, alg, init, 1, tf=tf)
 
 
 def warp_crs_np(
@@ -803,13 +790,12 @@ def warp_crs_np(
     src_crs: str | int,
     dst_crs: str | int,
     alg: str = "near",
-    init: float = 0.0,
 ) -> np.ndarray:
     """Single-node oracle with the identical transform + sampling path."""
     from gdal_spark.geometry import crs as _crs
 
     tf = _crs.transformer(dst_crs, src_crs)
-    return warp_with_transform_np(src, src_meta, dst_meta, tf, alg, init)
+    return warp_with_transform_np(src, src_meta, dst_meta, tf, alg)
 
 
 def warp_with_transform_np(
@@ -819,8 +805,6 @@ def warp_with_transform_np(
     tf,
     alg: str = "near",
     init: float = 0.0,
-    cutline=None,
-    cutline_blend_dist: float = 0.0,
 ) -> np.ndarray:
     """Single-node oracle for warp_with_transform."""
     to_src = _make_to_src_px(dst_meta, src_meta, tf)
@@ -837,11 +821,6 @@ def warp_with_transform_np(
         res = np.full(h * w, init)
         res[in_src] = vals[in_src]
         out = res.reshape(h, w)
-    if cutline is not None:
-        out = _apply_cutline_np(
-            np.ascontiguousarray(out), _cutline_polys_px(cutline, src_meta),
-            to_src, src_meta, 0, 0, init, blend_dist=cutline_blend_dist,
-        )
     return out
 
 
@@ -880,9 +859,6 @@ def tap_meta(
     src_meta: RasterMeta,
     xres: float,
     yres: float,
-    dtype: str | None = None,
-    block_w: int = 256,
-    block_h: int = 256,
 ) -> RasterMeta:
     """``gdalwarp -tap -tr xres yres`` (apps/gdalwarp_lib.cpp, the
     TARGET_ALIGNED_PIXELS extent snap): expand the source extent outward
@@ -890,7 +866,8 @@ def tap_meta(
     res grid — mosaicking neighbors then line up exactly. Axis-aligned
     GeoTransforms only (the reference applies -tap to the suggested
     axis-aligned output too). Returns the destination RasterMeta for the
-    existing (gated) warp operators."""
+    existing (gated) warp operators, in the source's dtype and 256²
+    blocks."""
     g = src_meta.gt
     if g[2] != 0.0 or g[4] != 0.0:
         raise ValueError("tap_meta wants an axis-aligned GeoTransform")
@@ -908,8 +885,7 @@ def tap_meta(
     w = int((maxx - minx + xres / 2) / xres)
     h = int((maxy - miny + yres / 2) / yres)
     return RasterMeta(
-        width=w, height=h, dtype=dtype or src_meta.dtype,
-        block_w=block_w, block_h=block_h,
+        width=w, height=h, dtype=src_meta.dtype, block_w=256, block_h=256,
         gt=(float(minx), float(xres), 0.0, float(maxy), 0.0, -float(yres)),
         nodata=src_meta.nodata, bands=src_meta.bands,
     )

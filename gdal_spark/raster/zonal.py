@@ -25,15 +25,14 @@ def zonal_stats(
     zone_tiles: DataFrame,
     meta: RasterMeta,
     zone_meta: RasterMeta | None = None,
-    band: int = 1,
 ) -> DataFrame:
-    """Per-zone statistics of the value raster over co-gridded zone
-    raster: (zone, n, sum_e6, min, max, mean, std)."""
+    """Per-zone statistics of band 1 of the value raster over band 1 of a
+    co-gridded zone raster: (zone, n, sum_e6, min, max, mean, std)."""
     zone_meta = zone_meta or meta
-    v = value_tiles.filter(F.col("band") == band).select(
+    v = value_tiles.filter(F.col("band") == 1).select(
         "block_y", "block_x", "h", "w", F.col("data").alias("vdata")
     )
-    z = zone_tiles.filter(F.col("band") == band).select(
+    z = zone_tiles.filter(F.col("band") == 1).select(
         "block_y", "block_x", F.col("data").alias("zdata")
     )
     joined = v.join(z, ["block_y", "block_x"])
@@ -89,28 +88,30 @@ def zonal_stats_np(values: np.ndarray, zones: np.ndarray) -> dict:
     return out
 
 
-def band_histogram(
-    tiles: DataFrame, meta: RasterMeta, n_bins: int = 16,
-    vmin: float = 0.0, vmax: float = 256.0, band: int = 1,
-) -> DataFrame:
-    """GetHistogram semantics: equal-width bins over [vmin, vmax); values
-    outside clamp into the end bins (GDAL's bApproxOK=FALSE inclusion).
-    Output (bin, count) — per-tile bincount partials + one merge."""
+HIST_BINS = 16  # equal-width histogram bins over [0, 256)
+
+
+def band_histogram(tiles: DataFrame, meta: RasterMeta) -> DataFrame:
+    """GetHistogram semantics on band 1: ``HIST_BINS`` equal-width bins
+    over [0, 256); values outside clamp into the end bins (GDAL's
+    bApproxOK=FALSE inclusion). Output (bin, count) — per-tile bincount
+    partials + one merge."""
     dtype = meta.dtype
-    width = (vmax - vmin) / n_bins
+    n_bins = HIST_BINS
+    width = 256.0 / n_bins
 
     def partial(iterator):
         for pdf in iterator:
             rows = []
             for _, r in pdf.iterrows():
                 arr = np.frombuffer(r.data, dtype=dtype).reshape(r.h, r.w).astype(np.float64)
-                idx = np.clip(((arr - vmin) / width).astype(np.int64), 0, n_bins - 1)
+                idx = np.clip((arr / width).astype(np.int64), 0, n_bins - 1)
                 c = np.bincount(idx.ravel(), minlength=n_bins)
                 rows.extend((int(b), int(c[b])) for b in range(n_bins))
             yield pd.DataFrame(rows, columns=["bin", "cnt"])
 
     return (
-        tiles.filter(F.col("band") == band)
+        tiles.filter(F.col("band") == 1)
         .mapInPandas(partial, "bin INT, cnt LONG")
         .groupBy("bin")
         .agg(F.sum("cnt").alias("count"))

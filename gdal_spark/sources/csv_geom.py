@@ -9,7 +9,7 @@ driver's job here is only the geometry derivation:
   vectorized 21-byte point WKB writer.
 
 Column-name detection mirrors the reference's default possible-name
-lists; explicit ``wkt_col``/``x_col``/``y_col`` override."""
+lists."""
 
 from __future__ import annotations
 
@@ -48,47 +48,25 @@ def _xy_to_point_udf(x: pd.Series, y: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def read_csv_geometry(
-    spark: SparkSession,
-    path: str,
-    wkt_col: str | None = None,
-    x_col: str | None = None,
-    y_col: str | None = None,
-    header: bool = True,
-    infer_schema: bool = True,
-    **csv_options,
-) -> DataFrame:
-    """Read a CSV layer with geometry. The scan itself is Spark's native
-    (splittable) csv reader; the detected WKT column is replaced by a
-    ``geometry`` WKB column, or X/Y columns produce point WKBs."""
-    rd = (
-        spark.read.option("header", str(header).lower())
-        .option("inferSchema", str(infer_schema).lower())
-    )
-    for k, v in csv_options.items():
-        rd = rd.option(k, v)
-    df = rd.csv(path)
+def read_csv_geometry(spark: SparkSession, path: str) -> DataFrame:
+    """Read a CSV layer (header row, inferred schema) with geometry. The
+    scan itself is Spark's native (splittable) csv reader; the first
+    column named like a WKT geometry is replaced by a ``geometry`` WKB
+    column, else the first X-like and Y-like columns produce point
+    WKBs."""
+    df = spark.read.option("header", "true").option("inferSchema", "true").csv(path)
     lower = {c.lower(): c for c in df.columns}
-    if wkt_col is None and x_col is None:
-        for cand in _WKT_NAMES:
-            if cand in lower:
-                wkt_col = lower[cand]
-                break
-    if wkt_col is None and x_col is None:
-        xs = [lower[c] for c in _X_NAMES if c in lower]
-        ys = [lower[c] for c in _Y_NAMES if c in lower]
-        if xs and ys:
-            x_col, y_col = xs[0], ys[0]
-    if wkt_col is not None:
-        return df.withColumn("geometry", _wkt_to_wkb_udf(F.col(wkt_col).cast("string"))).drop(
-            *( [wkt_col] if wkt_col != "geometry" else [] )
-        )
-    if x_col is not None and y_col is not None:
+    for cand in _WKT_NAMES:
+        if cand in lower:
+            wkt_col = lower[cand]
+            return df.withColumn(
+                "geometry", _wkt_to_wkb_udf(F.col(wkt_col).cast("string"))
+            ).drop(*([wkt_col] if wkt_col != "geometry" else []))
+    xs = [lower[c] for c in _X_NAMES if c in lower]
+    ys = [lower[c] for c in _Y_NAMES if c in lower]
+    if xs and ys:
         return df.withColumn(
             "geometry",
-            _xy_to_point_udf(F.col(x_col).cast("double"), F.col(y_col).cast("double")),
+            _xy_to_point_udf(F.col(xs[0]).cast("double"), F.col(ys[0]).cast("double")),
         )
-    raise ValueError(
-        "no geometry column found: pass wkt_col= or x_col=/y_col= "
-        f"(columns: {df.columns})"
-    )
+    raise ValueError(f"no geometry column found (columns: {df.columns})")

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.raster.model import TILES_SCHEMA, RasterMeta
 
+WRITE_MAX_ROWS = 200_000  # write_geotiff collects at most this many tile rows
+
 _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8, 11: 4, 12: 8}
 _TYPE_FMT = {1: "B", 3: "H", 4: "I", 6: "b", 8: "h", 9: "i", 11: "f", 12: "d"}
 
@@ -398,17 +400,16 @@ def write_geotiff(
     meta: RasterMeta,
     path: str,
     compress: str | None = "deflate",
-    max_rows: int = 200_000,
 ) -> None:
     """Classic little-endian stripped GeoTIFF writer (PlanarConfig 2:
     each band's strips in sequence). Fixture/interchange scale — the
-    driver collects the tiles (row-capped like write_gpkg). For the
+    driver collects at most ``WRITE_MAX_ROWS`` tile rows. For the
     distributed per-tile sink see raster/tile_pyramid.py, which calls
     :func:`encode_geotiff` executor-side."""
-    rows = tiles.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    rows = tiles.limit(WRITE_MAX_ROWS + 1).collect()
+    if len(rows) > WRITE_MAX_ROWS:
         raise ValueError(
-            f"write_geotiff is a fixture-scale sink (> {max_rows} tile rows); "
+            f"write_geotiff is a fixture-scale sink (> {WRITE_MAX_ROWS} tile rows); "
             "write parquet tiles for bulk output"
         )
     np_dtype = np.dtype(meta.dtype)

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.geometry import wkt as _wkt
 
+WRITE_MAX_ROWS = 100_000  # write_gml collects at most this many rows
+
 _GEOM_TAGS = {
     "Point", "LineString", "Polygon", "MultiPoint", "MultiLineString",
     "MultiPolygon", "MultiSurface", "MultiCurve", "Curve", "Surface",
@@ -204,14 +206,12 @@ def _xsd_types(path: str) -> dict[str, str]:
     return out
 
 
-def read_gml(
-    spark: SparkSession, path: str, layer: str | None = None,
-) -> DataFrame:
+def read_gml(spark: SparkSession, path: str) -> DataFrame:
     """GML document → DataFrame (fid string, properties, WKB geometry).
 
     Features are the child elements of ``featureMember``/
-    ``featureMembers`` members; ``layer`` filters by feature tag (default:
-    the first tag seen, matching the reference's first-layer default)."""
+    ``featureMembers`` members whose tag is the first tag seen (the
+    reference's first-layer default)."""
     root = ET.parse(path).getroot()
     feats = []
     for member in root.iter():
@@ -221,7 +221,7 @@ def read_gml(
             feats.append(feat)
     rows = []
     names: list[str] = []
-    layer_name = layer
+    layer_name = None
     for feat in feats:
         tag = _local(feat.tag)
         if layer_name is None:
@@ -285,21 +285,19 @@ def read_gml(
 
 def write_gml(
     df, path: str, layer: str = "layer",
-    srs: str | None = None, max_rows: int = 100_000,
 ) -> None:
     """Fixture-scale GML 3 writer (ogr:FeatureCollection with posList /
     exterior encodings — what ``ogr2ogr -f GML`` emits), plus the sidecar
     ``.xsd`` the reference writer always produces so field types survive
     the roundtrip (digit-valued strings stay strings); row-capped driver
-    sink like write_gpkg."""
+    sink (at most ``WRITE_MAX_ROWS`` rows); geometries carry no srsName."""
     from gdal_spark.geometry import wkb as _wkb
 
-    n = df.limit(max_rows + 1).count()
-    if n > max_rows:
-        raise ValueError(f"write_gml is a fixture sink (> {max_rows} rows)")
+    n = df.limit(WRITE_MAX_ROWS + 1).count()
+    if n > WRITE_MAX_ROWS:
+        raise ValueError(f"write_gml is a fixture sink (> {WRITE_MAX_ROWS} rows)")
     rows = df.collect()
     cols = [c for c, _ in df.dtypes if c != "geometry"]
-    srs_attr = f' srsName="{srs}"' if srs else ""
     xsd_of = {"bigint": "xsd:long", "int": "xsd:int", "double": "xsd:double",
               "string": "xsd:string", "boolean": "xsd:boolean"}
     with open(path.rsplit(".", 1)[0] + ".xsd", "w", encoding="utf-8") as f:
@@ -320,35 +318,35 @@ def write_gml(
     def geom_xml(g) -> str:
         name, payload = g
         if name == "Point":
-            return (f"<gml:Point{srs_attr}><gml:pos>{payload[0]:.17g} "
+            return (f"<gml:Point><gml:pos>{payload[0]:.17g} "
                     f"{payload[1]:.17g}</gml:pos></gml:Point>")
         if name == "LineString":
             txt = " ".join(f"{v:.17g}" for v in np.asarray(payload)[:, :2].ravel())
-            return (f"<gml:LineString{srs_attr}><gml:posList>{txt}"
+            return (f"<gml:LineString><gml:posList>{txt}"
                     f"</gml:posList></gml:LineString>")
         if name == "Polygon":
             parts = [ring_xml("exterior", payload[0])] + [
                 ring_xml("interior", r) for r in payload[1:]
             ]
-            return f"<gml:Polygon{srs_attr}>" + "".join(parts) + "</gml:Polygon>"
+            return f"<gml:Polygon>" + "".join(parts) + "</gml:Polygon>"
         if name == "MultiPolygon":
             parts = "".join(
                 "<gml:surfaceMember>" + geom_xml(child) + "</gml:surfaceMember>"
                 for child in payload
             )
-            return f"<gml:MultiSurface{srs_attr}>{parts}</gml:MultiSurface>"
+            return f"<gml:MultiSurface>{parts}</gml:MultiSurface>"
         if name == "MultiLineString":
             parts = "".join(
                 "<gml:curveMember>" + geom_xml(child) + "</gml:curveMember>"
                 for child in payload
             )
-            return f"<gml:MultiCurve{srs_attr}>{parts}</gml:MultiCurve>"
+            return f"<gml:MultiCurve>{parts}</gml:MultiCurve>"
         if name == "MultiPoint":
             parts = "".join(
                 "<gml:pointMember>" + geom_xml(child) + "</gml:pointMember>"
                 for child in payload
             )
-            return f"<gml:MultiPoint{srs_attr}>{parts}</gml:MultiPoint>"
+            return f"<gml:MultiPoint>{parts}</gml:MultiPoint>"
         raise ValueError(f"unsupported geometry {name}")
 
     with open(path, "w", encoding="utf-8") as f:

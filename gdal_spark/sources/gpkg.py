@@ -25,6 +25,8 @@ from __future__ import annotations
 import sqlite3
 import struct
 
+WRITE_MAX_ROWS = 1_000_000  # write_gpkg collects at most this many rows
+
 _ENVELOPE_BYTES = {0: 0, 1: 32, 2: 48, 3: 48, 4: 64}
 
 
@@ -84,20 +86,17 @@ def _spark_type(decl: str) -> str:
     return "string"  # TEXT(n), DATE, DATETIME travel as strings
 
 
-def read_gpkg(spark, path: str, layer: str | None = None):
-    """Read one feature layer of a GeoPackage into a DataFrame.
+def read_gpkg(spark, path: str):
+    """Read the single feature layer of a GeoPackage into a DataFrame.
 
     Columns: the layer's attribute columns (SQLite declared types mapped
     INTEGER→bigint, REAL→double, TEXT/DATE→string, BLOB→binary) plus
-    ``geometry`` holding standard WKB. ``layer=None`` picks the single
-    feature layer, erroring if the package has several."""
+    ``geometry`` holding standard WKB. A package with several feature
+    layers raises ValueError."""
     layers = gpkg_layers(path)
-    if layer is None:
-        if len(layers) != 1:
-            raise ValueError(f"{path}: specify layer= (found {layers})")
-        layer = layers[0]
-    elif layer not in layers:
-        raise ValueError(f"{path}: no feature layer {layer!r} (found {layers})")
+    if len(layers) != 1:
+        raise ValueError(f"{path}: expected one feature layer, found {layers}")
+    layer = layers[0]
 
     con = _connect_ro(path)
     try:
@@ -154,7 +153,6 @@ def _gp_blob(wkb_bytes: bytes | None, srs_id: int) -> bytes | None:
 def write_gpkg(
     df, path: str, layer: str,
     srs_id: int = 4326, geometry_type: str = "GEOMETRY",
-    max_rows: int = 1_000_000,
 ) -> None:
     """Write a DataFrame with a WKB geometry column as a GeoPackage
     feature layer (OGC spec container tables + §2.1.3 blobs).
@@ -162,13 +160,13 @@ def write_gpkg(
     Driver-side like the reader (SQLite is a single-writer local file);
     intended for fixture-scale exports — the 100 TB sink is parquet.
     Rows collect in a deterministic order (all non-geometry columns).
-    ``max_rows`` guards the driver collect: a mis-aimed huge write fails
-    fast instead of OOMing the driver."""
-    n = df.limit(max_rows + 1).count()
-    if n > max_rows:
+    ``WRITE_MAX_ROWS`` guards the driver collect: a mis-aimed huge write
+    fails fast instead of OOMing the driver."""
+    n = df.limit(WRITE_MAX_ROWS + 1).count()
+    if n > WRITE_MAX_ROWS:
         raise ValueError(
-            f"write_gpkg is a driver-side fixture sink (> {max_rows} rows); "
-            "write parquet for large tables or raise max_rows explicitly"
+            f"write_gpkg is a driver-side fixture sink (> {WRITE_MAX_ROWS} rows); "
+            "write parquet for large tables"
         )
     rows = df.collect()
     names = df.columns

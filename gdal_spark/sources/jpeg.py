@@ -437,9 +437,9 @@ _CR_G = -_fix(0.71414) * _X
 _CB_G = -_fix(0.34414) * _X + _HALF
 
 
-def read_jpeg(spark, path: str, block_w: int = 256, block_h: int = 256):
-    """JPEG → tiles DataFrame + RasterMeta (driver-side decode like PNG;
-    one entropy stream per file). A sidecar ``.wld``/``.jgw`` world file
+def read_jpeg(spark, path: str):
+    """JPEG → tiles DataFrame + RasterMeta of up to 256² blocks
+    (driver-side decode like PNG; one entropy stream per file). A sidecar ``.wld``/``.jgw`` world file
     is honored for the geotransform."""
     from pyspark.sql import SparkSession  # noqa: F401  (typing parity)
 
@@ -458,8 +458,8 @@ def read_jpeg(spark, path: str, block_w: int = 256, block_h: int = 256):
             continue
     meta = RasterMeta(
         width=info["width"], height=info["height"], dtype="uint8",
-        block_w=min(block_w, info["width"]),
-        block_h=min(block_h, info["height"]), gt=gt, bands=len(bands),
+        block_w=min(256, info["width"]),
+        block_h=min(256, info["height"]), gt=gt, bands=len(bands),
     )
     rows = []
     for b, arr in bands.items():

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.geometry import wkb as _wkb
 
+WRITE_MAX_ROWS = 100_000  # write_kml collects at most this many rows
+
 _GEOM_TAGS = {"Point", "LineString", "LinearRing", "Polygon", "MultiGeometry"}
 
 
@@ -140,10 +142,11 @@ def _drop_z(g):
 
 
 def read_kml(
-    spark: SparkSession, path: str, layer: str | None = None, keep_z: bool = True,
+    spark: SparkSession, path: str, keep_z: bool = True,
 ) -> DataFrame:
-    """KML → DataFrame. ``layer`` selects a Folder by <name> (default:
-    the first Folder, or the Document when none). Schema: layer STRING,
+    """KML → DataFrame of every layer: each Folder or Document with
+    direct Placemarks, named by its <name> (the whole file when none).
+    Schema: layer STRING,
     Name STRING, description STRING, extra ExtendedData string fields,
     geometry (WKB, 2.5D unless keep_z=False)."""
     from gdal_spark.geometry import wkt as _wkt
@@ -166,8 +169,6 @@ def read_kml(
                 fname = (c.text or "").strip()
                 break
         fname = fname or "Layer"
-        if layer is not None and fname != layer:
-            continue
         # only DIRECT placemarks: nested Folders are their own layers
         stack = [c for c in folder if _local(c.tag) == "Placemark"]
         for pm in stack:
@@ -217,14 +218,14 @@ def read_kml(
 
 def write_kml(
     df, path: str, layer: str = "layer",
-    name_col: str | None = None, max_rows: int = 100_000,
 ) -> None:
-    """Fixture-scale KML writer: one Folder, Placemarks with attributes
-    in ExtendedData (the encoding the reference drivers roundtrip);
-    row-capped driver sink like write_gpkg."""
-    n = df.limit(max_rows + 1).count()
-    if n > max_rows:
-        raise ValueError(f"write_kml is a fixture sink (> {max_rows} rows)")
+    """Fixture-scale KML writer: one Folder, Placemarks named
+    ``{layer}.{i}`` with attributes in ExtendedData (the encoding the
+    reference drivers roundtrip); driver sink of at most
+    ``WRITE_MAX_ROWS`` rows."""
+    n = df.limit(WRITE_MAX_ROWS + 1).count()
+    if n > WRITE_MAX_ROWS:
+        raise ValueError(f"write_kml is a fixture sink (> {WRITE_MAX_ROWS} rows)")
     rows = df.collect()
     cols = [c for c, _ in df.dtypes if c != "geometry"]
 
@@ -267,12 +268,11 @@ def write_kml(
         f.write(f"<name>{esc(layer)}</name>\n")
         for i, r in enumerate(rows):
             f.write("<Placemark>")
-            nm = r[name_col] if name_col else f"{layer}.{i}"
-            f.write(f"<name>{esc(nm)}</name>")
+            f.write(f"<name>{esc(f'{layer}.{i}')}</name>")
             if cols:
                 f.write("<ExtendedData>")
                 for c in cols:
-                    if c == name_col or r[c] is None:
+                    if r[c] is None:
                         continue
                     f.write(f'<Data name="{esc(c)}"><value>{esc(r[c])}'
                             "</value></Data>")

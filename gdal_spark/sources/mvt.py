@@ -32,6 +32,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+EXTENT = 4096  # tile coordinate units per side (the MVT spec default)
+
 # ---------------------------------------------------------------------------
 # protobuf primitives
 # ---------------------------------------------------------------------------
@@ -264,7 +266,7 @@ def decode_tile(buf: bytes) -> list[dict]:
         if fid_ != 3:
             continue
         name = ""
-        extent = 4096
+        extent = EXTENT
         version = 1
         keys: list[str] = []
         values: list = []
@@ -343,7 +345,7 @@ def encode_tile(layers: list[dict]) -> bytes:
             body += _enc_len(3, k.encode("utf-8"))
         for v in values:
             body += _enc_len(4, _encode_value(v))
-        body += _enc_field(5, 0) + _enc_uvarint(int(layer.get("extent", 4096)))
+        body += _enc_field(5, 0) + _enc_uvarint(int(layer.get("extent", EXTENT)))
         body += _enc_field(15, 0) + _enc_uvarint(int(layer.get("version", 2)))
         out += _enc_len(3, body)
     return out
@@ -359,9 +361,10 @@ def write_mvt_tile(path: str, layers: list[dict]) -> None:
         f.write(encode_tile(layers))
 
 
-def read_mvt(spark: SparkSession, paths, layer: str | None = None) -> DataFrame:
-    """Distributed MVT read: ``paths`` is a list of .pbf tile paths (a
-    tileset directory's files); executors decode disjoint subsets.
+def read_mvt(spark: SparkSession, paths) -> DataFrame:
+    """Distributed MVT read of every layer: ``paths`` is a list of .pbf
+    tile paths (a tileset directory's files); executors decode disjoint
+    subsets.
     Output: (tile_path, layer, fid, props json-ish map, geometry WKB in
     integer tile coords)."""
     from gdal_spark.geometry import wkt as _wkt
@@ -378,8 +381,6 @@ def read_mvt(spark: SparkSession, paths, layer: str | None = None) -> DataFrame:
             for p in chunk["path"]:
                 with open(p, "rb") as f:
                     for lyr in decode_tile(f.read()):
-                        if layer is not None and lyr["name"] != layer:
-                            continue
                         for fid, geom, props in lyr["features"]:
                             rows.append((
                                 p, lyr["name"],
@@ -406,7 +407,6 @@ def write_mvt_tileset(
     layer: str = "layer",
     id_col: str | None = None,
     prop_cols: tuple = (),
-    extent: int = 4096,
 ) -> DataFrame:
     """Distributed MVT tileset SINK (the reference's ``ogr2ogr -f MVT``
     directory layout, ogr/ogrsf_frmts/mvt/ writer side): POINT features
@@ -435,8 +435,8 @@ def write_mvt_tileset(
         x0 = -tiling.ORIGIN + tx * span
         y0 = tiling.ORIGIN - ty * span
         mx, my = tiling.lonlat_to_mercator_np(pdf["lon"].to_numpy(), pdf["lat"].to_numpy())
-        px = np.round((mx - x0) / span * extent).astype(np.int64)
-        py = np.round((y0 - my) / span * extent).astype(np.int64)
+        px = np.round((mx - x0) / span * EXTENT).astype(np.int64)
+        py = np.round((y0 - my) / span * EXTENT).astype(np.int64)
         feats = []
         for i in range(len(pdf)):
             props = {c: pdf[c].iloc[i] for c in prop_cols}
@@ -451,7 +451,7 @@ def write_mvt_tileset(
         _os.makedirs(d, exist_ok=True)
         path = _os.path.join(d, f"{ty}.pbf")
         write_mvt_tile(path, [{
-            "name": layer, "extent": extent, "version": 2, "features": feats,
+            "name": layer, "extent": EXTENT, "version": 2, "features": feats,
         }])
         return pd.DataFrame(
             [(zoom, tx, ty, len(feats), path)],

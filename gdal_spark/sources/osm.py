@@ -56,6 +56,8 @@ from gdal_spark.sources.mvt import (
 )
 
 _MEMBER_TYPES = ("node", "way", "relation")
+GRANULARITY = 100  # nanodegrees per coordinate unit (the OSM default)
+WAYS_PER_BLOCK = 8000  # ways and relations per written OSMData blob
 
 
 # ---------------------------------------------------------------------------
@@ -143,9 +145,7 @@ def write_osm_pbf(
     ways=(),
     relations=(),
     block_nodes: int = 8000,
-    block_ways: int = 8000,
     compress: bool = True,
-    granularity: int = 100,
 ) -> int:
     """Write an OSM PBF file. ``nodes``: iterable of
     ``(id, lon_deg, lat_deg, tags_dict)``; ``ways``: ``(id, [node_refs],
@@ -165,8 +165,8 @@ def write_osm_pbf(
         ids, lats, lons, kv = [], [], [], []
         for nid, lon, lat, tags in chunk:
             ids.append(int(nid))
-            lats.append(round(lat * 1e9) // granularity)
-            lons.append(round(lon * 1e9) // granularity)
+            lats.append(round(lat * 1e9) // GRANULARITY)
+            lons.append(round(lon * 1e9) // GRANULARITY)
             keys, vals = _tags_kv(st, tags)
             for k, v in zip(keys, vals):
                 kv += [k, v]
@@ -179,13 +179,13 @@ def write_osm_pbf(
         )
         group = _enc_len(2, dense)
         block = _enc_len(1, st.encode()) + _enc_len(2, group)
-        block += _enc_field(17, 0) + _enc_uvarint(granularity)
+        block += _enc_field(17, 0) + _enc_uvarint(GRANULARITY)
         blobs.append(_wrap_blob("OSMData", block, compress))
 
     ways = list(ways)
     relations = list(relations)
-    for i in range(0, len(ways) + len(relations), block_ways):
-        chunk = (ways + relations)[i : i + block_ways]
+    for i in range(0, len(ways) + len(relations), WAYS_PER_BLOCK):
+        chunk = (ways + relations)[i : i + WAYS_PER_BLOCK]
         st = _StringTable()
         wbufs, rbufs = [], []
         for item in chunk:

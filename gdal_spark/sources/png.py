@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from gdal_spark.raster.model import RasterMeta, TILES_SCHEMA
 
 SIGNATURE = b"\x89PNG\r\n\x1a\n"
+WRITE_MAX_ROWS = 200_000  # write_png collects at most this many tile rows
 
 # channels per color type
 _CTYPE_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -203,7 +204,6 @@ def encode_png(
     bands: dict[int, np.ndarray],
     palette: np.ndarray | None = None,
     trns=None,
-    level: int = 6,
     filter_type: int | str = "adaptive",
 ) -> bytes:
     """Encode band arrays (uint8 or uint16) → PNG bytes. Band counts map
@@ -276,7 +276,7 @@ def encode_png(
             out += chunk(b"tRNS", struct.pack(">HHH", *[int(v) for v in trns]))
         elif ctype == 0:
             out += chunk(b"tRNS", struct.pack(">H", int(trns[0])))
-    out += chunk(b"IDAT", zlib.compress(bytes(stream), level))
+    out += chunk(b"IDAT", zlib.compress(bytes(stream), 6))
     out += chunk(b"IEND", b"")
     return bytes(out)
 
@@ -320,15 +320,14 @@ def read_png(
 
 def write_png(
     tiles: DataFrame, meta: RasterMeta, path: str,
-    palette: np.ndarray | None = None, trns=None, max_rows: int = 200_000,
 ) -> None:
-    """Fixture-scale PNG sink (row-capped like write_geotiff); assembles
-    the band arrays on the driver and encodes one file. The distributed
+    """Fixture-scale PNG sink (at most ``WRITE_MAX_ROWS`` tile rows);
+    assembles the band arrays on the driver and encodes one file. The distributed
     PNG sink is the tile pyramid (one PNG per tile, executor-side)."""
-    rows = tiles.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    rows = tiles.limit(WRITE_MAX_ROWS + 1).collect()
+    if len(rows) > WRITE_MAX_ROWS:
         raise ValueError(
-            f"write_png is a fixture-scale sink (> {max_rows} tile rows)")
+            f"write_png is a fixture-scale sink (> {WRITE_MAX_ROWS} tile rows)")
     np_dtype = np.dtype(meta.dtype)
     bands = sorted({r.band for r in rows})
     arrs = {
@@ -341,4 +340,4 @@ def write_png(
             r.block_x * meta.block_w : r.block_x * meta.block_w + r.w,
         ] = blk
     with open(path, "wb") as f:
-        f.write(encode_png(arrs, palette=palette, trns=trns))
+        f.write(encode_png(arrs))

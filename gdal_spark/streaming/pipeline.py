@@ -61,6 +61,7 @@ def streaming_tile_counts(
     )
 
 
-def streaming_url_dedup(pages: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Streaming exact dedup by url (state aged out past the watermark)."""
-    return pages.withWatermark("warc_ts", watermark).dropDuplicates(["url"])
+def streaming_url_dedup(pages: DataFrame) -> DataFrame:
+    """Streaming exact dedup by url (state aged out past a 10-minute
+    watermark on ``warc_ts``)."""
+    return pages.withWatermark("warc_ts", "10 minutes").dropDuplicates(["url"])

@@ -23,6 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 MERSENNE_P = (1 << 61) - 1
+# The operators' fixed settings; the pure-Python oracles in
+# ``gdal_spark.text.ref_impl`` import these rather than repeat them.
+SHINGLE_N = 3  # words per shingle for Jaccard and MinHash
+NUM_HASHES = 64  # MinHash permutations per signature
+LSH_BANDS = 16  # LSH bands over a NUM_HASHES signature
+SEED = 42  # MinHash permutation RNG seed
+SIMHASH_BITS = 64
+CONTAMINATION_N = 5  # words per benchmark-overlap n-gram
+CLUSTER_MAX_ROUNDS = 50  # dedup_clusters gives up past 2^50-hop components
 
 
 def words_col():
@@ -45,7 +54,7 @@ def exact_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def shingles(df: DataFrame, n: int = 3) -> DataFrame:
+def shingles(df: DataFrame, n: int) -> DataFrame:
     """Distinct word n-gram shingles per ``(doc_id, text)`` row:
     (id, shingle STRING).
 
@@ -69,12 +78,11 @@ def shingles(df: DataFrame, n: int = 3) -> DataFrame:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    n: int = 3,
     threshold: float = 0.5,
     max_df: int | float | None = 0.005,
 ) -> DataFrame:
-    """All pairs of ``(doc_id, text)`` rows (id1 < id2) with shingle-set
-    Jaccard ≥ threshold.
+    """All pairs of ``(doc_id, text)`` rows (id1 < id2) with
+    ``SHINGLE_N``-word shingle-set Jaccard ≥ threshold.
 
     Output: (id1, id2, common, n1, n2) — Jaccard = common/(n1+n2-common),
     emitted as exact integers so oracles compare without float hashing.
@@ -88,7 +96,7 @@ def ngram_jaccard_pairs(
     affected pairs are only those sharing *solely* stop-shingles, which
     sit far below any useful threshold at scale anyway).
     """
-    sh = shingles(df, n)
+    sh = shingles(df, SHINGLE_N)
     # join on the 8-byte hash of the shingle, not the string
     sh = sh.select("id", F.xxhash64("shingle").alias("sh")).distinct()
     # Materialize once: this subtree (string n-gram explode + distinct
@@ -139,34 +147,29 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _perm_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
+def _perm_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic affine permutation coefficients (a odd, b) mod 2^61-1."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(SEED)
     return [
         (rng.randrange(1, MERSENNE_P - 1) | 1, rng.randrange(0, MERSENNE_P - 1))
         for _ in range(num_hashes)
     ]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, sig ARRAY<BIGINT>) MinHash signatures over the word n-gram
-    shingles of ``(doc_id, text)`` rows.
+def minhash_signatures(df: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
+    """(id, sig ARRAY<BIGINT>) MinHash signatures over the
+    ``SHINGLE_N``-word shingles of ``(doc_id, text)`` rows.
 
     One xxhash64 per shingle, then ``num_hashes`` affine permutations
     ``(a*h + b) mod (2^61-1)`` minimized per doc — all column math; the
     aggregation is a single groupBy with ``min`` partials map-side.
     """
-    sh = shingles(df, n).select(
+    sh = shingles(df, SHINGLE_N).select(
         "id", F.pmod(F.xxhash64("shingle"), F.lit(MERSENNE_P)).alias("h")
     )
-    coeffs = _perm_coeffs(num_hashes, seed)
+    coeffs = _perm_coeffs(num_hashes)
     # (a*h + b) mod p exactly in int64, overflow-free (ANSI-safe):
     # split both factors into 31-bit limbs (a = a_hi*2^31 + a_lo,
     # h = h1*2^31 + h0 with h1, a_hi < 2^30) so every partial product
@@ -194,12 +197,9 @@ def minhash_signatures(
     return agg.select("id", F.array(*[f"m{i}" for i in range(num_hashes)]).alias("sig"))
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """LSH banding: docs agreeing on any full band become candidate pairs.
+def lsh_candidate_pairs(signatures: DataFrame, rows_per_band: int = 4) -> DataFrame:
+    """LSH banding: docs agreeing on any of ``LSH_BANDS`` full bands
+    become candidate pairs.
 
     Buckets are ``(band_idx, xxhash64(band slice))`` — an equi-join key, so
     candidate generation is a shuffle-hash self-join per band with no
@@ -209,7 +209,7 @@ def lsh_candidate_pairs(
         "id",
         F.explode(
             F.expr(
-                f"transform(sequence(0, {bands - 1}), b -> "
+                f"transform(sequence(0, {LSH_BANDS - 1}), b -> "
                 f"named_struct('band', b, 'key', xxhash64(b, "
                 f"concat_ws(',', slice(sig, b * {rows_per_band} + 1, {rows_per_band})))))"
             )
@@ -225,19 +225,12 @@ def lsh_candidate_pairs(
     )
 
 
-def minhash_dedup_pairs(
-    df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """End-to-end near-dup pairs of ``(doc_id, text)`` rows: MinHash → LSH
-    buckets → signature-estimate filter. Output (id1, id2, est_e6) with
-    est = fraction of agreeing minhashes, scaled to integer millionths."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, n, num_hashes, seed)
+def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """End-to-end near-dup pairs of ``(doc_id, text)`` rows: MinHash
+    (``NUM_HASHES`` permutations) → LSH buckets (``LSH_BANDS`` bands) →
+    signature-estimate filter. Output (id1, id2, est_e6) with est =
+    fraction of agreeing minhashes, scaled to integer millionths."""
+    sigs = minhash_signatures(df)
     # The signature subtree (shingle explode → xxhash → 64-perm min agg)
     # feeds FOUR consumers below (LSH self-join l/r + est join s1/s2) and
     # Catalyst performs no cross-consumer common-subplan elimination — an
@@ -245,7 +238,7 @@ def minhash_dedup_pairs(
     # ReusedExchange). Signatures are tiny next to the corpus (~520 B/doc
     # at 64 hashes), so materialize once, same discipline as knn_join.
     sigs = sigs.localCheckpoint(eager=True)
-    cand = lsh_candidate_pairs(sigs, bands, rows_per_band)
+    cand = lsh_candidate_pairs(sigs, NUM_HASHES // LSH_BANDS)
     s1 = sigs.select(F.col("id").alias("id1"), F.col("sig").alias("sig1"))
     s2 = sigs.select(F.col("id").alias("id2"), F.col("sig").alias("sig2"))
     est = (
@@ -256,7 +249,7 @@ def minhash_dedup_pairs(
             F.floor(
                 F.size(F.filter(F.zip_with("sig1", "sig2", lambda a, b: a == b), lambda x: x))
                 * F.lit(1_000_000)
-                / F.lit(num_hashes)
+                / F.lit(NUM_HASHES)
             ).cast("long"),
         )
         .filter(F.col("est_e6") >= F.lit(int(threshold * 1_000_000)))
@@ -264,7 +257,7 @@ def minhash_dedup_pairs(
     return est.select("id1", "id2", "est_e6")
 
 
-def simhash(df: DataFrame, bits: int = 64) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """(id, simhash BIGINT) of ``(doc_id, text)`` rows: sign-sum of
     per-word 64-bit hashes.
 
@@ -287,11 +280,11 @@ def simhash(df: DataFrame, bits: int = 64) -> DataFrame:
             F.sum(
                 F.col("cnt") * F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1))
             ).alias(f"p{i}")
-            for i in range(bits)
+            for i in range(SIMHASH_BITS)
         ],
     )
     acc = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(SIMHASH_BITS):
         # shiftleft instead of a literal: 1<<63 overflows a Java long literal
         bit = F.shiftleft(F.lit(1).cast("long"), i)
         # sign positive ⇔ 2*p_i - n > 0
@@ -301,15 +294,15 @@ def simhash(df: DataFrame, bits: int = 64) -> DataFrame:
     return sums.select("id", acc.alias("simhash"))
 
 
-def simhash_blocks(max_hamming: int, bits: int = 64) -> list[tuple[int, int]]:
+def simhash_blocks(max_hamming: int) -> list[tuple[int, int]]:
     """(offset, width) bit-blocks for pigeonhole-complete blocking.
 
     ``max_hamming + 1`` blocks guarantee any pair within the hamming
     budget agrees on at least one whole block (≤ max_hamming flipped bits
     cannot touch all max_hamming+1 blocks). Widths differ by ≤1 bit.
     """
-    n_blocks = min(bits, max_hamming + 1)
-    base, extra = divmod(bits, n_blocks)
+    n_blocks = min(SIMHASH_BITS, max_hamming + 1)
+    base, extra = divmod(SIMHASH_BITS, n_blocks)
     out, off = [], 0
     for q in range(n_blocks):
         w = base + (1 if q < extra else 0)
@@ -356,9 +349,7 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame, ids: DataFrame | None = None, max_rounds: int = 50,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, ids: DataFrame | None = None) -> DataFrame:
     """Near-duplicate CLUSTERING: connected components over the dup-pair
     graph of ``(id1, id2)`` rows → (doc_id, cluster_id) with cluster_id =
     the component's minimum doc id (the canonical "keep" document —
@@ -370,7 +361,8 @@ def dedup_clusters(
     chain-shaped components — the standard Hash-Min/pointer-jumping CC
     algorithm. Each round eagerly localCheckpoints the (tiny) label
     table to keep the lineage flat; the per-round driver action is one
-    bounded existence check.
+    bounded existence check. Past ``CLUSTER_MAX_ROUNDS`` rounds it raises
+    rather than return unconverged labels.
 
     ``ids``: optional one-column DataFrame of ALL doc ids (isolated
     documents then appear as singleton clusters); defaults to the ids
@@ -382,7 +374,7 @@ def dedup_clusters(
     else:
         nodes = ids.select(F.col(ids.columns[0]).alias("id")).distinct()
     labels = nodes.select("id", F.col("id").alias("label")).localCheckpoint()
-    for _ in range(max_rounds):
+    for _ in range(CLUSTER_MAX_ROUNDS):
         neigh = (
             edges.join(labels, edges["b"] == labels["id"])
             .groupBy("a").agg(F.min("label").alias("nlabel"))
@@ -417,8 +409,8 @@ def dedup_clusters(
         # Same contract as polygonize._cc_roots: never hand back
         # silently-wrong (unconverged) cluster assignments.
         raise RuntimeError(
-            f"dedup_clusters did not converge in {max_rounds} rounds; "
-            "raise max_rounds (components deeper than 2^rounds hops)"
+            f"dedup_clusters did not converge in {CLUSTER_MAX_ROUNDS} rounds "
+            "(a component deeper than 2^rounds hops)"
         )
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
@@ -493,11 +485,11 @@ def line_dedup(
 def contamination_flags(
     docs: DataFrame,
     benchmark: DataFrame,
-    n: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C / PaLM §C n-gram
     overlap screen, public papers): flag every training document that
-    shares any word ``n``-gram with an evaluation/benchmark set. Both
+    shares any word ``CONTAMINATION_N``-gram with an evaluation/benchmark
+    set. Both
     sides are ``(doc_id, text)`` rows.
 
     Returns ``(doc_id, n_hits, contaminated)`` for ALL docs (``n_hits``
@@ -512,8 +504,8 @@ def contamination_flags(
     (rare) reach the per-doc aggregation, and the final flag join back
     to ``docs`` is on the 8-byte id.
     """
-    bsh = shingles(benchmark, n).select("shingle").distinct()
-    dsh = shingles(docs, n)
+    bsh = shingles(benchmark, CONTAMINATION_N).select("shingle").distinct()
+    dsh = shingles(docs, CONTAMINATION_N)
     hits = (
         dsh.join(F.broadcast(bsh), "shingle")
         .groupBy("id")

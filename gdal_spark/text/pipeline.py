@@ -28,18 +28,16 @@ def curate(
     text_col: str = "text",
     blocklist: list[str] | None = None,
     redact_pii: bool = True,
-    line_sep: str = "\n",
     line_keep: str = "first",
-    quality_overrides: dict | None = None,
 ) -> DataFrame:
     """Returns the curated corpus: ``(id_col, text, n_lines, n_kept)``
     with one representative (min id) per distinct surviving text.
     Stages toggle independently (``blocklist=None`` skips the screen,
-    ``redact_pii=False`` skips the scrub); quality thresholds override
-    via ``quality_overrides`` (see ``analysis.GOPHER_RULES``)."""
+    ``redact_pii=False`` skips the scrub); the quality filter applies
+    ``analysis.GOPHER_RULES`` as they stand, and line dedup splits on
+    newlines."""
     out = analysis.quality_filter(
-        df.select(F.col(id_col), F.col(text_col)),
-        text_col, **(quality_overrides or {}),
+        df.select(F.col(id_col), F.col(text_col)), text_col
     ).filter("keep")
     if blocklist:
         out = analysis.blocklist_filter(out, blocklist, text_col).filter(
@@ -50,7 +48,7 @@ def curate(
         out = analysis.pii_redact(out, text_col).select(
             id_col, F.col("text_redacted").alias(text_col)
         )
-    ld = dedup.line_dedup(out, id_col, text_col, sep=line_sep, keep=line_keep)
+    ld = dedup.line_dedup(out, id_col, text_col, keep=line_keep)
     return (
         ld.filter(F.col("n_kept") > 0)
         # hash-first grouping (exact_dedup's discipline, dedup.py:33):

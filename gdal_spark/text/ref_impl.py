@@ -7,7 +7,9 @@ could reorder float sums) over the fixture parquet, so a green gate row
 means the distributed limb-split modular math, the LSH banding, and the
 blocking recall all agree with an implementation that shares *no code
 path* with the Spark plans (only the public XXH64 spec in
-``gdal_spark.text.xxh``).
+``gdal_spark.text.xxh``). The operators' fixed settings (shingle width,
+hash counts, seeds, sample sizes) are imported from the engine modules so
+each is spelled once; what a gate varies it passes to both sides.
 
 Tokenization mirrors the engine exactly: Spark ``trim`` strips ASCII
 spaces only; ``split(_, '\\s+')`` is Java regex split with limit -1
@@ -20,6 +22,7 @@ import math
 import os
 import re
 
+from gdal_spark.text.dedup import LSH_BANDS, NUM_HASHES, SEED, SHINGLE_N, SIMHASH_BITS
 from gdal_spark.text.xxh import spark_xxhash64_str
 
 MERSENNE_P = (1 << 61) - 1
@@ -31,10 +34,10 @@ def oracle_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 
 
-def load_documents(sf_dir: str | None = None) -> list[tuple[int, str]]:
+def load_documents() -> list[tuple[int, str]]:
     import duckdb
 
-    sf_dir = sf_dir or oracle_sf_dir()
+    sf_dir = oracle_sf_dir()
     con = duckdb.connect()
     rows = con.execute(
         f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
@@ -47,8 +50,9 @@ def words(text: str) -> list[str]:
     return _WS.split(text.strip(" "))
 
 
-def shingle_hashes(text: str, n: int = 3) -> set[int]:
+def shingle_hashes(text: str) -> set[int]:
     """pmod(xxhash64(shingle), p) over distinct word n-gram shingles."""
+    n = SHINGLE_N
     w = words(text)
     if len(w) < n:
         return set()
@@ -56,11 +60,11 @@ def shingle_hashes(text: str, n: int = 3) -> set[int]:
     return {spark_xxhash64_str(s) % MERSENNE_P for s in sh}
 
 
-def perm_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
+def perm_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Must match gdal_spark.text.dedup._perm_coeffs (same RNG contract)."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(SEED)
     return [
         (rng.randrange(1, MERSENNE_P - 1) | 1, rng.randrange(0, MERSENNE_P - 1))
         for _ in range(num_hashes)
@@ -72,19 +76,15 @@ def minhash_signature(hs: set[int], coeffs: list[tuple[int, int]]) -> list[int]:
 
 
 def minhash_pairs_ref(
-    docs: list[tuple[int, str]],
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    seed: int = 42,
+    docs: list[tuple[int, str]], threshold: float = 0.5
 ) -> list[tuple[int, int, int]]:
     """(id1, id2, est_e6) per dedup.minhash_dedup_pairs semantics."""
-    coeffs = perm_coeffs(num_hashes, seed)
+    num_hashes, bands = NUM_HASHES, LSH_BANDS
+    coeffs = perm_coeffs(num_hashes)
     rows_per_band = num_hashes // bands
     sigs: dict[int, list[int]] = {}
     for doc_id, text in docs:
-        hs = shingle_hashes(text, n)
+        hs = shingle_hashes(text)
         if hs:
             sigs[doc_id] = minhash_signature(hs, coeffs)
     buckets: dict[tuple[int, tuple[int, ...]], list[int]] = {}
@@ -108,9 +108,10 @@ def minhash_pairs_ref(
     return out
 
 
-def simhash_ref(text: str, bits: int = 64) -> int:
+def simhash_ref(text: str) -> int:
     """Signed-sum simhash over words *with multiplicity* (explode keeps
     duplicates), mirroring dedup.simhash."""
+    bits = SIMHASH_BITS
     sums = [0] * bits
     for w in words(text):
         h = spark_xxhash64_str(w) & ((1 << 64) - 1)
@@ -143,10 +144,10 @@ def simhash_allpairs_ref(
 # LSH-bucketed ANN reference
 # ---------------------------------------------------------------------------
 
-def load_embeddings(sf_dir: str | None = None) -> list[tuple[int, list[float]]]:
+def load_embeddings() -> list[tuple[int, list[float]]]:
     import duckdb
 
-    sf_dir = sf_dir or oracle_sf_dir()
+    sf_dir = oracle_sf_dir()
     con = duckdb.connect()
     rows = con.execute(
         f"SELECT vec_id, embedding FROM read_parquet('{sf_dir}/embeddings.parquet') ORDER BY vec_id"
@@ -173,16 +174,18 @@ def _seq_norm(a: list[float]) -> float:
 def lsh_bucketed_topk_ref(
     embeddings: list[tuple[int, list[float]]],
     query_ids: set[int],
-    k: int = 3,
-    n_planes: int = 10,
-    probe_flips: int = 1,
-    seed: int = 42,
+    k: int,
+    n_planes: int,
+    probe_flips: int,
 ) -> list[tuple[int, int, int, int]]:
-    """(qid, id, cos_e6, rank) per operators.similarity.lsh_bucketed_topk."""
+    """(qid, id, cos_e6, rank) per operators.similarity.lsh_bucketed_topk;
+    ``probe_flips`` outside {0, 1, 2} raises ``ValueError`` as there."""
     from gdal_spark.operators.similarity import random_hyperplanes
 
+    if probe_flips not in (0, 1, 2):
+        raise ValueError(f"probe_flips must be 0, 1 or 2, not {probe_flips!r}")
     dim = len(embeddings[0][1])
-    planes = random_hyperplanes(dim, n_planes, seed)
+    planes = random_hyperplanes(dim, n_planes)
     planes_l = [[float(x) for x in p] for p in planes]
 
     def bucket(v: list[float]) -> int:
@@ -244,19 +247,17 @@ def values_sql(rows, colnames: list[str], coltypes: list[str], order_by: str) ->
 
 def lsh_cosine_pairs_ref(
     embeddings: list[tuple[int, list[float]]],
-    threshold: float = 0.2,
-    n_planes: int = 10,
-    probe_flips: int = 2,
-    seed: int = 42,
+    threshold: float,
+    n_planes: int,
 ) -> list[tuple[int, int, int]]:
     """(id1, id2, cos_e6) per operators.similarity.cosine_dedup_pairs in
     bucketed mode: candidates are pairs whose sign-buckets differ in at
-    most ``probe_flips`` bits (the multiprobe set), scored with the
+    most ``DEDUP_PROBE_FLIPS`` bits (the multiprobe set), scored with the
     sequential fold."""
-    from gdal_spark.operators.similarity import random_hyperplanes
+    from gdal_spark.operators.similarity import DEDUP_PROBE_FLIPS, random_hyperplanes
 
     dim = len(embeddings[0][1])
-    planes = [[float(x) for x in p] for p in random_hyperplanes(dim, n_planes, seed)]
+    planes = [[float(x) for x in p] for p in random_hyperplanes(dim, n_planes)]
 
     def bucket(v):
         acc = 0
@@ -272,7 +273,7 @@ def lsh_cosine_pairs_ref(
         id1, v1 = embeddings[i]
         for j in range(i + 1, len(embeddings)):
             id2, v2 = embeddings[j]
-            if bin(b[id1] ^ b[id2]).count("1") > probe_flips:
+            if bin(b[id1] ^ b[id2]).count("1") > DEDUP_PROBE_FLIPS:
                 continue
             cos = _seq_dot(v1, v2) / (_seq_norm(v1) * _seq_norm(v2))
             cos_e6 = math.floor(cos * 1_000_000 + 0.5)
@@ -284,23 +285,23 @@ def lsh_cosine_pairs_ref(
 def ivf_topk_ref(
     embeddings: list[tuple[int, list[float]]],
     query_ids: set[int],
-    k: int = 3,
-    n_centroids: int = 8,
-    n_probe: int = 3,
-    iters: int = 5,
-    sample_size: int = 2048,
+    k: int,
+    n_centroids: int,
+    n_probe: int,
 ) -> list[tuple[int, int, int, int]]:
     """(qid, id, cos_e6, rank) per operators.similarity.ivf_topk: the
-    same deterministic sample (first ``sample_size`` by id), Lloyd
+    same deterministic sample (first ``IVF_SAMPLE`` by id), Lloyd
     centroids, per-row assignment/probe expressions, and sequential-fold
     cosine — exact, not recall-only."""
     import numpy as np
 
-    from gdal_spark.operators.similarity import ivf_assign_np, ivf_probe_np, kmeans_fit
+    from gdal_spark.operators.similarity import (
+        IVF_SAMPLE, ivf_assign_np, ivf_probe_np, kmeans_fit,
+    )
 
     ordered = sorted(embeddings, key=lambda t: t[0])
-    S = np.array([v for _, v in ordered[:sample_size]], dtype=np.float64)
-    C = kmeans_fit(S, n_centroids, iters)
+    S = np.array([v for _, v in ordered[:IVF_SAMPLE]], dtype=np.float64)
+    C = kmeans_fit(S, n_centroids)
     by_cell: dict[int, list[tuple[int, list[float]]]] = {}
     for vid, v in embeddings:
         by_cell.setdefault(ivf_assign_np(v, C), []).append((vid, v))

@@ -96,11 +96,11 @@ def test_warp_crs_distributed_matches_oracle(spark, alg):
                                 block_w=10, block_h=10)
     got = tiles_to_array(
         warp_crs(tiles_from_array(spark, arr, meta_blocked), meta_blocked, dst,
-                 "EPSG:32611", "EPSG:4326", alg=alg, init=0.0),
+                 "EPSG:32611", "EPSG:4326", alg=alg),
         dst,
     )
     want = warp_crs_np(arr, meta_blocked, dst, "EPSG:32611", "EPSG:4326",
-                       alg=alg, init=0.0)
+                       alg=alg)
     np.testing.assert_array_equal(got, want)
     assert (got != 0).any()  # data actually landed
 

@@ -160,7 +160,7 @@ def test_raster_tile_pyramid(spark, tmp_path):
     arr, meta = byte_fixture()
     tiles = tiles_from_array(spark, arr, meta)
     out = raster_tile_pyramid(
-        tiles, meta, 26711, str(tmp_path), zooms=(13, 15), compress="deflate"
+        tiles, meta, 26711, str(tmp_path), zooms=(13, 15)
     ).collect()
     assert {r.z for r in out} == {13, 15}
     n13 = [r for r in out if r.z == 13]

@@ -72,6 +72,18 @@ def _join_path(spark, threshold):
     return _sql_conf(spark, {} if threshold is None else dict.fromkeys(_THRESHOLDS, threshold))
 
 
+@contextmanager
+def _job_group(spark, name):
+    """Run the body's Spark jobs in job group ``name``; yields a function
+    counting the group's jobs so far."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(name))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def _ring_joins(out):
     """The plan's joins on the packed ring cell key."""
     return [n for n in _executed_nodes(out) if n.nodeName().endswith("Join") and "__ncell#" in n.simpleString(25)]
@@ -247,13 +259,22 @@ def test_knn_far_neighbours_exact(spark, threshold, near, far):
 def test_knn_empty_side(spark, threshold, empty):
     """No neighbour (or no query) at all: no query ever reaches a round's
     aggregate, and where the optimizer drops the ring join for its empty
-    side the pending-query count is never observed. The loop still ends,
-    with no rows."""
-    q = _cluster(spark, 3, 73, "qid", 8)
-    nb = _cluster(spark, 3, 79, "nid", 8)
+    side the pending-query count is never observed. The loop still ends
+    after the first round, with no rows: the call runs no more jobs than
+    one whose queries are all final in round one."""
+    q_full = q = _cluster(spark, 3, 73, "qid", 8)
+    nb_full = nb = _cluster(spark, 3, 79, "nid", 8)
     if empty == "neighbours":
         nb = spark.createDataFrame([], "nid BIGINT, x DOUBLE, y DOUBLE")
     else:
         q = spark.createDataFrame([], "qid BIGINT, x DOUBLE, y DOUBLE")
+    tag = f"{empty}-{threshold}"
     with _join_path(spark, threshold):
-        assert knn_join(q, nb, k=3).count() == 0
+        with _job_group(spark, f"knn-empty-{tag}") as jobs:
+            out = knn_join(q, nb, k=3)
+            n_empty = jobs()
+        assert out.count() == 0
+        with _job_group(spark, f"knn-one-round-{tag}") as jobs:
+            knn_join(q_full, nb_full, k=3)
+            n_one_round = jobs()
+    assert n_empty <= n_one_round

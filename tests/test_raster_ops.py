@@ -465,6 +465,18 @@ def test_dem_zevenbergen_thorne_matches_oracle(spark, terrain, op, kw):
     assert not np.allclose(np.nan_to_num(want), np.nan_to_num(horn))
 
 
+def test_dem_op_rejects_unknown_option(spark, terrain):
+    """An option the operator does not read raises instead of being
+    dropped: a misspelling, or a band filter dem_op never applied."""
+    tiles, full, meta = terrain
+    with pytest.raises(ValueError, match="degres"):
+        dem.dem_op(tiles, meta, "slope", degres=False)
+    with pytest.raises(ValueError, match="band"):
+        dem.dem_op(tiles, meta, "tpi", band=2)
+    with pytest.raises(ValueError, match="az"):
+        dem.dem_op_np(full, meta, "hillshade_multidirectional", az=90.0)
+
+
 def test_rgb_pct_median_cut(spark):
     """Median-cut palette + nearest-color mapping: distributed ==
     single-node oracle; palette box-list order is the reference's

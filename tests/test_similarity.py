@@ -36,7 +36,7 @@ def _np_topk(v, q, k):
 def test_cosine_topk_matches_numpy(spark, vecs):
     df, v = vecs
     q = v[7].astype(np.float64)
-    got = [(r.id, r.cos_e6) for r in cosine_topk(df, q, k=10).collect()]
+    got = [(r.id, r.cos_e6) for r in cosine_topk(df, q).collect()]
     want = _np_topk(v.astype(np.float64), q, 10)
     assert got == want
 
@@ -130,6 +130,17 @@ def test_lsh_bucketed_probes_hamming_ball(spark, vecs, flips):
     for bad in (-1, 3):
         with pytest.raises(ValueError, match="probe_flips"):
             lsh_bucketed_topk(queries, df, k=3, n_planes=8, probe_flips=bad, dim=v.shape[1])
+
+
+def test_lsh_bucketed_ref_rejects_probe_flips_outside_0_2():
+    """The oracle refuses the probe counts the engine refuses, instead of
+    treating 3 as 2."""
+    from gdal_spark.text.ref_impl import lsh_bucketed_topk_ref
+
+    emb = [(i, [float(i), 1.0, -0.5]) for i in range(6)]
+    for bad in (-1, 3):
+        with pytest.raises(ValueError, match="probe_flips"):
+            lsh_bucketed_topk_ref(emb, {0, 1}, 3, 4, bad)
 
 
 def test_sign_bucket_arrow_equals_jvm(spark, vecs):

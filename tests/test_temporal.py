@@ -37,7 +37,7 @@ def test_sessionize_gaps(spark):
         (4, 7, _ts(5100)), (5, 8, _ts(0)),
     ]
     ev = spark.createDataFrame(rows, "event_id INT, user_id INT, ts TIMESTAMP")
-    got = {r.event_id: r.session_id for r in sessionize(ev, gap_seconds=1800, tiebreak="event_id").collect()}
+    got = {r.event_id: r.session_id for r in sessionize(ev, tiebreak="event_id").collect()}
     assert got == {1: 0, 2: 0, 3: 1, 4: 1, 5: 0}
 
 

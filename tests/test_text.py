@@ -326,7 +326,7 @@ def test_contamination_flags_broadcast(spark):
     bench = spark.createDataFrame(
         [(100, "quick brown fox jumps over cliffs")], "doc_id LONG, text STRING"
     )
-    out = contamination_flags(docs, bench, n=5)
+    out = contamination_flags(docs, bench)
     got = {r.doc_id: r for r in out.collect()}
     assert got[0].contaminated and got[0].n_hits == 1  # "quick brown fox jumps over"
     assert not got[1].contaminated and got[1].n_hits == 0

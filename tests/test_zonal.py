@@ -29,7 +29,7 @@ def test_band_histogram(spark):
     meta = RasterMeta(width=40, height=20, dtype="uint8", block_w=20, block_h=10)
     tiles = synth_raster(spark, meta)
     full = tiles_to_array(tiles, meta)
-    got = {r.bin: r["count"] for r in band_histogram(tiles, meta, n_bins=16).collect()}
+    got = {r.bin: r["count"] for r in band_histogram(tiles, meta).collect()}
     idx = np.clip((full.astype(np.float64) / 16.0).astype(np.int64), 0, 15)
     want = np.bincount(idx.ravel(), minlength=16)
     assert [got.get(b, 0) for b in range(16)] == want.tolist()
